@@ -1177,7 +1177,7 @@ object Bench {
     // SPARK_GRAFT_SQLREAD_BENCH=0 disables): the r16 verdict's vectorized-
     // reader "Done" datapoint — sql_vs_lib_x near 1.0 means the DSv2 path
     // costs what Spark's own FileScan costs; the MOR pair measures the
-    // delete-resolving row path against readMorUnified.
+    // delete-resolving columnar scan against readMorUnified.
     val sqlReadBench =
       if (!sys.env.get("SPARK_GRAFT_SQLREAD_BENCH").contains("0") &&
           phaseGate("sqlread_bench", 60.0)) {

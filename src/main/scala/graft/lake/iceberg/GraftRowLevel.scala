@@ -164,7 +164,10 @@ private[iceberg] class GraftDeltaBatchWrite(location: String, schema: StructType
     val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
     val dvRows = GraftDeltaBatchWrite.mergeBlobs(msgs.flatMap(_.deletes).toSeq)
     val files = msgs.flatMap(_.files).toSeq
-    IcebergTable.commitDelta(spark, location, dvRows, dataDir, files)
+    // a statement that matched no live row changes nothing and commits
+    // nothing (no task wrote a file or recorded a delete)
+    if (dvRows.nonEmpty || files.nonEmpty)
+      IcebergTable.commitDelta(spark, location, dvRows, dataDir, files)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

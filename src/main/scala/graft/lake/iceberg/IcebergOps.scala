@@ -2392,7 +2392,7 @@ object IcebergOps {
 
   /** SQL over a MOR table: the DSv2 READER resolves the snapshot's delete
     * files — equality keys (≡ 3 mod 10, scoped to strictly-older data
-    * files) filtered row-by-row, the DV wave (≡ 6 mod 10) skipped by row
+    * files) filtered by value, the DV wave (≡ 6 mod 10) skipped by row
     * ordinal against the compressed Roaring blob shipped in the input
     * partition — so plain `SELECT … GROUP BY` returns the merged truth
     * with no library call in sight. Census columns are the delete files'

@@ -230,7 +230,9 @@ object IcebergTable {
     * target splits into multiple files written by PARALLEL tasks (the
     * default single-file-per-month layout is kept for the oracle fixtures,
     * whose census DuckDB re-derives from the deterministic
-    * one-file-per-month function — see [[writeDataSnapshot]]). */
+    * one-file-per-month function — see [[writeDataSnapshot]]). Rows
+    * that turn out to be none commit nothing: the table keeps its current
+    * snapshot (0 when it has none), which is returned. */
   def append(spark: SparkSession, lineitem: DataFrame, location: String,
              weekly: Boolean = false,
              targetRecordsPerFile: Option[Long] = None,
@@ -238,12 +240,15 @@ object IcebergTable {
              sorted: Boolean = false): Long = {
     val prev = readMetadataOpt(location)
     val snapshotId = prev.map(m => m.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    val newInfo = writeDataSnapshot(spark, lineitem, location, snapshotId, weekly,
-      targetRecordsPerFile, clusterFiles, sorted)
-    val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-      .getOrElse(Seq.empty)
-    commitSnapshot(location, prev, snapshotId, prevManifests :+ newInfo, "append",
-      lineitem.columns.toSeq.sorted)
+    writeDataFiles(spark, lineitem, location, snapshotId, weekly,
+        targetRecordsPerFile, clusterFiles, sorted) match {
+      case None => prev.map(_.currentSnapshotId).getOrElse(0L)
+      case Some(newInfo) =>
+        val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
+          .getOrElse(Seq.empty)
+        commitSnapshot(location, prev, snapshotId, prevManifests :+ newInfo, "append",
+          lineitem.columns.toSeq.sorted)
+    }
   }
 
   /** SQL `TRUNCATE TABLE`: ONE "replace" snapshot whose manifest list is
@@ -818,7 +823,20 @@ object IcebergTable {
                                 targetRecordsPerFile: Option[Long] = None,
                                 clusterFiles: Option[(Int, Boolean)] = None,
                                 sorted: Boolean = false,
-                                zorderFiles: Option[Int] = None): ManifestInfo = {
+                                zorderFiles: Option[Int] = None): ManifestInfo =
+    writeDataFiles(spark, lineitem, location, snapshotId, weekly, targetRecordsPerFile,
+      clusterFiles, sorted, zorderFiles).getOrElse(
+      throw new IllegalArgumentException(s"no rows to write into $location"))
+
+  /** [[writeDataSnapshot]], or None — leaving no directory behind — when
+    * the rows to write are none. */
+  private def writeDataFiles(spark: SparkSession, lineitem: DataFrame,
+                             location: String, snapshotId: Long,
+                             weekly: Boolean = false,
+                             targetRecordsPerFile: Option[Long] = None,
+                             clusterFiles: Option[(Int, Boolean)] = None,
+                             sorted: Boolean = false,
+                             zorderFiles: Option[Int] = None): Option[ManifestInfo] = {
     val sequence = snapshotId
     // Partition evolution (spec §Partition Evolution): spec 0 = identity
     // month, spec 1 = identity ISO week-start date. The partition VALUE
@@ -903,8 +921,8 @@ object IcebergTable {
           // the small fixture shuffle back into one task and the split never
           // happens — and at scale the bucket count IS the right task count.
           val nBuckets = counts
-            .agg(sum(greatest(lit(1L),
-              ceil(col("__cnt").cast("double") / target.toDouble).cast("long"))))
+            .agg(coalesce(sum(greatest(lit(1L),
+              ceil(col("__cnt").cast("double") / target.toDouble).cast("long"))), lit(0L)))
             .head().getLong(0)
           // p_fid stays a DIRECTORY column: two bucket groups of one month
           // colliding in a task still write DISTINCT files, so the
@@ -923,8 +941,16 @@ object IcebergTable {
     withMicrosTimestamps(spark) {
       arranged.write.partitionBy(partCols: _*).mode("overwrite").parquet(dataDir)
     }
+    // a partitioned write of zero rows leaves only bookkeeping files
+    def holdsData(f: File): Boolean =
+      if (f.isDirectory) Option(f.listFiles()).exists(_.exists(holdsData))
+      else f.getName.endsWith(".parquet")
+    if (!holdsData(new File(dataDir))) {
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(dataDir))
+      return None
+    }
     val stats = assignRowIds(location, collectFileStats(spark, dataDir))
-    writeManifestAvro(location, snapshotId, sequence, stats, specId)
+    Some(writeManifestAvro(location, snapshotId, sequence, stats, specId))
   }
 
   /** v3 row lineage assignment: give every new data file a `first_row_id`

@@ -13,7 +13,6 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
 import org.apache.spark.sql.connector.expressions.Transform
@@ -21,6 +20,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 SQL front door over the real [[IcebergTable]] metadata
@@ -36,8 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * snapshot's delete files per the spec — v3 deletion vectors skipped
   * positionally WHILE reading (the real reader shape: the DV rides to the
   * task as KB-grain compressed Roaring bytes and positions never
-  * materialize off the executor) and equality-delete keys filtered
-  * row-by-row scoped to strictly-older data files. Column pruning is
+  * materialize off the executor) and equality-delete keys scoped to
+  * strictly-older data files, both applied to the decoded columnar
+  * batches through a row-id map ([[GraftColumnarReader]]). Column pruning is
   * real: the pushed required schema becomes the parquet projection each
   * task reads ([[GraftSqlScanCensus]] records cols_read beside the
   * file-prune census so a query can PROVE both reached the scan).
@@ -992,6 +993,11 @@ private[iceberg] case class GraftInputPartition(path: String, sequence: Long,
                                                 dvBlobs: Array[Array[Byte]])
     extends InputPartition
 
+/** The DSv2 scan: one [[GraftInputPartition]] per planned data file, each
+  * read COLUMNAR by [[GraftColumnarReader]] — clean files, files under
+  * deletion vectors and equality deletes, and the `_file`/`_pos` scans
+  * under row-level `DELETE`/`UPDATE`/`MERGE` alike. The table metadata is
+  * parsed once per scan and serves both planning and the reader factory. */
 private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
                                  dateLo: Option[String], dateHi: Option[String],
                                  required: StructType, tableCols: Int)
@@ -999,6 +1005,10 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // every partition reads columnar, so the planner need not plan the
+  // partitions to choose the scan's shape
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
   override def description(): String =
     s"graft-iceberg $location${snapshotId.map(id => s" @$id").getOrElse("")}" +
       s" shipdate=[${dateLo.getOrElse("-inf")},${dateHi.getOrElse("+inf")}]"
@@ -1020,15 +1030,15 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
   private def norm(p: String): String =
     p.replaceFirst("^file:", "").replaceFirst("^/{2,}", "/")
 
+  // None: a CREATE'd table before its first commit (scans empty)
+  private lazy val meta: Option[IcebergTable.TableMetadata] =
+    IcebergTable.readMetadataOpt(location)
+
   private var eqDeletes: Array[(Long, Array[Long])] = Array.empty
   // identity of the equality-delete wave set this scan resolved (file
   // paths + sequences) — the broadcast cache key component that changes
   // exactly when the keys a reader must apply change
   private var eqFingerprint: String = ""
-  // set at planning: no partition carries delete state → the factory may
-  // serve FULL-COLUMNAR reads (Spark requires the decision be uniform
-  // across the scan's partitions)
-  private var allPartitionsClean: Boolean = true
 
   override def planInputPartitions(): Array[InputPartition] = {
     // a CREATE'd table before its first commit scans empty: an empty
@@ -1036,21 +1046,23 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     // files (fully compacted-away history) falls out of the ONE pruned
     // planning pass below — no extra unpruned planFiles just to guard
     // emptiness (that pass re-read every manifest on every scan).
-    if (IcebergTable.readMetadataOpt(location).isEmpty) {
+    val m = meta.getOrElse {
       GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
         0L, 0L, 0L, 0L, required.size.toLong, tableCols.toLong))
       return Array.empty
     }
-    val meta = IcebergTable.readMetadata(location)
-    val snap = snapshotId.map(id => meta.snapshots.find(_.id == id).getOrElse(
+    val snap = snapshotId.map(id => m.snapshots.find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(
-      IcebergTable.currentSnapshot(meta))
+      IcebergTable.currentSnapshot(m))
     val manifests = IcebergTable.readManifestList(snap.manifestList)
     val entries = IcebergTable.readManifestsParallel(manifests.map(_.path)).flatten
     require(!entries.exists(e => e.content == 1 && e.referencedDataFile.isEmpty),
       "SQL scan resolves v3 DVs and equality deletes; this table carries v2 " +
         "positional-parquet delete files — run rewrite_position_deletes first")
-    val dvs = entries.filter(e => e.content == 1 && e.referencedDataFile.isDefined)
+    // DVs keyed by the data file they reference: one lookup per planned
+    // file instead of a pass over every DV
+    val dvsByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isDefined)
+      .groupBy(e => norm(e.referencedDataFile.get))
     val eqs = entries.filter(_.content == 2)
     // equality keys load ONCE on the driver (KB–MB grain, like the real
     // library's delete loader) and ship in the serialized factory
@@ -1065,20 +1077,17 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
       plan.manifestsRead.toLong, required.size.toLong, tableCols.toLong))
-    if (plan.files.isEmpty) { allPartitionsClean = eqDeletes.isEmpty; return Array.empty }
     val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
     def blobBytes(e: IcebergTable.DataFileEntry): Array[Byte] = {
       val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
       slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
         e.contentOffset, e.contentSize))
     }
-    val parts = plan.files.map { f =>
-      val mine = dvs.filter(e =>
-        e.sequence >= f.sequence && norm(e.referencedDataFile.get) == norm(f.path))
-      GraftInputPartition(f.path, f.sequence, mine.map(blobBytes).toArray)
+    plan.files.map { f =>
+      val mine = dvsByFile.getOrElse(norm(f.path), Seq.empty)
+        .filter(e => e.sequence >= f.sequence)
+      GraftInputPartition(f.path, f.sequence, mine.map(blobBytes).toArray): InputPartition
     }.toArray
-    allPartitionsClean = eqs.isEmpty && parts.forall(_.dvBlobs.isEmpty)
-    parts.asInstanceOf[Array[InputPartition]]
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1091,17 +1100,14 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     // invocation accumulated driver+executor blocks for the life of the
     // session on repeatedly-read delete-carrying tables.
     val bc = GraftEqBroadcastCache.get(location, eqFingerprint, eqDeletes)
-    val columnar = allPartitionsClean &&
-      !required.fieldNames.exists(GraftVectorized.isMetaCol)
     // live rename chains and type promotions ride to the tasks so files
     // written under a prior column name/type keep serving data
     // (resolveFileSchema; KB-grain maps)
-    val meta = IcebergTable.readMetadataOpt(location)
     val renames = meta.map(_.renamedColumns).getOrElse(Map.empty)
       .filter { case (nw, _) => required.fieldNames.contains(nw) }
     val widened = meta.map(_.widenedColumns).getOrElse(Map.empty)
       .keySet.filter(required.fieldNames.contains)
-    new GraftReaderFactory(fields, bc, columnar, renames, widened)
+    new GraftReaderFactory(fields, bc, renames, widened)
   }
 }
 
@@ -1135,26 +1141,24 @@ private[iceberg] object GraftEqBroadcastCache {
   }
 }
 
+/** Serves every partition with a [[GraftColumnarReader]]: the partition's
+  * DV blobs decode to sorted positions, and the equality waves newer than
+  * the file merge into one sorted key array. There is no row reader. */
 private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
                                           eqBc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long])]],
-                                          columnar: Boolean = false,
                                           renames: Map[String, Seq[String]] = Map.empty,
                                           widened: Set[String] = Set.empty)
     extends PartitionReaderFactory {
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft scans read columnar batches only")
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    require(columnar, "columnar read requested on a scan with delete state")
-    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition].path, fields,
-      renames, widened)
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+      : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    val eqDeletes = eqBc.value
     // spec scoping: equality deletes apply to STRICTLY older data files
-    val keys = eqDeletes.collect { case (seq, ks) if seq > p.sequence => ks }
+    val keys = eqBc.value.collect { case (seq, ks) if seq > p.sequence => ks }
     val merged =
       if (keys.isEmpty) Array.empty[Long]
       else { val a = keys.flatten; java.util.Arrays.sort(a); a }
@@ -1164,7 +1168,7 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
         val a = p.dvBlobs.flatMap(RoaringDv.deserializeDvBlob)
         java.util.Arrays.sort(a); a
       }
-    new GraftPartitionReader(p.path, fields, deleted, merged, renames, widened)
+    new GraftColumnarReader(p.path, fields, deleted, merged, renames, widened)
   }
 }
 
@@ -1174,46 +1178,56 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
   * constant factor per task for no correctness gain). Handles int96/
   * int64-millis/micros timestamps natively via Spark's own conversion. */
 object GraftVectorized {
+  /** Rows per decoded batch. */
+  val BatchRows = 4096
+
   /** Metadata columns the reader synthesizes instead of reading. */
   def isMetaCol(name: String): Boolean = name == "_file" || name == "_pos"
 
   def cleanPath(path: String): String =
     path.stripPrefix("file:").replaceFirst("^/{2,}", "/")
 
+  /** The reader's Hadoop configuration, parsed ONCE per JVM: `new
+    * Configuration()` merges the XML default resources on first use (a
+    * few ms), and a scan opens one reader per data file. It carries the
+    * converter flags at their SQLConf defaults under a UTC session; every
+    * caller that sets a key works on a copy ([[hadoopConf]]), so the
+    * shared instance is only ever read. */
+  private lazy val baseConf: Configuration = {
+    val conf = new org.apache.hadoop.mapred.JobConf()
+    conf.set("parquet.read.support.class",
+      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+    conf.set("spark.sql.session.timeZone", "UTC")
+    conf.setBoolean("spark.sql.parquet.binaryAsString", false)
+    conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
+    conf.setBoolean("spark.sql.caseSensitive", false)
+    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
+    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
+    conf
+  }
+
+  /** A private copy of the shared configuration, free to modify. A
+    * `JobConf`, so the task context built over it uses it as-is instead of
+    * copying it again. */
+  def hadoopConf(): org.apache.hadoop.mapred.JobConf =
+    new org.apache.hadoop.mapred.JobConf(baseConf)
+
   def fileSchemaOf(path: String): MessageType = {
-    val conf = new Configuration()
     val hPath = new Path("file:" + cleanPath(path))
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
+    // footer reads only read the configuration: the shared one serves
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, baseConf))
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
 
-  /** Open a vectorized reader for the CATALYST `required` schema over one
-    * whole file — the same task-side initialization Spark's own
-    * `ParquetFileFormat.buildReaderWithPartitionValues` performs (a
-    * FileSplit + TaskAttemptContext whose conf carries the requested
-    * schema and the converter flags at their SQLConf defaults under a UTC
-    * session). The batch's columns come back in `required` order, and a
-    * column the file lacks (older schema era, internal lineage column)
-    * rides as an all-null vector — Spark's own missing-column handling. */
-  /** Resolve RENAMED columns against one file's physical schema: a
-    * required field the file lacks is re-requested under the newest
-    * ancestor name the file carries (renameSchemaColumn's chain — the
-    * name-based stand-in for field-id constancy). Costs one footer read
-    * per file and ONLY runs on tables with live renames (`renames`
-    * nonEmpty); the batch's vectors are positional, so callers keep
-    * labeling columns with the CURRENT names. */
-  def resolveRenames(path: String, required: StructType,
-                     renames: Map[String, Seq[String]]): StructType =
-    resolveFileSchema(path, required, renames, Set.empty)
-
   /** Resolve the required schema against ONE file's physical schema:
     * RENAMED columns re-request the newest ancestor name the file carries
-    * (the rename chain), and WIDENED columns (`ALTER COLUMN … TYPE`)
-    * re-request the file's NARROW physical type when the file predates the
-    * promotion — the decoded values upcast after the vectorized read
-    * (int→long, float→double, decimal precision). Costs AT MOST one footer
-    * read per file and only runs on tables with live renames/promotions;
-    * the batch's vectors stay positional, so callers keep labeling columns
+    * (the rename chain — the name-based stand-in for field-id constancy),
+    * and WIDENED columns (`ALTER COLUMN … TYPE`) re-request the file's
+    * NARROW physical type when the file predates the promotion — the
+    * decoded values upcast after the vectorized read (int→long,
+    * float→double, decimal precision). Costs AT MOST one footer read per
+    * file and only runs on tables with live renames/promotions; the
+    * batch's vectors stay positional, so callers keep labeling columns
     * with the CURRENT names and handle the (required, resolved) type pair
     * per column. */
   def resolveFileSchema(path: String, required: StructType,
@@ -1223,7 +1237,6 @@ object GraftVectorized {
     val needWiden = widened.nonEmpty && required.fieldNames.exists(widened)
     if (!needRename && !needWiden) required
     else {
-      import scala.jdk.CollectionConverters._
       val msg = fileSchemaOf(path)
       val phys = msg.getFields.asScala.map(_.getName).toSet
       StructType(required.fields.map { f0 =>
@@ -1246,7 +1259,6 @@ object GraftVectorized {
     * the spec's legal promotion pairs map. */
   private def narrowTypeOf(msg: MessageType, name: String,
                            required: DataType): Option[DataType] = {
-    import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val t = msg.getFields.asScala.find(_.getName == name) match {
@@ -1271,21 +1283,20 @@ object GraftVectorized {
     }
   }
 
+  /** Open a vectorized reader for the CATALYST `required` schema over one
+    * whole file — the same task-side initialization Spark's own
+    * `ParquetFileFormat.buildReaderWithPartitionValues` performs (a
+    * FileSplit + TaskAttemptContext whose conf carries the requested
+    * schema). The batch's columns come back in `required` order, and a
+    * column the file lacks (older schema era, internal lineage column)
+    * rides as an all-null vector — Spark's own missing-column handling. */
   def open(path: String, required: StructType)
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
     val clean = cleanPath(path)
-    val conf = new Configuration()
-    conf.set("parquet.read.support.class",
-      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+    val conf = hadoopConf()
     conf.set("org.apache.spark.sql.parquet.row.requested_schema", required.json)
-    conf.set("spark.sql.session.timeZone", "UTC")
-    conf.setBoolean("spark.sql.parquet.binaryAsString", false)
-    conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-    conf.setBoolean("spark.sql.caseSensitive", false)
-    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
     val reader = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false, /*capacity=*/ 4096)
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false, BatchRows)
     val split = new org.apache.hadoop.mapred.FileSplit(
       new Path("file:" + clean), 0, new File(clean).length(), Array.empty[String])
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
@@ -1296,159 +1307,168 @@ object GraftVectorized {
   }
 }
 
-/** Vectorized row reader over one data file: Spark's columnar parquet
-  * decode, then per-row assembly that skips DV positions by row ordinal,
-  * filters equality keys, synthesizes the `_file`/`_pos` metadata columns
-  * (the row-level operations' rowId), and null-fills columns a
-  * pre-evolution file lacks. Runs in the executor. */
-private[iceberg] class GraftPartitionReader(path: String,
-                                            fields: Array[(String, DataType)],
-                                            deletedPos: Array[Long],
-                                            eqKeys: Array[Long],
-                                            renames: Map[String, Seq[String]] = Map.empty,
-                                            widened: Set[String] = Set.empty)
-    extends PartitionReader[InternalRow] {
+/** The scan's one executor-side reader: Spark's vectorized decode of one
+  * data file, with the file's delete state applied to each batch. The
+  * reader tracks every decoded row's ordinal within the file; a batch
+  * that loses rows to DV positions or equality keys is served through a
+  * row-id map — each column a [[GraftFilteredVector]] over the decoder's
+  * vector, so no value is copied — and a batch that loses none is served
+  * as decoded. `_file` is a constant vector and `_pos` a long vector of
+  * the surviving ordinals (the row-level operations' rowId). A column a
+  * pre-evolution file lacks comes back as an all-null vector, and one a
+  * pre-promotion file holds at a narrower type through a
+  * [[GraftUpcastVector]] beneath the filter. A batch whose every row is
+  * deleted is skipped, never taken for the end of the file. */
+private[iceberg] class GraftColumnarReader(path: String,
+                                           fields: Array[(String, DataType)],
+                                           deletedPos: Array[Long],
+                                           eqKeys: Array[Long],
+                                           renames: Map[String, Seq[String]] = Map.empty,
+                                           widened: Set[String] = Set.empty)
+    extends PartitionReader[ColumnarBatch] {
+  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnVector
 
   private val eqCol = "l_orderkey"
   // the physical read schema: required fields minus the synthesized
   // metadata columns, plus the equality-key column when keys must filter
-  private val physFields: Array[(String, DataType)] =
-    fields.filterNot(f => GraftVectorized.isMetaCol(f._1)) ++
+  private val physical: StructType = StructType(
+    fields.filterNot(f => GraftVectorized.isMetaCol(f._1))
+      .map { case (n, t) => StructField(n, t) } ++
       (if (eqKeys.nonEmpty && !fields.exists(_._1 == eqCol))
-         Array((eqCol, LongType: DataType))
-       else Array.empty[(String, DataType)])
-  private val physIdx: Map[String, Int] = physFields.map(_._1).zipWithIndex.toMap
+         Array(StructField(eqCol, LongType))
+       else Array.empty[StructField]))
   // the per-FILE resolved schema: renamed columns under their in-file
   // ancestor name, widened columns at the file's narrow physical type
-  // (the extractors upcast) — positionally aligned with physFields
-  private val resolved: StructType = GraftVectorized.resolveFileSchema(path,
-    StructType(physFields.map { case (n, t) => StructField(n, t) }), renames, widened)
+  private val resolved =
+    GraftVectorized.resolveFileSchema(path, physical, renames, widened)
   private val reader = GraftVectorized.open(path, resolved)
-  private val filePathValue = UTF8String.fromString(path)
 
-  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  private var rowInBatch = 0
-  private var ordinal = -1L
-  private var dvIdx = 0
-
-  // per-required-field extractor over the batch row index: values are
-  // COPIED out (the vectors' buffers are reused across batches); a column
-  // the file lacks is an all-null vector, so null-fill is just isNullAt
-  private val extractors: Array[Int => Any] = fields.map { case (name, dt) =>
-    name match {
-      case "_file" => (_: Int) => filePathValue
-      case "_pos" => (_: Int) => ordinal
-      case _ =>
-        val j = physIdx(name)
-        // NOTE: `batch` is re-read on every call (it is null until the
-        // first nextBatch) — the lambdas must not capture a column ref
-        def ifSet(f: Int => Any): Int => Any =
-          i => if (batch.column(j).isNullAt(i)) null else f(i)
-        (dt, resolved.fields(j).dataType) match {
-          // type-promotion upcasts: the file predates the ALTER COLUMN …
-          // TYPE, so the vector decoded at the narrow type and the value
-          // widens here (spec §Schema Evolution promotion on read)
-          case (LongType, IntegerType) => ifSet(i => batch.column(j).getInt(i).toLong)
-          case (DoubleType, FloatType) => ifSet(i => batch.column(j).getFloat(i).toDouble)
-          case (d: DecimalType, n: DecimalType) if n != d =>
-            ifSet(i => org.apache.spark.sql.types.Decimal(
-              batch.column(j).getDecimal(i, n.precision, n.scale).toJavaBigDecimal,
-              d.precision, d.scale))
-          case _ => dt match {
-          case LongType | TimestampType | TimestampNTZType =>
-            ifSet(i => batch.column(j).getLong(i))
-          case IntegerType | DateType => ifSet(i => batch.column(j).getInt(i))
-          case DoubleType => ifSet(i => batch.column(j).getDouble(i))
-          case FloatType => ifSet(i => batch.column(j).getFloat(i))
-          case BooleanType => ifSet(i => batch.column(j).getBoolean(i))
-          case StringType => ifSet(i => batch.column(j).getUTF8String(i).copy())
-          case BinaryType => ifSet(i => batch.column(j).getBinary(i).clone())
-          case d: DecimalType =>
-            ifSet(i => batch.column(j).getDecimal(i, d.precision, d.scale))
-          case other =>
-            throw new UnsupportedOperationException(s"column $name: unsupported type $other")
-          }
-        }
+  // the decoder reuses ONE batch object and its vectors across nextBatch
+  // calls, so every wrapper below binds once
+  private val decoded: Array[ColumnVector] = {
+    val b = reader.resultBatch()
+    Array.tabulate(physical.length) { j =>
+      val (from, to) = (resolved.fields(j).dataType, physical.fields(j).dataType)
+      if (from == to) b.column(j) else new GraftUpcastVector(b.column(j), from, to)
     }
   }
-  private val eqIdx: Int = if (eqKeys.nonEmpty) physIdx(eqCol) else -1
+  // liveRows(k) = the decoded-batch row of the k-th surviving row
+  private val liveRows = new Array[Int](GraftVectorized.BatchRows)
+  private val filtered: Array[ColumnVector] =
+    decoded.map(v => new GraftFilteredVector(v, liveRows))
+  private val fileVector: ConstantColumnVector =
+    if (!fields.exists(_._1 == "_file")) null
+    else {
+      val v = new ConstantColumnVector(GraftVectorized.BatchRows, StringType)
+      v.setUtf8String(UTF8String.fromString(path))
+      v
+    }
+  private val posVector: OnHeapColumnVector =
+    if (fields.exists(_._1 == "_pos")) new OnHeapColumnVector(GraftVectorized.BatchRows, LongType)
+    else null
+
+  private def batchOver(cols: Array[ColumnVector]): ColumnarBatch =
+    new ColumnarBatch(fields.map[ColumnVector] {
+      case ("_file", _) => fileVector
+      case ("_pos", _) => posVector
+      case (name, _) => cols(physical.fieldIndex(name))
+    })
+  private val whole = batchOver(decoded)
+  private val live = batchOver(filtered)
+  private val eqVector: ColumnVector =
+    if (eqKeys.isEmpty) null else decoded(physical.fieldIndex(eqCol))
+
+  private var current: ColumnarBatch = _
+  private var ordinal = 0L // file ordinal of the next decoded row
+  private var dvIdx = 0
 
   override def next(): Boolean = {
-    while (true) {
-      if (batch == null || rowInBatch >= batch.numRows()) {
-        if (!reader.nextBatch()) return false
-        batch = reader.resultBatch()
-        rowInBatch = 0
-        if (batch.numRows() == 0) return false
-      } else {
-        ordinal += 1
-        val i = rowInBatch
-        rowInBatch += 1
-        // DV skip: both the read and the vector walk in ordinal order
-        while (dvIdx < deletedPos.length && deletedPos(dvIdx) < ordinal) dvIdx += 1
-        val dvDead = dvIdx < deletedPos.length && deletedPos(dvIdx) == ordinal
-        val eqDead = eqIdx >= 0 && !batch.column(eqIdx).isNullAt(i) &&
-          java.util.Arrays.binarySearch(eqKeys, batch.column(eqIdx).getLong(i)) >= 0
-        if (!dvDead && !eqDead) { rowInBatch -= 1; return true }
+    while (reader.nextBatch()) {
+      val n = reader.resultBatch().numRows()
+      val first = ordinal
+      ordinal += n
+      val kept = keep(first, n)
+      if (kept > 0) {
+        current = if (kept == n) whole else live
+        current.setNumRows(kept)
+        if (posVector != null) {
+          var k = 0
+          while (k < kept) {
+            posVector.putLong(k, first + (if (kept == n) k else liveRows(k)))
+            k += 1
+          }
+        }
+        return true
       }
     }
     false
   }
 
-  override def get(): InternalRow = {
-    val i = rowInBatch
-    rowInBatch += 1
-    new GenericInternalRow(extractors.map(_(i)): Array[Any])
+  /** The number of rows of the decoded batch (file ordinals `first` until
+    * `first + n`) that survive the deletes; fills `liveRows` with them
+    * unless no delete can reach the batch. */
+  private def keep(first: Long, n: Int): Int = {
+    while (dvIdx < deletedPos.length && deletedPos(dvIdx) < first) dvIdx += 1
+    if (eqVector == null && (dvIdx == deletedPos.length || deletedPos(dvIdx) >= first + n))
+      return n
+    var kept = 0
+    var i = 0
+    while (i < n) {
+      // DV positions and the decode both walk in ordinal order
+      while (dvIdx < deletedPos.length && deletedPos(dvIdx) < first + i) dvIdx += 1
+      val dead = (dvIdx < deletedPos.length && deletedPos(dvIdx) == first + i) ||
+        (eqVector != null && !eqVector.isNullAt(i) &&
+          java.util.Arrays.binarySearch(eqKeys, eqVector.getLong(i)) >= 0)
+      if (!dead) { liveRows(kept) = i; kept += 1 }
+      i += 1
+    }
+    kept
   }
 
-  override def close(): Unit = reader.close()
+  override def get(): ColumnarBatch = current
+
+  override def close(): Unit = {
+    reader.close()
+    if (fileVector != null) fileVector.close()
+    if (posVector != null) posVector.close()
+  }
 }
 
-/** FULL-COLUMNAR reader for the clean case (no delete state, no metadata
-  * columns): batches flow from Spark's vectorized decoder straight into
-  * the scan exec with zero per-row materialization — the same shape as
-  * the built-in vectorized FileScan. The batch's columns already follow
-  * the required order (missing columns as null vectors), so the decoder's
-  * batch is handed over as-is. */
-private[iceberg] class GraftColumnarReader(path: String,
-                                           fields: Array[(String, DataType)],
-                                           renames: Map[String, Seq[String]] = Map.empty,
-                                           widened: Set[String] = Set.empty)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val required = StructType(fields.map { case (n, t) => StructField(n, t) })
-  private val resolved = GraftVectorized.resolveFileSchema(path, required, renames, widened)
-  private val reader = GraftVectorized.open(path, resolved)
-  // columns whose file type is narrower than the required type (the file
-  // predates an ALTER COLUMN … TYPE promotion): wrapped once in an
-  // upcasting vector so the batch stays FULL-COLUMNAR
-  private val upcastIdx: Array[Int] = required.fields.indices
-    .filter(i => required.fields(i).dataType != resolved.fields(i).dataType).toArray
-  private var wrapped: org.apache.spark.sql.vectorized.ColumnarBatch = _
-
-  override def next(): Boolean = reader.nextBatch()
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-    val b = reader.resultBatch()
-    if (upcastIdx.isEmpty) b
-    else {
-      if (wrapped == null) {
-        // the decoder reuses ONE batch object (and its vectors) across
-        // nextBatch calls, so the wrappers bind once
-        val vs = Array.tabulate[org.apache.spark.sql.vectorized.ColumnVector](
-          b.numCols())(b.column)
-        upcastIdx.foreach { i =>
-          vs(i) = new GraftUpcastVector(vs(i),
-            resolved.fields(i).dataType, required.fields(i).dataType)
-        }
-        wrapped = new org.apache.spark.sql.vectorized.ColumnarBatch(vs)
-      }
-      wrapped.setNumRows(b.numRows())
-      wrapped
-    }
-  }
-
-  override def close(): Unit = reader.close()
+/** A view of a batch column through a row-id map (the shape of Iceberg's
+  * `ColumnVectorWithFilter`): row `i` of the view is row `rows(i)` of the
+  * child. The map array is owned by the reader, which rewrites it for
+  * every batch; the child's buffers are never copied. */
+private[iceberg] class GraftFilteredVector(child: org.apache.spark.sql.vectorized.ColumnVector,
+                                           rows: Array[Int])
+    extends org.apache.spark.sql.vectorized.ColumnVector(child.dataType()) {
+  override def close(): Unit = child.close()
+  // ownership stays with the decoder, whose vectors are reused across
+  // batches — see GraftUpcastVector.closeIfFreeable
+  override def closeIfFreeable(): Unit = child.closeIfFreeable()
+  // counting the view's nulls would walk the map; the child's count over
+  // the whole decoded batch is an upper bound, as in Iceberg
+  override def hasNull: Boolean = child.hasNull
+  override def numNulls(): Int = child.numNulls()
+  override def isNullAt(i: Int): Boolean = child.isNullAt(rows(i))
+  override def getBoolean(i: Int): Boolean = child.getBoolean(rows(i))
+  override def getByte(i: Int): Byte = child.getByte(rows(i))
+  override def getShort(i: Int): Short = child.getShort(rows(i))
+  override def getInt(i: Int): Int = child.getInt(rows(i))
+  override def getLong(i: Int): Long = child.getLong(rows(i))
+  override def getFloat(i: Int): Float = child.getFloat(rows(i))
+  override def getDouble(i: Int): Double = child.getDouble(rows(i))
+  override def getDecimal(i: Int, precision: Int, scale: Int)
+      : org.apache.spark.sql.types.Decimal = child.getDecimal(rows(i), precision, scale)
+  override def getUTF8String(i: Int): UTF8String = child.getUTF8String(rows(i))
+  override def getBinary(i: Int): Array[Byte] = child.getBinary(rows(i))
+  override def getArray(i: Int): org.apache.spark.sql.vectorized.ColumnarArray =
+    child.getArray(rows(i))
+  override def getMap(i: Int): org.apache.spark.sql.vectorized.ColumnarMap =
+    child.getMap(rows(i))
+  // row-aligned children (struct fields) read through the same map
+  override def getChild(i: Int): org.apache.spark.sql.vectorized.ColumnVector =
+    new GraftFilteredVector(child.getChild(i), rows)
 }
 
 /** Columnar type-promotion shim (spec §Schema Evolution read-side upcast):
@@ -1551,7 +1571,7 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
   * planner. */
 private[iceberg] object GraftParquetRows {
   def readLongColumn(path: String, column: String): Array[Long] = {
-    val conf = new Configuration()
+    val conf = GraftVectorized.hadoopConf() // set below: a private copy
     val hPath = new Path("file:" + path.replaceFirst("^/{2,}", "/"))
     val schema: MessageType = {
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))

@@ -322,6 +322,59 @@ class DeltaCommitSpec extends SparkSpec {
     assert(r.getLong(1) === expQty)
   }
 
+  /** A SQL-created table holding `lineitem` under one DV wave, and a
+    * listing of every file under its directory. */
+  private def noopFixture(tag: String): (String, String, () => Set[String]) = {
+    val w = Files.createTempDirectory(s"graft_noop_${tag}_").toString
+    IcebergCatalog.createNamespace(w, "lake")
+    val loc = IcebergCatalog.createTable(w, "lake", "li")
+    IcebergTable.append(spark, lineitem, loc)
+    IcebergTable.appendDvPuffin(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 6L)
+    val cat = s"graft_${tag}_" + (w.hashCode.toLong & 0x7FFFFFFFL)
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
+    def files(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(new File(loc).toPath)
+      try s.iterator().asScala.map(_.toString).toSet finally s.close()
+    }
+    (s"$cat.lake.li", loc, () => files())
+  }
+
+  test("DELETE and UPDATE that match no live row commit nothing") {
+    val (t, loc, files) = noopFixture("noop_rl")
+    val before = files()
+    val snaps = IcebergTable.readMetadata(loc).snapshots.size
+    val n = spark.sql(s"SELECT count(*) FROM $t").head().getLong(0)
+    // `%` keeps both statements on the row-level (delta) path; the second
+    // DELETE matches only rows the DV wave already removed
+    spark.sql(s"DELETE FROM $t WHERE l_orderkey % 101 = 0 AND l_orderkey < 0")
+    spark.sql(s"DELETE FROM $t WHERE l_orderkey % 10 = 6")
+    spark.sql(s"UPDATE $t SET l_quantity = l_quantity + 1 WHERE l_orderkey % 103 = 0 AND l_orderkey < 0")
+    assert(IcebergTable.readMetadata(loc).snapshots.size === snaps)
+    assert(files() === before, "a statement that changes nothing must write nothing")
+    assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) === n)
+  }
+
+  test("INSERT of zero rows commits nothing") {
+    val (t, loc, files) = noopFixture("noop_ins")
+    val before = files()
+    val snaps = IcebergTable.readMetadata(loc).snapshots.size
+    lineitem.filter(col("l_shipdate") >= lit("2003-01-01").cast("timestamp"))
+      .createOrReplaceTempView("graft_noop_ins_src")
+    spark.sql(s"INSERT INTO $t SELECT * FROM graft_noop_ins_src")
+    assert(IcebergTable.readMetadata(loc).snapshots.size === snaps)
+    // the same under a file-size target, whose split sizing sums per-month
+    // counts that an empty insert does not have
+    assert(IcebergTable.append(spark, lineitem.limit(0), loc,
+      targetRecordsPerFile = Some(1000L)) === IcebergTable.readMetadata(loc).currentSnapshotId)
+    assert(IcebergTable.readMetadata(loc).snapshots.size === snaps)
+    assert(files() === before, "an empty INSERT must leave no file behind")
+    // the library append reports the unchanged current snapshot
+    assert(IcebergTable.append(spark, lineitem.limit(0), loc) ===
+      IcebergTable.readMetadata(loc).currentSnapshotId)
+  }
+
   test("murmur3 bucket mode: spec layout and point lookup agree") {
     val loc = Files.createTempDirectory("graft_bucket_m3_").toString
     IcebergTable.appendBucket(spark, lineitem, loc, murmur3 = true)
