@@ -222,18 +222,48 @@ object Bench {
     * form as an EMPTY baseline, which disabled the rerun-defense
     * thresholds and turned the min-merge refresh into a raw overwrite. */
   def parseBaseline(json: String): Map[String, Double] =
-    """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(json)
+    """"([^"]+)"\s*:\s*(-?[0-9]+(?:\.[0-9]*)?(?:[eE][+-]?[0-9]+)?)""".r.findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
+  /** [[parseBaseline]] that fails loudly when the parse is implausibly
+    * small: fewer numbers than the text has keys means some entries did
+    * not parse, and a silently partial baseline weakens the rerun defense
+    * for exactly the queries it dropped. */
+  def parseBaselineStrict(json: String, source: String): Map[String, Double] = {
+    val parsed = parseBaseline(json)
+    val keys = """"[^"]+"\s*:""".r.findAllMatchIn(json).size
+    if (parsed.size < keys)
+      throw new IllegalStateException(
+        s"baseline $source: parsed ${parsed.size} numbers from $keys keys")
+    parsed
+  }
+
   def loadBaseline(sfName: String): Map[String, Double] = {
+    val resource = s"/graft/bench_baseline_$sfName.json"
     val src = sys.env.get("SPARK_GRAFT_BASELINE")
-      .map(p => scala.io.Source.fromFile(p))
-      .orElse(Option(getClass.getResourceAsStream(s"/graft/bench_baseline_$sfName.json"))
-        .map(s => scala.io.Source.fromInputStream(s)))
-    src.map { s =>
-      try parseBaseline(s.mkString)
+      .map(p => (p, scala.io.Source.fromFile(p)))
+      .orElse(Option(getClass.getResourceAsStream(resource))
+        .map(s => (resource, scala.io.Source.fromInputStream(s))))
+    src.map { case (name, s) =>
+      try parseBaselineStrict(s.mkString, name)
       finally s.close()
     }.getOrElse(Map.empty)
+  }
+
+  /** Runs `build` for each name on a pool of `threads` workers and returns
+    * the results in input order. A failure escaping a build stops the
+    * rest — queued builds are dropped and running ones interrupted
+    * (`shutdownNow`) before it propagates — so the bench does not spend
+    * its budget on builds whose results nobody collects. */
+  def runPooled[A](names: Seq[String], threads: Int)(build: String => A): Seq[(String, A)] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val out = names.map(q => q -> pool.submit(new java.util.concurrent.Callable[A] {
+        override def call(): A = build(q)
+      })).map { case (q, fut) => q -> fut.get() }
+      pool.shutdown()
+      out
+    } catch { case e: Throwable => pool.shutdownNow(); throw e }
   }
 
   def main(args: Array[String]): Unit = {
@@ -812,7 +842,6 @@ object Bench {
         sys.env.get("SPARK_GRAFT_SETUP_THREADS").map(_.toInt).getOrElse(4),
         setupNames.size))
       val wallT0 = System.nanoTime()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(nWorkers)
       val workerSession = new ThreadLocal[SparkSession] {
         override def initialValue(): SparkSession = {
           val s = spark.newSession()
@@ -822,28 +851,22 @@ object Bench {
           s
         }
       }
-      // shutdown in finally: an exception escaping fut.get() (session
-      // bootstrap failure, interruption) must not leave the non-daemon
+      // runPooled shuts the pool down on every path: an exception
+      // escaping fut.get() (interruption) must not leave the non-daemon
       // pool threads pinning the JVM open past main — that would starve
       // the shutdown hook of an exit and lose the BENCH contract line.
-      val setupTimes =
-        try setupNames.map { q =>
-          q -> pool.submit(new java.util.concurrent.Callable[Double] {
-            override def call(): Double = {
-              val t0 = System.nanoTime()
-              try {
-                val s = workerSession.get()
-                s.sparkContext.setJobDescription(s"setup: $q")
-                SparkEntry.benchVariants.getOrElse(q, SparkEntry.queries(q))(s, sfDir)
-                  .write.format("noop").mode("overwrite").save()
-              } catch { case e: Throwable =>
-                System.err.println(s"[setup] $q failed: ${e.getMessage}")
-              }
-              (System.nanoTime() - t0) / 1e9
-            }
-          })
-        }.map { case (q, fut) => q -> fut.get() }
-        finally pool.shutdown()
+      val setupTimes = runPooled(setupNames, nWorkers) { q =>
+        val t0 = System.nanoTime()
+        try {
+          val s = workerSession.get()
+          s.sparkContext.setJobDescription(s"setup: $q")
+          SparkEntry.benchVariants.getOrElse(q, SparkEntry.queries(q))(s, sfDir)
+            .write.format("noop").mode("overwrite").save()
+        } catch { case e: Throwable =>
+          System.err.println(s"[setup] $q failed: ${e.getMessage}")
+        }
+        (System.nanoTime() - t0) / 1e9
+      }
       val wall = (System.nanoTime() - wallT0) / 1e9
       if (setupTimes.nonEmpty) {
         val m = setupTimes.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")

@@ -137,8 +137,7 @@ private[iceberg] class GraftDeltaWrite(location: String, schema: StructType,
     // re-derived inside commitDelta's OCC retry loop at commit time.
     val dirHint = IcebergTable.readMetadata(location)
       .snapshots.map(_.id).max + 1L
-    new GraftDeltaBatchWrite(location, schema, dirHint,
-      partCol.getOrElse("l_shipdate"))
+    new GraftDeltaBatchWrite(location, schema, dirHint, partCol)
   }
 }
 
@@ -151,7 +150,7 @@ private[iceberg] case class GraftDeltaCommitMessage(
     files: Array[String]) extends WriterCommitMessage
 
 private[iceberg] class GraftDeltaBatchWrite(location: String, schema: StructType,
-                                            dirHint: Long, partCol: String)
+                                            dirHint: Long, partCol: Option[String])
     extends DeltaBatchWrite {
 
   private val dataDir = s"$location/data/snap-$dirHint"
@@ -194,7 +193,7 @@ private[iceberg] object GraftDeltaBatchWrite {
 }
 
 private[iceberg] class GraftDeltaWriterFactory(dataDir: String, schema: StructType,
-                                               partCol: String)
+                                               partCol: Option[String])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new GraftDeltaWriter(dataDir, schema, partitionId, taskId, partCol)
@@ -207,7 +206,7 @@ private[iceberg] class GraftDeltaWriterFactory(dataDir: String, schema: StructTy
   * ([[IcebergTable.commitOverwriteMonths]]). */
 private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: StructType,
                                                 dirHint: Long,
-                                                partCol: String)
+                                                partCol: Option[String])
     extends BatchWrite {
 
   private val dataDir = s"$location/data/snap-$dirHint"
@@ -242,7 +241,7 @@ private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: Struct
   * dedup path. */
 private[iceberg] class GraftStreamingWrite(location: String, schema: StructType,
                                            queryId: String,
-                                           partCol: String)
+                                           partCol: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   private def dataDir(epochId: Long) = s"$location/data/stream-$queryId-ep$epochId"
@@ -265,7 +264,7 @@ private[iceberg] class GraftStreamingWrite(location: String, schema: StructType,
 
 private[iceberg] class GraftStreamingWriterFactory(location: String, queryId: String,
                                                    schema: StructType,
-                                                   partCol: String)
+                                                   partCol: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
@@ -275,26 +274,28 @@ private[iceberg] class GraftStreamingWriterFactory(location: String, queryId: St
 
 /** Executor-side delta writer: deletes/updates record (file, pos) row
   * coordinates; inserted rows stream into one open parquet writer per
-  * month partition (hive-style `p_month=` dirs, so the committer's stats
-  * collection sees the same layout every other graft writer produces). */
+  * month of `partCol`, the partition spec's source column (hive-style
+  * `p_month=` dirs, so the committer's stats collection sees the same
+  * layout every other graft writer produces). A spec without a source
+  * column (`partCol` None) writes unpartitioned: one file per task,
+  * directly under the data dir. */
 private[iceberg] class GraftDeltaWriter(dataDir: String, schema: StructType,
                                         partitionId: Int, taskId: Long,
-                                        partCol: String)
+                                        partCol: Option[String])
     extends DeltaWriter[InternalRow] {
 
   private val deletes = mutable.Map.empty[String, mutable.ArrayBuffer[Long]]
   private val writers = mutable.Map.empty[String, (String, ParquetWriter[InternalRow])]
   // lazy: a delta DELETE's write schema carries no data columns and
   // never calls insert()
-  private lazy val shipIdx = schema.fieldIndex(partCol)
-  private lazy val shipDt = schema(shipIdx).dataType
+  private lazy val partIdx: Option[Int] = partCol.map(schema.fieldIndex)
 
-  private def monthOf(row: InternalRow): String = shipDt match {
+  private def monthOf(row: InternalRow, idx: Int): String = schema(idx).dataType match {
     case DateType =>
-      java.time.LocalDate.ofEpochDay(row.getInt(shipIdx).toLong).toString.take(7)
+      java.time.LocalDate.ofEpochDay(row.getInt(idx).toLong).toString.take(7)
     case _ => // TimestampType / TimestampNTZType: micros since epoch, UTC
       java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(row.getLong(shipIdx), 1000000L), 0,
+        Math.floorDiv(row.getLong(idx), 1000000L), 0,
         java.time.ZoneOffset.UTC).toLocalDate.toString.take(7)
   }
 
@@ -308,13 +309,17 @@ private[iceberg] class GraftDeltaWriter(dataDir: String, schema: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    val month = monthOf(row)
-    // the month rides in the directory (hive layout); l_shipdate itself
-    // stays IN the file like every graft data file
-    writers.getOrElseUpdate(month, {
-      val dir = new File(s"$dataDir/p_month=$month"); dir.mkdirs()
-      val path = new File(dir,
-        f"delta-$partitionId%05d-$taskId-$month.parquet").getPath
+    val month = partIdx.map(monthOf(row, _))
+    // the month rides in the directory (hive layout); the source column
+    // itself stays IN the file like every graft data file
+    writers.getOrElseUpdate(month.getOrElse(""), {
+      val (dir, name) = month match {
+        case Some(m) =>
+          (new File(s"$dataDir/p_month=$m"), f"delta-$partitionId%05d-$taskId-$m.parquet")
+        case None => (new File(dataDir), f"delta-$partitionId%05d-$taskId.parquet")
+      }
+      dir.mkdirs()
+      val path = new File(dir, name).getPath
       (path, GraftRowParquet.writer(path, schema))
     })._2.write(row)
   }

@@ -1832,7 +1832,18 @@ object IcebergTable {
     val meta = readMetadata(location)
     val snap = snapshotId.map(id => meta.snapshots.find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(currentSnapshot(meta))
-    val manifests = readManifestList(snap.manifestList)
+    pruneFiles(readManifestList(snap.manifestList), monthLo, monthHi, dateLo, dateHi)(
+      live => readManifestsParallel(live.map(_.path), fetchParallelism, fetchDelayMs))
+  }
+
+  /** [[planFiles]]' pruning over a snapshot's manifest list: `read` returns
+    * the entries of the manifests that survive month pruning, in their
+    * order — a caller that already holds every manifest's entries serves
+    * them instead of reading the manifests again. */
+  def pruneFiles(manifests: Seq[ManifestInfo],
+                 monthLo: Option[String], monthHi: Option[String],
+                 dateLo: Option[String], dateHi: Option[String])(
+                 read: Seq[ManifestInfo] => Seq[Seq[DataFileEntry]]): ScanPlan = {
     // Month-bound pruning must not compare weekly-spec partition values
     // ('yyyy-MM-dd' week starts, partition evolution) lexicographically
     // against 'yyyy-MM' bounds — a week file in the monthHi boundary month
@@ -1861,7 +1872,7 @@ object IcebergTable {
       else monthLo.forall(l => f.hiShip.take(7) >= l) &&
         monthHi.forall(h => f.loShip.take(7) <= h)
     val live = manifests.filter(m => monthOverlaps(m.partLo, m.partHi, m.specId))
-    val files = readManifestsParallel(live.map(_.path), fetchParallelism, fetchDelayMs)
+    val files = read(live)
       .zip(live).flatMap { case (es, m) => es.map(f => (f, m.specId)) }
       .filter(_._1.content == 0)
     val selected = files.collect {

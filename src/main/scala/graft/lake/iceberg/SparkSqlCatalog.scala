@@ -31,9 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[IcebergCatalog]] table answers `SELECT … FROM <name>.<ns>.<table>`
   * — including `VERSION AS OF <snapshot-id>` time travel — through
   * Spark's own DSv2 planner. No Iceberg jars: planning IS
-  * [[IcebergTable.planFiles]] (manifest-list pruning + file-level stats
-  * skip on the pushed l_shipdate bounds), and the readers resolve the
-  * snapshot's delete files per the spec — v3 deletion vectors skipped
+  * [[IcebergTable.planFiles]]' pruning ([[IcebergTable.pruneFiles]]:
+  * manifest-list pruning + file-level stats skip on the pushed l_shipdate
+  * bounds) over manifests read once per scan, and the readers resolve
+  * the snapshot's delete files per the spec — v3 deletion vectors skipped
   * positionally WHILE reading (the real reader shape: the DV rides to the
   * task as KB-grain compressed Roaring bytes and positions never
   * materialize off the executor) and equality-delete keys scoped to
@@ -43,12 +44,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * task reads ([[GraftSqlScanCensus]] records cols_read beside the
   * file-prune census so a query can PROVE both reached the scan).
   *
-  * Scale shape: one InputPartition per planned data file (a 1000-executor
-  * cluster fans the files out like any FileScan); per-task state is one
-  * file's DV positions (bounded by rows-per-file) plus the broadcast-size
-  * equality key set, both shipped once in the serialized factory/
-  * partition. Writes: `INSERT INTO` routes through the committing
-  * [[IcebergTable.append]] (V1Write bridge on [[GraftSqlTable]]);
+  * Scale shape: the planned data files pack into size-balanced
+  * InputPartitions by Spark's own FileScan rule ([[GraftScanPacking]]:
+  * about one per core's share of the bytes, each file whole), so a table
+  * of many small files does not pay one task per file; per-file reader
+  * state is one file's DV positions (bounded by rows-per-file) plus the
+  * broadcast-size equality key set; the DV blobs ship in the partition,
+  * the keys once per executor. Writes: `INSERT INTO` routes through the
+  * committing [[IcebergTable.append]] (V1Write bridge on [[GraftSqlTable]]);
   * row-level mutations stay library API calls
   * (updateMorDv/appendDvPuffin/…), like the real library's procedures.
   *
@@ -873,8 +876,7 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
           // re-derived inside commitOverwriteMonths' OCC retry loop
           val dirHint = IcebergTable.readMetadataOpt(location)
             .map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-          new GraftOverwriteBatchWrite(location, writeSchema, dirHint,
-            partCol.getOrElse("l_shipdate"))
+          new GraftOverwriteBatchWrite(location, writeSchema, dirHint, partCol)
         }
       }
     case m =>
@@ -925,8 +927,7 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
             : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
           require(m != "truncate",
             "streaming complete-mode (truncate) writes are not supported; use append")
-          new GraftStreamingWrite(location, writeSchema, queryId,
-            partCol.getOrElse("l_shipdate"))
+          new GraftStreamingWrite(location, writeSchema, queryId, partCol)
         }
       }
   }
@@ -989,15 +990,64 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
 
 /** One planned data file + the delete state its reader must apply: the
   * file's data sequence and the compressed DV blobs referencing it. */
-private[iceberg] case class GraftInputPartition(path: String, sequence: Long,
-                                                dvBlobs: Array[Array[Byte]])
+private[iceberg] case class GraftFileTask(path: String, sequence: Long,
+                                          dvBlobs: Array[Array[Byte]])
+
+/** One scan task: planned data files read one after another, in plan
+  * order. Files are never split, and each keeps its own delete state. */
+private[iceberg] case class GraftInputPartition(files: Array[GraftFileTask])
     extends InputPartition
 
-/** The DSv2 scan: one [[GraftInputPartition]] per planned data file, each
-  * read COLUMNAR by [[GraftColumnarReader]] — clean files, files under
+/** Packs a scan's planned files into size-balanced tasks by the rule of
+  * Spark's own file sources (`FilePartition.maxSplitBytes`): every file
+  * costs its bytes plus `spark.sql.files.openCostInBytes`, a task holds at
+  * most `min(maxPartitionBytes, max(openCost, Σcost / minPartitions))`,
+  * where `minPartitions` is `spark.sql.files.minPartitionNum` or the
+  * default parallelism. Tasks fill next-fit in plan order, so the scan's
+  * row order does not change. A file larger than the cap gets a task of
+  * its own; no file is split. */
+private[iceberg] object GraftScanPacking {
+  def maxSplitBytes(sizes: Seq[Long], maxPartitionBytes: Long, openCost: Long,
+                    minPartitions: Int): Long = {
+    val total = sizes.map(_ + openCost).sum
+    math.min(maxPartitionBytes, math.max(openCost, total / minPartitions))
+  }
+
+  def pack[T](files: Seq[T], size: T => Long, maxSplit: Long, openCost: Long): Seq[Seq[T]] = {
+    val out = Seq.newBuilder[Seq[T]]
+    var cur = Vector.empty[T]
+    var bytes = 0L
+    files.foreach { f =>
+      if (cur.nonEmpty && bytes + size(f) > maxSplit) { out += cur; cur = Vector.empty; bytes = 0L }
+      cur :+= f
+      bytes += size(f) + openCost
+    }
+    if (cur.nonEmpty) out += cur
+    out.result()
+  }
+
+  /** [[pack]] by file size under the active session's file-source
+    * settings. */
+  def packForSession(files: Seq[IcebergTable.DataFileEntry])
+      : Seq[Seq[IcebergTable.DataFileEntry]] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val minPartitions = conf.filesMinPartitionNum.getOrElse(
+      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    pack[IcebergTable.DataFileEntry](files, _.fileSizeBytes,
+      maxSplitBytes(files.map(_.fileSizeBytes), conf.filesMaxPartitionBytes, openCost,
+        minPartitions),
+      openCost)
+  }
+}
+
+/** The DSv2 scan: the planned data files packed into size-balanced
+  * [[GraftInputPartition]]s ([[GraftScanPacking]]), every file read
+  * COLUMNAR by [[GraftColumnarReader]] — clean files, files under
   * deletion vectors and equality deletes, and the `_file`/`_pos` scans
   * under row-level `DELETE`/`UPDATE`/`MERGE` alike. The table metadata is
-  * parsed once per scan and serves both planning and the reader factory. */
+  * parsed once per scan and serves both planning and the reader factory;
+  * every manifest is read once per scan. */
 private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
                                  dateLo: Option[String], dateHi: Option[String],
                                  required: StructType, tableCols: Int)
@@ -1055,7 +1105,8 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
       throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(
       IcebergTable.currentSnapshot(m))
     val manifests = IcebergTable.readManifestList(snap.manifestList)
-    val entries = IcebergTable.readManifestsParallel(manifests.map(_.path)).flatten
+    val perManifest = IcebergTable.readManifestsParallel(manifests.map(_.path))
+    val entries = perManifest.flatten
     require(!entries.exists(e => e.content == 1 && e.referencedDataFile.isEmpty),
       "SQL scan resolves v3 DVs and equality deletes; this table carries v2 " +
         "positional-parquet delete files — run rewrite_position_deletes first")
@@ -1069,11 +1120,12 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     eqDeletes = eqs.map(e =>
       (e.sequence, GraftParquetRows.readLongColumn(e.path, "key"))).toArray
     eqFingerprint = eqs.map(e => s"${e.path}@${e.sequence}").sorted.mkString(";")
-    // ONE planning pass: ScanPlan.filesTotal is computed from the full
-    // manifest list regardless of pruning, so the pruned plan already
-    // carries the census denominator (a second unpruned planFiles would
-    // just re-read every manifest).
-    val plan = IcebergTable.planFiles(location, snapshotId, None, None, dateLo, dateHi)
+    // planFiles' pruning over the manifests read above: the scan reads
+    // every manifest once (ScanPlan.filesTotal is computed from the full
+    // manifest list, so the pruned plan carries the census denominator)
+    val byPath = manifests.map(_.path).zip(perManifest).toMap
+    val plan = IcebergTable.pruneFiles(manifests, None, None, dateLo, dateHi)(
+      _.map(m => byPath(m.path)))
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
       plan.manifestsRead.toLong, required.size.toLong, tableCols.toLong))
@@ -1083,11 +1135,14 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
       slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
         e.contentOffset, e.contentSize))
     }
-    plan.files.map { f =>
-      val mine = dvsByFile.getOrElse(norm(f.path), Seq.empty)
-        .filter(e => e.sequence >= f.sequence)
-      GraftInputPartition(f.path, f.sequence, mine.map(blobBytes).toArray): InputPartition
-    }.toArray
+    GraftScanPacking.packForSession(plan.files)
+      .map { fs =>
+        GraftInputPartition(fs.map { f =>
+          val mine = dvsByFile.getOrElse(norm(f.path), Seq.empty)
+            .filter(e => e.sequence >= f.sequence)
+          GraftFileTask(f.path, f.sequence, mine.map(blobBytes).toArray)
+        }.toArray): InputPartition
+      }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1141,7 +1196,8 @@ private[iceberg] object GraftEqBroadcastCache {
   }
 }
 
-/** Serves every partition with a [[GraftColumnarReader]]: the partition's
+/** Serves every partition with a [[GraftPackedReader]] that reads the
+  * partition's files through one [[GraftColumnarReader]] each: a file's
   * DV blobs decode to sorted positions, and the equality waves newer than
   * the file merge into one sorted key array. There is no row reader. */
 private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
@@ -1156,20 +1212,50 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    // spec scoping: equality deletes apply to STRICTLY older data files
-    val keys = eqBc.value.collect { case (seq, ks) if seq > p.sequence => ks }
-    val merged =
+    // files of one sequence see the same equality waves: merge them once
+    val keysBySequence = scala.collection.mutable.Map.empty[Long, Array[Long]]
+    def eqKeys(sequence: Long): Array[Long] = keysBySequence.getOrElseUpdate(sequence, {
+      // spec scoping: equality deletes apply to STRICTLY older data files
+      val keys = eqBc.value.collect { case (seq, ks) if seq > sequence => ks }
       if (keys.isEmpty) Array.empty[Long]
       else { val a = keys.flatten; java.util.Arrays.sort(a); a }
-    val deleted =
-      if (p.dvBlobs.isEmpty) Array.empty[Long]
-      else {
-        val a = p.dvBlobs.flatMap(RoaringDv.deserializeDvBlob)
-        java.util.Arrays.sort(a); a
-      }
-    new GraftColumnarReader(p.path, fields, deleted, merged, renames, widened)
+    })
+    new GraftPackedReader(partition.asInstanceOf[GraftInputPartition].files, { f =>
+      val deleted =
+        if (f.dvBlobs.isEmpty) Array.empty[Long]
+        else {
+          val a = f.dvBlobs.flatMap(RoaringDv.deserializeDvBlob)
+          java.util.Arrays.sort(a); a
+        }
+      new GraftColumnarReader(f.path, fields, deleted, eqKeys(f.sequence), renames, widened)
+    })
   }
+}
+
+/** A scan task's reader: the partition's files in order, each through its
+  * own reader from `open`. A file's reader opens when the previous one is
+  * exhausted and closes before the next opens, so `_file`/`_pos` and the
+  * delete state stay per file and one file's decoder is live at a time. */
+private[iceberg] class GraftPackedReader(files: Array[GraftFileTask],
+                                         open: GraftFileTask => PartitionReader[ColumnarBatch])
+    extends PartitionReader[ColumnarBatch] {
+  private var opened = 0 // files opened so far
+  private var current: PartitionReader[ColumnarBatch] = _
+
+  override def next(): Boolean = {
+    while (current != null || opened < files.length) {
+      if (current == null) { current = open(files(opened)); opened += 1 }
+      if (current.next()) return true
+      current.close()
+      current = null
+    }
+    false
+  }
+
+  override def get(): ColumnarBatch = current.get()
+
+  override def close(): Unit =
+    if (current != null) { current.close(); current = null }
 }
 
 /** Shared executor-side opener for Spark's VECTORIZED parquet reader —
@@ -1307,18 +1393,19 @@ object GraftVectorized {
   }
 }
 
-/** The scan's one executor-side reader: Spark's vectorized decode of one
-  * data file, with the file's delete state applied to each batch. The
-  * reader tracks every decoded row's ordinal within the file; a batch
-  * that loses rows to DV positions or equality keys is served through a
-  * row-id map — each column a [[GraftFilteredVector]] over the decoder's
-  * vector, so no value is copied — and a batch that loses none is served
-  * as decoded. `_file` is a constant vector and `_pos` a long vector of
-  * the surviving ordinals (the row-level operations' rowId). A column a
-  * pre-evolution file lacks comes back as an all-null vector, and one a
-  * pre-promotion file holds at a narrower type through a
-  * [[GraftUpcastVector]] beneath the filter. A batch whose every row is
-  * deleted is skipped, never taken for the end of the file. */
+/** The scan's per-file reader ([[GraftPackedReader]] runs one per file of
+  * a task): Spark's vectorized decode of one data file, with the file's
+  * delete state applied to each batch. The reader tracks every decoded
+  * row's ordinal within the file; a batch that loses rows to DV positions
+  * or equality keys is served through a row-id map — each column a
+  * [[GraftFilteredVector]] over the decoder's vector, so no value is
+  * copied — and a batch that loses none is served as decoded. `_file` is
+  * a constant vector and `_pos` a long vector of the surviving ordinals
+  * (the row-level operations' rowId). A column a pre-evolution file lacks
+  * comes back as an all-null vector, and one a pre-promotion file holds
+  * at a narrower type through a [[GraftUpcastVector]] beneath the filter.
+  * A batch whose every row is deleted is skipped, never taken for the end
+  * of the file. */
 private[iceberg] class GraftColumnarReader(path: String,
                                            fields: Array[(String, DataType)],
                                            deletedPos: Array[Long],
@@ -1532,7 +1619,8 @@ private[iceberg] case class GraftStreamOffset(snapshotId: Long)
 
 /** MicroBatchStream over the real snapshot log — see
   * [[GraftScan.toMicroBatchStream]]. Planning is metadata-only per batch;
-  * partitions reuse the batch reader (no delete state: an incremental
+  * files pack into partitions as the batch scan's do and reuse its reader
+  * (no delete state: an incremental
   * APPEND scan's files carry no DVs by construction — deletes target
   * already-consumed history). */
 private[iceberg] class GraftMicroBatchStream(location: String, required: StructType)
@@ -1552,8 +1640,10 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
     val from = start.asInstanceOf[GraftStreamOffset].snapshotId
     val to = end.asInstanceOf[GraftStreamOffset].snapshotId
     if (to <= from) return Array.empty
-    IcebergTable.planIncremental(location, from, to).files
-      .map(f => GraftInputPartition(f.path, f.sequence, Array.empty)).toArray
+    GraftScanPacking.packForSession(IcebergTable.planIncremental(location, from, to).files)
+      .map(fs => GraftInputPartition(
+        fs.map(f => GraftFileTask(f.path, f.sequence, Array.empty)).toArray): InputPartition)
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -15,9 +15,11 @@ import org.apache.spark.sql.Dataset
   * checkpoint directory (HDFS / object store on a cluster), which survive
   * executor churn. The directory comes from an already-configured
   * `SparkContext.setCheckpointDir`, or from `spark.graft.checkpointDir` at
-  * first use; asking for reliable checkpoints with neither set is an error
-  * (silently falling back to local blocks would defeat the point of the
-  * flag).
+  * first use. Asking for reliable checkpoints explicitly with neither set
+  * is an error (silently falling back to local blocks would defeat the
+  * point of the flag); the off-local DEFAULT with neither set logs a
+  * warning and keeps local blocks, so a cluster deployment that never
+  * configured a directory still runs (see [[modeFor]]).
   *
   * The two modes produce byte-identical DataFrames — only the storage of
   * the truncation point differs — so oracle hashes and memoized reuse
@@ -43,23 +45,54 @@ object Checkpoints {
   def wantsReliable(flag: Option[String], master: String): Boolean =
     flag.map(_.toBoolean).getOrElse(!master.startsWith("local"))
 
+  /** Where a checkpoint's blocks go. */
+  sealed trait Mode
+  /** `localCheckpoint`: blocks on the executors that computed them. */
+  case object Local extends Mode
+  /** Local blocks although reliable ones were the default: the master is
+    * not local but no checkpoint directory is configured. */
+  case object LocalWithoutDir extends Mode
+  /** Reliable checkpoint files; `setDir` is the directory to set on the
+    * context first, when it has none. */
+  final case class Reliable(setDir: Option[String]) extends Mode
+
+  /** The checkpoint decision from the session's flag and directory, the
+    * master string and the context's directory — pure, so every branch is
+    * testable without a cluster. An explicit [[FlagKey]]`=true` without a
+    * directory throws; the off-local default without one degrades to
+    * [[LocalWithoutDir]]. */
+  def modeFor(flag: Option[String], master: String, configuredDir: Option[String],
+              contextDir: Option[String]): Mode =
+    if (!wantsReliable(flag, master)) Local
+    else if (contextDir.isDefined) Reliable(None)
+    else if (configuredDir.isDefined) Reliable(configuredDir)
+    else if (flag.isEmpty) LocalWithoutDir
+    else throw new IllegalStateException(
+      s"reliable checkpoints ($FlagKey=true) need a checkpoint dir: " +
+        s"call setCheckpointDir or set $DirKey")
+
+  private val warnedWithoutDir = new java.util.concurrent.atomic.AtomicBoolean(false)
+
   implicit class StableCheckpoint[T](private val ds: Dataset[T]) extends AnyVal {
     /** Eager lineage-truncating checkpoint honoring [[FlagKey]], reliable
       * by default off-local. The two modes produce byte-identical
       * DataFrames — only where the truncated blocks live differs. */
     def stableCheckpoint(): Dataset[T] = {
       val spark = ds.sparkSession
-      val flag = spark.conf.getOption(FlagKey)
-      if (!wantsReliable(flag, spark.sparkContext.master)) ds.localCheckpoint(eager = true)
-      else {
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.getOption(DirKey).getOrElse(throw new IllegalStateException(
-            s"reliable checkpoints (explicit $FlagKey=true, or the off-local default) " +
-              s"need a checkpoint dir: call setCheckpointDir or set $DirKey"))
-          sc.setCheckpointDir(dir)
-        }
-        ds.checkpoint(eager = true)
+      val sc = spark.sparkContext
+      modeFor(spark.conf.getOption(FlagKey), sc.master, spark.conf.getOption(DirKey),
+          sc.getCheckpointDir) match {
+        case Local => ds.localCheckpoint(eager = true)
+        case LocalWithoutDir =>
+          if (warnedWithoutDir.compareAndSet(false, true))
+            org.slf4j.LoggerFactory.getLogger(Checkpoints.getClass).warn(
+              s"master ${sc.master} is not local but no checkpoint directory is set " +
+                s"(setCheckpointDir or $DirKey): checkpoints stay local blocks, " +
+                "which are lost with their executor")
+          ds.localCheckpoint(eager = true)
+        case Reliable(setDir) =>
+          setDir.foreach(sc.setCheckpointDir)
+          ds.checkpoint(eager = true)
       }
     }
 

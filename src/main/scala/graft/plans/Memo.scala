@@ -63,8 +63,11 @@ object Memo {
     * fixtures, would mean two writers in one temp dir. Different keys
     * build concurrently (what lets the bench's setup phase thread-pool the
     * fixture builds, guide §2.6). Lock ordering is acyclic: nested memo
-    * calls only ever descend (components → groups → tokids). */
-  private val inFlight =
+    * calls only ever descend (components → groups → tokids). A key's lock
+    * lives as long as the memo: the key can be evicted and rebuilt at any
+    * time, and a waiter still blocked on the first lock must serialize
+    * with that rebuild (one small object per distinct key). */
+  private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), Object]
 
   /** Max live artifacts; far above the ~10 family pipelines a round uses,
@@ -83,7 +86,7 @@ object Memo {
     // A LogicalRDD leaf (fresh per localCheckpoint/createDataFrame call) makes
     // the key un-re-hittable: caching it would only leak — run un-memoized.
     if (canon.collectLeaves().exists(_.isInstanceOf[LogicalRDD])) return compute
-    val key = (canon.semanticHash(), tag)
+    val key = keyOf(canon, tag)
     def hit: Option[T] = cache.get(key) match {
       case Some(e) if (e.session.sparkContext eq keyDf.sparkSession.sparkContext) &&
           !e.session.sparkContext.isStopped && e.plan == canon =>
@@ -91,7 +94,7 @@ object Memo {
       case _ => None
     }
     hit.getOrElse {
-      inFlight.computeIfAbsent(key, _ => new Object).synchronized {
+      lockOf(key).synchronized {
         // re-check under the key lock: a concurrent builder may have
         // finished while this thread waited
         hit.getOrElse {
@@ -104,17 +107,19 @@ object Memo {
             }
           val v = compute
           cache.put(key, Entry(canon, keyDf.sparkSession, v, seqGen.incrementAndGet()))
-          // success: drop the build lock so inFlight stays bounded by the
-          // keys currently building, not every key ever built. Late
-          // waiters on the removed object re-check `hit` and take the
-          // cached value; a FAILED compute keeps its lock entry so
-          // retrying threads still serialize instead of racing a rebuild.
-          inFlight.remove(key)
           v
         }
       }
     }
   }
+
+  private def keyOf(canon: LogicalPlan, tag: String): (Int, String) = (canon.semanticHash(), tag)
+
+  private def lockOf(key: (Int, String)): Object = buildLocks.computeIfAbsent(key, _ => new Object)
+
+  /** The object builds of `(keyDf, tag)` serialize on. */
+  private[graft] def buildLock(keyDf: DataFrame, tag: String): Object =
+    lockOf(keyOf(keyDf.queryExecution.analyzed.canonicalized, tag))
 
   /** Bench-harness hook (scale-trend): drop all map entries AND unpersist
     * the checkpointed blocks the memo owns, so each measured scale point

@@ -21,6 +21,37 @@ class BenchBaselineSpec extends AnyFunSuite {
     assert(Bench.parseBaseline(pretty) == expect)
   }
 
+  test("parseBaseline reads exponents and negative numbers; a partial parse fails loudly") {
+    val json = """{"tiny": 1.5e-3, "big": 2E2, "neg": -0.25, "int": 7}"""
+    assert(Bench.parseBaseline(json) ==
+      Map("tiny" -> 0.0015, "big" -> 200.0, "neg" -> -0.25, "int" -> 7.0))
+    assert(Bench.parseBaselineStrict(json, "inline").size == 4)
+    val partial = """{"q1": 0.4, "q2": "n/a", "q3": null}"""
+    val e = intercept[IllegalStateException](Bench.parseBaselineStrict(partial, "inline"))
+    assert(e.getMessage.contains("parsed 1 numbers from 3 keys"))
+  }
+
+  test("a failed pooled build drops the queued builds instead of running them") {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val names = Seq("boom") ++ (1 to 5).map(i => s"slow$i")
+    intercept[java.util.concurrent.ExecutionException] {
+      Bench.runPooled(names, threads = 1) { q =>
+        started.incrementAndGet()
+        if (q == "boom") throw new IllegalStateException("setup failed")
+        Thread.sleep(1000)
+        finished.incrementAndGet()
+      }
+    }
+    Thread.sleep(2500)
+    // the one worker may have taken the next build before the failure
+    // reached the caller; that build is interrupted, and the rest never start
+    assert(started.get() <= 2, s"${started.get()} builds started after the failure")
+    assert(finished.get() == 0, s"${finished.get()} builds ran to completion after the failure")
+    assert(Bench.runPooled(Seq("a", "b", "c"), threads = 2)(_.toUpperCase) ==
+      Seq("a" -> "A", "b" -> "B", "c" -> "C"))
+  }
+
   test("the committed sf0.1 baseline resource actually parses non-empty") {
     val b = Bench.loadBaseline("sf0.1")
     assert(b.size >= 300, s"committed baseline parsed only ${b.size} entries")

@@ -55,6 +55,23 @@ class CheckpointsSpec extends SparkSpec {
     assert(!Checkpoints.wantsReliable(Some("false"), "yarn"))
   }
 
+  test("off-local without a checkpoint dir falls back to local blocks; an explicit flag still throws") {
+    import Checkpoints.{Local, LocalWithoutDir, Reliable, modeFor}
+    // the off-local default with no directory anywhere degrades, not throws
+    assert(modeFor(None, "yarn", None, None) == LocalWithoutDir)
+    assert(modeFor(None, "spark://host:7077", None, None) == LocalWithoutDir)
+    // a directory from the session or the context engages reliable files
+    assert(modeFor(None, "yarn", Some("/ckpt"), None) == Reliable(Some("/ckpt")))
+    assert(modeFor(None, "yarn", Some("/ckpt"), Some("/ctx")) == Reliable(None))
+    assert(modeFor(Some("true"), "local[4]", None, Some("/ctx")) == Reliable(None))
+    // local masters and an explicit false keep local blocks
+    assert(modeFor(None, "local[4]", None, None) == Local)
+    assert(modeFor(Some("false"), "yarn", None, None) == Local)
+    // asking for reliable checkpoints explicitly without a directory is loud
+    val e = intercept[IllegalStateException](modeFor(Some("true"), "yarn", None, None))
+    assert(e.getMessage.contains(Checkpoints.DirKey))
+  }
+
   test("reliable mode writes replicated checkpoint files and preserves results") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
     val df = Tables.documents(spark, sf0001)

@@ -43,6 +43,53 @@ class WriteDistributionSpec extends SparkSpec {
     assert(orderingCols(None) == Seq("_file", "_pos"))
   }
 
+  private val unpartitionedSchema = StructType(Seq(
+    StructField("v", LongType), StructField("event_ts", TimestampType)))
+  private val writeInfo = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+    override def numPartitions(): Int = 1
+  }
+  private def unpartitionedRows: Seq[org.apache.spark.sql.catalyst.InternalRow] =
+    Seq(0L, 40L * 86400L, 400L * 86400L).zipWithIndex.map { case (sec, i) =>
+      org.apache.spark.sql.catalyst.InternalRow(i.toLong, sec * 1000000L) }
+
+  /** The written files sit directly under `dataDir` and hold every row. */
+  private def assertFlat(dataDir: String, files: Seq[String]): Unit = {
+    assert(files.size == 1, s"one task writes one unpartitioned file: $files")
+    assert(new java.io.File(files.head).getParent == dataDir)
+    assert(!new java.io.File(dataDir).list().exists(_.startsWith("p_month=")))
+    assert(spark.read.parquet(files: _*).select("v").collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("a delta write whose spec has no source column writes unpartitioned") {
+    val loc = Files.createTempDirectory("graft_unpart_delta_").toString
+    val w = new GraftDeltaBatchWrite(loc, unpartitionedSchema, 7L, None)
+      .createBatchWriterFactory(writeInfo).createWriter(0, 11L)
+    // rows span three months, and the schema has no l_shipdate column
+    unpartitionedRows.foreach(w.insert)
+    w.delete(null, org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s"$loc/old.parquet"), 3L))
+    val msg = w.commit().asInstanceOf[GraftDeltaCommitMessage]
+    assert(msg.deletes.map(d => (d._1, d._3)).toSeq == Seq((s"$loc/old.parquet", 1L)))
+    assertFlat(s"$loc/data/snap-7", msg.files.toSeq)
+  }
+
+  test("a dynamic overwrite whose spec has no source column writes unpartitioned") {
+    import org.apache.spark.sql.connector.distributions.UnspecifiedDistribution
+    import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
+    val loc = Files.createTempDirectory("graft_unpart_overwrite_").toString
+    val write = new GraftWriteBuilder(loc, unpartitionedSchema, partitioning = Array.empty)
+      .overwriteDynamicPartitions().build()
+    val rdo = write.asInstanceOf[RequiresDistributionAndOrdering]
+    assert(rdo.requiredDistribution().isInstanceOf[UnspecifiedDistribution])
+    assert(rdo.requiredOrdering().isEmpty)
+    val w = write.toBatch.createBatchWriterFactory(writeInfo).createWriter(0, 5L)
+    unpartitionedRows.foreach(w.write)
+    val msg = w.commit().asInstanceOf[GraftDeltaCommitMessage]
+    // a table without a snapshot stages under snap-1
+    assertFlat(s"$loc/data/snap-1", msg.files.toSeq)
+  }
+
   test("months V2 function computes the Iceberg month-transform value") {
     val bound = GraftMonthsFunction.bind(
       StructType(Seq(StructField("ts", TimestampType))))
