@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_BENCH_OUT (default `bench_artifact.json`, committed per
   * round), and stdout carries only: totals, n_queries, n_reruns, the
   * top-10 slowest, write-bench headline, scale-trend flags with measured
-  * exponents, contention_x, and the artifact path.
+  * exponents, contention_x, the effective parallelism, and the artifact
+  * path.
   *
   * Each query is materialised with a noop-format write so the full plan
   * executes (a bare count() lets Spark prune projections and under-reports).
@@ -266,6 +267,20 @@ object Bench {
     } catch { case e: Throwable => pool.shutdownNow(); throw e }
   }
 
+  /** The `"parallelism"` block the artifact and the compact line carry: the
+    * master, Spark's default parallelism, the shuffle partition count and
+    * `SPARK_GRAFT_CPUS` exactly as received (null when unset), so a reader
+    * checks the cores a run used instead of inferring them from timings. */
+  def parallelismJson(master: String, defaultParallelism: Int, shufflePartitions: String,
+                      cpusEnv: Option[String]): String = {
+    import org.json4s._
+    ",\"parallelism\":" + org.json4s.jackson.JsonMethods.compact(JObject(
+      "master" -> JString(master),
+      "default_parallelism" -> JInt(defaultParallelism),
+      "shuffle_partitions" -> JString(shufflePartitions),
+      "spark_graft_cpus" -> cpusEnv.map(JString(_)).getOrElse(JNull)))
+  }
+
   def main(args: Array[String]): Unit = {
     // Stdout contract hardening: log4j already targets SYSTEM_ERR, but the
     // BENCH_r14 tail showed an executor ClassNotFound stack trace written
@@ -343,6 +358,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.tune(spark)
+    val parallelism = parallelismJson(spark.sparkContext.master,
+      spark.sparkContext.defaultParallelism, spark.conf.get("spark.sql.shuffle.partitions"),
+      sys.env.get("SPARK_GRAFT_CPUS"))
 
     // ---- Streamed-artifact state: every phase writes through these so the
     // artifact file and the compact line can both be composed at ANY moment
@@ -398,7 +416,8 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"top20_slowest":$top,""" +
         f""""mem":$memJson,"n_queries":${results.size},"n_reruns":$nReruns,""" +
         f""""first_pass_sec":${firstPassNow(total)}%.3f,"total_sec":$total%.3f""" +
-        s"""$setupJson${extraBlocks.toString}$scaleJson$contention$jobErrJson${partialJson(partial)},"sf":"$sfDir"}"""
+        s"""$setupJson${extraBlocks.toString}$scaleJson$contention$jobErrJson${partialJson(partial)}""" +
+        s"""$parallelism,"sf":"$sfDir"}"""
     }
     def flushArtifact(partial: Boolean = true): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -430,7 +449,7 @@ object Bench {
         f""","n_queries":${results.size},"n_reruns":$nReruns,"first_pass_sec":${firstPassNow(total)}%.3f,""" +
         f""""queries":$top10,"mem_top_peak_mb":$memTop""" +
         writeHeadline + scaleSummary + jobErrHeadline + partialJson(partial) +
-        f""","contention_x":$contentionXNow%.2f,"artifact":"$outPath","sf":"$sfDir"}"""
+        f""","contention_x":$contentionXNow%.2f$parallelism,"artifact":"$outPath","sf":"$sfDir"}"""
     }
     val linePrinted = new java.util.concurrent.atomic.AtomicBoolean(false)
     def printCompact(partial: Boolean): Unit =

@@ -46,9 +46,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * arrays: an UPDATE touching 10⁹ rows must not ship ~8 GB of longs into
   * driver heap. The driver or-merges blobs per file (cheap union of
   * compressed bitmaps; single-task files pass through untouched) and the
-  * commit is OPTIMISTIC — [[IcebergTable.commitDelta]] re-derives the
-  * snapshot id and CASes the metadata version under appendOcc's retry
-  * loop, so two concurrent SQL writers serialize instead of silently
+  * commit is OPTIMISTIC — [[IcebergTable.commitDelta]] runs as one
+  * [[IcebergTable.commit]] transaction, which re-derives the snapshot id
+  * against the version it read and retries on a lost version CAS, so two
+  * concurrent SQL writers serialize instead of silently
   * last-writer-winning. Task retries are safe: only files named in COMMIT
   * messages enter the manifest, stray files from aborted attempts are
   * deleted at commit by directory listing (never opened — a truncated
@@ -134,7 +135,7 @@ private[iceberg] class GraftDeltaWrite(location: String, schema: StructType,
     // the data dir name is only a staging HINT fixed at write-build time
     // (manifests record full file paths, so the dir name never has to
     // match the committed snapshot id); the ACTUAL snapshot id is
-    // re-derived inside commitDelta's OCC retry loop at commit time.
+    // re-derived inside commitDelta's commit transaction.
     val dirHint = IcebergTable.readMetadata(location)
       .snapshots.map(_.id).max + 1L
     new GraftDeltaBatchWrite(location, schema, dirHint, partCol)
@@ -217,7 +218,7 @@ private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: Struct
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect { case m: GraftDeltaCommitMessage => m }
       .flatMap(_.files).toSeq
-    // snapshot id re-derived inside the committer's OCC retry loop —
+    // snapshot id re-derived inside the committer's commit transaction —
     // dataDir is only the staging hint (see GraftDeltaWrite.toBatch)
     IcebergTable.commitOverwriteMonths(org.apache.spark.sql.SparkSession.active,
       location, dataDir, files)

@@ -6,9 +6,12 @@ package graft.lake.iceberg
   * threads + conflict detection + retry loop), upgraded from the modeled
   * commit log (`graft.lake.OccBench`) to the actual version-file CAS:
   * every attempt reads the metadata at its version, builds the next
-  * snapshot, and tries to publish version+1 with an exclusive create —
-  * losers observe `FileAlreadyExistsException` and retry against the
-  * re-read log ([[IcebergTable.tryCommitTouch]]).
+  * snapshot, and tries to publish version+1 by an exclusive hard link —
+  * the one [[IcebergTable.commit]] transaction every table change runs.
+  * [[race]] drives single attempts ([[IcebergTable.tryCommitTouch]] =
+  * one [[IcebergTable.commitAttempt]]) and counts each lost CAS itself;
+  * [[dataRace]] races whole appends and sums the conflicts their commits
+  * retried through.
   *
   * Correctness is asserted structurally, not statistically: after the
   * race the snapshot log must contain EXACTLY writers × commitsPerWriter
@@ -66,8 +69,8 @@ object IcebergOcc {
 
   /** Race `writers` threads each committing ONE real DATA append of a
     * disjoint slice ([[IcebergTable.appendOcc]] — parquet written once
-    * outside the retry loop, metadata rebuilt per attempt against the
-    * CAS). The no-lost-update proof is at DATA grain: the final table
+    * before the commit transaction, manifests and metadata rebuilt per
+    * attempt against the CAS). The no-lost-update proof is at DATA grain: the final table
     * must hold every slice's rows exactly once. */
   def dataRace(spark: org.apache.spark.sql.SparkSession, writers: Int): DataRaceResult = {
     import org.apache.spark.sql.functions._

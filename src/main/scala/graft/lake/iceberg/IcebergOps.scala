@@ -1308,7 +1308,7 @@ object IcebergOps {
 
   /** Orphan-scan fixture: a 2-era table plus a CRASHED writer — data files
     * written to a writer-unique directory whose commit never happened (the
-    * exact debris `appendOcc` leaves if the process dies between the data
+    * exact debris an append leaves if the process dies between the data
     * write and the metadata CAS; its month slice is spliced into the
     * oracle). */
   private def orphanTableFor(spark: SparkSession, lineitem: DataFrame): String =

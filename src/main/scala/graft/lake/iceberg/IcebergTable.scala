@@ -11,6 +11,8 @@ import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** A from-scratch, spec-shaped Apache Iceberg table layer — REAL metadata
   * files, not a DataFrame model.
@@ -25,7 +27,9 @@ import org.apache.spark.sql.functions._
   *  - `metadata/v<N>.metadata.json` + `version-hint.text` — format-version
   *    2 table metadata: table-uuid, schemas, partition-specs (identity
   *    transform on a month key), snapshot log, current-snapshot-id
-  *    (Iceberg spec §"Table Metadata"; HadoopTables version-hint protocol);
+  *    (Iceberg spec §"Table Metadata"; HadoopTables version-hint protocol),
+  *    written by one json4s serializer ([[metadataJson]]) inside one
+  *    commit transaction ([[commit]]) that every table change runs;
   *  - `metadata/snap-<id>.avro` — the manifest LIST: one `manifest_file`
   *    record per manifest with added-snapshot, counts, and per-partition
   *    field summaries (lower/upper bounds) that let a reader prune WHOLE
@@ -150,7 +154,11 @@ object IcebergTable {
                                  // mutated only by SET/UNSET TBLPROPERTIES.
                                  // `write.target-records-per-file` DRIVES
                                  // the writer's file-split policy.
-                                 properties: Map[String, String] = Map.empty)
+                                 properties: Map[String, String] = Map.empty,
+                                 // ids of every partition spec a committed
+                                 // manifest list has used (spec 0 always):
+                                 // `partition-specs` must define each one
+                                 partitionSpecIds: Set[Int] = Set(0))
 
   /** Result of scan planning — the numbers a metadata benchmark reports. */
   final case class ScanPlan(files: Seq[DataFileEntry], manifestsTotal: Int,
@@ -206,6 +214,15 @@ object IcebergTable {
 
   private def metadataDir(location: String) = { val d = new File(location, "metadata"); d.mkdirs(); d }
 
+  /** A short random tag. Every file a commit attempt writes carries one, so
+    * two writers racing for the same snapshot id never clobber each other's
+    * files before the version CAS picks the winner. */
+  private def fresh(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** A writer-unique directory for data files written outside the commit
+    * transaction. */
+  private def newDataDir(location: String): String = s"$location/data/snap-${fresh()}"
+
   /** Run `body` with parquet LTZ timestamps written as INT64 micros.
     * Spark's default `outputTimestampType` is INT96 for TIMESTAMP (LTZ)
     * columns — a physical form the SQL front door's per-file reader
@@ -232,35 +249,46 @@ object IcebergTable {
     * whose census DuckDB re-derives from the deterministic
     * one-file-per-month function — see [[writeDataSnapshot]]). Rows
     * that turn out to be none commit nothing: the table keeps its current
-    * snapshot (0 when it has none), which is returned. */
+    * snapshot (0 when it has none), which is returned. The data files are
+    * written once; a writer that loses the version race rebuilds only its
+    * manifest, manifest list and metadata ([[commit]]). */
   def append(spark: SparkSession, lineitem: DataFrame, location: String,
              weekly: Boolean = false,
              targetRecordsPerFile: Option[Long] = None,
              clusterFiles: Option[(Int, Boolean)] = None,
-             sorted: Boolean = false): Long = {
-    val prev = readMetadataOpt(location)
-    val snapshotId = prev.map(m => m.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    writeDataFiles(spark, lineitem, location, snapshotId, weekly,
+             sorted: Boolean = false): Long =
+    appendCounted(spark, lineitem, location, weekly, targetRecordsPerFile, clusterFiles, sorted)._1
+
+  /** [[append]], also returning the CAS conflicts its commit retried
+    * through — what the concurrent-writer harness
+    * ([[IcebergOcc.dataRace]]) counts. */
+  def appendOcc(spark: SparkSession, lineitem: DataFrame, location: String): (Long, Int) =
+    appendCounted(spark, lineitem, location)
+
+  private def appendCounted(spark: SparkSession, lineitem: DataFrame, location: String,
+                            weekly: Boolean = false,
+                            targetRecordsPerFile: Option[Long] = None,
+                            clusterFiles: Option[(Int, Boolean)] = None,
+                            sorted: Boolean = false): (Long, Int) =
+    writeDataFiles(spark, lineitem, location, weekly,
         targetRecordsPerFile, clusterFiles, sorted) match {
-      case None => prev.map(_.currentSnapshotId).getOrElse(0L)
-      case Some(newInfo) =>
-        val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-          .getOrElse(Seq.empty)
-        commitSnapshot(location, prev, snapshotId, prevManifests :+ newInfo, "append",
-          lineitem.columns.toSeq.sorted)
+      case None => (readMetadataOpt(location).map(_.currentSnapshotId).getOrElse(0L), 0)
+      case Some(files) =>
+        val c = commitSnapshot(location, "append", files, lineitem.columns.toSeq.sorted) { a =>
+          a.parentManifests :+ writeManifestAvro(location, a.id, a.added, if (weekly) 1 else 0)
+        }
+        (c.snapshotId, c.conflicts)
     }
-  }
 
   /** SQL `TRUNCATE TABLE`: ONE "replace" snapshot whose manifest list is
     * EMPTY — zero live files, full history preserved (time travel to any
     * pre-truncate snapshot keeps serving its rows; expiry collects the
     * data later). The DSv2 `TruncatableTable` contract. */
-  def truncateTable(location: String): Long = {
-    val prev = readMetadataOpt(location)
-    require(prev.isDefined, "cannot truncate a never-committed table")
-    val snapshotId = prev.map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    commitSnapshot(location, prev, snapshotId, Seq.empty, "replace")
-  }
+  def truncateTable(location: String): Long =
+    commitSnapshot(location, "replace") { a =>
+      require(a.base.snapshots.nonEmpty, "cannot truncate a never-committed table")
+      Seq.empty
+    }.snapshotId
 
   /** Branch append (`INSERT INTO <t>.branch_<name>` — Iceberg's
     * branch-write surface, the WAP pattern's write half): the new
@@ -273,20 +301,19 @@ object IcebergTable {
     * in the `(oldMain, newMain]` window. */
   def appendToBranch(spark: SparkSession, df: DataFrame, location: String,
                      branch: String): Long = {
-    val meta = readMetadata(location)
-    val ref = meta.refs.getOrElse(branch,
-      throw new IllegalArgumentException(s"no branch '$branch' " +
-        s"(refs: ${meta.refs.keys.toSeq.sorted.mkString(", ")})"))
-    require(ref.refType == "branch", s"'$branch' is a tag; only branches accept writes")
-    val snapshotId = meta.snapshots.map(_.id).max + 1L
-    val newInfo = writeDataSnapshot(spark, df, location, snapshotId)
-    val branchHead = meta.snapshots.find(_.id == ref.snapshotId).getOrElse(
-      throw new IllegalStateException(s"branch '$branch' points at a missing snapshot"))
-    val prevManifests = readManifestList(branchHead.manifestList)
-    commitSnapshot(location, Some(meta), snapshotId, prevManifests :+ newInfo,
-      "append", df.columns.toSeq.sorted,
-      summaryExtra = Map("branch" -> branch),
-      moveRef = branch, headId = Some(meta.currentSnapshotId))
+    def checkBranch(meta: TableMetadata): Unit = {
+      val ref = meta.refs.getOrElse(branch,
+        throw new IllegalArgumentException(s"no branch '$branch' " +
+          s"(refs: ${meta.refs.keys.toSeq.sorted.mkString(", ")})"))
+      require(ref.refType == "branch", s"'$branch' is a tag; only branches accept writes")
+    }
+    checkBranch(readMetadata(location))
+    val files = writeDataSnapshot(spark, df, location)
+    commitSnapshot(location, "append", files, df.columns.toSeq.sorted,
+        Map("branch" -> branch), onto = branch, ref = branch) { a =>
+      checkBranch(a.base)
+      a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
+    }.snapshotId
   }
 
   /** Append with a GROUPED manifest layer — the 2-level metadata tree of
@@ -308,28 +335,24 @@ object IcebergTable {
   def appendGrouped(spark: SparkSession, lineitem: DataFrame, location: String,
                     groupMonths: Int = 12): Long = {
     require(groupMonths >= 1, "groupMonths must be >= 1")
-    val prev = readMetadataOpt(location)
-    val snapshotId = prev.map(m => m.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    val dataDir = s"$location/data/snap-$snapshotId"
+    val dataDir = newDataDir(location)
     withMicrosTimestamps(spark) {
       lineitem.withColumn("p_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .repartition(col("p_month"))
         .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
     }
-    val stats = assignRowIds(location, collectFileStats(spark, dataDir))
+    val stats = collectFileStats(spark, dataDir)
     // epoch-month index / groupMonths — for groupMonths = 12 the group IS
     // the calendar year; any value keeps groups contiguous in month order,
     // so each manifest's [partLo, partHi] ranges are disjoint.
     def groupOf(m: String): Int =
       (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
-    val infos = stats.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-      .zipWithIndex.map { case ((_, fs), i) =>
-        writeManifestAvro(location, snapshotId, snapshotId, fs, 0, f"-g$i%03d")
-      }
-    val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-      .getOrElse(Seq.empty)
-    commitSnapshot(location, prev, snapshotId, prevManifests ++ infos, "append",
-      lineitem.columns.toSeq.sorted)
+    commitSnapshot(location, "append", stats, lineitem.columns.toSeq.sorted) { a =>
+      a.parentManifests ++ a.added.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
+        .zipWithIndex.map { case ((_, fs), i) =>
+          writeManifestAvro(location, a.id, fs, 0, f"g$i%03d")
+        }
+    }.snapshotId
   }
 
   /** Bucket count for the bucket partition transform (spec §Partition
@@ -372,9 +395,7 @@ object IcebergTable {
   def appendBucket(spark: SparkSession, lineitem: DataFrame, location: String,
                    groupBuckets: Int = 4, murmur3: Boolean = false): Long = {
     require(groupBuckets >= 1, "groupBuckets must be >= 1")
-    val prev = readMetadataOpt(location)
-    val snapshotId = prev.map(m => m.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    val dataDir = s"$location/data/snap-$snapshotId"
+    val dataDir = newDataDir(location)
     // spec mode: the codegen'd canonical murmur3_x86_32 expression
     // (graft_bucket_murmur3 — a static call, NOT a UDF) computes the exact
     // bucket a real Iceberg writer assigns; default mode stays the
@@ -393,15 +414,13 @@ object IcebergTable {
         .repartition(col("p_month"))
         .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
     }
-    val stats = assignRowIds(location, collectFileStats(spark, dataDir))
-    val infos = stats.groupBy(f => f.partition.drop(1).toInt / groupBuckets)
-      .toSeq.sortBy(_._1).zipWithIndex.map { case ((_, fs), i) =>
-        writeManifestAvro(location, snapshotId, snapshotId, fs, 2, f"-b$i%03d")
-      }
-    val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-      .getOrElse(Seq.empty)
-    commitSnapshot(location, prev, snapshotId, prevManifests ++ infos, "append",
-      lineitem.columns.toSeq.sorted)
+    val stats = collectFileStats(spark, dataDir)
+    commitSnapshot(location, "append", stats, lineitem.columns.toSeq.sorted) { a =>
+      a.parentManifests ++ a.added.groupBy(f => f.partition.drop(1).toInt / groupBuckets)
+        .toSeq.sortBy(_._1).zipWithIndex.map { case ((_, fs), i) =>
+          writeManifestAvro(location, a.id, fs, 2, f"b$i%03d")
+        }
+    }.snapshotId
   }
 
   /** Point-lookup planning against a bucket-partitioned table: compute the
@@ -441,72 +460,28 @@ object IcebergTable {
     * manifests are refused — they would double-count). */
   def rewriteManifests(location: String, groupMonths: Int = 12): Long = {
     require(groupMonths >= 1, "groupMonths must be >= 1")
-    val prev = readMetadata(location)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val head = readManifestList(currentSnapshot(prev).manifestList)
-    val byManifest = head.map(m => m -> readManifest(m.path))
-    val dataEntries = byManifest.flatMap(_._2).filter(_.content == 0)
-    val deleteManifests = byManifest.collect {
-      case (m, es) if es.exists(_.content != 0) =>
-        // a mixed data+delete manifest would double-count: its data entries
-        // are regrouped above AND would ride along here — refuse loudly
-        // (all graft writers emit homogeneous manifests; this pins it)
-        require(es.forall(_.content != 0),
-          s"rewriteManifests: manifest ${m.path} mixes data and delete entries; " +
-          "split it before rewriting")
-        m
-    }
-    require(dataEntries.nonEmpty, "rewriteManifests on a table with no data files")
     def groupOf(m: String): Int =
       (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
-    val grouped = dataEntries.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-    val infos = grouped.zipWithIndex.map { case ((_, fs), i) =>
-      writeExistingDataManifest(location, snapshotId, fs, f"rw$i%03d")
-    }
-    commitSnapshot(location, Some(prev), snapshotId, infos ++ deleteManifests, "replace")
-  }
-
-  /** Write one manifest of EXISTING data entries (spec rewritten-manifest
-    * rules: every entry RETAINS its original adding snapshot_id and data
-    * sequence — delete-file scoping and entry-grain lineage must survive;
-    * status=0 EXISTING; stats and first_row_id ride wholesale — the data
-    * files are byte-identical). Only the manifest-LIST row records the
-    * rewriting snapshot. Shared by [[rewriteManifests]] and the dynamic
-    * INSERT OVERWRITE's partition-scoped replace. */
-  private def writeExistingDataManifest(location: String, snapshotId: Long,
-                                        fs: Seq[DataFileEntry],
-                                        nameTag: String): ManifestInfo = {
-    val mdir = metadataDir(location)
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val sortedFs = fs.sortBy(f => (f.partition, f.path))
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0-$nameTag.avro")
-    val entries = sortedFs.map { f =>
-      val part = new GenericData.Record(partSchema)
-      part.put("p_month", f.partition)
-      val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 0)
-      dfr.put("file_path", f.path)
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", part)
-      dfr.put("record_count", f.recordCount)
-      dfr.put("file_size_in_bytes", f.fileSizeBytes)
-      dfr.put("lower_bounds",
-        (Map("l_shipdate" -> f.loShip) ++ f.wideBounds.map { case (k, b) => k -> b._1 }).asJava)
-      dfr.put("upper_bounds",
-        (Map("l_shipdate" -> f.hiShip) ++ f.wideBounds.map { case (k, b) => k -> b._2 }).asJava)
-      if (f.firstRowId >= 0) dfr.put("first_row_id", java.lang.Long.valueOf(f.firstRowId))
-      val e = new GenericData.Record(ManifestEntrySchema)
-      e.put("status", 0)
-      e.put("snapshot_id", f.entrySnapshotId)
-      e.put("sequence_number", f.sequence)
-      e.put("data_file", dfr)
-      e: GenericRecord
-    }
-    val len = writeAvro(ManifestEntrySchema, manifestFile, entries)
-    ManifestInfo(manifestFile.getPath, len, snapshotId,
-      sortedFs.length, sortedFs.map(_.recordCount).sum,
-      sortedFs.map(_.partition).min, sortedFs.map(_.partition).max)
+    commitSnapshot(location, "replace") { a =>
+      requireTable(a.base)
+      val byManifest = a.parentManifests.map(m => m -> readManifest(m.path))
+      val dataEntries = byManifest.flatMap(_._2).filter(_.content == 0)
+      val deleteManifests = byManifest.collect {
+        case (m, es) if es.exists(_.content != 0) =>
+          // a mixed data+delete manifest would double-count: its data entries
+          // are regrouped above AND would ride along here — refuse loudly
+          // (all graft writers emit homogeneous manifests; this pins it)
+          require(es.forall(_.content != 0),
+            s"rewriteManifests: manifest ${m.path} mixes data and delete entries; " +
+            "split it before rewriting")
+          m
+      }
+      require(dataEntries.nonEmpty, "rewriteManifests on a table with no data files")
+      dataEntries.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
+        .zipWithIndex.map { case ((_, fs), i) =>
+          writeManifestAvro(location, a.id, fs, 0, f"rw$i%03d", existing = true)
+        } ++ deleteManifests
+    }.snapshotId
   }
 
   /** Iceberg's manifest MERGE-ON-COMMIT (the `commit.manifest-merge.
@@ -529,29 +504,29 @@ object IcebergTable {
                               groupMonths: Int = 12): (Long, Int, Boolean, Int) = {
     require(minCountToMerge >= 1 && groupMonths >= 1,
       "minCountToMerge and groupMonths must be >= 1")
-    val prev = readMetadataOpt(location)
-    val snapshotId = prev.map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    val newInfo = writeDataSnapshot(spark, lineitem, location, snapshotId)
-    val prevManifests = prev
-      .map(m => readManifestList(currentSnapshot(m).manifestList))
-      .getOrElse(Seq.empty)
-    val flat = prevManifests.size + 1
-    val (finalManifests, merged) =
-      if (flat > minCountToMerge && prevManifests.nonEmpty) {
-        val byManifest = prevManifests.map(m => m -> readManifest(m.path))
-        val (dataMs, deleteMs) = byManifest.partition(_._2.forall(_.content == 0))
-        val entries = dataMs.flatMap(_._2)
-        def groupOf(m: String): Int =
-          (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
-        val grouped = entries.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-          .zipWithIndex.map { case ((_, fs), i) =>
-            writeExistingDataManifest(location, snapshotId, fs, f"mg$i%03d")
-          }
-        (grouped ++ deleteMs.map(_._1) :+ newInfo, true)
-      } else (prevManifests :+ newInfo, false)
-    commitSnapshot(location, prev, snapshotId, finalManifests, "append",
-      lineitem.columns.toSeq.sorted)
-    (snapshotId, flat, merged, finalManifests.size)
+    def groupOf(m: String): Int =
+      (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
+    val files = writeDataSnapshot(spark, lineitem, location)
+    var shape = (0, false, 0) // (flat, merged, manifestsAfter) of the published attempt
+    val id = commitSnapshot(location, "append", files, lineitem.columns.toSeq.sorted) { a =>
+      val prevManifests = a.parentManifests
+      val newInfo = writeManifestAvro(location, a.id, a.added, 0)
+      val flat = prevManifests.size + 1
+      val merged = flat > minCountToMerge && prevManifests.nonEmpty
+      val ms =
+        if (!merged) prevManifests :+ newInfo
+        else {
+          val (dataMs, deleteMs) = prevManifests.map(m => m -> readManifest(m.path))
+            .partition(_._2.forall(_.content == 0))
+          dataMs.flatMap(_._2).groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
+            .zipWithIndex.map { case ((_, fs), i) =>
+              writeManifestAvro(location, a.id, fs, 0, f"mg$i%03d", existing = true)
+            } ++ deleteMs.map(_._1) :+ newInfo
+        }
+      shape = (flat, merged, ms.size)
+      ms
+    }.snapshotId
+    (id, shape._1, shape._2, shape._3)
   }
 
   /** STATIC `INSERT OVERWRITE` (truncate semantics): replace the whole
@@ -560,11 +535,10 @@ object IcebergTable {
     * flip atomically while every prior snapshot stays time-travelable
     * until expiry. An uncommitted (CREATE'd) table just gets snapshot 1. */
   def overwriteTable(spark: SparkSession, df: DataFrame, location: String): Long = {
-    val prev = readMetadataOpt(location)
-    val snapshotId = prev.map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-    val newInfo = writeDataSnapshot(spark, df, location, snapshotId)
-    commitSnapshot(location, prev, snapshotId, Seq(newInfo), "replace",
-      df.columns.toSeq.sorted)
+    val files = writeDataSnapshot(spark, df, location)
+    commitSnapshot(location, "replace", files, df.columns.toSeq.sorted) { a =>
+      Seq(writeManifestAvro(location, a.id, a.added, 0))
+    }.snapshotId
   }
 
   /** DYNAMIC partition overwrite commit (`INSERT OVERWRITE` under
@@ -579,43 +553,28 @@ object IcebergTable {
     * committed tasks enter the new manifest (stray attempt files are
     * deleted), mirroring [[commitDelta]]. */
   def commitOverwriteMonths(spark: SparkSession, location: String,
-                            dataDir: String, files: Seq[String],
-                            maxRetries: Int = 50): Long = {
+                            dataDir: String, files: Seq[String]): Long = {
     require(files.nonEmpty, "dynamic overwrite wrote no files")
     def n(p: String): String = p.replaceFirst("^/{2,}", "/")
     // stray cleanup by directory listing (never opened — a truncated
     // kill -9 leftover must not fail the commit) and footer stats for the
     // named committed files only; both id-independent, both ONCE, outside
-    // the OCC retry loop below.
+    // the commit transaction below.
     deleteStrayFiles(dataDir, files.map(n).toSet)
     val keep = collectFileStats(spark, dataDir, Some(files))
     require(keep.nonEmpty, "no committed task wrote a surviving data file")
     val months = keep.map(_.partition).toSet
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val (prev, version) = readMetadataWithVersionOpt(location)
-      val snapshotId = prev.map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-      val head = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-        .getOrElse(Seq.empty)
-      val byManifest = head.map(m => m -> readManifest(m.path))
+    commitSnapshot(location, "replace", keep) { a =>
+      val byManifest = a.parentManifests.map(m => m -> readManifest(m.path))
       val removedPaths = byManifest.flatMap(_._2)
         .filter(e => e.content == 0 && months.contains(e.partition))
         .map(e => n(e.path)).toSet
-      var rw = 0
-      val rewritten = scala.collection.mutable.ArrayBuffer.empty[String]
-      val kept = byManifest.flatMap { case (m, es) =>
+      val kept = byManifest.zipWithIndex.flatMap { case ((m, es), i) =>
         if (es.forall(_.content == 0)) {
           val surviving = es.filterNot(e => months.contains(e.partition))
           if (surviving.size == es.size) Some(m)
           else if (surviving.isEmpty) None
-          else {
-            rw += 1
-            val info = writeExistingDataManifest(location, snapshotId, surviving,
-              f"ow$rw%03d-$token")
-            rewritten += info.path
-            Some(info)
-          }
+          else Some(writeManifestAvro(location, a.id, surviving, 0, f"ow$i%03d", existing = true))
         } else {
           // delete manifest: drop only if every reference died with the
           // replaced months (equality deletes carry no reference and ride)
@@ -624,19 +583,8 @@ object IcebergTable {
           if (live) Some(m) else None
         }
       }
-      val newInfo = writeManifestAvro(location, snapshotId, snapshotId,
-        assignRowIds(location, keep, prev.map(_.nextRowId)), 0, s"-$token")
-      try {
-        return commitSnapshot(location, prev, snapshotId, kept :+ newInfo, "replace",
-          atVersion = Some(version + 1))
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          new File(newInfo.path).delete()
-          rewritten.foreach(p => new File(p).delete())
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException(s"commitOverwriteMonths: gave up after $maxRetries conflicts")
+      kept :+ writeManifestAvro(location, a.id, a.added, 0)
+    }.snapshotId
   }
 
   /** Write-audit-publish (the reference's WAP study, executed for real):
@@ -649,21 +597,14 @@ object IcebergTable {
     * audit-failed stage is simply never published; expiry collects it
     * (once the staging ref is dropped) like any unreachable snapshot. */
   def appendStaged(spark: SparkSession, lineitem: DataFrame, location: String): Long = {
-    val prev = readMetadata(location)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val newInfo = writeDataSnapshot(spark, lineitem, location, snapshotId)
-    val prevManifests = readManifestList(currentSnapshot(prev).manifestList)
-    val snap = SnapshotInfo(snapshotId, snapshotId, snapshotId * 1000L,
-      writeManifestList(location, snapshotId, prevManifests :+ newInfo), "stage",
-      parentId = prev.currentSnapshotId)
-    writeMetadataJson(location, prev.tableUuid, prev.snapshots :+ snap,
-      prev.currentSnapshotId, // main/current do NOT move
-      prev.refs + ("staging" -> RefInfo(snapshotId, "branch")), prev.schemas,
-      statistics = prev.statistics,
-      // staged rows consume row ids at STAGE time (the data files exist);
-      // an audit-failed stage simply wastes its id range — never reused
-      nextRowId = prev.nextRowId + newInfo.addedRows)
-    snapshotId
+    readMetadata(location) // a stage extends a committed head
+    val files = writeDataSnapshot(spark, lineitem, location)
+    // main/current do NOT move; staged rows consume row ids at STAGE time
+    // (the data files exist) — an audit-failed stage simply wastes its id
+    // range, never reused
+    commitSnapshot(location, "stage", files, ref = "staging") { a =>
+      a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
+    }.snapshotId
   }
 
   /** Publish a staged snapshot: fast-forward main + the current pointer,
@@ -674,25 +615,25 @@ object IcebergTable {
     * a published stage left as "stage" would be silently omitted from
     * every incremental scan covering its id, breaking the exactly-once /
     * no-loss contract for WAP tables (spec-pinned in IcebergFormatSpec). */
-  def publishStaged(location: String, stagedId: Long): Unit = {
-    val meta = readMetadata(location)
-    require(meta.snapshots.exists(_.id == stagedId), s"no snapshot $stagedId")
-    // FAST-FORWARD only: every manifest of the current head must ride in
-    // the staged snapshot's list (i.e. the stage was built on this head).
-    // Publishing a stage whose base main has moved past would silently
-    // DROP every commit main gained since — that case is [[cherryPick]]'s.
-    val headPaths = readManifestList(currentSnapshot(meta).manifestList).map(_.path).toSet
-    val stagedPaths = readManifestList(
-      meta.snapshots.find(_.id == stagedId).get.manifestList).map(_.path).toSet
-    require(headPaths.subsetOf(stagedPaths),
-      s"main advanced past staged snapshot $stagedId's base — fast-forward publish " +
-        "would lose commits; use cherryPick")
-    val snaps = meta.snapshots.map(s =>
-      if (s.id == stagedId && s.operation == "stage") s.copy(operation = "append") else s)
-    writeMetadataJson(location, meta.tableUuid, snaps, stagedId,
-      meta.refs - "staging" + ("main" -> RefInfo(stagedId, "branch")), meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId)
-  }
+  def publishStaged(location: String, stagedId: Long): Unit =
+    commit(location) { meta =>
+      requireTable(meta)
+      require(meta.snapshots.exists(_.id == stagedId), s"no snapshot $stagedId")
+      // FAST-FORWARD only: every manifest of the current head must ride in
+      // the staged snapshot's list (i.e. the stage was built on this head).
+      // Publishing a stage whose base main has moved past would silently
+      // DROP every commit main gained since — that case is [[cherryPick]]'s.
+      val headPaths = readManifestList(currentSnapshot(meta).manifestList).map(_.path).toSet
+      val stagedPaths = readManifestList(
+        meta.snapshots.find(_.id == stagedId).get.manifestList).map(_.path).toSet
+      require(headPaths.subsetOf(stagedPaths),
+        s"main advanced past staged snapshot $stagedId's base — fast-forward publish " +
+          "would lose commits; use cherryPick")
+      val snaps = meta.snapshots.map(s =>
+        if (s.id == stagedId && s.operation == "stage") s.copy(operation = "append") else s)
+      retarget(meta, stagedId).copy(snapshots = snaps, refs = meta.refs - "staging" +
+        ("main" -> RefInfo(stagedId, "branch")))
+    }
 
   /** `rollback_to_snapshot` — a METADATA-ONLY retarget of the current
     * snapshot pointer and `main` to an ancestor (the real library's
@@ -701,12 +642,14 @@ object IcebergTable {
     * fully time-travelable by id, until an expiry pass collects them; the
     * next commit builds on the rolled-back head while still allocating
     * max(id)+1 (ids of rolled-past snapshots are never reused). */
-  def rollback(location: String, snapshotId: Long): Unit = {
-    val meta = readMetadata(location)
-    require(meta.snapshots.exists(_.id == snapshotId), s"no snapshot $snapshotId")
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots, snapshotId,
-      meta.refs + ("main" -> RefInfo(snapshotId, "branch")), meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId)
+  def rollback(location: String, snapshotId: Long): Unit =
+    commit(location)(retarget(_, snapshotId))
+
+  /** Point the current snapshot and `main` at an existing snapshot. */
+  private def retarget(meta: TableMetadata, snapshotId: Long): TableMetadata = {
+    require(requireTable(meta).snapshots.exists(_.id == snapshotId), s"no snapshot $snapshotId")
+    meta.copy(currentSnapshotId = snapshotId,
+      refs = meta.refs + ("main" -> RefInfo(snapshotId, "branch")))
   }
 
   /** Cherry-pick a STAGED (WAP) snapshot onto a head that ADVANCED past the
@@ -724,26 +667,22 @@ object IcebergTable {
     * (never part of main's lineage) until expiry collects it. Row ids were
     * burned at stage time and ride through unchanged. */
   def cherryPick(location: String, stagedId: Long): Long = {
-    val meta = readMetadata(location)
-    val staged = meta.snapshots.find(_.id == stagedId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $stagedId"))
-    require(staged.operation == "stage", s"snapshot $stagedId is not a staged snapshot")
-    val addedManifests = readManifestList(staged.manifestList)
-      .filter(_.addedSnapshotId == stagedId)
-    require(addedManifests.nonEmpty, s"staged snapshot $stagedId added no manifests")
-    val addedEntries = addedManifests.flatMap(m => readManifest(m.path))
-    require(addedEntries.forall(_.content == 0),
-      "cherryPick replays append stages only (no delete content)")
-    val newId = meta.snapshots.map(_.id).max + 1L
-    val newInfo = writeManifestAvro(location, newId, newId, addedEntries, 0, "-cp")
-    val headManifests = readManifestList(currentSnapshot(meta).manifestList)
-    val snap = SnapshotInfo(newId, newId, newId * 1000L,
-      writeManifestList(location, newId, headManifests :+ newInfo), "append",
-      parentId = meta.currentSnapshotId)
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots :+ snap, newId,
-      meta.refs - "staging" + ("main" -> RefInfo(newId, "branch")), meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId)
-    newId
+    val pick = addSnapshot(location, "append") { a =>
+      val staged = requireTable(a.base).snapshots.find(_.id == stagedId).getOrElse(
+        throw new IllegalArgumentException(s"no snapshot $stagedId"))
+      require(staged.operation == "stage", s"snapshot $stagedId is not a staged snapshot")
+      val addedManifests = readManifestList(staged.manifestList)
+        .filter(_.addedSnapshotId == stagedId)
+      require(addedManifests.nonEmpty, s"staged snapshot $stagedId added no manifests")
+      val addedEntries = addedManifests.flatMap(m => readManifest(m.path))
+      require(addedEntries.forall(_.content == 0),
+        "cherryPick replays append stages only (no delete content)")
+      a.parentManifests :+ writeManifestAvro(location, a.id, addedEntries, 0, "cp")
+    }
+    commit(location) { base =>
+      val m = pick(base)
+      m.copy(refs = m.refs - "staging")
+    }.snapshotId
   }
 
   /** Compaction rewrite (the maintenance op the reference's compaction
@@ -758,6 +697,7 @@ object IcebergTable {
   def rewriteCompact(spark: SparkSession, location: String,
                      materializeLineage: Boolean = false): Long = {
     val prev = readMetadata(location)
+    val readAt = prev.currentSnapshotId
     // the GENERAL resolution: materializing through a partial reader
     // resurrects rows deleted by the forms it skips (DV-lifecycle spec).
     // materializeLineage = the spec's row-lineage obligation for rewrites:
@@ -774,14 +714,18 @@ object IcebergTable {
           "materializeLineage supports v3 DV tables only")
         readMorDv(spark, location, withRowIds = true)._1
       } else readMorUnified(spark, location)._1
-    // max(id)+1, NOT current+1: a staged snapshot (appendStaged) sits in the
-    // log above current, and current+1 would reuse its id — overwriting the
-    // staged data dir, manifests and manifest list, and appending a
-    // duplicate id to the snapshot log.
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val newInfo = writeDataSnapshot(spark, live, location, snapshotId)
-    commitSnapshot(location, Some(prev), snapshotId, Seq(newInfo), "replace")
+    replaceFrom(location, readAt, writeDataSnapshot(spark, live, location))
   }
+
+  /** Commit `files` as a "replace" snapshot of everything live at `readAt`,
+    * the snapshot they were materialized from. A commit that landed since
+    * would be dropped by the replace, so the rewrite refuses instead. */
+  private def replaceFrom(location: String, readAt: Long, files: Seq[DataFileEntry]): Long =
+    commitSnapshot(location, "replace", files) { a =>
+      if (a.parent != readAt) throw new java.util.ConcurrentModificationException(
+        s"$location moved from snapshot $readAt to ${a.parent} during the rewrite; rerun it")
+      Seq(writeManifestAvro(location, a.id, a.added, 0))
+    }.snapshotId
 
   /** Z-order rewrite — `rewrite_data_files` with a 2-dim sort order, the
     * maintenance action behind the clustering trade the modeled
@@ -795,15 +739,14 @@ object IcebergTable {
     * 1-dim (rank or hash) layout structurally cannot provide. */
   def rewriteZOrder(spark: SparkSession, location: String,
                     filesPerMonth: Int = 8): Long = {
-    val prev = readMetadata(location)
+    val readAt = readMetadata(location).currentSnapshotId
     val live = readMorUnified(spark, location)._1
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val newInfo = writeDataSnapshot(spark, live, location, snapshotId,
-      zorderFiles = Some(filesPerMonth))
-    commitSnapshot(location, Some(prev), snapshotId, Seq(newInfo), "replace")
+    replaceFrom(location, readAt,
+      writeDataSnapshot(spark, live, location, zorderFiles = Some(filesPerMonth)))
   }
 
-  /** Write one snapshot's data files + manifest; returns its list entry.
+  /** Write one snapshot's data files into a writer-unique directory;
+    * returns their stats, for the commit's manifest.
     *
     * File layout: by default ONE file per partition — a deterministic
     * function of the data that lets the DuckDB oracle re-derive every
@@ -817,27 +760,20 @@ object IcebergTable {
     * across tasks — partitionBy still routes each task's rows to the right
     * directory, and the manifest builder below is ALREADY at file grain,
     * so nothing else changes. */
-  private def writeDataSnapshot(spark: SparkSession, lineitem: DataFrame,
-                                location: String, snapshotId: Long,
-                                weekly: Boolean = false,
-                                targetRecordsPerFile: Option[Long] = None,
-                                clusterFiles: Option[(Int, Boolean)] = None,
-                                sorted: Boolean = false,
-                                zorderFiles: Option[Int] = None): ManifestInfo =
-    writeDataFiles(spark, lineitem, location, snapshotId, weekly, targetRecordsPerFile,
-      clusterFiles, sorted, zorderFiles).getOrElse(
+  private def writeDataSnapshot(spark: SparkSession, lineitem: DataFrame, location: String,
+                                zorderFiles: Option[Int] = None): Seq[DataFileEntry] =
+    writeDataFiles(spark, lineitem, location, zorderFiles = zorderFiles).getOrElse(
       throw new IllegalArgumentException(s"no rows to write into $location"))
 
   /** [[writeDataSnapshot]], or None — leaving no directory behind — when
     * the rows to write are none. */
   private def writeDataFiles(spark: SparkSession, lineitem: DataFrame,
-                             location: String, snapshotId: Long,
+                             location: String,
                              weekly: Boolean = false,
                              targetRecordsPerFile: Option[Long] = None,
                              clusterFiles: Option[(Int, Boolean)] = None,
                              sorted: Boolean = false,
-                             zorderFiles: Option[Int] = None): Option[ManifestInfo] = {
-    val sequence = snapshotId
+                             zorderFiles: Option[Int] = None): Option[Seq[DataFileEntry]] = {
     // Partition evolution (spec §Partition Evolution): spec 0 = identity
     // month, spec 1 = identity ISO week-start date. The partition VALUE
     // rides in the same manifest slot; the manifest-list entry records
@@ -846,8 +782,7 @@ object IcebergTable {
     val partExpr =
       if (weekly) date_format(date_trunc("week", col("l_shipdate")), "yyyy-MM-dd")
       else date_format(col("l_shipdate"), "yyyy-MM")
-    val specId = if (weekly) 1 else 0
-    val dataDir = s"$location/data/snap-$snapshotId"
+    val dataDir = newDataDir(location)
     val withPart = lineitem.withColumn("p_month", partExpr)
     // `clusterFiles = Some((filesPerMonth, byRank))` is the sort-order
     // study's layout: every month splits into exactly filesPerMonth files,
@@ -949,23 +884,18 @@ object IcebergTable {
       org.apache.commons.io.FileUtils.deleteDirectory(new File(dataDir))
       return None
     }
-    val stats = assignRowIds(location, collectFileStats(spark, dataDir))
-    Some(writeManifestAvro(location, snapshotId, sequence, stats, specId))
+    Some(collectFileStats(spark, dataDir))
   }
 
   /** v3 row lineage assignment: give every new data file a `first_row_id`
-    * from the table's `next-row-id` counter, in the deterministic
+    * from the table's `next-row-id` counter (`first`), in the deterministic
     * partition-sorted order `collectFileStats` returns — a row's implicit
     * `_row_id` is firstRowId + its position in the file. The committed
-    * counter ([[commitSnapshot]]) is monotone across replaces and expiry,
+    * counter ([[addSnapshot]]) is monotone across replaces and expiry,
     * so ids are never reused; rewritten files keep their ids (manifest
     * rewrites carry the field; compaction materializes `_row_id`). */
-  private def assignRowIds(location: String, stats: Seq[DataFileEntry],
-                           baseOverride: Option[Long] = None): Seq[DataFileEntry] = {
-    var next = baseOverride.getOrElse(
-      readMetadataOpt(location).map(_.nextRowId).getOrElse(0L))
-    stats.map { f => val e = f.copy(firstRowId = next); next += f.recordCount; e }
-  }
+  private def assignRowIds(stats: Seq[DataFileEntry], first: Long): Seq[DataFileEntry] =
+    stats.zip(stats.scanLeft(first)(_ + _.recordCount)).map { case (f, id) => f.copy(firstRowId = id) }
 
   /** Per-file stats over a just-written data directory: ONE distributed
     * aggregation at data-file grain (metadata-grain output — the same
@@ -1038,173 +968,253 @@ object IcebergTable {
     if (d.isDirectory) walk(d)
   }
 
-  /** Write one snapshot's manifest Avro from collected file stats;
-    * `suffix` uniquifies the name for OCC retries (two writers may race
-    * the same next snapshot id — their manifests must not clobber). */
-  private def writeManifestAvro(location: String, snapshotId: Long, sequence: Long,
+  /** A fresh manifest path for snapshot `snapshotId`; `tag` names the
+    * manifest's role within the snapshot. */
+  private def manifestFile(location: String, snapshotId: Long, tag: String = ""): File =
+    new File(metadataDir(location),
+      f"manifest-$snapshotId%05d-${if (tag.isEmpty) "" else tag + "-"}${fresh()}.avro")
+
+  /** Write one data manifest for snapshot `snapshotId`. New files are ADDED
+    * entries at the snapshot's id and sequence. `existing` entries follow
+    * the spec's rewritten-manifest rules: each RETAINS its original adding
+    * snapshot_id and data sequence (delete-file scoping and entry-grain
+    * lineage must survive), status=0 EXISTING. Stats and first_row_id ride
+    * wholesale either way; only the manifest-LIST row records `snapshotId`
+    * as the adder. */
+  private def writeManifestAvro(location: String, snapshotId: Long,
                                 stats: Seq[DataFileEntry], specId: Int,
-                                suffix: String = ""): ManifestInfo = {
-    val mdir = metadataDir(location)
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0$suffix.avro")
+                                tag: String = "", existing: Boolean = false): ManifestInfo = {
+    val file = manifestFile(location, snapshotId, tag)
+    val fs = if (existing) stats.sortBy(f => (f.partition, f.path)) else stats
+    val len = writeAvro(ManifestEntrySchema, file, fs.map { f =>
+      manifestEntry(if (existing) f else f.copy(sequence = snapshotId, entrySnapshotId = snapshotId),
+        status = if (existing) 0 else 1, // 0 = EXISTING, 1 = ADDED
+        lower = Map("l_shipdate" -> f.loShip) ++ f.wideBounds.map { case (k, b) => k -> b._1 },
+        upper = Map("l_shipdate" -> f.hiShip) ++ f.wideBounds.map { case (k, b) => k -> b._2 })
+    })
+    ManifestInfo(file.getPath, len, snapshotId,
+      fs.length, fs.map(_.recordCount).sum,
+      fs.map(_.partition).min, fs.map(_.partition).max, specId)
+  }
+
+  /** One `manifest_entry` record for `f` (its content, path, partition,
+    * counts, entry snapshot id, sequence and the v3 DV and lineage fields
+    * it carries) with column bounds `lower`/`upper`. */
+  private def manifestEntry(f: DataFileEntry, status: Int, lower: Map[String, String],
+                            upper: Map[String, String], format: String = "PARQUET"): GenericRecord = {
     val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val entries = stats.map { f =>
-      val part = new GenericData.Record(partSchema)
-      part.put("p_month", f.partition)
-      val df = new GenericData.Record(dataFileSchema)
-      df.put("content", 0) // 0 = data (1/2 are delete files in the spec)
-      df.put("file_path", f.path)
-      df.put("file_format", "PARQUET")
-      df.put("partition", part)
-      df.put("record_count", f.recordCount)
-      df.put("file_size_in_bytes", f.fileSizeBytes)
-      df.put("lower_bounds",
-        (Map("l_shipdate" -> f.loShip) ++ f.wideBounds.map { case (k, b) => k -> b._1 }).asJava)
-      df.put("upper_bounds",
-        (Map("l_shipdate" -> f.hiShip) ++ f.wideBounds.map { case (k, b) => k -> b._2 }).asJava)
-      if (f.firstRowId >= 0) df.put("first_row_id", java.lang.Long.valueOf(f.firstRowId))
-      val e = new GenericData.Record(ManifestEntrySchema)
-      e.put("status", 1) // 1 = ADDED
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", sequence)
-      e.put("data_file", df)
-      e: GenericRecord
-    }
-    val manifestLen = writeAvro(ManifestEntrySchema, manifestFile, entries)
-    ManifestInfo(manifestFile.getPath, manifestLen, snapshotId,
-      stats.length, stats.map(_.recordCount).sum,
-      stats.map(_.partition).min, stats.map(_.partition).max, specId)
+    val part = new GenericData.Record(dataFileSchema.getField("partition").schema())
+    part.put("p_month", f.partition)
+    val df = new GenericData.Record(dataFileSchema)
+    df.put("content", f.content) // 0 = data, 1 = position deletes, 2 = equality deletes
+    df.put("file_path", f.path)
+    df.put("file_format", format)
+    df.put("partition", part)
+    df.put("record_count", f.recordCount)
+    df.put("file_size_in_bytes", f.fileSizeBytes)
+    df.put("lower_bounds", lower.asJava)
+    df.put("upper_bounds", upper.asJava)
+    f.referencedDataFile.foreach(df.put("referenced_data_file", _))
+    if (f.contentOffset >= 0) df.put("content_offset", java.lang.Long.valueOf(f.contentOffset))
+    if (f.contentSize >= 0) df.put("content_size_in_bytes", java.lang.Long.valueOf(f.contentSize))
+    if (f.firstRowId >= 0) df.put("first_row_id", java.lang.Long.valueOf(f.firstRowId))
+    val e = new GenericData.Record(ManifestEntrySchema)
+    e.put("status", status)
+    e.put("snapshot_id", f.entrySnapshotId)
+    e.put("sequence_number", f.sequence)
+    e.put("data_file", df)
+    e
   }
 
-  /** OPTIMISTIC data append — the full commit protocol the real library
-    * runs for every write (`tryCommitTouch` races metadata-only commits;
-    * this races DATA commits): the expensive work happens ONCE outside the
-    * retry loop (data files written to a writer-unique directory, per-file
-    * stats collected — data files are immutable and carry no snapshot id,
-    * exactly why the spec separates them from metadata), then each attempt
-    * rebuilds only driver-side metadata against the freshly-read table
-    * state — new snapshot id, manifest Avro, manifest list — and tries the
-    * version CAS. A conflict costs two small metadata files (deleted) and
-    * a re-read, never a data rewrite. Returns (snapshotId, conflicts). */
-  def appendOcc(spark: SparkSession, lineitem: DataFrame, location: String,
-                maxRetries: Int = 50): (Long, Int) = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"$location/data/app-$token"
-    withMicrosTimestamps(spark) {
-      lineitem.withColumn("p_month", date_format(col("l_shipdate"), "yyyy-MM"))
-        .repartition(col("p_month"))
-        .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
-    }
-    val stats = collectFileStats(spark, dataDir)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val (meta, version) = readMetadataWithVersion(location)
-      val snapshotId = meta.snapshots.map(_.id).max + 1L
-      // row-id assignment is INSIDE the retry loop: a loser re-reads the
-      // counter another writer may have advanced and re-assigns from it
-      // (ids handed out by a failed CAS attempt are never published)
-      val newInfo = writeManifestAvro(location, snapshotId, snapshotId,
-        assignRowIds(location, stats, Some(meta.nextRowId)), 0, s"-$token")
-      val headManifests = readManifestList(currentSnapshot(meta).manifestList)
-      val listPath = writeManifestList(location, snapshotId, headManifests :+ newInfo,
-        unique = true)
-      val snap = SnapshotInfo(snapshotId, snapshotId, snapshotId * 1000L, listPath,
-        "append", parentId = meta.currentSnapshotId)
-      try {
-        writeMetadataJson(location, meta.tableUuid, meta.snapshots :+ snap, snapshotId,
-          meta.refs + ("main" -> RefInfo(snapshotId, "branch")), meta.schemas,
-          atVersion = Some(version + 1), statistics = meta.statistics,
-          nextRowId = meta.nextRowId + stats.map(_.recordCount).sum,
-          droppedColumns = Some(meta.droppedColumns),
-          renamedColumns = Some(meta.renamedColumns))
-        return (snapshotId, attempt)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          new File(listPath).delete()
-          new File(newInfo.path).delete()
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException(s"appendOcc: gave up after $maxRetries conflicts")
+  /** Write a manifest of delete entries added by snapshot `snapshotId`.
+    * Delete files are global: the list row's partition summary spans every
+    * month, so planning never prunes one away from a scan it applies to. */
+  private def writeDeleteManifest(location: String, snapshotId: Long, tag: String,
+                                  entries: Seq[GenericRecord], rows: Long): ManifestInfo = {
+    val file = manifestFile(location, snapshotId, tag)
+    ManifestInfo(file.getPath, writeAvro(ManifestEntrySchema, file, entries), snapshotId,
+      entries.size, rows, "0000-00", "9999-99")
   }
 
-  /** Write the manifest list, the vN metadata JSON and flip the version
-    * hint — the HadoopTables commit protocol (readers always enter via
-    * the hint, so a crash before the flip leaves the old version live). */
-  private def commitSnapshot(location: String, prev: Option[TableMetadata], snapshotId: Long,
-                             manifests: Seq[ManifestInfo], operation: String,
-                             newSchema: Seq[String] = Seq.empty,
-                             atVersion: Option[Long] = None,
-                             summaryExtra: Map[String, String] = Map.empty,
-                             // branch writes move THEIR ref and leave the
-                             // table head (currentSnapshotId + main) alone
-                             moveRef: String = "main",
-                             headId: Option[Long] = None): Long = {
-    // Schema evolution (spec §Schema Evolution): every distinct committed
-    // column set becomes a schema entry; current-schema-id points at the
-    // latest. Old data files simply lack the newer fields — a merge-schema
-    // read null-fills them, which is exactly the spec's add-column rule.
-    val prevSchemas = prev.map(_.schemas).getOrElse(Seq.empty)
-    val schemas =
-      if (newSchema.isEmpty || prevSchemas.contains(newSchema)) prevSchemas
-      else prevSchemas :+ newSchema
-    // Under OCC (atVersion set) the list file is uniquely named — two
-    // writers racing the same next snapshot id must not clobber each
-    // other's list before the version CAS picks the winner — and the
-    // loser's list is deleted with the conflict rethrown for the caller's
-    // retry loop.
-    val listPath = writeManifestList(location, snapshotId, manifests,
-      unique = atVersion.isDefined)
-    // parent (spec parent-snapshot-id): the head of the branch this
-    // commit extended — main's for normal commits, the branch's for a
-    // branch append; a table's first snapshot has none
-    val parent = prev.map { m =>
-      if (moveRef == "main") m.currentSnapshotId
-      else m.refs.get(moveRef).map(_.snapshotId).getOrElse(m.currentSnapshotId)
-    }.filter(_ > 0L).getOrElse(-1L)
-    val snap = SnapshotInfo(snapshotId, snapshotId, snapshotId * 1000L,
-      listPath, operation, summaryExtra, parent)
-    val allSnaps = prev.map(_.snapshots).getOrElse(Seq.empty) :+ snap
-    val uuid = prev.map(_.tableUuid).getOrElse(
-      java.util.UUID.nameUUIDFromBytes(location.getBytes(StandardCharsets.UTF_8)).toString)
-    // every commit advances its target branch (`main` — the spec's
-    // implicit branch — unless this is a branch write); other refs ride
-    // along untouched
-    val refs = prev.map(_.refs).getOrElse(Map.empty) +
-      (moveRef -> RefInfo(snapshotId, "branch"))
-    // advance next-row-id past every id this commit's NEW data entries
-    // consumed (assignRowIds handed them out from the previous counter);
-    // max() keeps the counter monotone when a commit adds no data files
-    val prevNext = prev.map(_.nextRowId).getOrElse(0L)
-    val newIds = manifests.filter(_.addedSnapshotId == snapshotId)
-      .flatMap(m => readManifest(m.path))
-      .collect { case e if e.content == 0 && e.firstRowId >= 0 => e.firstRowId + e.recordCount }
-    try writeMetadataJson(location, uuid, allSnaps, headId.getOrElse(snapshotId),
-      refs, schemas,
-      atVersion = atVersion,
-      statistics = prev.map(_.statistics).getOrElse(Seq.empty),
-      nextRowId = (prevNext +: newIds).max,
-      droppedColumns = Some(prev.map(_.droppedColumns).getOrElse(Map.empty)),
-      renamedColumns = Some(prev.map(_.renamedColumns).getOrElse(Map.empty)))
+  // ---- The commit transaction -------------------------------------------
+  //
+  // Every change to a table — a snapshot, a ref, a property, a schema
+  // change, an expiry — is an edit `TableMetadata => TableMetadata` that
+  // [[commit]] applies to the metadata it read and publishes at the next
+  // version. Data files are written once, before the transaction; an edit
+  // writes only what depends on the version it builds on (manifests, DV
+  // Puffins, the manifest list).
+
+  /** Attempts [[commit]] makes before it gives up on a contended table. */
+  private val MaxCommitAttempts = 51
+
+  /** A published commit: the metadata it published and the CAS conflicts
+    * retried through on the way. */
+  final case class Committed(meta: TableMetadata, conflicts: Int) {
+    /** The snapshot the commit added (the log's last). */
+    def snapshotId: Long = meta.snapshots.last.id
+  }
+
+  /** Apply `edit` to the table's metadata and publish the result as the
+    * version after the one read — the HadoopTables commit: the version file
+    * is created by an atomic hard link, so when two writers race for the
+    * same version the filesystem admits exactly one. The loser backs off
+    * for a random moment (writers in lockstep would otherwise keep the same
+    * one losing), re-reads and re-applies `edit`, so an edit always builds
+    * on the version it replaces and no acknowledged commit is lost. What
+    * the losing attempts wrote is deleted once the commit ends, unless the
+    * published attempt reused it. An edit that returns its input unchanged
+    * publishes nothing. A table with no committed version edits
+    * [[uncommitted]]. */
+  def commit(location: String)(edit: TableMetadata => TableMetadata): Committed = {
+    val lost = scala.collection.mutable.ArrayBuffer.empty[SnapshotInfo]
+    var conflicts = 0
+    var published: Option[TableMetadata] = None
+    try {
+      while (published.isEmpty && conflicts < MaxCommitAttempts)
+        attempt(location, edit) match {
+          case Right(meta) => published = Some(meta)
+          case Left(added) =>
+            lost ++= added
+            conflicts += 1
+            Thread.sleep(scala.util.Random.nextInt(1 << math.min(conflicts, 6)))
+        }
+      Committed(published.getOrElse(throw new IllegalStateException(
+        s"commit to $location gave up after $MaxCommitAttempts conflicting attempts")), conflicts)
+    } finally {
+      val kept = published.toSeq.flatMap(_.snapshots.map(_.manifestList)).toSet
+      discard(lost.distinctBy(_.manifestList).filterNot(s => kept(s.manifestList)).toSeq)
+    }
+  }
+
+  /** One attempt of [[commit]]: the published metadata, or None when
+    * another writer published the version first (this attempt's files are
+    * deleted by then). */
+  def commitAttempt(location: String)(edit: TableMetadata => TableMetadata)
+      : Option[TableMetadata] =
+    attempt(location, edit) match {
+      case Right(meta) => Some(meta)
+      case Left(added) => discard(added); None
+    }
+
+  /** Read, edit and try to publish once: the published metadata, or — on a
+    * lost version race — the snapshots the attempt added. */
+  private def attempt(location: String, edit: TableMetadata => TableMetadata)
+      : Either[Seq[SnapshotInfo], TableMetadata] = {
+    val (read, version) = readVersioned(location)
+    val base = read.getOrElse(uncommitted(location))
+    val next = edit(base)
+    if (next eq base) Right(base)
+    else try { publish(location, version + 1, next); Right(next) }
     catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        new File(listPath).delete()
-        throw e
+      case _: java.nio.file.FileAlreadyExistsException =>
+        val known = base.snapshots.map(_.id).toSet
+        Left(next.snapshots.filterNot(s => known(s.id)))
     }
-    snapshotId
   }
 
-  /** Write one snapshot's manifest-list Avro; returns its path. `unique`
-    * appends a UUID (the real library always does): two writers racing the
-    * same next snapshot id must not clobber each other's list file before
-    * the metadata CAS picks the winner. */
-  private def writeManifestList(location: String, snapshotId: Long,
-                                manifests: Seq[ManifestInfo],
-                                unique: Boolean = false): String = {
-    val suffix = if (unique) "-" + java.util.UUID.randomUUID().toString.take(8) else ""
-    writeManifestListAs(
-      new File(metadataDir(location), f"snap-$snapshotId%05d$suffix.avro"), manifests)
+  /** Delete what unpublished snapshots were written with: each one's
+    * manifest list, the manifests it added, and the DV Puffins those
+    * reference (data files belong to the writer and are reused). */
+  private def discard(snapshots: Seq[SnapshotInfo]): Unit = snapshots.foreach { s =>
+    val added = readManifestList(s.manifestList).filter(_.addedSnapshotId == s.id)
+    added.flatMap(m => readManifest(m.path)).filter(_.referencedDataFile.isDefined)
+      .map(_.path).distinct.foreach(p => new File(p).delete())
+    added.foreach(m => new File(m.path).delete())
+    new File(s.manifestList).delete()
   }
+
+  /** What a table's first commit edits: no snapshots, and the properties
+    * CREATE TABLE left in the pending sidecar. */
+  private def uncommitted(location: String): TableMetadata =
+    TableMetadata(2,
+      java.util.UUID.nameUUIDFromBytes(location.getBytes(StandardCharsets.UTF_8)).toString,
+      location, -1L, Seq.empty, properties = readPendingProperties(location))
+
+  /** `meta`, if it is a committed table's. */
+  private def requireTable(meta: TableMetadata): TableMetadata = {
+    if (meta.snapshots.isEmpty)
+      throw new IllegalStateException(s"no Iceberg table at ${meta.location}")
+    meta
+  }
+
+  /** What an attempt to add a snapshot builds on: the metadata it read, the
+    * snapshot id it claims, the head it extends (-1 for a table's first
+    * snapshot), and the new data files with row ids assigned from the
+    * metadata's counter. */
+  final case class SnapshotAttempt(base: TableMetadata, id: Long, parent: Long,
+                                   added: Seq[DataFileEntry]) {
+    /** The manifests of the snapshot this one extends. */
+    def parentManifests: Seq[ManifestInfo] =
+      if (parent < 0) Seq.empty
+      else readManifestList(base.snapshots.find(_.id == parent).getOrElse(
+        throw new IllegalStateException(s"head snapshot $parent is missing")).manifestList)
+  }
+
+  /** The edit that adds one snapshot holding `manifests(attempt)`, which
+    * extends the head of ref `onto` and moves ref `ref` to it (the table's
+    * current snapshot moves with `main` only). Its id is max + 1 — never
+    * current + 1, which would reuse the id of a staged or rolled-back
+    * snapshot — and it is its own sequence number. `added` are the data
+    * files new to the table: they consume row ids. Every distinct
+    * committed column set becomes a schema entry (spec §Schema Evolution:
+    * old files lack newer fields, and a merge-schema read null-fills).
+    *
+    * A retry whose re-read finds the same snapshot log, refs and row-id
+    * counter (the winner changed only properties, schemas or statistics)
+    * reuses the previous attempt's manifests and list instead of writing
+    * them again: a data commit's retry then costs what a metadata-only
+    * commit costs, so metadata-only writers cannot starve it. */
+  private def addSnapshot(location: String, operation: String,
+                          added: Seq[DataFileEntry] = Seq.empty,
+                          schema: Seq[String] = Seq.empty,
+                          summary: Map[String, String] = Map.empty,
+                          onto: String = "main", ref: String = "main")(
+                          manifests: SnapshotAttempt => Seq[ManifestInfo])
+      : TableMetadata => TableMetadata = {
+    var last: Option[(TableMetadata, Seq[ManifestInfo], String)] = None
+    base => {
+      val id = (0L +: base.snapshots.map(_.id)).max + 1L
+      val parent =
+        if (onto == "main") base.currentSnapshotId
+        else base.refs.getOrElse(onto,
+          throw new IllegalArgumentException(s"no ref '$onto'")).snapshotId
+      val (ms, list) = last.collect { case (b, ms, list) if b.snapshots == base.snapshots &&
+          b.refs == base.refs && b.nextRowId == base.nextRowId => (ms, list) }
+        .getOrElse {
+          val ms = manifests(SnapshotAttempt(base, id, parent, assignRowIds(added, base.nextRowId)))
+          (ms, writeManifestList(location, id, ms))
+        }
+      last = Some((base, ms, list))
+      base.copy(
+        currentSnapshotId = if (ref == "main") id else base.currentSnapshotId,
+        snapshots = base.snapshots :+ SnapshotInfo(id, id, id * 1000L, list,
+          operation, summary, parent),
+        refs = base.refs + (ref -> RefInfo(id, "branch")),
+        schemas = if (schema.isEmpty || base.schemas.contains(schema)) base.schemas
+                  else base.schemas :+ schema,
+        nextRowId = base.nextRowId + added.map(_.recordCount).sum,
+        partitionSpecIds = base.partitionSpecIds ++ ms.map(_.specId))
+    }
+  }
+
+  /** [[commit]] of one [[addSnapshot]] edit. */
+  private def commitSnapshot(location: String, operation: String,
+                             added: Seq[DataFileEntry] = Seq.empty,
+                             schema: Seq[String] = Seq.empty,
+                             summary: Map[String, String] = Map.empty,
+                             onto: String = "main", ref: String = "main")(
+                             manifests: SnapshotAttempt => Seq[ManifestInfo]): Committed =
+    commit(location)(addSnapshot(location, operation, added, schema, summary, onto, ref)(manifests))
+
+  /** Write one snapshot's manifest-list Avro; returns its path. The name
+    * carries a random tag (the real library's does too): two writers racing
+    * the same next snapshot id must not clobber each other's list before
+    * the version CAS picks the winner. */
+  private def writeManifestList(location: String, snapshotId: Long,
+                                manifests: Seq[ManifestInfo]): String =
+    writeManifestListAs(
+      new File(metadataDir(location), f"snap-$snapshotId%05d-${fresh()}.avro"), manifests)
 
   /** Core manifest-list Avro writer (also used for the 3-level tree's
     * sub-lists and index, which share the manifest-list row schema). */
@@ -1285,42 +1295,35 @@ object IcebergTable {
   /** Create or move a named ref (tag or branch) to an existing snapshot —
     * a metadata-only commit. Tags pin their snapshot against expiry. */
   def setRef(location: String, name: String, snapshotId: Long,
-             refType: String = "tag"): Unit = {
-    val meta = readMetadata(location)
-    require(meta.snapshots.exists(_.id == snapshotId), s"no snapshot $snapshotId")
-    require(refType == "tag" || refType == "branch", "ref type must be tag or branch")
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs + (name -> RefInfo(snapshotId, refType)), meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId)
-  }
+             refType: String = "tag"): Unit =
+    commit(location) { meta =>
+      require(requireTable(meta).snapshots.exists(_.id == snapshotId), s"no snapshot $snapshotId")
+      require(refType == "tag" || refType == "branch", "ref type must be tag or branch")
+      meta.copy(refs = meta.refs + (name -> RefInfo(snapshotId, refType)))
+    }
 
   /** Bind a Puffin statistics file to a snapshot (spec §Table Statistics)
     * — a metadata-only commit, like the real library's
     * `updateStatistics()`: the new entry replaces any prior entry for the
     * same snapshot, everything else in the table is untouched. */
-  def setStatistics(location: String, stats: StatsFileInfo): Unit = {
-    val meta = readMetadata(location)
-    require(meta.snapshots.exists(_.id == stats.snapshotId),
-      s"no snapshot ${stats.snapshotId}")
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots, meta.currentSnapshotId,
-      meta.refs, meta.schemas,
-      statistics = meta.statistics.filterNot(_.snapshotId == stats.snapshotId) :+ stats,
-      nextRowId = meta.nextRowId)
-  }
+  def setStatistics(location: String, stats: StatsFileInfo): Unit =
+    commit(location) { meta =>
+      require(requireTable(meta).snapshots.exists(_.id == stats.snapshotId),
+        s"no snapshot ${stats.snapshotId}")
+      meta.copy(statistics = meta.statistics.filterNot(_.snapshotId == stats.snapshotId) :+ stats)
+    }
 
   /** `rollback_to_timestamp` (Iceberg's procedure of the same name): head
     * re-points to the LATEST snapshot committed at or before the given
     * time — the point-in-time undo every incident runbook reaches for.
     * Snapshot timestamps are the deterministic id-derived millis every
     * commit writes, so the outcome replays. Returns the new head id. */
-  def rollbackToTimestamp(location: String, timestampMs: Long): Long = {
-    val meta = readMetadata(location)
-    val eligible = meta.snapshots.filter(_.timestampMs <= timestampMs)
-    require(eligible.nonEmpty, s"no snapshot committed at or before $timestampMs ms")
-    val id = eligible.maxBy(_.timestampMs).id
-    rollback(location, id)
-    id
-  }
+  def rollbackToTimestamp(location: String, timestampMs: Long): Long =
+    commit(location) { meta =>
+      val eligible = requireTable(meta).snapshots.filter(_.timestampMs <= timestampMs)
+      require(eligible.nonEmpty, s"no snapshot committed at or before $timestampMs ms")
+      retarget(meta, eligible.maxBy(_.timestampMs).id)
+    }.meta.currentSnapshotId
 
   /** `remove_orphan_files` (Iceberg's GC procedure): delete on-disk files
     * NOT reachable from ANY snapshot's metadata tree — data parquet and
@@ -1383,14 +1386,9 @@ object IcebergTable {
     * starts a FRESH schema era — stale drop tombstones, rename chains and
     * type promotions from the superseded schema must not relabel the new
     * columns. Metadata-only version bump; snapshots/history untouched. */
-  def resetColumnEvolution(location: String): Unit = {
-    val meta = readMetadata(location)
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId,
-      droppedColumns = Some(Map.empty), renamedColumns = Some(Map.empty),
-      widenedColumns = Some(Map.empty))
-  }
+  def resetColumnEvolution(location: String): Unit =
+    commit(location)(meta => requireTable(meta).copy(
+      droppedColumns = Map.empty, renamedColumns = Map.empty, widenedColumns = Map.empty))
 
   /** Resolve a ref name to its snapshot id. */
   def snapshotForRef(location: String, name: String): Long =
@@ -1401,32 +1399,19 @@ object IcebergTable {
     * unit the concurrent-writer study races (the reference's
     * test_concurrent_writers.py:57 OptimisticLockManager loop, executed
     * against the actual metadata swap instead of a modeled lock table):
-    * read the metadata AND the version it lives at, build the next
-    * snapshot (a metadata-only touch that re-points the head manifest
-    * list — commit content is irrelevant to the protocol), then try to
-    * publish version+1 exclusively. Returns the new snapshot id, or None
-    * on conflict (someone else published version+1 first — re-read and
-    * retry, which is exactly what [[graft.lake.iceberg.IcebergOcc]]
-    * measures). The loser's uniquely-named manifest list is deleted. */
-  def tryCommitTouch(location: String): Option[Long] = {
-    val (meta, version) = readMetadataWithVersion(location)
-    val snapshotId = meta.snapshots.map(_.id).max + 1L
-    val headManifests = readManifestList(currentSnapshot(meta).manifestList)
-    val listPath = writeManifestList(location, snapshotId, headManifests, unique = true)
-    val snap = SnapshotInfo(snapshotId, snapshotId, snapshotId * 1000L, listPath,
-      "occ-touch", parentId = meta.currentSnapshotId)
-    try {
-      writeMetadataJson(location, meta.tableUuid, meta.snapshots :+ snap, snapshotId,
-        meta.refs + ("main" -> RefInfo(snapshotId, "branch")), meta.schemas,
-        atVersion = Some(version + 1), statistics = meta.statistics,
-        nextRowId = meta.nextRowId)
-      Some(snapshotId)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        new File(listPath).delete()
-        None
-    }
-  }
+    * one [[commitAttempt]] of a metadata-only "occ-touch" snapshot that
+    * re-points the head manifest list — commit content is irrelevant to
+    * the protocol. Returns the new snapshot id, or None on conflict
+    * (someone else published the version first — re-read and retry, which
+    * is exactly what [[graft.lake.iceberg.IcebergOcc]] measures). */
+  def tryCommitTouch(location: String): Option[Long] =
+    commitAttempt(location)(addSnapshot(location, "occ-touch") { a =>
+      requireTable(a.base)
+      a.parentManifests
+    }).map(_.snapshots.last.id)
+
+  private def versionFile(location: String, version: Long) =
+    Paths.get(s"$location/metadata/v$version.metadata.json")
 
   private def readVersionHint(location: String): Long = {
     val hint = new File(s"$location/metadata/version-hint.text")
@@ -1434,159 +1419,105 @@ object IcebergTable {
     else {
       val txt = new String(Files.readAllBytes(hint.toPath), StandardCharsets.UTF_8).trim
       // transiently unreadable hints (a concurrent flip in flight) degrade
-      // to 0 — readMetadataWithVersion's forward probe recovers the truth
-      // from the version files themselves, which are the ground truth
+      // to 0 — readVersioned's forward probe recovers the truth from the
+      // version files themselves, which are the ground truth
       try txt.toLong catch { case _: NumberFormatException => 0L }
     }
   }
 
-  /** Write the next metadata version and flip the hint. The version counter
-    * advances independently of snapshot ids (an expiry writes a metadata-
-    * only version with no new snapshot, exactly as the real library does).
+  /** Publish `meta` as version `version` and flip the hint — the one
+    * writer of `v<N>.metadata.json`, called by [[commitAttempt]] with the
+    * version after the one its edit read. The version counter advances
+    * independently of snapshot ids (an expiry writes a metadata-only
+    * version with no new snapshot, exactly as the real library does).
     *
-    * The version file is created EXCLUSIVELY (`CREATE_NEW`) — the
-    * HadoopTables commit CAS: when two writers race the same next version,
-    * the filesystem admits exactly one, and the loser gets
-    * `FileAlreadyExistsException` (surfaced as the conflict
-    * [[tryCommitTouch]] retries on). `atVersion` pins the version to the
-    * one the caller READ its metadata at (+1) — computing it from the hint
-    * at write time would let a writer that lost the race silently publish
-    * over a snapshot log it never saw (lost update, no conflict raised).
-    * The hint flip after the create is best-effort and never regresses. */
-  private def writeMetadataJson(location: String, uuid: String,
-                                snapshots: Seq[SnapshotInfo], currentId: Long,
-                                refs: Map[String, RefInfo] = Map.empty,
-                                schemas: Seq[Seq[String]] = Seq.empty,
-                                atVersion: Option[Long] = None,
-                                statistics: Seq[StatsFileInfo] = Seq.empty,
-                                nextRowId: Long = 0L,
-                                droppedColumns: Option[Map[String, Long]] = None,
-                                renamedColumns: Option[Map[String, Seq[String]]] = None,
-                                widenedColumns: Option[Map[String, String]] = None,
-                                properties: Option[Map[String, String]] = None): Unit = {
+    * The full content goes to a temp file that is then hard-LINKED to the
+    * version path. Link creation is the CAS (it fails with
+    * `FileAlreadyExistsException` when the version is taken) AND makes the
+    * content visible atomically — a bare CREATE_NEW+write would expose an
+    * empty or partial JSON to a racing reader's forward probe. The hint
+    * flip after the link is best-effort and never regresses. */
+  private def publish(location: String, version: Long, meta: TableMetadata): Unit = {
     val mdir = metadataDir(location)
-    val version = atVersion.getOrElse(readVersionHint(location) + 1)
-    // drop/rename/widen/properties bookkeeping CARRIES by default: only
-    // the ALTER paths set these explicitly, and every other commit
-    // (append, overwrite, expiry, …) must not silently wipe a tombstone,
-    // a rename chain, a type promotion or a property. The carry reads the
-    // current version file — one driver-side KB-grain parse. A table's
-    // FIRST commit folds in the CREATE TABLE … TBLPROPERTIES sidecar.
-    val (carryDropped, carryRenames, carryWidened, carryProps) =
-      if (droppedColumns.isDefined && renamedColumns.isDefined &&
-          widenedColumns.isDefined && properties.isDefined)
-        (droppedColumns.get, renamedColumns.get, widenedColumns.get, properties.get)
-      else {
-        val cur = readMetadataWithVersionOpt(location)._1
-        (droppedColumns.getOrElse(cur.map(_.droppedColumns).getOrElse(Map.empty)),
-         renamedColumns.getOrElse(cur.map(_.renamedColumns).getOrElse(Map.empty)),
-         widenedColumns.getOrElse(cur.map(_.widenedColumns).getOrElse(Map.empty)),
-         properties.getOrElse(cur.map(_.properties)
-           .getOrElse(readPendingProperties(location))))
-      }
-    val schemasJson =
-      if (schemas.isEmpty)
-        """[{"schema-id":0,"type":"struct","fields":[
-          | {"id":1,"name":"l_shipdate","required":false,"type":"timestamp"}]}]""".stripMargin
-      else schemas.zipWithIndex.map { case (cols, sid) =>
-        val fields = cols.zipWithIndex.map { case (c, i) =>
-          s"""{"id":${i + 1},"name":"$c","required":false,"type":"string"}"""
-        }.mkString("[", ",", "]")
-        s"""{"schema-id":$sid,"type":"struct","fields":$fields}"""
-      }.mkString("[", ",", "]")
-    val refsJson = refs.toSeq.sortBy(_._1).map { case (n, r) =>
-      s""""$n":{"snapshot-id":${r.snapshotId},"type":"${r.refType}"}"""
-    }.mkString("{", ",", "}")
-    val snapsJson = snapshots.map { s =>
-      val extra = s.summary.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""","$k":"$v"""" }.mkString
-      s"""{"snapshot-id":${s.id},"sequence-number":${s.sequenceNumber},""" +
-        s""""timestamp-ms":${s.timestampMs},"parent-snapshot-id":${s.parentId},""" +
-        s""""manifest-list":"${s.manifestList}",""" +
-        s""""summary":{"operation":"${s.operation}"$extra}}"""
-    }.mkString("[", ",", "]")
-    // partition-specs must DEFINE every spec the manifest tree references
-    // (a weekly append records partition_spec_id 1 in its manifest-list
-    // rows; a metadata file that only defines spec 0 breaks any
-    // spec-following reader). Used specs come from the surviving
-    // snapshots' manifest lists — metadata-grain reads, ≤ snapshots files.
-    val usedSpecs = (snapshots.flatMap { s =>
-      try readManifestList(s.manifestList).map(_.specId)
-      catch { case _: Exception => Seq(0) }
-    }.toSet + 0).toSeq.sorted
-    val specJson = usedSpecs.map {
-      case 0 =>
-        """{"spec-id":0,"fields":[
-          | {"name":"p_month","transform":"identity","source-id":2,"field-id":1000}]}""".stripMargin
-      case 2 =>
-        // The declared field NAME matches the manifest Avro's single
-        // partition slot (`p_month` — a fixed one-field record, the stated
-        // single-field simplification: every spec's value rides in that
-        // slot, here the "bNN" bucket label), so a spec-following reader
-        // binds the partition value to the declared field. The FIELD-ID is
-        // fresh (1001): spec 0 already owns 1000 with a different source,
-        // and Iceberg requires unique partition field ids across evolved
-        // specs.
-        s"""{"spec-id":2,"fields":[
-           | {"name":"p_month","transform":"bucket[$BucketN]","source-id":1,"field-id":1001}]}""".stripMargin
-      case sid =>
-        s"""{"spec-id":$sid,"fields":[
-           | {"name":"p_month","transform":"identity","source-id":2,"field-id":1000}]}""".stripMargin
-    }.mkString("[", ",", "]")
-    val statsJson = statistics.map(s =>
-      s"""{"snapshot-id":${s.snapshotId},"statistics-path":"${s.path}",""" +
-        s""""file-size-in-bytes":${s.fileSizeBytes},""" +
-        s""""file-footer-size-in-bytes":${s.footerSizeBytes}}""").mkString("[", ",", "]")
-    val json =
-      s"""{"format-version":2,"table-uuid":"$uuid","location":"$location",
-         |"last-sequence-number":${snapshots.map(_.sequenceNumber).max},
-         |"last-updated-ms":${snapshots.map(_.timestampMs).max},
-         |"schemas":$schemasJson,
-         |"current-schema-id":${math.max(0, schemas.size - 1)},
-         |"partition-specs":$specJson,
-         |"default-spec-id":${usedSpecs.max},
-         |"sort-orders":[{"order-id":0,"fields":[]}],
-         |"default-sort-order-id":0,
-         |"current-snapshot-id":$currentId,
-         |"next-row-id":$nextRowId,
-         |"graft-dropped":${carryDropped.toSeq.sortBy(_._1)
-             .map { case (n, at) => s""""$n":$at""" }.mkString("{", ",", "}")},
-         |"graft-renames":${carryRenames.toSeq.sortBy(_._1)
-             .map { case (n, chain) =>
-               s""""$n":${chain.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-             }.mkString("{", ",", "}")},
-         |"graft-widened":${carryWidened.toSeq.sortBy(_._1)
-             .map { case (n, t) => s""""$n":"$t"""" }.mkString("{", ",", "}")},
-         |"properties":${carryProps.toSeq.sortBy(_._1)
-             .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")},
-         |"refs":$refsJson,
-         |"statistics":$statsJson,
-         |"snapshots":$snapsJson}""".stripMargin
-    // Atomic publish: write the FULL content to a temp file, then hard-LINK
-    // it to the version path. Link creation is the CAS (fails with
-    // FileAlreadyExistsException when the version is taken) AND makes the
-    // content visible atomically — a bare CREATE_NEW+write exposes an
-    // empty/partial JSON between create and flush, which a racing reader's
-    // forward probe would parse and die on (observed: raced writer threads
-    // killed by truncated-JSON parses before this used the link protocol).
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
-    val tmp = Paths.get(mdir.getPath,
-      s".v$version-${java.util.UUID.randomUUID().toString.take(8)}.json.tmp")
-    Files.write(tmp, bytes)
-    try Files.createLink(Paths.get(mdir.getPath, s"v$version.metadata.json"), tmp)
+    val tmp = Paths.get(mdir.getPath, s".v$version-${fresh()}.json.tmp")
+    Files.write(tmp, JsonMethods.compact(metadataJson(meta)).getBytes(StandardCharsets.UTF_8))
+    try Files.createLink(versionFile(location, version), tmp)
     finally Files.deleteIfExists(tmp)
     // never regress the hint, and flip it ATOMICALLY (write-temp + rename):
     // a truncate-then-write would expose an empty hint to concurrent
     // readers mid-flip, and a slow winner of version N flipping after a
     // faster writer already published N+1 must not point readers backward
     if (readVersionHint(location) < version) {
-      val tmp = Paths.get(mdir.getPath,
-        s"version-hint.text.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      val tmp = Paths.get(mdir.getPath, s"version-hint.text.tmp-${fresh()}")
       Files.write(tmp, version.toString.getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, Paths.get(mdir.getPath, "version-hint.text"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+  }
+
+  /** `meta` as a metadata.json document (spec §Table Metadata) — a pure
+    * function, the inverse of [[parseMetadata]] on every metadata it
+    * parses. Maps are written in key order. A table with no recorded
+    * column set declares the one-field schema of its partition source. */
+  def metadataJson(meta: TableMetadata): JValue = {
+    def strings(m: Map[String, String]): JObject =
+      JObject(m.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })
+    def struct(id: Int, fields: Seq[(String, String)]): JObject =
+      JObject("schema-id" -> JInt(id), "type" -> JString("struct"),
+        "fields" -> JArray(fields.toList.zipWithIndex.map { case ((name, tpe), i) =>
+          JObject("id" -> JInt(i + 1), "name" -> JString(name),
+            "required" -> JBool(false), "type" -> JString(tpe))
+        }))
+    val schemas =
+      if (meta.schemas.isEmpty) List(struct(0, Seq("l_shipdate" -> "timestamp")))
+      else meta.schemas.toList.zipWithIndex.map { case (cols, sid) =>
+        struct(sid, cols.map(_ -> "string")) }
+    // spec 2 is bucket[BucketN](l_orderkey); the others are identity on
+    // the month key. Every spec declares the manifest Avro's one partition
+    // slot (`p_month` — the stated single-field simplification), so a
+    // spec-following reader binds the value to the declared field; spec 2's
+    // field id is fresh because Iceberg wants unique partition field ids
+    // across evolved specs.
+    val specs = meta.partitionSpecIds.toList.sorted.map { sid =>
+      val (transform, source, fieldId) =
+        if (sid == 2) (s"bucket[$BucketN]", 1, 1001) else ("identity", 2, 1000)
+      JObject("spec-id" -> JInt(sid), "fields" -> JArray(List(JObject(
+        "name" -> JString("p_month"), "transform" -> JString(transform),
+        "source-id" -> JInt(source), "field-id" -> JInt(fieldId)))))
+    }
+    JObject(
+      "format-version" -> JInt(meta.formatVersion),
+      "table-uuid" -> JString(meta.tableUuid),
+      "location" -> JString(meta.location),
+      "last-sequence-number" -> JLong((0L +: meta.snapshots.map(_.sequenceNumber)).max),
+      "last-updated-ms" -> JLong((0L +: meta.snapshots.map(_.timestampMs)).max),
+      "schemas" -> JArray(schemas),
+      "current-schema-id" -> JInt(math.max(0, meta.schemas.size - 1)),
+      "partition-specs" -> JArray(specs),
+      "default-spec-id" -> JInt(meta.partitionSpecIds.max),
+      "sort-orders" -> JArray(List(JObject("order-id" -> JInt(0), "fields" -> JArray(Nil)))),
+      "default-sort-order-id" -> JInt(0),
+      "current-snapshot-id" -> JLong(meta.currentSnapshotId),
+      "next-row-id" -> JLong(meta.nextRowId),
+      "graft-dropped" -> JObject(meta.droppedColumns.toList.sortBy(_._1).map {
+        case (n, at) => n -> JLong(at) }),
+      "graft-renames" -> JObject(meta.renamedColumns.toList.sortBy(_._1).map {
+        case (n, chain) => n -> JArray(chain.toList.map(JString(_))) }),
+      "graft-widened" -> strings(meta.widenedColumns),
+      "properties" -> strings(meta.properties),
+      "refs" -> JObject(meta.refs.toList.sortBy(_._1).map { case (n, r) =>
+        n -> JObject("snapshot-id" -> JLong(r.snapshotId), "type" -> JString(r.refType)) }),
+      "statistics" -> JArray(meta.statistics.toList.map(st => JObject(
+        "snapshot-id" -> JLong(st.snapshotId), "statistics-path" -> JString(st.path),
+        "file-size-in-bytes" -> JLong(st.fileSizeBytes),
+        "file-footer-size-in-bytes" -> JLong(st.footerSizeBytes)))),
+      "snapshots" -> JArray(meta.snapshots.toList.map(sn => JObject(
+        "snapshot-id" -> JLong(sn.id), "sequence-number" -> JLong(sn.sequenceNumber),
+        "timestamp-ms" -> JLong(sn.timestampMs), "parent-snapshot-id" -> JLong(sn.parentId),
+        "manifest-list" -> JString(sn.manifestList),
+        "summary" -> JObject(("operation" -> JString(sn.operation)) ::
+          strings(sn.summary).obj)))))
   }
 
   /** What an expiry pass removed (and proved unreachable first). */
@@ -1601,141 +1532,118 @@ object IcebergTable {
     * semantics (`expire_snapshots` + orphan cleanup): time travel to the
     * dropped snapshots is gone, the live head is untouched. */
   def expireSnapshots(location: String, keepLast: Int = 1): ExpiryReport = {
-    val meta = readMetadata(location)
-    // ref-pinned snapshots survive regardless of age (the spec's retention
-    // rule: a tagged or branched snapshot is never expired from under its
-    // ref)
-    val pinned = meta.refs.values.map(_.snapshotId).toSet
-    val (keepTail, dropCand) = {
-      val sorted = meta.snapshots.sortBy(_.id)
-      (sorted.takeRight(keepLast), sorted.dropRight(keepLast))
+    // what the published attempt dropped; files are deleted only once the
+    // metadata that no longer references them is published
+    var drop = Seq.empty[SnapshotInfo]
+    var dropManifestPaths = Seq.empty[String]
+    var orphanEntries = Seq.empty[DataFileEntry]
+    var dropStats = Seq.empty[StatsFileInfo]
+    commit(location) { meta =>
+      requireTable(meta)
+      // ref-pinned snapshots survive regardless of age (the spec's retention
+      // rule: a tagged or branched snapshot is never expired from under its
+      // ref)
+      val pinned = meta.refs.values.map(_.snapshotId).toSet
+      val (keepTail, dropCand) = {
+        val sorted = meta.snapshots.sortBy(_.id)
+        (sorted.takeRight(keepLast), sorted.dropRight(keepLast))
+      }
+      val keep = (dropCand.filter(s => pinned(s.id)) ++ keepTail).sortBy(_.id)
+      drop = dropCand.filterNot(s => pinned(s.id))
+      require(keep.exists(_.id == meta.currentSnapshotId),
+        "refusing to expire the current snapshot")
+      val keptManifests = keep.flatMap(s => readManifestList(s.manifestList)).map(_.path).toSet
+      val keptFiles = keptManifests.flatMap(readManifest).map(_.path)
+      dropManifestPaths = drop.flatMap(s => readManifestList(s.manifestList))
+        .map(_.path).distinct.filterNot(keptManifests)
+      orphanEntries = dropManifestPaths.flatMap(readManifest)
+        .filterNot(e => keptFiles(e.path))
+        .groupBy(_.path).map(_._2.head).toSeq
+      // statistics ride with their snapshot: a Puffin file bound to an
+      // expired snapshot is unreachable metadata — GC it with the rest
+      val keptIds = keep.map(_.id).toSet
+      val (keepStats, droppedStats) = meta.statistics.partition(s => keptIds(s.snapshotId))
+      dropStats = droppedStats
+      // next-row-id survives expiry untouched: ids of expired rows are
+      // burned forever (the spec's no-reuse rule)
+      meta.copy(snapshots = keep, statistics = keepStats)
     }
-    val keep = (dropCand.filter(s => pinned(s.id)) ++ keepTail).sortBy(_.id)
-    val drop = dropCand.filterNot(s => pinned(s.id))
-    require(keep.exists(_.id == meta.currentSnapshotId),
-      "refusing to expire the current snapshot")
-    val keptManifests = keep.flatMap(s => readManifestList(s.manifestList)).map(_.path).toSet
-    val keptFiles = keep.flatMap(s => readManifestList(s.manifestList))
-      .flatMap(m => readManifest(m.path)).map(_.path).toSet
-    val dropManifestPaths = drop.flatMap(s => readManifestList(s.manifestList))
-      .map(_.path).distinct.filterNot(keptManifests)
-    val orphanEntries = dropManifestPaths.flatMap(readManifest)
-      .filterNot(e => keptFiles(e.path))
-      .groupBy(_.path).map(_._2.head).toSeq
     orphanEntries.foreach(e => new File(e.path).delete())
     dropManifestPaths.foreach(p => new File(p).delete())
     drop.foreach(s => new File(s.manifestList).delete())
-    // statistics ride with their snapshot: a Puffin file bound to an
-    // expired snapshot is unreachable metadata — GC it with the rest
-    val keptIds = keep.map(_.id).toSet
-    val (keepStats, dropStats) = meta.statistics.partition(s => keptIds(s.snapshotId))
     dropStats.foreach(s => new File(s.path).delete())
-    // next-row-id survives expiry untouched: ids of expired rows are
-    // burned forever (the spec's no-reuse rule)
-    writeMetadataJson(location, meta.tableUuid, keep, meta.currentSnapshotId, meta.refs,
-      meta.schemas, statistics = keepStats, nextRowId = meta.nextRowId)
     ExpiryReport(drop.size, drop.size, dropManifestPaths.size,
       orphanEntries.count(_.content == 0), orphanEntries.count(_.content == 2))
   }
 
-  /** Read table metadata via the version hint (None if no table yet).
-    * Probes forward past a stale hint like [[readMetadataWithVersion]] —
-    * free when no successor exists, and keeps readers consistent while a
-    * racing writer's hint flip is in flight. */
-  def readMetadataOpt(location: String): Option[TableMetadata] = {
-    val hint = new File(s"$location/metadata/version-hint.text")
-    if (!hint.exists()) None
-    else Some(readMetadataWithVersion(location)._1)
-  }
-
-  /** Metadata + the version it was read at — the OCC token a committer
-    * hands back to [[writeMetadataJson]] so the CAS rejects any commit
-    * built on a stale snapshot log. The hint is best-effort (a slow
-    * writer's flip can briefly lag or regress), so this probes FORWARD to
-    * the newest version file actually present — HadoopTables' own reader
-    * fallback, and what keeps racing committers livelock-free: without the
-    * probe, a regressed hint would pin every retry at a version whose
-    * successor already exists. */
-  def readMetadataWithVersion(location: String): (TableMetadata, Long) = {
+  /** The table's metadata and the version it was read at — what
+    * [[commit]] builds an edit on; (None, 0) before the first commit, whose
+    * CAS then targets v1 under the same protocol as every later one. The
+    * hint is best-effort (a slow writer's flip can briefly lag or regress),
+    * so this probes FORWARD to the newest version file actually present —
+    * HadoopTables' own reader fallback, and what keeps racing committers
+    * livelock-free: without the probe, a regressed hint would pin every
+    * retry at a version whose successor already exists. */
+  def readVersioned(location: String): (Option[TableMetadata], Long) = {
     var v = readVersionHint(location)
-    while (Files.exists(Paths.get(s"$location/metadata/v${v + 1}.metadata.json"))) v += 1
-    (parseMetadataVersion(location, v), v)
+    while (Files.exists(versionFile(location, v + 1))) v += 1
+    if (v == 0L) (None, 0L)
+    else (Some(parseMetadata(JsonMethods.parse(Files.readString(versionFile(location, v))))), v)
   }
 
-  /** [[readMetadataWithVersion]] tolerating a not-yet-committed table:
-    * (None, 0) means the next CAS targets v1 — the first commit races
-    * under the same protocol as every later one. */
-  def readMetadataWithVersionOpt(location: String): (Option[TableMetadata], Long) = {
-    var v = readVersionHint(location)
-    while (Files.exists(Paths.get(s"$location/metadata/v${v + 1}.metadata.json"))) v += 1
-    if (v == 0L) (None, 0L) else (Some(parseMetadataVersion(location, v)), v)
-  }
+  /** Table metadata (None if no table yet), via [[readVersioned]]. */
+  def readMetadataOpt(location: String): Option[TableMetadata] = readVersioned(location)._1
 
-  private def parseMetadataVersion(location: String, v: Long): TableMetadata = {
-    {
-      val txt = new String(
-        Files.readAllBytes(Paths.get(s"$location/metadata/v$v.metadata.json")),
-        StandardCharsets.UTF_8)
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(txt)
-      implicit val fmts: Formats = DefaultFormats
-      val snaps = (j \ "snapshots").children.map { s =>
-        val extra = (s \ "summary") match {
-          case JObject(fields) => fields.collect {
-            case (k, JString(value)) if k != "operation" => k -> value
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
-        SnapshotInfo((s \ "snapshot-id").extract[Long],
-          (s \ "sequence-number").extract[Long],
-          (s \ "timestamp-ms").extract[Long],
-          (s \ "manifest-list").extract[String],
-          (s \ "summary" \ "operation").extract[String],
-          extra,
-          // pre-lineage metadata files lack the field: -1 (root)
-          (s \ "parent-snapshot-id").extractOpt[Long].getOrElse(-1L))
-      }
-      val schemas = (j \ "schemas").children.map { sc =>
-        (sc \ "fields").children.map(f => (f \ "name").extract[String])
-      }
-      val refs = (j \ "refs") match {
-        case JObject(fields) => fields.map { case (n, v) =>
-          n -> RefInfo((v \ "snapshot-id").extract[Long], (v \ "type").extract[String])
-        }.toMap
-        case _ => Map.empty[String, RefInfo]
-      }
-      val stats = (j \ "statistics").children.map { s =>
-        StatsFileInfo((s \ "snapshot-id").extract[Long],
-          (s \ "statistics-path").extract[String],
-          (s \ "file-size-in-bytes").extract[Long],
-          (s \ "file-footer-size-in-bytes").extract[Long])
-      }
-      val dropped = (j \ "graft-dropped") match {
-        case JObject(fields) => fields.map { case (n, at) => n -> at.extract[Long] }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      val renames = (j \ "graft-renames") match {
-        case JObject(fields) => fields.map { case (n, chain) =>
-          n -> chain.children.map(_.extract[String]) }.toMap
-        case _ => Map.empty[String, Seq[String]]
-      }
-      val widened = (j \ "graft-widened") match {
-        case JObject(fields) => fields.map { case (n, t) => n -> t.extract[String] }.toMap
-        case _ => Map.empty[String, String]
-      }
-      val props = (j \ "properties") match {
-        case JObject(fields) => fields.map { case (k, v) => k -> v.extract[String] }.toMap
-        case _ => Map.empty[String, String]
-      }
-      TableMetadata((j \ "format-version").extract[Int],
-        (j \ "table-uuid").extract[String],
-        (j \ "location").extract[String],
-        (j \ "current-snapshot-id").extract[Long], snaps, refs, schemas, stats,
-        // pre-lineage metadata files lack the field: 0 (standard evolution)
-        (j \ "next-row-id").extractOpt[Long].getOrElse(0L),
-        dropped, renames, widened, props)
+  /** A committed table's metadata and the version it was read at. */
+  def readMetadataWithVersion(location: String): (TableMetadata, Long) =
+    readVersioned(location) match {
+      case (Some(meta), v) => (meta, v)
+      case _ => throw new IllegalStateException(s"no Iceberg table at $location")
     }
+
+  /** Parse a metadata.json document ([[metadataJson]]'s inverse). Fields
+    * that older files lack read as their defaults. */
+  def parseMetadata(j: JValue): TableMetadata = {
+    implicit val fmts: Formats = DefaultFormats
+    def strings(v: JValue): Map[String, String] = v match {
+      case JObject(fields) => fields.collect { case (k, JString(s)) => k -> s }.toMap
+      case _ => Map.empty
+    }
+    def fields(v: JValue): List[(String, JValue)] = v match {
+      case JObject(fs) => fs
+      case _ => Nil
+    }
+    val snaps = (j \ "snapshots").children.map { s =>
+      SnapshotInfo((s \ "snapshot-id").extract[Long],
+        (s \ "sequence-number").extract[Long],
+        (s \ "timestamp-ms").extract[Long],
+        (s \ "manifest-list").extract[String],
+        (s \ "summary" \ "operation").extract[String],
+        strings(s \ "summary") - "operation",
+        // pre-lineage metadata files lack the field: -1 (root)
+        (s \ "parent-snapshot-id").extractOpt[Long].getOrElse(-1L))
+    }
+    TableMetadata((j \ "format-version").extract[Int],
+      (j \ "table-uuid").extract[String],
+      (j \ "location").extract[String],
+      (j \ "current-snapshot-id").extract[Long], snaps,
+      fields(j \ "refs").map { case (n, r) =>
+        n -> RefInfo((r \ "snapshot-id").extract[Long], (r \ "type").extract[String]) }.toMap,
+      (j \ "schemas").children.map(_ \ "fields").map(_.children.map(f => (f \ "name").extract[String])),
+      (j \ "statistics").children.map { st =>
+        StatsFileInfo((st \ "snapshot-id").extract[Long],
+          (st \ "statistics-path").extract[String],
+          (st \ "file-size-in-bytes").extract[Long],
+          (st \ "file-footer-size-in-bytes").extract[Long])
+      },
+      // pre-lineage metadata files lack the field: 0 (standard evolution)
+      (j \ "next-row-id").extractOpt[Long].getOrElse(0L),
+      fields(j \ "graft-dropped").map { case (n, at) => n -> at.extract[Long] }.toMap,
+      fields(j \ "graft-renames").map { case (n, chain) =>
+        n -> chain.children.map(_.extract[String]) }.toMap,
+      strings(j \ "graft-widened"),
+      strings(j \ "properties"),
+      (j \ "partition-specs").children.map(sp => (sp \ "spec-id").extract[Int]).toSet + 0)
   }
 
   def readMetadata(location: String): TableMetadata =
@@ -1957,41 +1865,21 @@ object IcebergTable {
     * (its manifest's partition summary spans every month), so planning
     * never partition-prunes it away from a scan it applies to. */
   def appendEqualityDeletes(spark: SparkSession, keys: DataFrame, location: String): Long = {
-    val prev = readMetadata(location)
-    // max(id)+1 like every other commit path — current+1 would collide with
-    // a staged snapshot's id (see rewriteCompact).
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val dataDir = s"$location/data/snap-$snapshotId"
+    readMetadata(location) // deletes apply to a committed table
+    val dataDir = newDataDir(location)
     keys.select(col(keys.columns.head).cast("long").as("key"))
       .coalesce(1).write.mode("overwrite").parquet(dataDir)
     val stats = spark.read.parquet(dataDir)
       .agg(count(lit(1)).as("n"), min(col("key")).as("lo"), max(col("key")).as("hi")).head()
     val file = new File(dataDir).listFiles().filter(_.getName.endsWith(".parquet")).head
-    val mdir = metadataDir(location)
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0.avro")
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val part = new GenericData.Record(partSchema)
-    part.put("p_month", "")
-    val dfr = new GenericData.Record(dataFileSchema)
-    dfr.put("content", 2) // equality deletes
-    dfr.put("file_path", file.getPath)
-    dfr.put("file_format", "PARQUET")
-    dfr.put("partition", part)
-    dfr.put("record_count", stats.getAs[Long]("n"))
-    dfr.put("file_size_in_bytes", file.length())
-    dfr.put("lower_bounds", Map("l_orderkey" -> stats.getAs[Long]("lo").toString).asJava)
-    dfr.put("upper_bounds", Map("l_orderkey" -> stats.getAs[Long]("hi").toString).asJava)
-    val e = new GenericData.Record(ManifestEntrySchema)
-    e.put("status", 1)
-    e.put("snapshot_id", snapshotId)
-    e.put("sequence_number", snapshotId)
-    e.put("data_file", dfr)
-    val manifestLen = writeAvro(ManifestEntrySchema, manifestFile, Seq[GenericRecord](e))
-    val prevManifests = readManifestList(currentSnapshot(prev).manifestList)
-    val newInfo = ManifestInfo(manifestFile.getPath, manifestLen, snapshotId,
-      1, stats.getAs[Long]("n"), "0000-00", "9999-99")
-    commitSnapshot(location, Some(prev), snapshotId, prevManifests :+ newInfo, "delete")
+    val n = stats.getAs[Long]("n")
+    commitSnapshot(location, "delete") { a =>
+      val e = DataFileEntry(file.getPath, "", n, file.length(), "", "", content = 2,
+        sequence = a.id, entrySnapshotId = a.id)
+      a.parentManifests :+ writeDeleteManifest(location, a.id, "eq", Seq(manifestEntry(e, 1,
+        Map("l_orderkey" -> stats.getAs[Long]("lo").toString),
+        Map("l_orderkey" -> stats.getAs[Long]("hi").toString))), n)
+    }.snapshotId
   }
 
   /** Commit a POSITION-delete snapshot (spec content = 1): the delete file's
@@ -2009,10 +1897,8 @@ object IcebergTable {
   def appendPositionDeletes(spark: SparkSession, location: String,
                             predicate: org.apache.spark.sql.Column,
                             shards: Int = 1): Long = {
-    val prev = readMetadata(location)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
     val plan = planFiles(location)
-    val dataDir = s"$location/data/snap-$snapshotId"
+    val dataDir = newDataDir(location)
     val victims = spark.read.parquet(plan.files.map(_.path): _*)
       .filter(predicate)
       .select(col("_metadata.file_path").as("file_path"),
@@ -2030,34 +1916,14 @@ object IcebergTable {
       .map(r => (r.getAs[String]("file_path").stripPrefix("file:"),
         r.getAs[Long]("n"), r.getAs[Long]("lo"), r.getAs[Long]("hi")))
       .sortBy(_._1)
-    val mdir = metadataDir(location)
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0.avro")
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val entries = stats.map { case (path, n, lo, hi) =>
-      val part = new GenericData.Record(partSchema)
-      part.put("p_month", "")
-      val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 1) // position deletes
-      dfr.put("file_path", path)
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", part)
-      dfr.put("record_count", n)
-      dfr.put("file_size_in_bytes", new File(path).length())
-      dfr.put("lower_bounds", Map("pos" -> lo.toString).asJava)
-      dfr.put("upper_bounds", Map("pos" -> hi.toString).asJava)
-      val e = new GenericData.Record(ManifestEntrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", snapshotId)
-      e.put("data_file", dfr)
-      e: GenericRecord
-    }
-    val manifestLen = writeAvro(ManifestEntrySchema, manifestFile, entries.toSeq)
-    val prevManifests = readManifestList(currentSnapshot(prev).manifestList)
-    val newInfo = ManifestInfo(manifestFile.getPath, manifestLen, snapshotId,
-      stats.length, stats.map(_._2).sum, "0000-00", "9999-99")
-    commitSnapshot(location, Some(prev), snapshotId, prevManifests :+ newInfo, "delete")
+    commitSnapshot(location, "delete") { a =>
+      val entries = stats.toSeq.map { case (path, n, lo, hi) =>
+        manifestEntry(DataFileEntry(path, "", n, new File(path).length(), "", "", content = 1,
+          sequence = a.id, entrySnapshotId = a.id), 1,
+          Map("pos" -> lo.toString), Map("pos" -> hi.toString))
+      }
+      a.parentManifests :+ writeDeleteManifest(location, a.id, "pos", entries, stats.map(_._2).sum)
+    }.snapshotId
   }
 
   /** MOR read applying POSITION deletes (content = 1): data rows carry
@@ -2126,8 +1992,6 @@ object IcebergTable {
   def appendDvPuffin(spark: SparkSession, location: String,
                      predicate: org.apache.spark.sql.Column,
                      shards: Int = 1): Long = {
-    val prev = readMetadata(location)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
     val plan = planFiles(location)
     import spark.implicits._
     // file coordinate via input_file_name() — the same normalization the
@@ -2148,53 +2012,9 @@ object IcebergTable {
         .collect()
         .sortBy(_._1)
     require(victims.nonEmpty, "deletion-vector commit with zero victims")
-    val mdir = metadataDir(location)
-    val nShards = math.max(1, shards)
-    // Shard → its victims (file_path-hash routed; shards=1 keeps the
-    // legacy single-file name so existing tables/oracles are unchanged).
-    val byShard = victims.groupBy(v => math.floorMod(v._1.hashCode, nShards))
-      .toSeq.sortBy(_._1)
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val entries = byShard.flatMap { case (shard, vs) =>
-      val puffinFile = new File(mdir,
-        if (nShards == 1) f"dv-snap-$snapshotId%05d.puffin"
-        else f"dv-snap-$snapshotId%05d-$shard%03d.puffin")
-      val blobs = vs.map { case (path, blob, card, _, _) =>
-        Puffin.BlobSpec("deletion-vector-v1", Seq.empty, snapshotId, snapshotId,
-          blob, Map("referenced-data-file" -> path, "cardinality" -> card.toString))
-      }
-      val (puffinSize, _, metas) = Puffin.writeBlobs(puffinFile, blobs.toIndexedSeq,
-        Map("created-by" -> "graft"))
-      vs.zip(metas).map { case ((path, _, card, lo, hi), m) =>
-        val part = new GenericData.Record(partSchema)
-        part.put("p_month", "")
-        val dfr = new GenericData.Record(dataFileSchema)
-        dfr.put("content", 1) // position deletes (a DV is positional)
-        dfr.put("file_path", puffinFile.getPath)
-        dfr.put("file_format", "PUFFIN")
-        dfr.put("partition", part)
-        dfr.put("record_count", card) // = blob cardinality
-        dfr.put("file_size_in_bytes", puffinSize)
-        dfr.put("lower_bounds", Map("pos" -> lo.toString).asJava)
-        dfr.put("upper_bounds", Map("pos" -> hi.toString).asJava)
-        dfr.put("referenced_data_file", path)
-        dfr.put("content_offset", m.offset)
-        dfr.put("content_size_in_bytes", m.length)
-        val e = new GenericData.Record(ManifestEntrySchema)
-        e.put("status", 1)
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", snapshotId)
-        e.put("data_file", dfr)
-        e: GenericRecord
-      }
-    }
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0.avro")
-    val manifestLen = writeAvro(ManifestEntrySchema, manifestFile, entries.toIndexedSeq)
-    val prevManifests = readManifestList(currentSnapshot(prev).manifestList)
-    val newInfo = ManifestInfo(manifestFile.getPath, manifestLen, snapshotId,
-      victims.length, victims.map(_._3).sum, "0000-00", "9999-99")
-    commitSnapshot(location, Some(prev), snapshotId, prevManifests :+ newInfo, "delete")
+    commitSnapshot(location, "delete") { a =>
+      a.parentManifests :+ writeDvManifest(location, a.id, victims.toSeq, shards)
+    }.snapshotId
   }
 
   /** `rewrite_position_deletes` — the maintenance action behind the v3
@@ -2227,8 +2047,7 @@ object IcebergTable {
     * retain-don't-reassign rule EXISTING entries follow across manifest
     * rewrites. */
   def rewritePositionDeletes(spark: SparkSession, location: String): Long = {
-    val prev = readMetadata(location)
-    val head = readManifestList(currentSnapshot(prev).manifestList)
+    val head = readManifestList(currentSnapshot(readMetadata(location)).manifestList)
     val byManifest = head.zip(readManifestsParallel(head.map(_.path)))
     val (posManifests, keptManifests) =
       byManifest.partition(_._2.exists(_.content == 1))
@@ -2243,7 +2062,6 @@ object IcebergTable {
     require(replaced.nonEmpty,
       "rewrite_position_deletes on a table with no positional delete files")
     val (dvReplaced, posFileReplaced) = replaced.partition(_.referencedDataFile.isDefined)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
     import org.apache.spark.sql.Encoders
     val posEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong)
     val triEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.BINARY)
@@ -2287,44 +2105,257 @@ object IcebergTable {
       }
       .collect()
       .sortBy(_._1)
-    val mdir = metadataDir(location)
-    val puffinFile = new File(mdir, f"dv-rewrite-$snapshotId%05d.puffin")
-    val blobs = victims.map { case (path, blob, card, _, _, seq) =>
-      Puffin.BlobSpec("deletion-vector-v1", Seq.empty, snapshotId, seq,
-        blob, Map("referenced-data-file" -> path, "cardinality" -> card.toString))
+    val sequences = victims.map(v => v._1 -> v._6).toMap
+    val replacedManifests = posManifests.map(_._1.path).toSet
+    commitSnapshot(location, "replace") { a =>
+      a.parentManifests.filterNot(m => replacedManifests(m.path)) :+ writeDvManifest(
+        location, a.id, victims.toSeq.map(v => (v._1, v._2, v._3, v._4, v._5)), sequenceOf = sequences)
+    }.snapshotId
+  }
+
+  /** Write one DV wave — the Puffin file(s) carrying per-referenced-file
+    * Roaring blobs plus its delete manifest — from already-serialized
+    * rows `(referenced path, blob bytes, cardinality, min pos, max pos)`.
+    * `shards` > 1 splits the blobs by referenced-path hash into one Puffin
+    * per shard (bounding any single Puffin write on a very large wave);
+    * `sequenceOf` gives a referenced file's blob a sequence other than the
+    * snapshot's ([[rewritePositionDeletes]] keeps the replaced waves').
+    * Shared by every DV writer. */
+  private def writeDvManifest(location: String, snapshotId: Long,
+                              dvRows: Seq[(String, Array[Byte], Long, Long, Long)],
+                              shards: Int = 1,
+                              sequenceOf: Map[String, Long] = Map.empty): ManifestInfo = {
+    val entries = dvRows.groupBy(v => math.floorMod(v._1.hashCode, math.max(1, shards)))
+      .toSeq.sortBy(_._1).flatMap { case (_, vs) =>
+        val puffinFile = new File(metadataDir(location), f"dv-snap-$snapshotId%05d-${fresh()}.puffin")
+        val seqs = vs.map(v => sequenceOf.getOrElse(v._1, snapshotId))
+        val blobs = vs.zip(seqs).map { case ((path, blob, card, _, _), seq) =>
+          Puffin.BlobSpec("deletion-vector-v1", Seq.empty, snapshotId, seq,
+            blob, Map("referenced-data-file" -> path, "cardinality" -> card.toString))
+        }
+        val (puffinSize, _, metas) = Puffin.writeBlobs(puffinFile, blobs.toIndexedSeq,
+          Map("created-by" -> "graft"))
+        vs.zip(seqs).zip(metas).map { case (((path, _, card, lo, hi), seq), m) =>
+          manifestEntry(DataFileEntry(puffinFile.getPath, "", card, puffinSize, "", "",
+            content = 1, sequence = seq, referencedDataFile = Some(path),
+            contentOffset = m.offset, contentSize = m.length, entrySnapshotId = snapshotId),
+            1, Map("pos" -> lo.toString), Map("pos" -> hi.toString), format = "PUFFIN")
+        }
+      }
+    writeDeleteManifest(location, snapshotId, "dv", entries, dvRows.map(_._3).sum)
+  }
+
+  /** ONE committing snapshot from a row-level DELTA (the SQL
+    * UPDATE/MERGE/DELETE write path): a v3 deletion-vector wave over the
+    * deleted row coordinates plus the executor-written replacement/insert
+    * data files — the same "overwrite" history [[updateMorDv]] commits.
+    * Only files NAMED by committed write tasks enter the manifest; stray
+    * files in `dataDir` (aborted or zombie task attempts) are deleted
+    * here, which is what makes executor-direct parquet writing safe under
+    * task retries. `dvRows` paths must be the manifest-form paths the
+    * scan published as `_file` (they are recorded verbatim as
+    * referenced_data_file), and arrive ALREADY Roaring-serialized —
+    * (path, blob, cardinality, minPos, maxPos) — so the driver never holds
+    * raw victim positions (a 10⁹-row UPDATE would be ~8 GB of longs; the
+    * compressed blobs are the KB-grain metadata a real Iceberg committer
+    * also centralizes).
+    *
+    * The data-file work (stray cleanup by listing, footer stats for the
+    * NAMED committed files only) runs once, before the [[commit]]
+    * transaction; each attempt writes only the DV Puffin and the
+    * manifests. Two concurrent SQL writers therefore serialize instead of
+    * silently last-writer-winning. */
+  def commitDelta(spark: SparkSession, location: String,
+                  dvRows: Seq[(String, Array[Byte], Long, Long, Long)], dataDir: String,
+                  files: Seq[String], operation: String = "overwrite"): Long = {
+    require(dvRows.nonEmpty || files.nonEmpty, "delta commit with no changes")
+    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
+    val keep =
+      if (files.isEmpty) Seq.empty[DataFileEntry]
+      else {
+        deleteStrayFiles(dataDir, files.map(n).toSet)
+        val stats = collectFileStats(spark, dataDir, Some(files))
+        require(stats.nonEmpty, "no committed task wrote a surviving data file")
+        stats
+      }
+    commitSnapshot(location, operation, keep) { a =>
+      requireTable(a.base)
+      a.parentManifests ++
+        (if (keep.isEmpty) None else Some(writeManifestAvro(location, a.id, a.added, 0))) ++
+        (if (dvRows.isEmpty) None else Some(writeDvManifest(location, a.id, dvRows.sortBy(_._1))))
+    }.snapshotId
+  }
+
+  /** Positions-input convenience over [[commitDelta]]: serializes each
+    * file's sorted positions to a Roaring blob first (library callers with
+    * in-memory position lists — the SQL path arrives blob-grain already). */
+  def commitDeltaPositions(spark: SparkSession, location: String,
+                           deletes: Seq[(String, Seq[Long])], dataDir: String,
+                           files: Seq[String], operation: String = "overwrite"): Long =
+    commitDelta(spark, location,
+      deletes.map { case (path, ps0) =>
+        val ps = ps0.toArray.sorted
+        (path, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last)
+      }, dataDir, files, operation)
+
+  /** `ALTER TABLE ADD COLUMN` at the metadata layer: a METADATA-ONLY
+    * version bump appending a new schema era to the schemas array (spec
+    * §Schema Evolution) — no snapshot, no data IO. Pre-alter data files
+    * simply lack the field; every merge-schema read (and the SQL
+    * catalog's null-vector fill) returns NULL for them, the spec's
+    * add-column rule. */
+  def addSchemaColumn(location: String, column: String): Unit =
+    commit(location) { meta =>
+      val cur = requireTable(meta).schemas.lastOption.getOrElse(Seq.empty)
+      require(!cur.contains(column), s"column $column already exists")
+      // name-based schema (no field ids): re-adding a dropped name would
+      // resurrect the old files' values instead of null-filling like a
+      // fresh-field-id re-add — refuse, the honest failure
+      require(!meta.droppedColumns.contains(column),
+        s"column $column was dropped; name-based schemas cannot re-add it")
+      meta.copy(schemas = meta.schemas :+ (cur :+ column).sorted)
     }
-    val (puffinSize, _, metas) = Puffin.writeBlobs(puffinFile, blobs.toIndexedSeq,
-      Map("created-by" -> "graft"))
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val entries = victims.zip(metas).map { case ((path, _, card, lo, hi, seq), m) =>
-      val part = new GenericData.Record(partSchema)
-      part.put("p_month", "")
-      val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 1)
-      dfr.put("file_path", puffinFile.getPath)
-      dfr.put("file_format", "PUFFIN")
-      dfr.put("partition", part)
-      dfr.put("record_count", card)
-      dfr.put("file_size_in_bytes", puffinSize)
-      dfr.put("lower_bounds", Map("pos" -> lo.toString).asJava)
-      dfr.put("upper_bounds", Map("pos" -> hi.toString).asJava)
-      dfr.put("referenced_data_file", path)
-      dfr.put("content_offset", m.offset)
-      dfr.put("content_size_in_bytes", m.length)
-      val e = new GenericData.Record(ManifestEntrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", seq) // per-file max replaced sequence: scoping survives
-      e.put("data_file", dfr)
-      e: GenericRecord
+
+  /** `ALTER TABLE DROP COLUMN` (spec §Schema Evolution): a METADATA-ONLY
+    * version bump recording a TOMBSTONE — column → the head snapshot id at
+    * drop time. Current reads hide the column; a time-travel read at any
+    * snapshot ≤ droppedAt still serves it (the snapshot's schema era), and
+    * NO data file is touched — exactly the spec's drop semantics. A new
+    * schema era without the column is appended when the era list tracks
+    * it. */
+  def dropSchemaColumn(location: String, column: String): Unit =
+    commit(location) { meta =>
+      require(!requireTable(meta).droppedColumns.contains(column),
+        s"column $column already dropped")
+      val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
+      meta.copy(
+        schemas = if (cur.contains(column)) meta.schemas :+ cur.filterNot(_ == column)
+                  else meta.schemas,
+        droppedColumns = meta.droppedColumns + (column -> meta.snapshots.map(_.id).max),
+        renamedColumns = meta.renamedColumns - column,
+        widenedColumns = meta.widenedColumns - column)
     }
-    val manifestFile = new File(mdir, f"manifest-$snapshotId%05d-0.avro")
-    val manifestLen = writeAvro(ManifestEntrySchema, manifestFile, entries.toIndexedSeq)
-    val newInfo = ManifestInfo(manifestFile.getPath, manifestLen, snapshotId,
-      victims.length, victims.map(_._3).sum, "0000-00", "9999-99")
-    commitSnapshot(location, Some(prev), snapshotId,
-      keptManifests.map(_._1) :+ newInfo, "replace")
+
+  /** `ALTER TABLE ALTER COLUMN … TYPE` (spec §Schema Evolution, the legal
+    * type promotions: int→long, float→double, decimal precision widening
+    * at fixed scale): a METADATA-ONLY version bump recording
+    * column → widened Spark DDL type. NO data file is touched — files
+    * written before the promotion keep their narrow physical type and the
+    * reader upcasts per file ([[GraftVectorized]]-side resolution, the
+    * name-based twin of the spec's field-id type lookup); files written
+    * after carry the wide type natively. Promotion LEGALITY is validated
+    * by the caller against the current Spark schema (the catalog layer,
+    * which has the Catalyst types); this layer only refuses dropped
+    * columns and records the promotion. */
+  /** Pending-properties sidecar (`metadata/properties.pending.json`):
+    * `CREATE TABLE … TBLPROPERTIES` and pre-commit `ALTER TABLE SET`
+    * land here; the table's FIRST commit folds the sidecar into
+    * metadata.json's `properties` ([[uncommitted]]). One flat string map,
+    * json4s both ways. */
+  def readPendingProperties(location: String): Map[String, String] = {
+    val f = new File(location, "metadata/properties.pending.json")
+    if (!f.exists()) Map.empty
+    else JsonMethods.parse(Files.readString(f.toPath)) match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case _ => Map.empty
+    }
+  }
+
+  def writePendingProperties(location: String, props: Map[String, String]): Unit = {
+    val json = JObject(props.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })
+    Files.write(new File(metadataDir(location), "properties.pending.json").toPath,
+      JsonMethods.compact(json).getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** `ALTER TABLE SET/UNSET TBLPROPERTIES` on a COMMITTED table: a
+    * METADATA-ONLY version bump mutating the `properties` map (spec
+    * §Table Metadata). Properties are plain configuration — but
+    * `write.target-records-per-file` is READ BY the SQL insert path and
+    * drives the writer's file-split policy, so a property era is visible
+    * in the files census. */
+  def setTableProperties(location: String, set: Map[String, String],
+                         unset: Set[String] = Set.empty): Unit =
+    commit(location)(meta => requireTable(meta).copy(properties = meta.properties -- unset ++ set))
+
+  /** The writer's records-per-file target from the table's LIVE
+    * properties (committed metadata first, CREATE sidecar before the
+    * first commit) — what makes `write.target-records-per-file` a real
+    * control, not an annotation. */
+  def targetRecordsProp(location: String): Option[Long] =
+    readMetadataOpt(location).map(_.properties)
+      .getOrElse(readPendingProperties(location))
+      .get("write.target-records-per-file").map(_.trim.toLong)
+
+  def widenSchemaColumn(location: String, column: String, toTypeDdl: String): Unit =
+    commit(location) { meta =>
+      require(!requireTable(meta).droppedColumns.contains(column), s"column $column was dropped")
+      meta.copy(widenedColumns = meta.widenedColumns + (column -> toTypeDdl))
+    }
+
+  /** `ALTER TABLE RENAME COLUMN` (spec §Schema Evolution): metadata-only.
+    * The rename CHAIN (new name → every prior name, newest first) is what
+    * keeps old data live: a reader missing the current name in a file's
+    * physical schema walks the chain and reads whichever ancestor the file
+    * carries — the name-based stand-in for the spec's field-id constancy.
+    * Simplification (documented): reads at ANY snapshot see the current
+    * name (real Iceberg time travel would show the era's name). */
+  def renameSchemaColumn(location: String, from: String, to: String): Unit =
+    commit(location) { meta =>
+      require(!requireTable(meta).droppedColumns.contains(to),
+        s"column $to was dropped; name-based schemas cannot reuse the name")
+      require(!meta.renamedColumns.contains(to), s"column $to already exists (renamed)")
+      require(!meta.droppedColumns.contains(from), s"column $from was dropped")
+      val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
+      meta.copy(
+        schemas = if (cur.contains(from)) meta.schemas :+ (cur.filterNot(_ == from) :+ to).sorted
+                  else meta.schemas,
+        renamedColumns = meta.renamedColumns - from +
+          (to -> (from +: meta.renamedColumns.getOrElse(from, Seq.empty))),
+        // a widened column's promotion FOLLOWS the rename (the type rides
+        // with the field, spec field-id semantics)
+        widenedColumns = meta.widenedColumns.get(from) match {
+          case Some(t) => meta.widenedColumns - from + (to -> t)
+          case None => meta.widenedColumns
+        })
+    }
+
+  /** Streaming-ingest epoch commit (the Iceberg streaming sink contract):
+    * ONE append snapshot per epoch whose summary records
+    * (streaming-query, epoch-id), and EXACTLY-ONCE on replay — a restarted
+    * query re-commits its last epoch, which must be a no-op. The dedup
+    * check reads the snapshot summaries (the same place the real Spark
+    * sink stores its batch id) INSIDE the commit's edit, so a racing
+    * duplicate commit of the same epoch loses the CAS, re-reads, sees the
+    * epoch committed, and returns without a second snapshot. */
+  def commitStreamAppend(spark: SparkSession, location: String, dataDir: String,
+                         files: Seq[String], queryId: String, epochId: Long): Long = {
+    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
+    def committedAt(meta: TableMetadata): Option[Long] =
+      meta.snapshots.find(s =>
+        s.summary.get("streaming-query").contains(queryId) &&
+          s.summary.get("epoch-id").exists(_.toLong >= epochId)).map(_.id)
+    def dropStaged(): Unit =
+      if (new File(dataDir).isDirectory) deleteStrayFiles(dataDir, Set.empty)
+    val current = readMetadataOpt(location)
+    val replayed = current.flatMap(committedAt)
+    if (files.isEmpty || replayed.isDefined) { // empty or replayed epoch: a no-op
+      dropStaged()
+      return replayed.orElse(current.map(_.currentSnapshotId)).getOrElse(0L)
+    }
+    deleteStrayFiles(dataDir, files.map(n).toSet)
+    val keep = collectFileStats(spark, dataDir, Some(files))
+    require(keep.nonEmpty, "no committed task wrote a surviving data file")
+    val append = addSnapshot(location, "append", keep,
+        summary = Map("streaming-query" -> queryId, "epoch-id" -> epochId.toString)) { a =>
+      a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
+    }
+    var published = false
+    val meta = commit(location) { base =>
+      published = committedAt(base).isEmpty
+      if (published) append(base) else base
+    }.meta
+    if (!published) dropStaged() // a racing duplicate committed the epoch first
+    committedAt(meta).get
   }
 
   /** Row-level MOR UPDATE — the update half of the reference's column-file
@@ -2349,346 +2380,10 @@ object IcebergTable {
     * shape); replacement files write through [[writeDataSnapshot]]'s
     * month-partitioned distributed writer; the driver handles only
     * KB-grain compressed blobs and manifest rows. */
-  /** Write one DV wave — the Puffin file carrying per-referenced-file
-    * Roaring blobs plus its delete manifest — from already-serialized
-    * rows `(referenced path, blob bytes, cardinality, min pos, max pos)`.
-    * Shared by [[updateMorDv]] and the SQL delta committer
-    * ([[commitDelta]]); `fileTag` uniquifies names when one snapshot
-    * writes several waves. */
-  private def writeDvManifest(location: String, snapshotId: Long,
-                              dvRows: Seq[(String, Array[Byte], Long, Long, Long)],
-                              fileTag: String = ""): ManifestInfo = {
-    val mdir = metadataDir(location)
-    val puffinFile = new File(mdir, f"dv-snap-$snapshotId%05d$fileTag.puffin")
-    val blobs = dvRows.map { case (path, blob, card, _, _) =>
-      Puffin.BlobSpec("deletion-vector-v1", Seq.empty, snapshotId, snapshotId,
-        blob, Map("referenced-data-file" -> path, "cardinality" -> card.toString))
-    }
-    val (puffinSize, _, metas) = Puffin.writeBlobs(puffinFile, blobs.toIndexedSeq,
-      Map("created-by" -> "graft"))
-    val dataFileSchema = ManifestEntrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val dvEntries = dvRows.zip(metas).map { case ((path, _, card, lo, hi), m) =>
-      val part = new GenericData.Record(partSchema)
-      part.put("p_month", "")
-      val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 1)
-      dfr.put("file_path", puffinFile.getPath)
-      dfr.put("file_format", "PUFFIN")
-      dfr.put("partition", part)
-      dfr.put("record_count", card)
-      dfr.put("file_size_in_bytes", puffinSize)
-      dfr.put("lower_bounds", Map("pos" -> lo.toString).asJava)
-      dfr.put("upper_bounds", Map("pos" -> hi.toString).asJava)
-      dfr.put("referenced_data_file", path)
-      dfr.put("content_offset", m.offset)
-      dfr.put("content_size_in_bytes", m.length)
-      val e = new GenericData.Record(ManifestEntrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", snapshotId)
-      e.put("data_file", dfr)
-      e: GenericRecord
-    }
-    val dvManifestFile = new File(mdir, f"manifest-$snapshotId%05d-0-dv$fileTag.avro")
-    val dvLen = writeAvro(ManifestEntrySchema, dvManifestFile, dvEntries.toIndexedSeq)
-    ManifestInfo(dvManifestFile.getPath, dvLen, snapshotId,
-      dvRows.length, dvRows.map(_._3).sum, "0000-00", "9999-99")
-  }
-
-  /** ONE committing snapshot from a row-level DELTA (the SQL
-    * UPDATE/MERGE/DELETE write path): a v3 deletion-vector wave over the
-    * deleted row coordinates plus the executor-written replacement/insert
-    * data files — the same "overwrite" history [[updateMorDv]] commits.
-    * Only files NAMED by committed write tasks enter the manifest; stray
-    * files in `dataDir` (aborted or zombie task attempts) are deleted
-    * here, which is what makes executor-direct parquet writing safe under
-    * task retries. `deletes` paths must be the manifest-form paths the
-    * scan published as `_file` (they are recorded verbatim as
-    * referenced_data_file). */
-  /** Commit one delta (MOR) snapshot: per-file deletion-vector blobs plus
-    * replacement data files, as ONE "overwrite" snapshot. `dvRows` arrive
-    * ALREADY Roaring-serialized — (path, blob, cardinality, minPos,
-    * maxPos) — so the driver never holds raw victim positions (a 10⁹-row
-    * UPDATE would be ~8 GB of longs; the compressed blobs are the KB-grain
-    * metadata a real Iceberg committer also centralizes).
-    *
-    * OPTIMISTIC like [[appendOcc]]: the data-file work (stray cleanup by
-    * listing, footer stats for the NAMED committed files only) runs once
-    * outside the retry loop, then each attempt re-reads the table state,
-    * re-derives the snapshot id, rebuilds driver-side metadata
-    * (token-suffixed so racing writers never clobber), and CASes the next
-    * version; a loser deletes its metadata files and retries. Two
-    * concurrent SQL writers therefore serialize instead of silently
-    * last-writer-winning. */
-  def commitDelta(spark: SparkSession, location: String,
-                  dvRows: Seq[(String, Array[Byte], Long, Long, Long)], dataDir: String,
-                  files: Seq[String], operation: String = "overwrite",
-                  maxRetries: Int = 50): Long = {
-    require(dvRows.nonEmpty || files.nonEmpty, "delta commit with no changes")
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
-    val keep =
-      if (files.isEmpty) Seq.empty[DataFileEntry]
-      else {
-        deleteStrayFiles(dataDir, files.map(n).toSet)
-        val stats = collectFileStats(spark, dataDir, Some(files))
-        require(stats.nonEmpty, "no committed task wrote a surviving data file")
-        stats
-      }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val (prev, version) = readMetadataWithVersion(location)
-      val snapshotId = prev.snapshots.map(_.id).max + 1L
-      val prevManifests = readManifestList(currentSnapshot(prev).manifestList)
-      val dvInfo =
-        if (dvRows.isEmpty) None
-        else Some(writeDvManifest(location, snapshotId, dvRows.sortBy(_._1), s"-$token"))
-      val dataInfo =
-        if (keep.isEmpty) None
-        else Some(writeManifestAvro(location, snapshotId, snapshotId,
-          assignRowIds(location, keep, Some(prev.nextRowId)), 0, s"-$token"))
-      try {
-        return commitSnapshot(location, Some(prev), snapshotId,
-          prevManifests ++ dataInfo ++ dvInfo, operation,
-          atVersion = Some(version + 1))
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          dvInfo.foreach { i =>
-            new File(i.path).delete()
-            new File(metadataDir(location), f"dv-snap-$snapshotId%05d-$token.puffin").delete()
-          }
-          dataInfo.foreach(i => new File(i.path).delete())
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException(s"commitDelta: gave up after $maxRetries conflicts")
-  }
-
-  /** Positions-input convenience over [[commitDelta]]: serializes each
-    * file's sorted positions to a Roaring blob first (library callers with
-    * in-memory position lists — the SQL path arrives blob-grain already). */
-  def commitDeltaPositions(spark: SparkSession, location: String,
-                           deletes: Seq[(String, Seq[Long])], dataDir: String,
-                           files: Seq[String], operation: String = "overwrite"): Long =
-    commitDelta(spark, location,
-      deletes.map { case (path, ps0) =>
-        val ps = ps0.toArray.sorted
-        (path, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last)
-      }, dataDir, files, operation)
-
-  /** `ALTER TABLE ADD COLUMN` at the metadata layer: a METADATA-ONLY
-    * version bump appending a new schema era to the schemas array (spec
-    * §Schema Evolution) — no snapshot, no data IO. Pre-alter data files
-    * simply lack the field; every merge-schema read (and the SQL
-    * catalog's null-vector fill) returns NULL for them, the spec's
-    * add-column rule. */
-  def addSchemaColumn(location: String, column: String): Unit = {
-    val (meta, _) = readMetadataWithVersion(location)
-    val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
-    require(!cur.contains(column), s"column $column already exists")
-    // name-based schema (no field ids): re-adding a dropped name would
-    // resurrect the old files' values instead of null-filling like a
-    // fresh-field-id re-add — refuse, the honest failure
-    require(!meta.droppedColumns.contains(column),
-      s"column $column was dropped; name-based schemas cannot re-add it")
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, meta.schemas :+ (cur :+ column).sorted,
-      statistics = meta.statistics, nextRowId = meta.nextRowId)
-  }
-
-  /** `ALTER TABLE DROP COLUMN` (spec §Schema Evolution): a METADATA-ONLY
-    * version bump recording a TOMBSTONE — column → the head snapshot id at
-    * drop time. Current reads hide the column; a time-travel read at any
-    * snapshot ≤ droppedAt still serves it (the snapshot's schema era), and
-    * NO data file is touched — exactly the spec's drop semantics. A new
-    * schema era without the column is appended when the era list tracks
-    * it. */
-  def dropSchemaColumn(location: String, column: String): Unit = {
-    val (meta, _) = readMetadataWithVersion(location)
-    require(!meta.droppedColumns.contains(column), s"column $column already dropped")
-    val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
-    val schemas =
-      if (cur.contains(column)) meta.schemas :+ cur.filterNot(_ == column)
-      else meta.schemas
-    val droppedAt = meta.snapshots.map(_.id).max
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId,
-      droppedColumns = Some(meta.droppedColumns + (column -> droppedAt)),
-      renamedColumns = Some(meta.renamedColumns - column),
-      widenedColumns = Some(meta.widenedColumns - column))
-  }
-
-  /** `ALTER TABLE ALTER COLUMN … TYPE` (spec §Schema Evolution, the legal
-    * type promotions: int→long, float→double, decimal precision widening
-    * at fixed scale): a METADATA-ONLY version bump recording
-    * column → widened Spark DDL type. NO data file is touched — files
-    * written before the promotion keep their narrow physical type and the
-    * reader upcasts per file ([[GraftVectorized]]-side resolution, the
-    * name-based twin of the spec's field-id type lookup); files written
-    * after carry the wide type natively. Promotion LEGALITY is validated
-    * by the caller against the current Spark schema (the catalog layer,
-    * which has the Catalyst types); this layer only refuses dropped
-    * columns and records the promotion. */
-  /** Pending-properties sidecar (`metadata/properties.pending.json`):
-    * `CREATE TABLE … TBLPROPERTIES` and pre-commit `ALTER TABLE SET`
-    * land here; the table's FIRST snapshot commit folds the sidecar into
-    * metadata.json's `properties` (the carry default in
-    * [[writeMetadataJson]]). One flat string map, json4s round-trip. */
-  def readPendingProperties(location: String): Map[String, String] = {
-    val f = new File(location, "metadata/properties.pending.json")
-    if (!f.exists()) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.parse(Files.readString(f.toPath)) match {
-        case JObject(fields) => fields.collect {
-          case (k, JString(v)) => k -> v
-        }.toMap
-        case _ => Map.empty
-      }
-    }
-  }
-
-  def writePendingProperties(location: String, props: Map[String, String]): Unit = {
-    val mdir = metadataDir(location); mdir.mkdirs()
-    val json = props.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    Files.write(new File(mdir, "properties.pending.json").toPath,
-      json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** `ALTER TABLE SET/UNSET TBLPROPERTIES` on a COMMITTED table: a
-    * METADATA-ONLY version bump mutating the `properties` map (spec
-    * §Table Metadata). Properties are plain configuration — but
-    * `write.target-records-per-file` is READ BY the SQL insert path and
-    * drives the writer's file-split policy, so a property era is visible
-    * in the files census. */
-  def setTableProperties(location: String, set: Map[String, String],
-                         unset: Set[String] = Set.empty): Unit = {
-    val (meta, _) = readMetadataWithVersion(location)
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId,
-      droppedColumns = Some(meta.droppedColumns),
-      renamedColumns = Some(meta.renamedColumns),
-      widenedColumns = Some(meta.widenedColumns),
-      properties = Some(meta.properties -- unset ++ set))
-  }
-
-  /** The writer's records-per-file target from the table's LIVE
-    * properties (committed metadata first, CREATE sidecar before the
-    * first commit) — what makes `write.target-records-per-file` a real
-    * control, not an annotation. */
-  def targetRecordsProp(location: String): Option[Long] =
-    readMetadataOpt(location).map(_.properties)
-      .getOrElse(readPendingProperties(location))
-      .get("write.target-records-per-file").map(_.trim.toLong)
-
-  def widenSchemaColumn(location: String, column: String, toTypeDdl: String): Unit = {
-    val (meta, _) = readMetadataWithVersion(location)
-    require(!meta.droppedColumns.contains(column), s"column $column was dropped")
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, meta.schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId,
-      droppedColumns = Some(meta.droppedColumns),
-      renamedColumns = Some(meta.renamedColumns),
-      widenedColumns = Some(meta.widenedColumns + (column -> toTypeDdl)))
-  }
-
-  /** `ALTER TABLE RENAME COLUMN` (spec §Schema Evolution): metadata-only.
-    * The rename CHAIN (new name → every prior name, newest first) is what
-    * keeps old data live: a reader missing the current name in a file's
-    * physical schema walks the chain and reads whichever ancestor the file
-    * carries — the name-based stand-in for the spec's field-id constancy.
-    * Simplification (documented): reads at ANY snapshot see the current
-    * name (real Iceberg time travel would show the era's name). */
-  def renameSchemaColumn(location: String, from: String, to: String): Unit = {
-    val (meta, _) = readMetadataWithVersion(location)
-    require(!meta.droppedColumns.contains(to),
-      s"column $to was dropped; name-based schemas cannot reuse the name")
-    require(!meta.renamedColumns.contains(to), s"column $to already exists (renamed)")
-    require(!meta.droppedColumns.contains(from), s"column $from was dropped")
-    val chain = from +: meta.renamedColumns.getOrElse(from, Seq.empty)
-    val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
-    val schemas =
-      if (cur.contains(from)) meta.schemas :+ (cur.filterNot(_ == from) :+ to).sorted
-      else meta.schemas
-    writeMetadataJson(location, meta.tableUuid, meta.snapshots,
-      meta.currentSnapshotId, meta.refs, schemas,
-      statistics = meta.statistics, nextRowId = meta.nextRowId,
-      droppedColumns = Some(meta.droppedColumns),
-      renamedColumns = Some(meta.renamedColumns - from + (to -> chain)),
-      // a widened column's promotion FOLLOWS the rename (the type rides
-      // with the field, spec field-id semantics)
-      widenedColumns = Some(meta.widenedColumns.get(from) match {
-        case Some(t) => meta.widenedColumns - from + (to -> t)
-        case None => meta.widenedColumns
-      }))
-  }
-
-  /** Streaming-ingest epoch commit (the Iceberg streaming sink contract):
-    * ONE append snapshot per epoch whose summary records
-    * (streaming-query, epoch-id), and EXACTLY-ONCE on replay — a restarted
-    * query re-commits its last epoch, which must be a no-op. The dedup
-    * check reads the snapshot summaries (the same place the real Spark
-    * sink stores its batch id) INSIDE the OCC loop, so a racing duplicate
-    * commit of the same epoch loses the CAS, re-reads, sees the epoch
-    * committed, and returns without a second snapshot. */
-  def commitStreamAppend(spark: SparkSession, location: String, dataDir: String,
-                         files: Seq[String], queryId: String, epochId: Long,
-                         maxRetries: Int = 50): Long = {
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
-    def committedAt(meta: Option[TableMetadata]): Option[Long] =
-      meta.flatMap(_.snapshots.find(s =>
-        s.summary.get("streaming-query").contains(queryId) &&
-          s.summary.get("epoch-id").exists(_.toLong >= epochId)).map(_.id))
-    def dropStaged(): Unit =
-      if (new File(dataDir).isDirectory) deleteStrayFiles(dataDir, Set.empty)
-    if (files.isEmpty) { // empty epoch: nothing to commit, nothing to replay
-      dropStaged()
-      return readMetadataOpt(location).map(_.currentSnapshotId).getOrElse(0L)
-    }
-    committedAt(readMetadataOpt(location)) match {
-      case Some(id) => dropStaged(); return id // replayed epoch: no-op
-      case None => ()
-    }
-    deleteStrayFiles(dataDir, files.map(n).toSet)
-    val keep = collectFileStats(spark, dataDir, Some(files))
-    require(keep.nonEmpty, "no committed task wrote a surviving data file")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val (prev, version) = readMetadataWithVersionOpt(location)
-      committedAt(prev) match {
-        case Some(id) => dropStaged(); return id
-        case None => ()
-      }
-      val snapshotId = prev.map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-      val prevManifests = prev.map(m => readManifestList(currentSnapshot(m).manifestList))
-        .getOrElse(Seq.empty)
-      val newInfo = writeManifestAvro(location, snapshotId, snapshotId,
-        assignRowIds(location, keep, prev.map(_.nextRowId)), 0, s"-$token")
-      try {
-        return commitSnapshot(location, prev, snapshotId, prevManifests :+ newInfo,
-          "append", atVersion = Some(version + 1),
-          summaryExtra = Map("streaming-query" -> queryId, "epoch-id" -> epochId.toString))
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          new File(newInfo.path).delete()
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException(s"commitStreamAppend: gave up after $maxRetries conflicts")
-  }
-
   def updateMorDv(spark: SparkSession, location: String,
                   predicate: org.apache.spark.sql.Column,
                   assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    val prev = readMetadata(location)
-    val snapshotId = prev.snapshots.map(_.id).max + 1L
-    val manifests = readManifestList(currentSnapshot(prev).manifestList)
+    val manifests = readManifestList(currentSnapshot(readMetadata(location)).manifestList)
     val all = readManifestsParallel(manifests.map(_.path)).flatten
     require(all.forall(e => e.content == 0 || (e.content == 1 && e.referencedDataFile.isDefined)),
       "updateMorDv supports v3 DV tables only (data files + deletion vectors)")
@@ -2742,14 +2437,15 @@ object IcebergTable {
         .collect()
         .sortBy(_._1)
       require(dvRows.nonEmpty, "update matched zero live rows")
-      val dvInfo = writeDvManifest(location, snapshotId, dvRows.toIndexedSeq)
+
       // (b) replacement data file(s): updated values + materialized _row_id
       var upd: DataFrame = victims
       assignments.foreach { case (c, e) => upd = upd.withColumn(c, e) }
-      val newInfo = writeDataSnapshot(spark, upd.drop("__file", "__pos"),
-        location, snapshotId)
-      commitSnapshot(location, Some(prev), snapshotId,
-        manifests :+ newInfo :+ dvInfo, "overwrite")
+      val files = writeDataSnapshot(spark, upd.drop("__file", "__pos"), location)
+      commitSnapshot(location, "overwrite", files) { a =>
+        a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0) :+
+          writeDvManifest(location, a.id, dvRows.toIndexedSeq)
+      }.snapshotId
     } finally victims.unpersist()
   }
 

@@ -873,7 +873,7 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
               org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
         override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
           // staging-dir naming hint only — the committed snapshot id is
-          // re-derived inside commitOverwriteMonths' OCC retry loop
+          // re-derived inside commitOverwriteMonths' commit transaction
           val dirHint = IcebergTable.readMetadataOpt(location)
             .map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
           new GraftOverwriteBatchWrite(location, writeSchema, dirHint, partCol)

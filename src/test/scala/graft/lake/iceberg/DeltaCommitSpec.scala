@@ -427,4 +427,159 @@ class DeltaCommitSpec extends SparkSpec {
     val actual = spark.table(s"$cat.lake.lineitem_restart").count()
     assert(actual === expected)
   }
+
+  // ---- the commit transaction: no acknowledged commit is lost, and no
+  // accepted value makes the metadata unreadable ----
+
+  /** A warehouse with namespace `lake` behind a fresh GraftCatalog name. */
+  private def sqlWarehouse(tag: String): (String, String) = {
+    val w = Files.createTempDirectory(s"graft_${tag}_").toString
+    IcebergCatalog.createNamespace(w, "lake")
+    val cat = s"graft_${tag}_" + (w.hashCode.toLong & 0x7FFFFFFFL)
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
+    (cat, w)
+  }
+
+  /** Run `body` until it is acknowledged: a lost version race may surface
+    * as `FileAlreadyExistsException`, anywhere in the cause chain. */
+  private def untilAcknowledged(body: => Unit): Unit = {
+    def lostRace(t: Throwable): Boolean = t != null &&
+      (t.isInstanceOf[java.nio.file.FileAlreadyExistsException] || lostRace(t.getCause))
+    var done = false
+    while (!done) try { body; done = true } catch { case e: Exception if lostRace(e) => () }
+  }
+
+  private def versionChain(loc: String): Seq[Long] =
+    new File(loc, "metadata").listFiles().map(_.getName)
+      .collect { case n if n.matches("v[0-9]+\\.metadata\\.json") =>
+        n.stripPrefix("v").stripSuffix(".metadata.json").toLong }
+      .sorted.toSeq
+
+  private def inThreads(n: Int)(body: Int => Unit): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until n).map(i => new Thread(() =>
+      try body(i) catch { case t: Throwable => failures.add(t) }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(failures.isEmpty, s"a racing writer died: ${failures.peek()}")
+  }
+
+  test("racing property commits lose no acknowledged property; the version chain has no gaps") {
+    val loc = Files.createTempDirectory("graft_props_race_").toString
+    IcebergTable.append(spark, lineitem.limit(50), loc)
+    inThreads(3) { t =>
+      (0 until 50).foreach(i =>
+        untilAcknowledged(IcebergTable.setTableProperties(loc, Map(s"t$t.k$i" -> s"$i"))))
+    }
+    val props = IcebergTable.readMetadata(loc).properties
+    val missing = for (t <- 0 until 3; i <- 0 until 50 if !props.contains(s"t$t.k$i"))
+      yield s"t$t.k$i"
+    assert(missing.isEmpty, s"${missing.size} acknowledged properties lost: ${missing.take(5)}")
+    val chain = versionChain(loc)
+    assert(chain === (1L to chain.last), "metadata versions must be gap-free")
+    assert(chain.last === 151L, "one version per acknowledged commit")
+  }
+
+  test("SQL INSERT racing property commits keeps every inserted row and every property") {
+    val (cat, w) = sqlWarehouse("ins_race")
+    val loc = IcebergCatalog.createTable(w, "lake", "li")
+    val base = lineitem.filter(pmod(col("l_orderkey"), lit(5L)) === 0L)
+    IcebergTable.append(spark, base, loc)
+    (1 to 4).foreach(k => lineitem.filter(pmod(col("l_orderkey"), lit(5L)) === k.toLong)
+      .createOrReplaceTempView(s"graft_ins_race_$k"))
+    val inserting = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val acknowledged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    inThreads(3) {
+      case 0 =>
+        try (1 to 4).foreach(k => untilAcknowledged(
+          spark.sql(s"INSERT INTO $cat.lake.li SELECT * FROM graft_ins_race_$k")))
+        finally inserting.set(false)
+      case t =>
+        var i = 0
+        while (inserting.get() || i < 20) {
+          untilAcknowledged(IcebergTable.setTableProperties(loc, Map(s"p$t.$i" -> "v")))
+          acknowledged.add(s"p$t.$i")
+          i += 1
+          Thread.sleep(10)
+        }
+    }
+    assert(spark.sql(s"SELECT count(*) FROM $cat.lake.li").head().getLong(0) ===
+      lineitem.count(), "every inserted row must survive the property commits")
+    import scala.jdk.CollectionConverters._
+    val props = IcebergTable.readMetadata(loc).properties
+    val lost = acknowledged.asScala.filterNot(props.contains)
+    assert(lost.size === 0, s"acknowledged properties lost, e.g. ${lost.take(5)}")
+    assert(IcebergTable.readMetadata(loc).snapshots.size === 5)
+  }
+
+  /** Property values no hand-built JSON survives. */
+  private val awkward = Seq("say \"hi\"", "back\\slash \\\"", "two\nlines\ttab",
+    "caf\u00e9 \u2603 \u65e5\u672c", "{\"json\":[1,2]}")
+
+  test("quoted, escaped, multi-line and non-ASCII values round-trip every metadata path") {
+    val (cat, w) = sqlWarehouse("quoting")
+    def sqlString(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'")
+      .replace("\n", "\\n").replace("\t", "\\t") + "'"
+    val want = awkward.zipWithIndex.map { case (v, i) => s"graft.q$i" -> v }.toMap
+    val clause = want.toSeq.map { case (k, v) => s"'$k' = ${sqlString(v)}" }.mkString(", ")
+    // CREATE TABLE … TBLPROPERTIES: the pending sidecar, then the first commit
+    spark.sql(s"CREATE TABLE $cat.lake.c (l_orderkey BIGINT, l_shipdate TIMESTAMP) " +
+      s"TBLPROPERTIES ($clause)")
+    val cloc = IcebergCatalog.tableLocation(w, "lake", "c")
+    assert(IcebergTable.readPendingProperties(cloc) === want)
+    lineitem.createOrReplaceTempView("graft_quoting_src")
+    spark.sql(s"INSERT INTO $cat.lake.c SELECT l_orderkey, l_shipdate FROM graft_quoting_src")
+    assert(IcebergTable.readMetadata(cloc).properties === want)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.lake.c").head().getLong(0) > 0)
+    // SET TBLPROPERTIES on a committed table
+    val loc = IcebergCatalog.createTable(w, "lake", "s")
+    IcebergTable.append(spark, lineitem, loc)
+    spark.sql(s"ALTER TABLE $cat.lake.s SET TBLPROPERTIES ($clause)")
+    assert(IcebergTable.readMetadata(loc).properties === want)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.lake.s").head().getLong(0) === lineitem.count())
+    spark.sql(s"ALTER TABLE $cat.lake.s UNSET TBLPROPERTIES ('graft.q0')")
+    assert(IcebergTable.readMetadata(loc).properties === want - "graft.q0")
+    // a branch name lands in the ref map and the snapshot summary
+    val branch = awkward.mkString("|")
+    IcebergTable.setRef(loc, branch, 1L, "branch")
+    val id = IcebergTable.appendToBranch(spark, lineitem.limit(10), loc, branch)
+    val meta = IcebergTable.readMetadata(loc)
+    assert(meta.refs(branch).snapshotId === id)
+    assert(meta.snapshots.find(_.id == id).get.summary("branch") === branch)
+    IcebergTable.append(spark, lineitem.limit(10), loc) // the next commit reads it back
+    assert(IcebergTable.readMetadata(loc).refs(branch).snapshotId === id)
+  }
+
+  test("the metadata serializer inverts the parser on every version of an evolved table") {
+    val loc = Files.createTempDirectory("graft_serde_").toString
+    IcebergTable.append(spark, lineitem.filter(col("l_shipdate") < lit("1997-01-01")
+      .cast("timestamp")), loc)
+    IcebergTable.append(spark, lineitem.filter(col("l_shipdate") >= lit("1997-01-01")
+      .cast("timestamp")), loc, weekly = true)
+    IcebergTable.setRef(loc, "pin", 1L, "tag")
+    IcebergTable.setRef(loc, "dev", 2L, "branch")
+    IcebergTable.appendToBranch(spark, lineitem.limit(20), loc, "dev")
+    IcebergTable.computeTableStats(spark, loc, Seq("l_orderkey"), 16)
+    IcebergTable.appendEqualityDeletes(spark, lineitem.select("l_orderkey").limit(5), loc)
+    IcebergTable.dropSchemaColumn(loc, "l_comment")
+    IcebergTable.renameSchemaColumn(loc, "l_quantity", "qty")
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
+    IcebergTable.setTableProperties(loc,
+      awkward.zipWithIndex.map { case (v, i) => s"k$i" -> v }.toMap)
+    import org.json4s.jackson.JsonMethods
+    versionChain(loc).foreach { v =>
+      val text = Files.readString(new File(loc, s"metadata/v$v.metadata.json").toPath)
+      val m = IcebergTable.parseMetadata(JsonMethods.parse(text))
+      val json = IcebergTable.metadataJson(m)
+      assert(IcebergTable.parseMetadata(json) === m, s"v$v does not round-trip")
+      assert(JsonMethods.compact(json) === text, s"v$v is not what the serializer writes")
+    }
+    val last = IcebergTable.readMetadata(loc)
+    assert(last.snapshots.size === 4 && last.refs.keySet === Set("main", "pin", "dev"))
+    assert(last.statistics.size === 1 && last.partitionSpecIds === Set(0, 1))
+    assert(last.droppedColumns.keySet === Set("l_comment") &&
+      last.renamedColumns === Map("qty" -> Seq("l_quantity")) &&
+      last.widenedColumns === Map("l_linenumber" -> "BIGINT"))
+    assert(last.properties.values.toSet === awkward.toSet)
+  }
 }
