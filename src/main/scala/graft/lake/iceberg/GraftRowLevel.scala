@@ -48,9 +48,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * compressed bitmaps; single-task files pass through untouched) and the
   * commit is OPTIMISTIC — [[IcebergTable.commitDelta]] runs as one
   * [[IcebergTable.commit]] transaction, which re-derives the snapshot id
-  * against the version it read and retries on a lost version CAS, so two
-  * concurrent SQL writers serialize instead of silently
-  * last-writer-winning. Task retries are safe: only files named in COMMIT
+  * against the version it read and retries on a lost version CAS. Each
+  * statement stages its files in its own directory
+  * ([[IcebergTable.newDataDir]]), so two concurrent SQL writers serialize
+  * instead of silently last-writer-winning or deleting each other's
+  * files. Task retries are safe: only files named in COMMIT
   * messages enter the manifest, stray files from aborted attempts are
   * deleted at commit by directory listing (never opened — a truncated
   * kill-leftover cannot fail the commit). */
@@ -131,15 +133,11 @@ private[iceberg] class GraftDeltaWrite(location: String, schema: StructType,
   override def requiredOrdering(): Array[SortOrder] =
     sortCols.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
 
-  override def toBatch: DeltaBatchWrite = {
-    // the data dir name is only a staging HINT fixed at write-build time
-    // (manifests record full file paths, so the dir name never has to
-    // match the committed snapshot id); the ACTUAL snapshot id is
-    // re-derived inside commitDelta's commit transaction.
-    val dirHint = IcebergTable.readMetadata(location)
-      .snapshots.map(_.id).max + 1L
-    new GraftDeltaBatchWrite(location, schema, dirHint, partCol)
-  }
+  // a statement-unique staging dir: manifests record full file paths, so
+  // the dir name never has to match the committed snapshot id, which is
+  // derived inside commitDelta's commit transaction
+  override def toBatch: DeltaBatchWrite =
+    new GraftDeltaBatchWrite(location, schema, IcebergTable.newDataDir(location), partCol)
 }
 
 /** One task's outcome: per-file Roaring-serialized DV blobs with their
@@ -151,10 +149,8 @@ private[iceberg] case class GraftDeltaCommitMessage(
     files: Array[String]) extends WriterCommitMessage
 
 private[iceberg] class GraftDeltaBatchWrite(location: String, schema: StructType,
-                                            dirHint: Long, partCol: Option[String])
+                                            dataDir: String, partCol: Option[String])
     extends DeltaBatchWrite {
-
-  private val dataDir = s"$location/data/snap-$dirHint"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new GraftDeltaWriterFactory(dataDir, schema, partCol)
@@ -206,11 +202,9 @@ private[iceberg] class GraftDeltaWriterFactory(dataDir: String, schema: StructTy
   * exactly the months that received data
   * ([[IcebergTable.commitOverwriteMonths]]). */
 private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: StructType,
-                                                dirHint: Long,
+                                                dataDir: String,
                                                 partCol: Option[String])
     extends BatchWrite {
-
-  private val dataDir = s"$location/data/snap-$dirHint"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftDeltaWriterFactory(dataDir, schema, partCol)
@@ -218,8 +212,8 @@ private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: Struct
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect { case m: GraftDeltaCommitMessage => m }
       .flatMap(_.files).toSeq
-    // snapshot id re-derived inside the committer's commit transaction —
-    // dataDir is only the staging hint (see GraftDeltaWrite.toBatch)
+    // snapshot id derived inside the committer's commit transaction —
+    // dataDir is only the statement's staging dir (see GraftDeltaWrite.toBatch)
     IcebergTable.commitOverwriteMonths(org.apache.spark.sql.SparkSession.active,
       location, dataDir, files)
   }

@@ -1359,7 +1359,7 @@ object IcebergOps {
     val onDiskAvro = walk(mdir, ".avro")
     val onDiskJson = walk(mdir, ".metadata.json")
     // avro files classify by the layout's NAMING convention (manifest
-    // lists are metadata/snap-<id>.avro, manifests metadata/manifest-*),
+    // lists are metadata/snap-*.avro, manifests metadata/manifest-*),
     // not by reachable-set membership — membership-based classing would
     // misfile an UNREFERENCED manifest list (expired snapshot, crashed
     // commit attempt) as a '2_manifest' orphan and make '3_manifest_list'

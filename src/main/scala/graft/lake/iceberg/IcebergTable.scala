@@ -30,20 +30,24 @@ import org.json4s.jackson.JsonMethods
   *    (Iceberg spec §"Table Metadata"; HadoopTables version-hint protocol),
   *    written by one json4s serializer ([[metadataJson]]) inside one
   *    commit transaction ([[commit]]) that every table change runs;
-  *  - `metadata/snap-<id>.avro` — the manifest LIST: one `manifest_file`
+  *  - `metadata/snap-<id>-<tag>.avro` — the manifest LIST: one `manifest_file`
   *    record per manifest with added-snapshot, counts, and per-partition
   *    field summaries (lower/upper bounds) that let a reader prune WHOLE
   *    manifests before opening them (spec §"Manifest Lists");
-  *  - `metadata/manifest-<id>-<n>.avro` — manifests: `manifest_entry`
+  *  - `metadata/manifest-<id>-[<role>-]<tag>.avro` — manifests: `manifest_entry`
   *    records (status, snapshot-id, sequence-number) wrapping `data_file`
   *    structs (content, file_path, file_format, partition tuple,
   *    record_count, file_size_in_bytes, lower/upper column bounds)
   *    (spec §"Manifests");
-  *  - `data/snap-<id>/p_month=…/part-….parquet` — data files written by Spark's
-  *    parquet writer, one file per partition per snapshot (each append
-  *    writes a fresh snapshot directory, so files are immutable and a
-  *    snapshot's file set is exactly its manifest — the append-only
+  *  - `data/snap-<tag>/p_month=…/part-….parquet` — data files written by
+  *    Spark's parquet writer, one file per partition per write (each write
+  *    stages in a fresh writer-unique directory, so files are immutable and
+  *    a snapshot's file set is exactly its manifest — the append-only
   *    contract the format is built on).
+  *
+  * `<tag>` is a short random tag ([[fresh]]): every file a writer or a
+  * commit attempt creates is unique to it, so racing writers never
+  * overwrite each other's files before the version CAS picks a winner.
   *
   * Simplifications vs the full spec, chosen to stay honest rather than
   * hidden: bounds are ISO strings keyed by field name (the spec
@@ -220,8 +224,10 @@ object IcebergTable {
   private def fresh(): String = java.util.UUID.randomUUID().toString.take(8)
 
   /** A writer-unique directory for data files written outside the commit
-    * transaction. */
-  private def newDataDir(location: String): String = s"$location/data/snap-${fresh()}"
+    * transaction — also the staging directory of the SQL row-level and
+    * dynamic-overwrite writes, whose commits delete every file in it that
+    * no committed task named. */
+  private[iceberg] def newDataDir(location: String): String = s"$location/data/snap-${fresh()}"
 
   /** Run `body` with parquet LTZ timestamps written as INT64 micros.
     * Spark's default `outputTimestampType` is INT96 for TIMESTAMP (LTZ)
@@ -257,19 +263,16 @@ object IcebergTable {
              targetRecordsPerFile: Option[Long] = None,
              clusterFiles: Option[(Int, Boolean)] = None,
              sorted: Boolean = false): Long =
-    appendCounted(spark, lineitem, location, weekly, targetRecordsPerFile, clusterFiles, sorted)._1
+    appendOcc(spark, lineitem, location, weekly, targetRecordsPerFile, clusterFiles, sorted)._1
 
   /** [[append]], also returning the CAS conflicts its commit retried
     * through — what the concurrent-writer harness
     * ([[IcebergOcc.dataRace]]) counts. */
-  def appendOcc(spark: SparkSession, lineitem: DataFrame, location: String): (Long, Int) =
-    appendCounted(spark, lineitem, location)
-
-  private def appendCounted(spark: SparkSession, lineitem: DataFrame, location: String,
-                            weekly: Boolean = false,
-                            targetRecordsPerFile: Option[Long] = None,
-                            clusterFiles: Option[(Int, Boolean)] = None,
-                            sorted: Boolean = false): (Long, Int) =
+  def appendOcc(spark: SparkSession, lineitem: DataFrame, location: String,
+                weekly: Boolean = false,
+                targetRecordsPerFile: Option[Long] = None,
+                clusterFiles: Option[(Int, Boolean)] = None,
+                sorted: Boolean = false): (Long, Int) =
     writeDataFiles(spark, lineitem, location, weekly,
         targetRecordsPerFile, clusterFiles, sorted) match {
       case None => (readMetadataOpt(location).map(_.currentSnapshotId).getOrElse(0L), 0)
@@ -1063,9 +1066,9 @@ object IcebergTable {
     * one losing), re-reads and re-applies `edit`, so an edit always builds
     * on the version it replaces and no acknowledged commit is lost. What
     * the losing attempts wrote is deleted once the commit ends, unless the
-    * published attempt reused it. An edit that returns its input unchanged
-    * publishes nothing. A table with no committed version edits
-    * [[uncommitted]]. */
+    * published attempt reused it ([[addSnapshot]]). An edit that returns
+    * its input unchanged publishes nothing. A table with no committed
+    * version edits [[uncommitted]]. */
   def commit(location: String)(edit: TableMetadata => TableMetadata): Committed = {
     val lost = scala.collection.mutable.ArrayBuffer.empty[SnapshotInfo]
     var conflicts = 0
@@ -1164,7 +1167,9 @@ object IcebergTable {
     * counter (the winner changed only properties, schemas or statistics)
     * reuses the previous attempt's manifests and list instead of writing
     * them again: a data commit's retry then costs what a metadata-only
-    * commit costs, so metadata-only writers cannot starve it. */
+    * commit costs, so metadata-only writers cannot starve it. (Without the
+    * reuse, two property writers committing in a tight loop drove an SQL
+    * INSERT's commit through all [[MaxCommitAttempts]] attempts.) */
   private def addSnapshot(location: String, operation: String,
                           added: Seq[DataFileEntry] = Seq.empty,
                           schema: Seq[String] = Seq.empty,
@@ -1426,10 +1431,11 @@ object IcebergTable {
   }
 
   /** Publish `meta` as version `version` and flip the hint — the one
-    * writer of `v<N>.metadata.json`, called by [[commitAttempt]] with the
-    * version after the one its edit read. The version counter advances
-    * independently of snapshot ids (an expiry writes a metadata-only
-    * version with no new snapshot, exactly as the real library does).
+    * writer of `v<N>.metadata.json`, called by each attempt of [[commit]]
+    * (and by [[commitAttempt]]) with the version after the one its edit
+    * read. The version counter advances independently of snapshot ids (an
+    * expiry writes a metadata-only version with no new snapshot, exactly
+    * as the real library does).
     *
     * The full content goes to a temp file that is then hard-LINKED to the
     * version path. Link creation is the CAS (it fails with
@@ -1993,6 +1999,7 @@ object IcebergTable {
                      predicate: org.apache.spark.sql.Column,
                      shards: Int = 1): Long = {
     val plan = planFiles(location)
+    val sequenceOf = plan.files.map(f => f.path -> f.sequence).toMap
     import spark.implicits._
     // file coordinate via input_file_name() — the same normalization the
     // manifest writer (collectFileStats) records, so referenced_data_file
@@ -2010,7 +2017,9 @@ object IcebergTable {
         .map { case (path, ps) => (path.stripPrefix("file:"),
           RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last) }
         .collect()
-        .sortBy(_._1)
+        // blobs in commit order, then by path: data directories carry a
+        // random tag, so the path alone does not order files across commits
+        .sortBy(v => (sequenceOf.getOrElse(v._1, 0L), v._1))
     require(victims.nonEmpty, "deletion-vector commit with zero victims")
     commitSnapshot(location, "delete") { a =>
       a.parentManifests :+ writeDvManifest(location, a.id, victims.toSeq, shards)
@@ -2163,8 +2172,10 @@ object IcebergTable {
     * The data-file work (stray cleanup by listing, footer stats for the
     * NAMED committed files only) runs once, before the [[commit]]
     * transaction; each attempt writes only the DV Puffin and the
-    * manifests. Two concurrent SQL writers therefore serialize instead of
-    * silently last-writer-winning. */
+    * manifests. Each SQL statement stages in its own directory
+    * ([[newDataDir]]), so the stray cleanup never touches a racing
+    * statement's files, and two concurrent SQL writers serialize through
+    * the version CAS instead of silently last-writer-winning. */
   def commitDelta(spark: SparkSession, location: String,
                   dvRows: Seq[(String, Array[Byte], Long, Long, Long)], dataDir: String,
                   files: Seq[String], operation: String = "overwrite"): Long = {

@@ -871,13 +871,11 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
           sortKeys.map(c => org.apache.spark.sql.connector.expressions.Expressions
             .sort(org.apache.spark.sql.connector.expressions.Expressions.column(c),
               org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
-          // staging-dir naming hint only — the committed snapshot id is
-          // re-derived inside commitOverwriteMonths' commit transaction
-          val dirHint = IcebergTable.readMetadataOpt(location)
-            .map(_.snapshots.map(_.id).max).getOrElse(0L) + 1L
-          new GraftOverwriteBatchWrite(location, writeSchema, dirHint, partCol)
-        }
+        // a statement-unique staging dir — the committed snapshot id is
+        // derived inside commitOverwriteMonths' commit transaction
+        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
+          new GraftOverwriteBatchWrite(location, writeSchema,
+            IcebergTable.newDataDir(location), partCol)
       }
     case m =>
       new org.apache.spark.sql.connector.write.V1Write

@@ -512,6 +512,30 @@ class DeltaCommitSpec extends SparkSpec {
     assert(IcebergTable.readMetadata(loc).snapshots.size === 5)
   }
 
+  test("racing SQL row-level writes stage apart: neither commit deletes the other's files") {
+    val loc = Files.createTempDirectory("graft_stage_race_").toString
+    IcebergTable.append(spark, lineitem, loc)
+    val rows = lineitem.limit(2).queryExecution.toRdd.map(_.copy()).collect()
+    val info = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+      override def numPartitions(): Int = 1
+    }
+    // two statements built at the same version, each inserting one row
+    // from its own task, committed one after the other
+    val staged = Seq(0, 1).map { i =>
+      val batch = new GraftDeltaWrite(loc, lineitem.schema, Some("l_shipdate")).toBatch
+      val w = batch.createBatchWriterFactory(info).createWriter(0, i.toLong)
+      w.insert(rows(i))
+      (batch, w.commit())
+    }
+    staged.foreach { case (batch, msg) => batch.commit(Array(msg)) }
+    val live = IcebergTable.planFiles(loc).files.map(_.path)
+    val missing = live.filterNot(p =>
+      new File(p.stripPrefix("file:").replaceFirst("^/{2,}", "/")).exists())
+    assert(missing.isEmpty, s"committed files deleted by a racing statement: $missing")
+    assert(IcebergTable.readMetadata(loc).snapshots.size === 3)
+    assert(spark.read.parquet(live: _*).count() === lineitem.count() + 2)
+  }
+
   /** Property values no hand-built JSON survives. */
   private val awkward = Seq("say \"hi\"", "back\\slash \\\"", "two\nlines\ttab",
     "caf\u00e9 \u2603 \u65e5\u672c", "{\"json\":[1,2]}")

@@ -63,7 +63,7 @@ class WriteDistributionSpec extends SparkSpec {
 
   test("a delta write whose spec has no source column writes unpartitioned") {
     val loc = Files.createTempDirectory("graft_unpart_delta_").toString
-    val w = new GraftDeltaBatchWrite(loc, unpartitionedSchema, 7L, None)
+    val w = new GraftDeltaBatchWrite(loc, unpartitionedSchema, s"$loc/data/snap-7", None)
       .createBatchWriterFactory(writeInfo).createWriter(0, 11L)
     // rows span three months, and the schema has no l_shipdate column
     unpartitionedRows.foreach(w.insert)
@@ -86,8 +86,10 @@ class WriteDistributionSpec extends SparkSpec {
     val w = write.toBatch.createBatchWriterFactory(writeInfo).createWriter(0, 5L)
     unpartitionedRows.foreach(w.write)
     val msg = w.commit().asInstanceOf[GraftDeltaCommitMessage]
-    // a table without a snapshot stages under snap-1
-    assertFlat(s"$loc/data/snap-1", msg.files.toSeq)
+    // the statement stages in its own data/snap-<tag> directory
+    val staged = new java.io.File(msg.files.head).getParentFile
+    assert(staged.getParent == s"$loc/data" && staged.getName.startsWith("snap-"))
+    assertFlat(staged.getPath, msg.files.toSeq)
   }
 
   test("months V2 function computes the Iceberg month-transform value") {
