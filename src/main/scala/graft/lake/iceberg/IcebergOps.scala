@@ -560,7 +560,7 @@ object IcebergOps {
       IcebergTable.currentSnapshot(meta).manifestList)
       .flatMap(m => IcebergTable.readManifest(m.path))
       .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
+    val blobBytes = IcebergTable.dvBlobs()
     import org.apache.spark.sql.Encoders
     val binEnc = Encoders.BINARY
     val arms = probes.map { case (label, key) =>
@@ -570,12 +570,7 @@ object IcebergOps {
       var df = spark.read.parquet(file.path)
         .withColumn("__pos", col("_metadata.row_index").cast("long"))
       if (dvs.nonEmpty) {
-        val blobs = dvs.map { e =>
-          val slice = blobCache.getOrElseUpdate(e.path,
-            Puffin.read(new java.io.File(e.path))._2)
-          slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-            e.contentOffset, e.contentSize))
-        }
+        val blobs = dvs.map(blobBytes)
         val dvPos = spark.createDataset(blobs)(binEnc)
           .flatMap(b => RoaringDv.deserializeDvBlob(b))(Encoders.scalaLong)
           .toDF("dv_pos")
@@ -1158,14 +1153,15 @@ object IcebergOps {
     * multi-column predicate with ZERO data-footer reads) executed on the
     * REAL format: [[IcebergTable]] manifests carry lower/upper bound maps
     * for l_shipdate PLUS the wide-stats set (l_orderkey,
-    * l_extendedprice_cents, l_quantity — integer-canonical encodings, see
-    * `IcebergTable.WideBoundCols`), and this census evaluates a
-    * 3-conjunct predicate per data file from those real Avro bounds
-    * alone: per-conjunct overlap bits and the conjunctive keep verdict,
-    * one row per (month, snapshot) file. Every bound is a deterministic
-    * aggregate of lineitem's (month × snapshot-half) grain, so DuckDB
-    * recomputes bits and verdicts exactly — and the proof that no parquet
-    * footer was touched is structural: the census reads manifests only. */
+    * l_extendedprice_cents, l_quantity — `IcebergTable.WideBoundCols`'
+    * integer-canonical encodings of each written file's footer min/max,
+    * taken once at commit), and this census evaluates a 3-conjunct
+    * predicate per data file from those real Avro bounds alone:
+    * per-conjunct overlap bits and the conjunctive keep verdict, one row
+    * per (month, snapshot) file. Every bound is a deterministic aggregate
+    * of lineitem's (month × snapshot-half) grain, so DuckDB recomputes bits
+    * and verdicts exactly — and the proof that no parquet footer is read
+    * at query time is structural: the census reads manifests only. */
   def widePruneReal(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val loc = tableFor(spark, lineitem)
     val meta = IcebergTable.readMetadata(loc)
@@ -1342,10 +1338,9 @@ object IcebergOps {
     val loc = orphanTableFor(spark, lineitem)
     val meta = IcebergTable.readMetadata(loc)
     val mdir = new java.io.File(s"$loc/metadata")
-    // manifest file_path values carry the input_file_name URI residue
-    // ("file:///x" stripped to "///x") — collapse leading slashes so the
-    // membership test compares one canonical form with the disk walk
-    def norm(p: String) = p.replaceFirst("^/+", "/")
+    // manifest file_path values carry the input_file_name "///x" form —
+    // compare the disk walk against their clean form
+    def norm(p: String) = GraftVectorized.cleanPath(p)
     val manifestLists = meta.snapshots.map(_.manifestList).toSet
     val manifests = manifestLists.flatMap(IcebergTable.readManifestList(_).map(_.path))
     val dataPaths = manifests.flatMap(m => IcebergTable.readManifest(m).map(e => norm(e.path)))
@@ -1740,12 +1735,9 @@ object IcebergOps {
           if (s < e) Some((s, e)) else None
         }
       }
-    // path normalizer: manifest data paths carry input_file_name()'s
-    // "file:" -stripped "///" residue while delete-file entries record
-    // File.getPath — fold both (and executor-side input_file_name) to one
-    // canonical single-slash form before any membership test
-    val normPath: String => String =
-      s => s.replaceFirst("^file:", "").replaceFirst("^/{2,}", "/")
+    // manifest data paths carry input_file_name()'s "///" form while
+    // delete-file entries record File.getPath: compare one clean form
+    val normPath: String => String = GraftVectorized.cleanPath
     // per data file (manifest-normalized path): scan index, write sequence,
     // live-step intervals — the gate every delete form shares (a delete
     // applies only while its target file is live and strictly older)
@@ -1806,12 +1798,9 @@ object IcebergOps {
       val dvDs: Option[org.apache.spark.sql.Dataset[PosRow]] =
         if (blobSteps.isEmpty) None
         else {
-          val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
+          val blobBytes = IcebergTable.dvBlobs()
           val blobRows = blobSteps.values.toSeq.map { case (e, steps) =>
-            val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new java.io.File(e.path))._2)
-            val bytes = slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-              e.contentOffset, e.contentSize))
-            (fileGate(normPath(e.referencedDataFile.get))._1, bytes, toIvs(steps))
+            (fileGate(normPath(e.referencedDataFile.get))._1, blobBytes(e), toIvs(steps))
           }
           Some(spark.createDataset(blobRows)
             .flatMap { case (f, bytes, ivs) =>

@@ -10,9 +10,14 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType,
+  LongType, TimestampNTZType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+import GraftVectorized.cleanPath
 
 /** A from-scratch, spec-shaped Apache Iceberg table layer — REAL metadata
   * files, not a DataFrame model.
@@ -59,9 +64,9 @@ import org.json4s.jackson.JsonMethods
   * readable by any tool that follows the spec's JSON/Avro layouts.
   *
   * Scale: planning reads ONLY metadata (one JSON + one manifest list +
-  * the unpruned manifests — KBs at any table size); per-file stats are
-  * computed by one Spark aggregation over the snapshot's data directory
-  * (distributed, metadata-grain output); the driver writes manifest Avro
+  * the unpruned manifests — KBs at any table size); per-file stats come
+  * from the written files' parquet footers, read on the driver
+  * ([[ParquetFooters]], no Spark job); the driver writes manifest Avro
   * bounded by files-per-snapshot. Paths use java.io (local FS) — on a
   * cluster the same byte layouts go through the Hadoop FileSystem API. */
 object IcebergTable {
@@ -338,13 +343,7 @@ object IcebergTable {
   def appendGrouped(spark: SparkSession, lineitem: DataFrame, location: String,
                     groupMonths: Int = 12): Long = {
     require(groupMonths >= 1, "groupMonths must be >= 1")
-    val dataDir = newDataDir(location)
-    withMicrosTimestamps(spark) {
-      lineitem.withColumn("p_month", date_format(col("l_shipdate"), "yyyy-MM"))
-        .repartition(col("p_month"))
-        .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
-    }
-    val stats = collectFileStats(spark, dataDir)
+    val stats = writeDataSnapshot(spark, lineitem, location)
     // epoch-month index / groupMonths — for groupMonths = 12 the group IS
     // the calendar year; any value keeps groups contiguous in month order,
     // so each manifest's [partLo, partHi] ranges are disjoint.
@@ -417,7 +416,7 @@ object IcebergTable {
         .repartition(col("p_month"))
         .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
     }
-    val stats = collectFileStats(spark, dataDir)
+    val stats = dataFileStats(spark, dataDir)
     commitSnapshot(location, "append", stats, lineitem.columns.toSeq.sorted) { a =>
       a.parentManifests ++ a.added.groupBy(f => f.partition.drop(1).toInt / groupBuckets)
         .toSeq.sortBy(_._1).zipWithIndex.map { case ((_, fs), i) =>
@@ -558,20 +557,19 @@ object IcebergTable {
   def commitOverwriteMonths(spark: SparkSession, location: String,
                             dataDir: String, files: Seq[String]): Long = {
     require(files.nonEmpty, "dynamic overwrite wrote no files")
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
     // stray cleanup by directory listing (never opened — a truncated
     // kill -9 leftover must not fail the commit) and footer stats for the
     // named committed files only; both id-independent, both ONCE, outside
     // the commit transaction below.
-    deleteStrayFiles(dataDir, files.map(n).toSet)
-    val keep = collectFileStats(spark, dataDir, Some(files))
+    deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
+    val keep = dataFileStats(spark, dataDir, Some(files))
     require(keep.nonEmpty, "no committed task wrote a surviving data file")
     val months = keep.map(_.partition).toSet
     commitSnapshot(location, "replace", keep) { a =>
       val byManifest = a.parentManifests.map(m => m -> readManifest(m.path))
       val removedPaths = byManifest.flatMap(_._2)
         .filter(e => e.content == 0 && months.contains(e.partition))
-        .map(e => n(e.path)).toSet
+        .map(e => cleanPath(e.path)).toSet
       val kept = byManifest.zipWithIndex.flatMap { case ((m, es), i) =>
         if (es.forall(_.content == 0)) {
           val surviving = es.filterNot(e => months.contains(e.partition))
@@ -582,7 +580,7 @@ object IcebergTable {
           // delete manifest: drop only if every reference died with the
           // replaced months (equality deletes carry no reference and ride)
           val live = es.exists(e =>
-            e.referencedDataFile.forall(r => !removedPaths.contains(n(r))))
+            e.referencedDataFile.forall(r => !removedPaths.contains(cleanPath(r))))
           if (live) Some(m) else None
         }
       }
@@ -880,19 +878,15 @@ object IcebergTable {
       arranged.write.partitionBy(partCols: _*).mode("overwrite").parquet(dataDir)
     }
     // a partitioned write of zero rows leaves only bookkeeping files
-    def holdsData(f: File): Boolean =
-      if (f.isDirectory) Option(f.listFiles()).exists(_.exists(holdsData))
-      else f.getName.endsWith(".parquet")
-    if (!holdsData(new File(dataDir))) {
+    Some(dataFileStats(spark, dataDir)).filter(_.nonEmpty).orElse {
       org.apache.commons.io.FileUtils.deleteDirectory(new File(dataDir))
-      return None
+      None
     }
-    Some(collectFileStats(spark, dataDir))
   }
 
   /** v3 row lineage assignment: give every new data file a `first_row_id`
     * from the table's `next-row-id` counter (`first`), in the deterministic
-    * partition-sorted order `collectFileStats` returns — a row's implicit
+    * (partition, path) order [[dataFileStats]] returns — a row's implicit
     * `_row_id` is firstRowId + its position in the file. The committed
     * counter ([[addSnapshot]]) is monotone across replaces and expiry,
     * so ids are never reused; rewritten files keep their ids (manifest
@@ -900,76 +894,76 @@ object IcebergTable {
   private def assignRowIds(stats: Seq[DataFileEntry], first: Long): Seq[DataFileEntry] =
     stats.zip(stats.scanLeft(first)(_ + _.recordCount)).map { case (f, id) => f.copy(firstRowId = id) }
 
-  /** Per-file stats over a just-written data directory: ONE distributed
-    * aggregation at data-file grain (metadata-grain output — the same
-    * collect every real Iceberg committer does). */
-  /** Wide-stats columns recorded in every data manifest entry's bound
-    * maps beyond l_shipdate (the wide-table-pruning statistic set):
-    * integer-canonical string encodings so bound compares are exact on
-    * any engine. Columns absent from a written schema are skipped. */
-  val WideBoundCols: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)] = Seq(
-    "l_orderkey" -> (c => c.cast("long")),
-    "l_extendedprice_cents" -> (c => round(c * 100).cast("long")),
-    "l_quantity" -> (c => round(c).cast("long")))
-  private val WideBoundSource = Map(
-    "l_orderkey" -> "l_orderkey",
-    "l_extendedprice_cents" -> "l_extendedprice",
-    "l_quantity" -> "l_quantity")
+  /** Wide-stats bounds in every data manifest entry beyond l_shipdate (the
+    * wide-table-pruning statistic set): key, source column, and an
+    * integer-canonical encoding (`cast long`, `round(x*100)`, `round(x)`,
+    * Spark's HALF_UP). Each is monotone, so it maps a file's min/max to the
+    * encoded column's exactly. Columns a file lacks are skipped. */
+  val WideBoundCols: Seq[(String, String, Any => Long)] = Seq(
+    ("l_orderkey", "l_orderkey", {
+      case d: Double => d.toLong
+      case v => decimal(v).longValue }),
+    ("l_extendedprice_cents", "l_extendedprice", {
+      case d: Double => roundHalfUp(d * 100)
+      case v => roundHalfUp(decimal(v).movePointRight(2)) }),
+    ("l_quantity", "l_quantity", roundHalfUp))
 
-  private def collectFileStats(spark: SparkSession, dataDir: String,
-                               only: Option[Seq[String]] = None): Seq[DataFileEntry] = {
-    // `only` scopes the footer reads to the NAMED committed files: a
-    // truncated parquet left by a kill -9'd task attempt (no clean abort)
-    // must never fail the commit with a footer-read error — stray paths
-    // are removed by directory listing ([[deleteStrayFiles]]) without
-    // ever being opened. basePath keeps hive partition discovery
-    // (p_month=) working over an explicit file list.
-    val base = only match {
-      case Some(paths) => spark.read.option("basePath", dataDir).parquet(paths: _*)
-      case None => spark.read.parquet(dataDir)
-    }
-    val present = WideBoundCols.filter { case (k, _) => base.columns.contains(WideBoundSource(k)) }
-    val wideSel = present.map { case (k, enc) => enc(col(WideBoundSource(k))).as(k) }
-    val wideAggs = present.flatMap { case (k, _) =>
-      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")) }
-    base
-      // cast: weekly partition values look like dates and Spark's partition
-      // inference types the directory value as DATE — the manifest stores
-      // the spec's string form either way
-      .select(Seq(input_file_name().as("file_path"), col("p_month").cast("string").as("p_month"),
-        date_format(col("l_shipdate"), "yyyy-MM-dd").as("d")) ++ wideSel: _*)
-      .groupBy(col("file_path"), col("p_month"))
-      .agg(count(lit(1)).as("record_count"),
-        (Seq(min(col("d")).as("lo"), max(col("d")).as("hi")) ++ wideAggs): _*)
-      .collect()
-      .map { r =>
-        val p = r.getAs[String]("file_path").stripPrefix("file:")
-        val wide = present.map { case (k, _) =>
-          k -> (r.getAs[Long](s"__lo_$k").toString, r.getAs[Long](s"__hi_$k").toString) }.toMap
-        DataFileEntry(p, r.getAs[String]("p_month"), r.getAs[Long]("record_count"),
-          new File(p).length(), r.getAs[String]("lo"), r.getAs[String]("hi"),
-          wideBounds = wide)
-      }.sortBy(_.partition).toSeq
+  private def roundHalfUp(v: Any): Long =
+    decimal(v).setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  private def decimal(v: Any): java.math.BigDecimal = v match {
+    case d: Double => java.math.BigDecimal.valueOf(d)
+    case d: java.math.BigDecimal => d
+    case n: Number => java.math.BigDecimal.valueOf(n.longValue)
+  }
+
+  /** Stats of the data files under a just-written `dataDir`, in (partition,
+    * path) order, from their footers on the driver ([[ParquetFooters]]):
+    * rows and length; l_shipdate bounds as the dates `date_format` gives
+    * (NTZ as wall time, LTZ in the session zone); [[WideBoundCols]]; and
+    * the partition the writer named in the `p_month=` directory. A column
+    * without statistics or values gets no bound. `only` opens just the
+    * NAMED committed files: a truncated stray left by a killed task must
+    * not fail the commit ([[deleteStrayFiles]] removes it unopened). */
+  private def dataFileStats(spark: SparkSession, dataDir: String,
+                            only: Option[Seq[String]] = None): Seq[DataFileEntry] = {
+    val conf = spark.sessionState.conf
+    val zone = java.time.ZoneId.of(conf.sessionLocalTimeZone)
+    ParquetFooters.read(only.getOrElse(ParquetFooters.list(dataDir)), conf)
+      .filter(_.rowCount > 0).map { f =>
+        def day(v: Any): Option[java.time.LocalDate] = (f.schema("l_shipdate").dataType, v) match {
+          case (DateType, d: Int) => Some(java.time.LocalDate.ofEpochDay(d))
+          case (TimestampNTZType, us: Long) =>
+            Some(java.time.LocalDate.ofEpochDay(Math.floorDiv(us, 86400000000L)))
+          case (TimestampType, us: Long) => Some(java.time.Instant
+            .ofEpochSecond(Math.floorDiv(us, 1000000L)).atZone(zone).toLocalDate)
+          case _ => None
+        }
+        val (lo, hi) = (for ((a, b) <- f.bounds.get("l_shipdate"); l <- day(a); h <- day(b))
+          yield (l.toString, h.toString)).getOrElse(("", ""))
+        val partition = f.path.split('/').init.reverseIterator.find(_.startsWith("p_month="))
+          .map(d => ExternalCatalogUtils.unescapePathName(d.stripPrefix("p_month=")))
+          .getOrElse(throw new IllegalArgumentException(s"${f.path} has no p_month= " +
+            "directory; unpartitioned data files cannot commit yet"))
+        DataFileEntry(f.path, partition, f.rowCount, f.length, lo, hi,
+          wideBounds = WideBoundCols.flatMap { case (k, src, enc) =>
+            f.bounds.get(src).map { case (a, b) => k -> (enc(a).toString, enc(b).toString) }
+          }.toMap)
+      }.sortBy(f => (f.partition, f.path))
   }
 
   /** Remove files under `dataDir` NOT in `allowed` by DIRECTORY LISTING
     * alone — never opening them: the strays are exactly the files a killed
     * task attempt may have left truncated, so a footer-reading cleanup
     * (the old shape) could itself throw and wedge the commit behind manual
-    * cleanup. Dot/underscore-prefixed bookkeeping files (checksums,
-    * markers) are skipped; a kept file's checksum stays beside it. */
-  private def deleteStrayFiles(dataDir: String, allowed: Set[String]): Unit = {
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
-    def walk(f: File): Unit =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(walk)
-      else if (!f.getName.startsWith(".") && !f.getName.startsWith("_") &&
-               !allowed.contains(n(f.getPath))) {
-        f.delete()
-        new File(f.getParentFile, "." + f.getName + ".crc").delete()
-      }
-    val d = new File(dataDir)
-    if (d.isDirectory) walk(d)
-  }
+    * cleanup. Bookkeeping files (checksums, markers — what
+    * [[ParquetFooters.list]] skips) stay; a kept file's checksum stays
+    * beside it. */
+  private def deleteStrayFiles(dataDir: String, allowed: Set[String]): Unit =
+    ParquetFooters.list(dataDir).filterNot(p => allowed(cleanPath(p))).map(new File(_)).foreach { f =>
+      f.delete()
+      new File(f.getParentFile, "." + f.getName + ".crc").delete()
+    }
 
   /** A fresh manifest path for snapshot `snapshotId`; `tag` names the
     * manifest's role within the snapshot. */
@@ -992,8 +986,11 @@ object IcebergTable {
     val len = writeAvro(ManifestEntrySchema, file, fs.map { f =>
       manifestEntry(if (existing) f else f.copy(sequence = snapshotId, entrySnapshotId = snapshotId),
         status = if (existing) 0 else 1, // 0 = EXISTING, 1 = ADDED
-        lower = Map("l_shipdate" -> f.loShip) ++ f.wideBounds.map { case (k, b) => k -> b._1 },
-        upper = Map("l_shipdate" -> f.hiShip) ++ f.wideBounds.map { case (k, b) => k -> b._2 })
+        // a file without l_shipdate bounds ("") records none
+        lower = Map("l_shipdate" -> f.loShip).filter(_._2.nonEmpty) ++
+          f.wideBounds.map { case (k, b) => k -> b._1 },
+        upper = Map("l_shipdate" -> f.hiShip).filter(_._2.nonEmpty) ++
+          f.wideBounds.map { case (k, b) => k -> b._2 })
     })
     ManifestInfo(file.getPath, len, snapshotId,
       fs.length, fs.map(_.recordCount).sum,
@@ -1661,6 +1658,19 @@ object IcebergTable {
       s"no current snapshot (current-snapshot-id=${m.currentSnapshotId}; " +
         s"a table with no snapshots is legal per the spec — callers must check)"))
 
+  /** Snapshot `snapshotId` of `m`, or its current snapshot. */
+  def snapshotAt(m: TableMetadata, snapshotId: Option[Long]): SnapshotInfo =
+    snapshotId.map(id => m.snapshots.find(_.id == id).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(currentSnapshot(m))
+
+  /** The bytes of a DV entry's (content 1) Puffin blob; each Puffin file
+    * opens once per reader. */
+  private[iceberg] def dvBlobs(): DataFileEntry => Array[Byte] = {
+    val files = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
+    e => files.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)(
+      Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L, e.contentOffset, e.contentSize))
+  }
+
   def readManifestList(path: String): Seq[ManifestInfo] =
     readAvro(new File(path)).map { r =>
       val parts = r.get("partitions").asInstanceOf[java.util.List[GenericRecord]].asScala
@@ -1713,21 +1723,23 @@ object IcebergTable {
     * the ladder the way the reference does (local disk shows no TTFB). */
   def readManifestsParallel(paths: Seq[String],
                             parallelism: Int = FetchParallelism,
-                            fetchDelayMs: Long = 0L): Seq[Seq[DataFileEntry]] = {
-    def one(p: String): Seq[DataFileEntry] = {
+                            fetchDelayMs: Long = 0L): Seq[Seq[DataFileEntry]] =
+    inParallel(paths, parallelism) { p =>
       if (fetchDelayMs > 0) Thread.sleep(fetchDelayMs)
       readManifest(p)
     }
-    if (paths.size <= 1 || parallelism <= 1) paths.map(one)
+
+  /** `f` over `xs` on a bounded pool, results in input order — the
+    * metadata fetches ([[readManifestsParallel]], [[ParquetFooters]]). */
+  private[iceberg] def inParallel[A, B](xs: Seq[A], parallelism: Int = FetchParallelism)(
+      f: A => B): Seq[B] =
+    if (xs.size <= 1 || parallelism <= 1) xs.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, paths.size))
-      try paths.map(p => pool.submit(new java.util.concurrent.Callable[Seq[DataFileEntry]] {
-          def call(): Seq[DataFileEntry] = one(p)
-        })).map(_.get())
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(parallelism, xs.size))
+      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
+        .map(_.get())
       finally pool.shutdown()
     }
-  }
 
   /** Plan a scan: manifest-list pruning by partition summary, file-level
     * pruning by partition value, and (optionally) file-level pruning by
@@ -1743,9 +1755,7 @@ object IcebergTable {
                 dateLo: Option[String] = None, dateHi: Option[String] = None,
                 fetchParallelism: Int = FetchParallelism,
                 fetchDelayMs: Long = 0L): ScanPlan = {
-    val meta = readMetadata(location)
-    val snap = snapshotId.map(id => meta.snapshots.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(currentSnapshot(meta))
+    val snap = snapshotAt(readMetadata(location), snapshotId)
     pruneFiles(readManifestList(snap.manifestList), monthLo, monthHi, dateLo, dateHi)(
       live => readManifestsParallel(live.map(_.path), fetchParallelism, fetchDelayMs))
   }
@@ -1779,11 +1789,12 @@ object IcebergTable {
       else if (specId == 2) true
       else monthLo.forall(l => nextMonth(hi.take(7)) >= l) &&
         monthHi.forall(h => lo.take(7) <= h)
-    def dateOverlaps(lo: String, hi: String): Boolean =
+    // a file without l_shipdate bounds ("") is never pruned by them
+    def dateOverlaps(lo: String, hi: String): Boolean = lo.isEmpty ||
       dateLo.forall(l => hi >= l) && dateHi.forall(h => lo <= h)
     def fileMonthOverlaps(f: DataFileEntry, specId: Int): Boolean =
       if (specId == 0) monthOverlaps(f.partition, f.partition, 0)
-      else monthLo.forall(l => f.hiShip.take(7) >= l) &&
+      else f.loShip.isEmpty || monthLo.forall(l => f.hiShip.take(7) >= l) &&
         monthHi.forall(h => f.loShip.take(7) <= h)
     val live = manifests.filter(m => monthOverlaps(m.partLo, m.partHi, m.specId))
     val files = read(live)
@@ -1875,18 +1886,23 @@ object IcebergTable {
     val dataDir = newDataDir(location)
     keys.select(col(keys.columns.head).cast("long").as("key"))
       .coalesce(1).write.mode("overwrite").parquet(dataDir)
-    val stats = spark.read.parquet(dataDir)
-      .agg(count(lit(1)).as("n"), min(col("key")).as("lo"), max(col("key")).as("hi")).head()
     val file = new File(dataDir).listFiles().filter(_.getName.endsWith(".parquet")).head
-    val n = stats.getAs[Long]("n")
+    val f = ParquetFooters.read(Seq(file.getPath), spark.sessionState.conf).head
+    val (lo, hi) = keyBounds(f, "key", "l_orderkey")
     commitSnapshot(location, "delete") { a =>
-      val e = DataFileEntry(file.getPath, "", n, file.length(), "", "", content = 2,
+      val e = DataFileEntry(file.getPath, "", f.rowCount, f.length, "", "", content = 2,
         sequence = a.id, entrySnapshotId = a.id)
-      a.parentManifests :+ writeDeleteManifest(location, a.id, "eq", Seq(manifestEntry(e, 1,
-        Map("l_orderkey" -> stats.getAs[Long]("lo").toString),
-        Map("l_orderkey" -> stats.getAs[Long]("hi").toString))), n)
+      a.parentManifests :+ writeDeleteManifest(location, a.id, "eq",
+        Seq(manifestEntry(e, 1, lo, hi)), f.rowCount)
     }.snapshotId
   }
+
+  /** A delete file's bound maps for its `column`, keyed `key`: empty when
+    * the footer holds no bound for it. */
+  private def keyBounds(f: ParquetFooters.Footer, column: String,
+                        key: String): (Map[String, String], Map[String, String]) =
+    f.bounds.get(column).map { case (lo, hi) =>
+      (Map(key -> lo.toString), Map(key -> hi.toString)) }.getOrElse((Map.empty, Map.empty))
 
   /** Commit a POSITION-delete snapshot (spec content = 1): the delete file's
     * rows are (file_path, pos) pairs addressing row ordinals inside the
@@ -1913,22 +1929,16 @@ object IcebergTable {
      else victims.repartition(shards, col("file_path"))
        .sortWithinPartitions("file_path", "pos"))
       .write.mode("overwrite").parquet(dataDir)
-    // per-delete-file stats: one distributed aggregation at file grain
-    val stats = spark.read.parquet(dataDir)
-      .select(input_file_name().as("file_path"), col("pos"))
-      .groupBy(col("file_path"))
-      .agg(count(lit(1)).as("n"), min(col("pos")).as("lo"), max(col("pos")).as("hi"))
-      .collect()
-      .map(r => (r.getAs[String]("file_path").stripPrefix("file:"),
-        r.getAs[Long]("n"), r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-      .sortBy(_._1)
+    // per-delete-file stats from the footers
+    val stats = ParquetFooters.read(ParquetFooters.list(dataDir), spark.sessionState.conf)
+      .filter(_.rowCount > 0).sortBy(_.path)
     commitSnapshot(location, "delete") { a =>
-      val entries = stats.toSeq.map { case (path, n, lo, hi) =>
-        manifestEntry(DataFileEntry(path, "", n, new File(path).length(), "", "", content = 1,
-          sequence = a.id, entrySnapshotId = a.id), 1,
-          Map("pos" -> lo.toString), Map("pos" -> hi.toString))
+      val entries = stats.map { f =>
+        val (lo, hi) = keyBounds(f, "pos", "pos")
+        manifestEntry(DataFileEntry(f.path, "", f.rowCount, f.length, "", "", content = 1,
+          sequence = a.id, entrySnapshotId = a.id), 1, lo, hi)
       }
-      a.parentManifests :+ writeDeleteManifest(location, a.id, "pos", entries, stats.map(_._2).sum)
+      a.parentManifests :+ writeDeleteManifest(location, a.id, "pos", entries, stats.map(_.rowCount).sum)
     }.snapshotId
   }
 
@@ -2002,7 +2012,7 @@ object IcebergTable {
     val sequenceOf = plan.files.map(f => f.path -> f.sequence).toMap
     import spark.implicits._
     // file coordinate via input_file_name() — the same normalization the
-    // manifest writer (collectFileStats) records, so referenced_data_file
+    // manifest writer ([[dataFileStats]]) records, so referenced_data_file
     // matches the manifest's data-file paths exactly. The serializeDvBlob
     // call sits INSIDE the typed map, i.e. in the executors: the full
     // uncompressed position arrays never leave the cluster.
@@ -2086,16 +2096,11 @@ object IcebergTable {
           .select(regexp_replace(col("file_path"), "^file:", "//").as("file_path"),
             col("pos"), lit(seq).as("seq"))
       }.reduce(_ unionByName _))
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
+    val blobBytes = dvBlobs()
     val fromDv: Option[DataFrame] =
       if (dvReplaced.isEmpty) None
       else {
-        val rows = dvReplaced.map { e =>
-          val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
-          (e.referencedDataFile.get, e.sequence,
-            slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-              e.contentOffset, e.contentSize)))
-        }
+        val rows = dvReplaced.map(e => (e.referencedDataFile.get, e.sequence, blobBytes(e)))
         Some(spark.createDataset(rows)(triEnc)
           .flatMap { case (f, s, b) =>
             RoaringDv.deserializeDvBlob(b).map(p => (f, p, s)) }(posEnc)
@@ -2180,12 +2185,11 @@ object IcebergTable {
                   dvRows: Seq[(String, Array[Byte], Long, Long, Long)], dataDir: String,
                   files: Seq[String], operation: String = "overwrite"): Long = {
     require(dvRows.nonEmpty || files.nonEmpty, "delta commit with no changes")
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
     val keep =
       if (files.isEmpty) Seq.empty[DataFileEntry]
       else {
-        deleteStrayFiles(dataDir, files.map(n).toSet)
-        val stats = collectFileStats(spark, dataDir, Some(files))
+        deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
+        val stats = dataFileStats(spark, dataDir, Some(files))
         require(stats.nonEmpty, "no committed task wrote a surviving data file")
         stats
       }
@@ -2297,6 +2301,14 @@ object IcebergTable {
       .getOrElse(readPendingProperties(location))
       .get("write.target-records-per-file").map(_.trim.toLong)
 
+  /** The spec's legal type promotions (§Schema Evolution): int→long,
+    * float→double, and decimal precision widening at a fixed scale. */
+  private[iceberg] def promotes(from: DataType, to: DataType): Boolean = (from, to) match {
+    case (IntegerType, LongType) | (FloatType, DoubleType) => true
+    case (f: DecimalType, t: DecimalType) => f.scale == t.scale && f.precision < t.precision
+    case _ => false
+  }
+
   def widenSchemaColumn(location: String, column: String, toTypeDdl: String): Unit =
     commit(location) { meta =>
       require(!requireTable(meta).droppedColumns.contains(column), s"column $column was dropped")
@@ -2340,21 +2352,19 @@ object IcebergTable {
     * epoch committed, and returns without a second snapshot. */
   def commitStreamAppend(spark: SparkSession, location: String, dataDir: String,
                          files: Seq[String], queryId: String, epochId: Long): Long = {
-    def n(p: String): String = p.replaceFirst("^/{2,}", "/")
     def committedAt(meta: TableMetadata): Option[Long] =
       meta.snapshots.find(s =>
         s.summary.get("streaming-query").contains(queryId) &&
           s.summary.get("epoch-id").exists(_.toLong >= epochId)).map(_.id)
-    def dropStaged(): Unit =
-      if (new File(dataDir).isDirectory) deleteStrayFiles(dataDir, Set.empty)
+    def dropStaged(): Unit = deleteStrayFiles(dataDir, Set.empty)
     val current = readMetadataOpt(location)
     val replayed = current.flatMap(committedAt)
     if (files.isEmpty || replayed.isDefined) { // empty or replayed epoch: a no-op
       dropStaged()
       return replayed.orElse(current.map(_.currentSnapshotId)).getOrElse(0L)
     }
-    deleteStrayFiles(dataDir, files.map(n).toSet)
-    val keep = collectFileStats(spark, dataDir, Some(files))
+    deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
+    val keep = dataFileStats(spark, dataDir, Some(files))
     require(keep.nonEmpty, "no committed task wrote a surviving data file")
     val append = addSnapshot(location, "append", keep,
         summary = Map("streaming-query" -> queryId, "epoch-id" -> epochId.toString)) { a =>
@@ -2403,12 +2413,7 @@ object IcebergTable {
     require(plan.files.nonEmpty, "update on an empty table")
     require(plan.files.forall(_.firstRowId >= 0),
       "updateMorDv requires row-lineage data files (v3 first_row_id)")
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
-    def blobBytes(e: DataFileEntry): Array[Byte] = {
-      val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
-      slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-        e.contentOffset, e.contentSize))
-    }
+    val blobBytes = dvBlobs()
     import org.apache.spark.sql.Encoders
     val tupleEnc = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
     val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
@@ -2475,18 +2480,11 @@ object IcebergTable {
                 // lineage-preserving compaction materializes through
                 withRowIds: Boolean = false)
       : (DataFrame, ScanPlan, Seq[DataFileEntry]) = {
-    val meta = readMetadata(location)
-    val snap = snapshotId.map(id => meta.snapshots.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(currentSnapshot(meta))
+    val snap = snapshotAt(readMetadata(location), snapshotId)
     val manifests = readManifestList(snap.manifestList)
     val dvEntries = readManifestsParallel(manifests.map(_.path)).flatten
       .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
-    def blobBytes(e: DataFileEntry): Array[Byte] = {
-      val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
-      slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-        e.contentOffset, e.contentSize))
-    }
+    val blobBytes = dvBlobs()
     val plan = planFiles(location, snapshotId, monthLo, monthHi)
     require(plan.files.nonEmpty, "scan planned zero files")
     import org.apache.spark.sql.Encoders
@@ -2574,12 +2572,7 @@ object IcebergTable {
     val eqDeletes = all.filter(_.content == 2)
     val (dvEntries, posDeletes) = all.filter(_.content == 1)
       .partition(_.referencedDataFile.isDefined)
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
-    def blobBytes(e: DataFileEntry): Array[Byte] = {
-      val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
-      slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-        e.contentOffset, e.contentSize))
-    }
+    val blobBytes = dvBlobs()
     import org.apache.spark.sql.Encoders
     val tupleEnc = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
     val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)

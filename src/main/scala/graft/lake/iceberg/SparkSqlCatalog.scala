@@ -6,11 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -58,9 +53,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Simplifications, stated: positional-parquet (v2) delete files are
   * refused with a pointer at `rewrite_position_deletes` (the v3 migration
   * this library executes); schema merges one data-file footer per
-  * sequence era (deterministic; internal lineage columns stripped), with
-  * timestamps in whatever physical form the file carries — int96, millis
-  * or micros — via Spark's own vectorized conversion. */
+  * sequence era, read on the driver (internal lineage columns stripped),
+  * with timestamps in whatever physical form the file carries — int96,
+  * millis or micros — via Spark's own vectorized conversion. */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with StagingTableCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog {
@@ -361,15 +356,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val from = cur.fields.find(_.name == name).getOrElse(
           throw new IllegalArgumentException(s"no column $name")).dataType
         val to = upd.newDataType()
-        val legal = (from, to) match {
-          case (f, t) if f == t => false // no-op promotion: refuse loudly
-          case (IntegerType, LongType) => true
-          case (FloatType, DoubleType) => true
-          case (f: DecimalType, t: DecimalType) =>
-            t.scale == f.scale && t.precision > f.precision
-          case _ => false
-        }
-        require(legal, s"illegal type promotion for $name: " +
+        require(IcebergTable.promotes(from, to), s"illegal type promotion for $name: " +
           s"${from.sql} -> ${to.sql} (spec allows int->bigint, float->double, " +
           "and decimal precision widening at fixed scale)")
         rewritePending(loc, fields => fields.map(f =>
@@ -597,6 +584,10 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
 
   private lazy val schema0: StructType = applyColumnEvolution(rawSchema0)
 
+  // metadata.json, parsed once per table instance (None: not yet committed)
+  private lazy val meta: Option[IcebergTable.TableMetadata] =
+    IcebergTable.readMetadataOpt(location)
+
   /** Post-merge schema visibility (ALTER TABLE DROP/RENAME COLUMN):
     * dropped-column tombstones hide a column from reads PAST their drop
     * point — a time-travel read at snapshot ≤ droppedAt still serves it,
@@ -604,110 +595,80 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
     * field to its current name (reads at any snapshot see the current
     * name; the stated name-based simplification). Two eras carrying both
     * a chain's old and new physical names dedupe to the current one. */
-  private def applyColumnEvolution(raw: StructType): StructType =
-    IcebergTable.readMetadataOpt(location) match {
-      case None => raw
-      case Some(meta) if meta.droppedColumns.isEmpty && meta.renamedColumns.isEmpty &&
-        meta.widenedColumns.isEmpty => raw
-      case Some(meta) =>
-        def hidden(n: String): Boolean =
-          meta.droppedColumns.get(n).exists(at => snapshotId.forall(_ > at))
-        val renamed = raw.fields.flatMap { f =>
-          if (hidden(f.name)) None
-          else meta.renamedColumns.collectFirst {
-            case (nw, chain) if chain.contains(f.name) => f.copy(name = nw)
-          }.orElse(Some(f))
+  private def applyColumnEvolution(raw: StructType): StructType = meta match {
+    case None => raw
+    case Some(m) if m.droppedColumns.isEmpty && m.renamedColumns.isEmpty &&
+      m.widenedColumns.isEmpty => raw
+    case Some(m) =>
+      def hidden(n: String): Boolean =
+        m.droppedColumns.get(n).exists(at => snapshotId.forall(_ > at))
+      val renamed = raw.fields.flatMap { f =>
+        if (hidden(f.name)) None
+        else m.renamedColumns.collectFirst {
+          case (nw, chain) if chain.contains(f.name) => f.copy(name = nw)
+        }.orElse(Some(f))
+      }
+      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+      // type promotions relabel the column's SQL-visible type (reads at
+      // any snapshot see the widened type — the same stated name-based
+      // simplification renames carry)
+      StructType(renamed.filter(f => seen.add(f.name)).map { f =>
+        m.widenedColumns.get(f.name) match {
+          case Some(ddl) => f.copy(dataType = DataType.fromDDL(ddl))
+          case None => f
         }
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        // type promotions relabel the column's SQL-visible type (reads at
-        // any snapshot see the widened type — the same stated name-based
-        // simplification renames carry)
-        StructType(renamed.filter(f => seen.add(f.name)).map { f =>
-          meta.widenedColumns.get(f.name) match {
-            case Some(ddl) => f.copy(dataType =
-              org.apache.spark.sql.types.DataType.fromDDL(ddl))
-            case None => f
-          }
-        })
-    }
+      })
+  }
 
+  /** The schema before column evolution: uncommitted, the CREATE-declared
+    * one; with no live data file, that or the committed column names (the
+    * stated string-typed simplification); else the footers of one file per
+    * sequence era (its max path), read on the driver ([[ParquetFooters]])
+    * and merged newest era first ([[mergeEras]]), lineage columns
+    * stripped, plus declared columns no file carries yet (ALTER TABLE ADD
+    * COLUMN before the next INSERT — every read null-fills them). */
   private lazy val rawSchema0: StructType = {
     val pending = new File(location, "metadata/schema.pending.json")
     def pendingSchema: Option[StructType] =
       if (pending.exists())
-        Some(org.apache.spark.sql.types.DataType.fromJson(
-          java.nio.file.Files.readString(pending.toPath)).asInstanceOf[StructType])
+        Some(DataType.fromJson(java.nio.file.Files.readString(pending.toPath)).asInstanceOf[StructType])
       else None
-    if (IcebergTable.readMetadataOpt(location).isEmpty) {
-      // CREATE'd but not yet committed: the declared schema
-      pendingSchema.getOrElse(throw new IllegalStateException(
+    meta match {
+      case None => pendingSchema.getOrElse(throw new IllegalStateException(
         s"$ident has neither committed metadata nor a pending schema"))
-    } else {
-      val plan = IcebergTable.planFiles(location, snapshotId)
-      if (plan.files.isEmpty) {
-        // a committed snapshot with zero live data files still has a
-        // schema: the declared one if the table was CREATE'd via SQL,
-        // else the committed metadata's column names (the stated
-        // string-typed simplification of the schemas array)
-        pendingSchema.getOrElse(StructType(
-          IcebergTable.readMetadata(location).schemas.lastOption
-            .getOrElse(Seq("l_shipdate"))
+      case Some(m) =>
+        val manifests = IcebergTable.readManifestList(
+          IcebergTable.snapshotAt(m, snapshotId).manifestList)
+        val files = IcebergTable.pruneFiles(manifests, None, None, None, None)(
+          live => IcebergTable.readManifestsParallel(live.map(_.path))).files
+        if (files.isEmpty)
+          pendingSchema.getOrElse(StructType(m.schemas.lastOption.getOrElse(Seq("l_shipdate"))
             .filterNot(internalCol).map(StructField(_, StringType))))
-      } else {
-        // DETERMINISTIC schema, not first-file order: merge one file's
-        // footer per sequence era (newest era's max path first), so a
-        // column added by schema evolution appears while pre-evolution
-        // eras contribute theirs — and strip the internal lineage columns
-        // replacement files materialize, so SELECT * never exposes them.
-        // Declared-but-not-yet-written columns (ALTER TABLE ADD COLUMN
-        // before the next INSERT) overlay from the declared-schema file:
-        // no data file carries them, so every read null-fills.
-        val perEra = plan.files.groupBy(_.sequence).toSeq.sortBy(-_._1)
-          .map { case (_, fs) => fs.map(_.path).max }
-        val widened = IcebergTable.readMetadataOpt(location)
-          .map(_.widenedColumns).getOrElse(Map.empty)
-        val merged =
-          if (widened.isEmpty)
-            org.apache.spark.sql.SparkSession.active.read
-              .option("mergeSchema", "true").parquet(perEra: _*).schema
-          else {
-            // a type-promoted table's eras DISAGREE on the column's
-            // physical type (int files before the ALTER, long files
-            // after) — Spark's mergeSchema refuses that, so merge
-            // manually newest-era-first with promotion tolerance: the
-            // first (newest) type wins, a narrower legal-promotion type
-            // in an older era folds into it
-            def widerOf(a: DataType, b: DataType): Option[DataType] = (a, b) match {
-              case _ if a == b => Some(a)
-              case (IntegerType, LongType) | (LongType, IntegerType) => Some(LongType)
-              case (FloatType, DoubleType) | (DoubleType, FloatType) => Some(DoubleType)
-              case (x: DecimalType, y: DecimalType) if x.scale == y.scale =>
-                Some(if (x.precision >= y.precision) x else y)
-              case _ => None
-            }
-            val spark = org.apache.spark.sql.SparkSession.active
-            val acc = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-            perEra.foreach { p =>
-              spark.read.parquet(p).schema.fields.foreach { f =>
-                acc.get(f.name) match {
-                  case None => acc(f.name) = f
-                  case Some(prev) =>
-                    acc(f.name) = prev.copy(dataType =
-                      widerOf(prev.dataType, f.dataType).getOrElse(throw
-                        new IllegalStateException(s"column ${f.name}: era types " +
-                          s"${prev.dataType.sql} vs ${f.dataType.sql} are not a " +
-                          "legal promotion pair")))
-                }
-              }
-            }
-            StructType(acc.values.toArray)
-          }
-        val declaredExtra = pendingSchema.map(_.fields.filterNot(f =>
-          merged.fieldNames.contains(f.name) || internalCol(f.name)))
-          .getOrElse(Array.empty[StructField])
-        StructType(merged.fields.filterNot(f => internalCol(f.name)) ++ declaredExtra)
-      }
+        else {
+          val perEra = files.groupBy(_.sequence).toSeq.sortBy(-_._1)
+            .map { case (_, fs) => fs.map(_.path).max }
+          val merged = ParquetFooters.read(perEra).map(_.schema).reduceLeft(mergeEras)
+          val declaredExtra = pendingSchema.map(_.fields.filterNot(f =>
+            merged.fieldNames.contains(f.name) || internalCol(f.name)))
+            .getOrElse(Array.empty[StructField])
+          StructType(merged.fields.filterNot(f => internalCol(f.name)) ++ declaredExtra)
+        }
     }
+  }
+
+  /** Merge an older era's schema into a newer one's, newer fields first:
+    * a column whose eras disagree must differ by a legal promotion (files
+    * before ALTER COLUMN … TYPE keep the narrow type), and the wider wins. */
+  private def mergeEras(newer: StructType, older: StructType): StructType = {
+    val olderByName = older.fields.map(f => f.name -> f).toMap
+    StructType(newer.fields.map { f =>
+      olderByName.get(f.name).fold(f) { o =>
+        if (f.dataType == o.dataType || IcebergTable.promotes(o.dataType, f.dataType)) f
+        else if (IcebergTable.promotes(f.dataType, o.dataType)) o
+        else throw new IllegalStateException(s"column ${f.name}: era types " +
+          s"${f.dataType.sql} vs ${o.dataType.sql} are not a legal promotion pair")
+      }
+    } ++ older.fields.filterNot(f => newer.fieldNames.contains(f.name)))
   }
 
   override def schema(): StructType = schema0
@@ -1075,9 +1036,6 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(location, required)
 
-  private def norm(p: String): String =
-    p.replaceFirst("^file:", "").replaceFirst("^/{2,}", "/")
-
   // None: a CREATE'd table before its first commit (scans empty)
   private lazy val meta: Option[IcebergTable.TableMetadata] =
     IcebergTable.readMetadataOpt(location)
@@ -1099,9 +1057,7 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
         0L, 0L, 0L, 0L, required.size.toLong, tableCols.toLong))
       return Array.empty
     }
-    val snap = snapshotId.map(id => m.snapshots.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id"))).getOrElse(
-      IcebergTable.currentSnapshot(m))
+    val snap = IcebergTable.snapshotAt(m, snapshotId)
     val manifests = IcebergTable.readManifestList(snap.manifestList)
     val perManifest = IcebergTable.readManifestsParallel(manifests.map(_.path))
     val entries = perManifest.flatten
@@ -1111,7 +1067,7 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     // DVs keyed by the data file they reference: one lookup per planned
     // file instead of a pass over every DV
     val dvsByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-      .groupBy(e => norm(e.referencedDataFile.get))
+      .groupBy(e => GraftVectorized.cleanPath(e.referencedDataFile.get))
     val eqs = entries.filter(_.content == 2)
     // equality keys load ONCE on the driver (KB–MB grain, like the real
     // library's delete loader) and ship in the serialized factory
@@ -1127,16 +1083,11 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
       plan.manifestsRead.toLong, required.size.toLong, tableCols.toLong))
-    val blobCache = scala.collection.mutable.Map.empty[String, Puffin.BlobMetadata => Array[Byte]]
-    def blobBytes(e: IcebergTable.DataFileEntry): Array[Byte] = {
-      val slice = blobCache.getOrElseUpdate(e.path, Puffin.read(new File(e.path))._2)
-      slice(Puffin.BlobMetadata("deletion-vector-v1", Seq.empty, 0L, 0L,
-        e.contentOffset, e.contentSize))
-    }
+    val blobBytes = IcebergTable.dvBlobs()
     GraftScanPacking.packForSession(plan.files)
       .map { fs =>
         GraftInputPartition(fs.map { f =>
-          val mine = dvsByFile.getOrElse(norm(f.path), Seq.empty)
+          val mine = dvsByFile.getOrElse(GraftVectorized.cleanPath(f.path), Seq.empty)
             .filter(e => e.sequence >= f.sequence)
           GraftFileTask(f.path, f.sequence, mine.map(blobBytes).toArray)
         }.toArray): InputPartition
@@ -1276,8 +1227,9 @@ object GraftVectorized {
     * few ms), and a scan opens one reader per data file. It carries the
     * converter flags at their SQLConf defaults under a UTC session; every
     * caller that sets a key works on a copy ([[hadoopConf]]), so the
-    * shared instance is only ever read. */
-  private lazy val baseConf: Configuration = {
+    * shared instance is only ever read (footer reads use it as-is,
+    * [[ParquetFooters]]). */
+  private[iceberg] lazy val sharedConf: Configuration = {
     val conf = new org.apache.hadoop.mapred.JobConf()
     conf.set("parquet.read.support.class",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
@@ -1294,14 +1246,10 @@ object GraftVectorized {
     * `JobConf`, so the task context built over it uses it as-is instead of
     * copying it again. */
   def hadoopConf(): org.apache.hadoop.mapred.JobConf =
-    new org.apache.hadoop.mapred.JobConf(baseConf)
+    new org.apache.hadoop.mapred.JobConf(sharedConf)
 
-  def fileSchemaOf(path: String): MessageType = {
-    val hPath = new Path("file:" + cleanPath(path))
-    // footer reads only read the configuration: the shared one serves
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, baseConf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
+  def fileSchemaOf(path: String): MessageType =
+    ParquetFooters.withFooter(path)(_.getFileMetaData.getSchema)
 
   /** Resolve the required schema against ONE file's physical schema:
     * RENAMED columns re-request the newest ancestor name the file carries
@@ -1331,39 +1279,14 @@ object GraftVectorized {
             .map(old => f0.copy(name = old))
             .getOrElse(f0) // absent everywhere: stays a null-filled vector
         if (!widened.contains(f0.name) || !phys.contains(f.name)) f
-        else narrowTypeOf(msg, f.name, f.dataType)
-          .map(t => f.copy(dataType = t)).getOrElse(f)
-      })
-    }
-  }
-
-  /** The NARROW Catalyst type to request from a pre-promotion file for a
-    * widened column, or None when the file already carries the wide type
-    * (or anything unexpected — then the required type reads as-is). Only
-    * the spec's legal promotion pairs map. */
-  private def narrowTypeOf(msg: MessageType, name: String,
-                           required: DataType): Option[DataType] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val t = msg.getFields.asScala.find(_.getName == name) match {
-      case Some(x) if x.isPrimitive => x.asPrimitiveType()
-      case _ => return None
-    }
-    (t.getPrimitiveTypeName, required) match {
-      case (INT32, LongType)
-          if t.getLogicalTypeAnnotation == null ||
-            t.getLogicalTypeAnnotation
-              .isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-        Some(IntegerType)
-      case (FLOAT, DoubleType) => Some(FloatType)
-      case (_, d: DecimalType) =>
-        t.getLogicalTypeAnnotation match {
-          case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
-              if dec.getScale == d.scale && dec.getPrecision < d.precision =>
-            Some(DecimalType(dec.getPrecision, dec.getScale))
-          case _ => None
+        else {
+          // a file written before the promotion holds the narrow type
+          val fileType = new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter()
+            .convert(new MessageType(msg.getName, msg.getType(msg.getFieldIndex(f.name)))).head.dataType
+          if (IcebergTable.promotes(fileType, f.dataType)) f.copy(dataType = fileType) else f
         }
-      case _ => None
+      })
     }
   }
 
@@ -1654,32 +1577,20 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
 }
 
 /** Driver-side helper: read one INT64 column of a (small) parquet file
-  * through the same Group machinery — used to load equality-delete key
-  * files at planning time without spinning a Spark job inside the
+  * through the scan's vectorized decoder — used to load equality-delete
+  * key files at planning time without spinning a Spark job inside the
   * planner. */
 private[iceberg] object GraftParquetRows {
   def readLongColumn(path: String, column: String): Array[Long] = {
-    val conf = GraftVectorized.hadoopConf() // set below: a private copy
-    val hPath = new Path("file:" + path.replaceFirst("^/{2,}", "/"))
-    val schema: MessageType = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    require(schema.containsField(column), s"$path has no column $column")
-    val projection = new MessageType(schema.getName,
-      schema.getType(schema.getFieldIndex(column)))
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val reader = ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf).build()
-    val idx = projection.getFieldIndex(column)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    try {
-      var g = reader.read()
-      while (g != null) {
-        if (g.getFieldRepetitionCount(idx) > 0) out += g.getLong(idx, 0)
-        g = reader.read()
-      }
-    } finally reader.close()
-    out.toArray
+    require(GraftVectorized.fileSchemaOf(path).containsField(column), s"$path has no column $column")
+    val r = GraftVectorized.open(path, StructType(Seq(StructField(column, LongType))))
+    val out = Array.newBuilder[Long]
+    try while (r.nextBatch()) {
+      val b = r.resultBatch()
+      val v = b.column(0)
+      (0 until b.numRows).foreach(i => if (!v.isNullAt(i)) out += v.getLong(i))
+    } finally r.close()
+    out.result()
   }
 }
 

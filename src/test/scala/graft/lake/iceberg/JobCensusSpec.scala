@@ -1,0 +1,99 @@
+package graft.lake.iceberg
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkSpec
+import graft.tables.Tables
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+/** How many Spark jobs a statement through [[GraftCatalog]] launches.
+  * Learning a table's schema or a written file's stats reads parquet
+  * footers on the driver ([[ParquetFooters]]), so only the data work of a
+  * statement runs as jobs: an INSERT's write, a SELECT's scan. */
+class JobCensusSpec extends SparkSpec {
+
+  private def lineitem = Tables.lineitem(spark, sf0001)
+
+  private val CensusKey = "graft.census.id"
+
+  /** The Spark jobs `body` launches from this thread (and the threads it
+    * starts, which inherit the thread's local properties). */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(CensusKey) == id)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(CensusKey, id)
+    try body
+    finally {
+      sc.setLocalProperty(CensusKey, null)
+      GraftListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  /** A catalog over a fresh warehouse with namespace `lake`. */
+  private def warehouse(tag: String): (String, String) = {
+    val w = Files.createTempDirectory(s"graft_census_${tag}_").toString
+    IcebergCatalog.createNamespace(w, "lake")
+    val cat = s"graft_census_$tag"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
+    (w, cat)
+  }
+
+  test("INSERT runs only its write's jobs; SET TBLPROPERTIES runs none") {
+    val (w, cat) = warehouse("ins")
+    IcebergTable.append(spark, lineitem, IcebergCatalog.createTable(w, "lake", "li"))
+    lineitem.createOrReplaceTempView("graft_census_src")
+    val insert = jobs(spark.sql(
+      s"INSERT INTO $cat.lake.li SELECT * FROM graft_census_src WHERE l_orderkey % 5 = 0"))
+    assert(insert <= 2, s"INSERT ran $insert jobs")
+    val props = jobs(spark.sql(s"ALTER TABLE $cat.lake.li SET TBLPROPERTIES ('census' = 'on')"))
+    assert(props == 0, s"SET TBLPROPERTIES ran $props jobs")
+    val delete = jobs(spark.sql(s"DELETE FROM $cat.lake.li WHERE l_orderkey % 7 = 3"))
+    val update = jobs(spark.sql(
+      s"UPDATE $cat.lake.li SET l_quantity = l_quantity + 1 WHERE l_orderkey % 11 = 2"))
+    info(s"jobs: INSERT $insert, SET TBLPROPERTIES $props, DELETE $delete, UPDATE $update")
+  }
+
+  test("a SELECT over DVs and equality deletes runs no schema job") {
+    val (w, cat) = warehouse("sel")
+    val loc = IcebergCatalog.createTable(w, "lake", "mor")
+    IcebergTable.append(spark, lineitem, loc)
+    IcebergTable.appendDvPuffin(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 6L)
+    IcebergTable.appendEqualityDeletes(spark,
+      lineitem.filter(pmod(col("l_orderkey"), lit(10L)) === 3L).select("l_orderkey").distinct(), loc)
+    val select = jobs(spark.sql(
+      s"SELECT count(*), sum(l_quantity) FROM $cat.lake.mor WHERE l_linenumber > 1").collect())
+    info(s"jobs: SELECT $select")
+    // the same statement ran 3 jobs with the per-statement mergeSchema job
+    assert(select <= 2, s"SELECT ran $select jobs")
+  }
+
+  test("resolving a widened table's schema over three eras runs no job") {
+    val (w, cat) = warehouse("eras")
+    val loc = IcebergCatalog.createTable(w, "lake", "eras")
+    val thirds = (0L until 3L).map(r => pmod(col("l_orderkey"), lit(3L)) === r)
+    IcebergTable.append(spark, lineitem.filter(thirds(0)), loc)
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
+    for (t <- thirds.tail)
+      IcebergTable.append(spark,
+        lineitem.filter(t).withColumn("l_linenumber", col("l_linenumber").cast("long")), loc)
+    assert(IcebergTable.planFiles(loc).files.map(_.sequence).distinct.size == 3)
+    var schema: org.apache.spark.sql.types.StructType = null
+    val resolve = jobs { schema = spark.table(s"$cat.lake.eras").schema }
+    assert(resolve == 0, s"schema resolution ran $resolve jobs")
+    assert(schema("l_linenumber").dataType == LongType)
+    assert(schema.fieldNames.toSeq == lineitem.columns.toSeq)
+  }
+}
