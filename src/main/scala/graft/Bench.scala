@@ -1218,8 +1218,8 @@ object Bench {
     // SQL-front-door read vs library read on the same fixture (default ON;
     // SPARK_GRAFT_SQLREAD_BENCH=0 disables): the r16 verdict's vectorized-
     // reader "Done" datapoint — sql_vs_lib_x near 1.0 means the DSv2 path
-    // costs what Spark's own FileScan costs; the MOR pair measures the
-    // delete-resolving columnar scan against readMorUnified.
+    // costs what Spark's own FileScan costs; the MOR pair times the SQL
+    // read and readMorUnified, both through the delete-resolving scan.
     val sqlReadBench =
       if (!sys.env.get("SPARK_GRAFT_SQLREAD_BENCH").contains("0") &&
           phaseGate("sqlread_bench", 60.0)) {

@@ -56,14 +56,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * messages enter the manifest, stray files from aborted attempts are
   * deleted at commit by directory listing (never opened — a truncated
   * kill-leftover cannot fail the commit). */
-private[iceberg] class GraftRowLevelOperationBuilder(location: String,
+private[iceberg] class GraftRowLevelOperationBuilder(table: GraftSqlTable, location: String,
                                                      info: RowLevelOperationInfo)
     extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation =
-    new GraftRowLevelOperation(location, info.command)
+    new GraftRowLevelOperation(table, location, info.command)
 }
 
-private[iceberg] class GraftRowLevelOperation(location: String,
+private[iceberg] class GraftRowLevelOperation(table: GraftSqlTable, location: String,
                                               cmd: RowLevelOperation.Command)
     extends RowLevelOperation with SupportsDelta {
 
@@ -71,11 +71,9 @@ private[iceberg] class GraftRowLevelOperation(location: String,
 
   override def description(): String = s"graft-delta $cmd $location"
 
-  private val table = new GraftSqlTable(s"graft-rowlevel $location", location, None)
-
-  /** The operation's scan is the table's own scan (same pruning, same
-    * delete-state resolution) — `_file`/`_pos` arrive via pruneColumns
-    * like any metadata column. */
+  /** The operation's scan is the statement's table's own scan (same
+    * schema, same pruning, same delete-state resolution) — `_file`/`_pos`
+    * arrive via pruneColumns like any metadata column. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     table.newScanBuilder(options)
 
@@ -393,24 +391,26 @@ private[iceberg] object GraftRowParquet {
   }
 }
 
-/** The `_file`/`_pos` metadata columns ([[SupportsMetadataColumns]]) —
-  * the row coordinates the vectorized reader synthesizes, and the rowId
-  * the delta operation keys its deletes on (Iceberg's own Spark
-  * integration exposes the same pair). */
+/** The metadata columns ([[SupportsMetadataColumns]]): `_file`/`_pos`,
+  * the row coordinates the vectorized reader synthesizes and the rowId the
+  * delta operation keys its deletes on, and the v3 row-lineage pair
+  * `_row_id`/`_last_updated_sequence_number` (Iceberg's own Spark
+  * integration exposes all four this way). */
 private[iceberg] object GraftMetaColumns {
+  private def column(n: String, t: DataType, nullable: Boolean, doc: String): MetadataColumn =
+    new MetadataColumn {
+      override def name(): String = n
+      override def dataType(): DataType = t
+      override def isNullable: Boolean = nullable
+      override def comment(): String = doc
+    }
+
   val columns: Array[MetadataColumn] = Array(
-    new MetadataColumn {
-      override def name(): String = "_file"
-      override def dataType(): DataType = StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "data file path of the row"
-    },
-    new MetadataColumn {
-      override def name(): String = "_pos"
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = false
-      override def comment(): String = "row position in its data file"
-    })
+    column("_file", StringType, nullable = false, "data file path of the row"),
+    column("_pos", LongType, nullable = false, "row position in its data file"),
+    column("_row_id", LongType, nullable = true, "v3 row lineage: the row's stable id"),
+    column("_last_updated_sequence_number", LongType, nullable = true,
+      "v3 row lineage: sequence number of the commit that last wrote the row"))
 }
 
 /** Single source of truth for the catalog's declared partition transform —

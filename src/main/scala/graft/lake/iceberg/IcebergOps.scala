@@ -104,7 +104,8 @@ object IcebergOps {
   def morRead(spark: SparkSession, lineitem: DataFrame,
               monthLo: String = "1997-01", monthHi: String = "1997-03"): DataFrame = {
     val loc = morTableFor(spark, lineitem)
-    val (live, plan, deletes) = IcebergTable.readMor(spark, loc, Some(monthLo), Some(monthHi))
+    val (live, plan, deletes, _, _) =
+      IcebergTable.readMorUnified(spark, loc, Some(monthLo), Some(monthHi))
     live
       .filter(shipMonthRange(monthLo, monthHi))
       .groupBy(col("l_returnflag"))
@@ -336,15 +337,16 @@ object IcebergOps {
     * format — the delete form the reference's DV corpus is built on
     * (`test_dv_resolution_strategies.py:139` benchmark_positional_join):
     * a content=1 file of real (file_path, row_index) pairs is committed
-    * against the two data snapshots, and the scan resolves it as a
-    * positional anti-join. The oracle can check every number because the
+    * against the two data snapshots, and the scan skips its positions
+    * while reading. The oracle can check every number because the
     * deleted POSITIONS were chosen by a predicate over the immutable
     * files — so the surviving rows are exactly the predicate's complement,
     * whatever physical positions they occupy. */
   def posDvRead(spark: SparkSession, lineitem: DataFrame,
                 monthLo: String = "1997-01", monthHi: String = "1997-03"): DataFrame = {
     val loc = posDvTableFor(spark, lineitem)
-    val (live, plan, dvs) = IcebergTable.readMorPositional(spark, loc, Some(monthLo), Some(monthHi))
+    val (live, plan, _, dvs, _) =
+      IcebergTable.readMorUnified(spark, loc, Some(monthLo), Some(monthHi))
     live
       .filter(shipMonthRange(monthLo, monthHi))
       .groupBy(col("l_returnflag"))
@@ -944,8 +946,9 @@ object IcebergOps {
     * Puffin file ([[IcebergTable.appendDvPuffin]] — spec `deletion-vector-v1`
     * blobs with CRC framing, v3 manifest fields `referenced_data_file` /
     * `content_offset` / `content_size_in_bytes`), then resolved by
-    * [[IcebergTable.readMorDv]] (executor-side blob decode → the same
-    * sequence-scoped positional anti-join as v2). One output row per data
+    * [[IcebergTable.readMorUnified]] (each blob decoded in the scan task
+    * that reads its data file, positions skipped while reading, exactly
+    * as v2 position deletes are). One output row per data
     * file, every column independently recomputable by the oracle:
     * manifest-carried blob size/offset (real bytes on disk — the oracle
     * rebuilds them from the RoaringFormatSpec arithmetic over the
@@ -954,7 +957,7 @@ object IcebergOps {
     * actual DV-merged scan. */
   def dvPuffinRead(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val loc = dvTableFor(spark, lineitem)
-    val (live, plan, dvs) = IcebergTable.readMorDv(spark, loc)
+    val (live, plan, _, _, dvs) = IcebergTable.readMorUnified(spark, loc)
     val monthOf = plan.files.map(f => f.path -> f.partition).toMap
     val fileRows = plan.files.map(f => (f.partition, f.sequence, f.recordCount))
     val (fm, payloadOf) = Puffin.read(new java.io.File(dvs.head.path))
@@ -1494,7 +1497,7 @@ object IcebergOps {
     val all = dv.map(_._2)
     // the one data read: waves overlap, so union cardinality needs the
     // real DV-merged scan (everything else is manifest arithmetic)
-    val live = IcebergTable.readMorDv(spark, loc)._1.count()
+    val live = IcebergTable.readMorUnified(spark, loc)._1.count()
     val payloadAll = all.map(_.contentSize).sum
     val lcAll = ladder(all)
     val allRow = ("4_all", all.size.toLong, dataRows - live,
@@ -1677,13 +1680,13 @@ object IcebergOps {
     * that is a scale-killer). Positional parquet deletes contribute their
     * own (file_path, pos) rows gated by the broadcast target-file map
     * (live ∧ data_seq ≤ delete_seq — the spec's position-delete rule,
-    * matching this engine's readers readMorPositional/readMorUnified); equality deletes —
+    * matching the scan's resolution, [[GraftScan]]); equality deletes —
     * strictly-older per the spec — resolve
     * keys to positions with ONE bounded scan of the strictly-older
     * candidate data files semi-joined against the broadcast key table.
     * Mechanics for DVs: each distinct Puffin blob is
     * decoded ONCE executor-side (driver ships only the KB-grain
-    * compressed bytes, the [[IcebergTable.readMorDv]] pattern) tagged
+    * compressed bytes, as [[GraftScan]] ships them) tagged
     * with the step interval(s) during which it rides in a head manifest
     * list; per (file, position) the covering intervals merge — that is
     * the union dedup — and emit ±1 boundary events; per-step deleted
@@ -1780,7 +1783,7 @@ object IcebergOps {
     // union of all three delete forms resolved to (file, position, live
     // intervals) rows:
     //  - v3 Puffin DVs: driver ships KB-grain compressed blob bytes,
-    //    positions explode executor-side (the readMorDv pattern);
+    //    positions explode executor-side;
     //  - v2 positional parquet: the delete files' own (file_path, pos)
     //    rows, each gated through the broadcast file map (target live ∧
     //    data_seq ≤ delete_seq — the spec's position-delete rule, shared
@@ -1824,7 +1827,7 @@ object IcebergOps {
                 (sd, ie) <- bSrc.value.get(normPath(src))
                 (idx, qf, lf) <- bGate.value.get(normPath(f0))
                 // spec gate for POSITION deletes: data_seq <= delete_seq —
-                // matches the readers (readMorPositional/readMorUnified);
+                // matches the scan's (GraftScan);
                 // the old strict < silently dropped a delete committed at
                 // the same sequence as its target data file (ADVICE r15)
                 if qf <= sd
@@ -1974,7 +1977,7 @@ object IcebergOps {
     }
     val before = posEntries(preHead.manifestList)
     val after = posEntries(IcebergTable.currentSnapshot(meta).manifestList)
-    val (live, _, _) = IcebergTable.readMorDv(spark, loc, Some(monthLo), Some(monthHi))
+    val live = IcebergTable.readMorUnified(spark, loc, Some(monthLo), Some(monthHi))._1
     live
       .filter(shipMonthRange(monthLo, monthHi))
       .groupBy(col("l_returnflag"))
@@ -2028,7 +2031,7 @@ object IcebergOps {
     val after = posEntries(IcebergTable.currentSnapshot(meta).manifestList)
     require(after.forall(_.referencedDataFile.isDefined),
       "pos-only rewrite left non-DV positional entries behind")
-    val (live, _, _) = IcebergTable.readMorDv(spark, loc, Some(monthLo), Some(monthHi))
+    val live = IcebergTable.readMorUnified(spark, loc, Some(monthLo), Some(monthHi))._1
     live
       .filter(shipMonthRange(monthLo, monthHi))
       .groupBy(col("l_returnflag"))
@@ -2082,7 +2085,7 @@ object IcebergOps {
       IcebergTable.currentSnapshot(meta).manifestList)
     val dvs = IcebergTable.readManifestsParallel(manifests.map(_.path)).flatten
       .filter(_.content == 1)
-    val (live, _, _) = IcebergTable.readMorDv(spark, loc, withRowIds = true)
+    val live = IcebergTable.withLineage(IcebergTable.readMorUnified(spark, loc)._1)
     // ONE pass over the MOR read (it used to run twice — a global lineage
     // census then the windowed aggregate, each re-paying the DV-merged
     // scan): grouping sets ((flag), ()) compute both grains in a single
@@ -2145,7 +2148,7 @@ object IcebergOps {
     val (cowBytes, colBytes, cowFiles, colFiles) =
       graft.plans.Memo.memoize(lineitem, "iceberg.table.update.exec") {
         val dir = Files.createTempDirectory("graft_colupd_exec_").toString
-        val (live, _, _) = IcebergTable.readMorDv(spark, loc, withRowIds = true)
+        val live = IcebergTable.withLineage(IcebergTable.readMorUnified(spark, loc)._1)
         live.drop("_row_id", "_last_updated_sequence_number")
           .withColumn("p_month", date_format(col("l_shipdate"), "yyyy-MM"))
           .repartition(col("p_month"))
@@ -2531,8 +2534,9 @@ object IcebergOps {
     val waveCum = dv.filter(e => e._1 >= firstWave && e._1 < foldSid).map(_._2)
       .map(_.contentSize).sum
     // the one data read: live rows from the real DV-merged scan (every DV
-    // applies; fold ⊇ waves, so the anti-join's union is the fold set)
-    val liveReal = IcebergTable.readMorDv(spark, loc)._1.count()
+    // applies; fold ⊇ waves, so the union of skipped positions is the
+    // fold set)
+    val liveReal = IcebergTable.readMorUnified(spark, loc)._1.count()
     val foldRow = (f"${n + 1}_fold", fold.size.toLong, fold.map(_.recordCount).sum,
       fold.groupBy(_.referencedDataFile.get).values.map(_.size).max.toLong,
       fold.map(_.contentSize).sum, waveCum,
@@ -2703,7 +2707,8 @@ object IcebergOps {
     * ([[IcebergTable.read]] → Spark's own FileScan) on the same fixture
     * table — the r16 verdict's "SQL read within ~1.2× of the library
     * read" datapoint. The MOR pair repeats it on the delete-carrying
-    * table (SQL row-path reader vs [[IcebergTable.readMorUnified]]).
+    * table (SQL vs [[IcebergTable.readMorUnified]], which read through
+    * the same scan).
     * Returns (sqlSec, libSec, morSqlSec, morLibSec) medians of `reps`. */
   def sqlReadBench(spark: SparkSession, lineitem: DataFrame,
                    reps: Int = 3): (Double, Double, Double, Double) = {

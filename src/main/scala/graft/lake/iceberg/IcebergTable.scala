@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType,
   LongType, TimestampNTZType, TimestampType}
@@ -216,8 +217,21 @@ object IcebergTable {
     file.length()
   }
 
-  private def readAvro(file: File): Seq[GenericRecord] = {
-    val r = new DataFileReader[GenericRecord](file, new GenericDatumReader[GenericRecord]())
+  /** Writer schemas by their JSON text, one instance per JVM. Avro's
+    * `FastReaderBuilder` caches a reader per schema instance in the
+    * `GenericData.get()` singleton and, through values that hold their
+    * keys, never lets one go: decoding against the schema every file
+    * header parses anew grew the heap with each manifest read. */
+  private val writerSchemas = new java.util.concurrent.ConcurrentHashMap[String, Schema]()
+
+  /** A datum reader that decodes against the interned writer schema. */
+  private class InternedSchemaReader extends GenericDatumReader[GenericRecord] {
+    override def setSchema(writer: Schema): Unit =
+      super.setSchema(writerSchemas.computeIfAbsent(writer.toString, _ => writer))
+  }
+
+  private[iceberg] def readAvro(file: File): Seq[GenericRecord] = {
+    val r = new DataFileReader[GenericRecord](file, new InternedSchemaReader)
     try r.iterator().asScala.toVector finally r.close()
   }
 
@@ -688,7 +702,7 @@ object IcebergTable {
 
   /** Compaction rewrite (the maintenance op the reference's compaction
     * studies model): materialize the current MOR view — data files with
-    * every equality delete applied — as a fresh set of month-partitioned
+    * every delete applied — as a fresh set of month-partitioned
     * data files, and commit a snapshot whose manifest list contains ONLY
     * the rewritten manifest ("replace" semantics: old data AND delete
     * files drop out of the live tree together; they stay on disk for
@@ -697,25 +711,16 @@ object IcebergTable {
     * converted back into clean scans. */
   def rewriteCompact(spark: SparkSession, location: String,
                      materializeLineage: Boolean = false): Long = {
-    val prev = readMetadata(location)
-    val readAt = prev.currentSnapshotId
+    val readAt = readMetadata(location).currentSnapshotId
     // the GENERAL resolution: materializing through a partial reader
     // resurrects rows deleted by the forms it skips (DV-lifecycle spec).
     // materializeLineage = the spec's row-lineage obligation for rewrites:
     // surviving rows carry their _row_id as an explicit column in the
     // rewritten files (implicit first_row_id+position ids would be
-    // destroyed by the rewrite's re-positioning); v3-DV tables only —
-    // the id-attaching read resolves that delete form.
-    val live =
-      if (materializeLineage) {
-        val all = readManifestList(currentSnapshot(prev).manifestList)
-          .flatMap(m => readManifest(m.path))
-        require(all.forall(e =>
-          e.content == 0 || (e.content == 1 && e.referencedDataFile.isDefined)),
-          "materializeLineage supports v3 DV tables only")
-        readMorDv(spark, location, withRowIds = true)._1
-      } else readMorUnified(spark, location)._1
-    replaceFrom(location, readAt, writeDataSnapshot(spark, live, location))
+    // destroyed by the rewrite's re-positioning).
+    val live = readMorUnified(spark, location)._1
+    replaceFrom(location, readAt, writeDataSnapshot(spark,
+      if (materializeLineage) withLineage(live) else live, location))
   }
 
   /** Commit `files` as a "replace" snapshot of everything live at `readAt`,
@@ -1942,45 +1947,6 @@ object IcebergTable {
     }.snapshotId
   }
 
-  /** MOR read applying POSITION deletes (content = 1): data rows carry
-    * their provenance ((`_metadata.file_path`, `row_index`) — the same
-    * coordinates the delete file recorded against the immutable files), and
-    * deletion is one anti-join on that pair, scoped like equality deletes
-    * to delete sequence > data-file sequence. The join is a plain shuffle
-    * join (delete rows are data-grain — AQE broadcasts when small), the
-    * distributed form of the reference's positional-join resolution
-    * strategy. */
-  def readMorPositional(spark: SparkSession, location: String,
-                        monthLo: Option[String] = None, monthHi: Option[String] = None)
-      : (DataFrame, ScanPlan, Seq[DataFileEntry]) = {
-    val meta = readMetadata(location)
-    val manifests = readManifestList(currentSnapshot(meta).manifestList)
-    val posDeletes = readManifestsParallel(manifests.map(_.path)).flatten.filter(_.content == 1)
-    val plan = planFiles(location, None, monthLo, monthHi)
-    require(plan.files.nonEmpty, "scan planned zero files")
-    val parts = plan.files.groupBy(_.sequence).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      var df = spark.read.parquet(fs.map(_.path): _*)
-      // spec scoping for POSITION deletes: data_seq <= delete_seq (not the
-      // strict < equality deletes use) — a writer may commit a data file
-      // and a position delete at the same sequence (MOR UPDATE does), and
-      // matching is (file_path, pos)-keyed so a same-sequence delete that
-      // references other files is harmless.
-      val applicable = posDeletes.filter(_.sequence >= seq)
-      if (applicable.nonEmpty) {
-        val dv = spark.read.parquet(applicable.map(_.path): _*)
-          .select(col("file_path").as("dv_file"), col("pos").as("dv_pos"))
-        df = df
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index").cast("long"))
-          .join(dv, col("__file") === col("dv_file") && col("__pos") === col("dv_pos"),
-            "left_anti")
-          .drop("__file", "__pos")
-      }
-      df
-    }
-    (parts.reduce(_ unionByName _), plan, posDeletes)
-  }
-
   /** Commit an Iceberg v3 DELETION-VECTOR snapshot: the same positional
     * delete set [[appendPositionDeletes]] writes as v2 (file_path, pos)
     * parquet rows, stored instead as ONE Roaring bitmap per data file
@@ -2391,7 +2357,7 @@ object IcebergTable {
     * as a column in the new files — re-positioning destroys the implicit
     * firstRowId+position form) and takes the update's sequence as its
     * `_last_updated_sequence_number`, which readers derive from the new
-    * file's manifest sequence ([[readMorDv]] withRowIds). The paired DV
+    * file's manifest sequence ([[withLineage]]). The paired DV
     * shares the new data file's sequence — exactly why positional scoping
     * is data_seq <= delete_seq (matching is path-keyed, so the DV can
     * never touch the replacement file it ships with).
@@ -2465,198 +2431,44 @@ object IcebergTable {
     } finally victims.unpersist()
   }
 
-  /** MOR read resolving v3 DELETION VECTORS: delete manifests point at
-    * Puffin blobs; the driver reads each blob's compressed bytes (KB-grain
-    * metadata IO, footer-verified CRC), ships them to executors, and the
-    * positions EXPLODE distributedly (a typed flatMap decode — the one
-    * data-grain step stays in the cluster). Resolution is then the same
-    * sequence-scoped positional anti-join as [[readMorPositional]] — the
-    * v2 and v3 delete representations converge to one plan shape. */
-  def readMorDv(spark: SparkSession, location: String,
-                monthLo: Option[String] = None, monthHi: Option[String] = None,
-                snapshotId: Option[Long] = None,
-                // v3 row lineage: attach each surviving row's implicit
-                // _row_id (file first_row_id + position) — the read a
-                // lineage-preserving compaction materializes through
-                withRowIds: Boolean = false)
-      : (DataFrame, ScanPlan, Seq[DataFileEntry]) = {
-    val snap = snapshotAt(readMetadata(location), snapshotId)
-    val manifests = readManifestList(snap.manifestList)
-    val dvEntries = readManifestsParallel(manifests.map(_.path)).flatten
-      .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-    val blobBytes = dvBlobs()
-    val plan = planFiles(location, snapshotId, monthLo, monthHi)
-    require(plan.files.nonEmpty, "scan planned zero files")
-    import org.apache.spark.sql.Encoders
-    val tupleEnc = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
-    val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val parts = plan.files.groupBy(_.sequence).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      var df = spark.read.parquet(fs.map(_.path): _*)
-      // position-delete scoping is data_seq <= delete_seq per the spec
-      // (see readMorPositional) — matching is path-keyed, so a
-      // same-sequence DV referencing other files never over-deletes
-      val applicable = dvEntries.filter(_.sequence >= seq)
-      if (applicable.nonEmpty || withRowIds) {
-        // referenced-data-file carries the manifest-normalized path (no
-        // "file:" scheme, input_file_name() form) — use the same source
-        df = df
-          .withColumn("__file", regexp_replace(input_file_name(), "^file:", ""))
-          .withColumn("__pos", col("_metadata.row_index").cast("long"))
-      }
-      if (withRowIds) {
-        require(fs.forall(_.firstRowId >= 0),
-          "withRowIds on a table whose data files predate row-id assignment")
-        val idMap = spark.createDataset(fs.map(f => (f.path, f.firstRowId)))(pairEnc)
-          .toDF("__file", "__first")
-        df = df.join(broadcast(idMap), Seq("__file"))
-        // spec §Row Lineage: a MATERIALIZED _row_id column (written by a
-        // lineage-preserving compaction) wins over the re-derived
-        // firstRowId + position — recomputing unconditionally would
-        // silently relabel every surviving row on the SECOND compaction
-        // (or any withRowIds read of an already-compacted table), exactly
-        // the violation the lineage rules exist to prevent.
-        df = (if (df.columns.contains("_row_id"))
-                df.withColumn("_row_id",
-                  coalesce(col("_row_id"), col("__first") + col("__pos")))
-              else df.withColumn("_row_id", col("__first") + col("__pos")))
-          .drop("__first")
-        // v3 row lineage, second field: _last_updated_sequence_number —
-        // absent/null in the file means "inherit the manifest entry's data
-        // sequence number" (the spec's derivation). An updateMorDv
-        // replacement file's rows were last updated at ITS sequence, so the
-        // same inheritance yields the update sequence with nothing
-        // materialized; a materialized column, if a writer ever adds one,
-        // wins via coalesce like _row_id.
-        df = (if (df.columns.contains("_last_updated_sequence_number"))
-                df.withColumn("_last_updated_sequence_number",
-                  coalesce(col("_last_updated_sequence_number"), lit(seq)))
-              else df.withColumn("_last_updated_sequence_number", lit(seq)))
-      }
-      if (applicable.nonEmpty) {
-        val rows = applicable.map(e => (e.referencedDataFile.get, blobBytes(e)))
-        val dv = spark.createDataset(rows)(tupleEnc)
-          .flatMap { case (f, b) => RoaringDv.deserializeDvBlob(b).map(p => (f, p)) }(pairEnc)
-          .toDF("dv_file", "dv_pos")
-        df = df.join(dv, col("__file") === col("dv_file") && col("__pos") === col("dv_pos"),
-          "left_anti")
-      }
-      if (applicable.nonEmpty || withRowIds) df = df.drop("__file", "__pos")
-      df
-    }
-    // allowMissingColumns: an UPDATE table's replacement files carry a
-    // materialized _row_id column older sequence groups lack — null-filled
-    // here on a plain read; a withRowIds read computes it for every group.
-    (parts.reduce(_.unionByName(_, allowMissingColumns = true)), plan, dvEntries)
-  }
-
-  /** MOR read applying EVERY delete form in one scan — the general case
-    * (spec: a snapshot's delete set may mix content=1 positional parquet
-    * files, content=1 v3 deletion vectors — distinguished by
-    * `referenced_data_file` — and content=2 equality files; a real reader
-    * resolves all of them): data files group by manifest sequence
-    * (metadata-grain), each group anti-joined against newer positional
-    * deletes on the (file_path, row ordinal) pair, then against newer DV
-    * positions (Puffin blobs decoded in a distributed flatMap, same shape
-    * as [[readMorDv]]), then against newer equality deletes on the key —
-    * each scoped to sequence > the data file's, per the spec. This is the
-    * resolution the COMPACTION rewrites must use: materializing through a
-    * partial reader silently resurrects rows deleted by the forms it
-    * skips (caught by the DV-lifecycle spec). Returns live rows +
-    * planning census + the three delete-entry sets. */
+  /** Merge-on-read: the live rows of the current snapshot, with every
+    * delete form its manifests carry applied (spec: a snapshot's delete
+    * set may mix content=1 positional parquet files, content=1 v3
+    * deletion vectors — distinguished by `referenced_data_file` — and
+    * content=2 equality files). The rows come from the table's own scan
+    * ([[GraftScan]]), the read path SQL takes too: positions and keys
+    * apply inside the columnar reader, positional forms to data files at or
+    * below their sequence and equality deletes to strictly older ones, per
+    * the spec. The DataFrame is pinned to the snapshot this call read
+    * ([[GraftSnapshotPin]]): the manifests are read once, here, and a
+    * later commit does not change what it returns. Its columns are the
+    * table's current schema, and the inclusive `yyyy-MM` month bounds
+    * become the scan's shipdate bounds. Building it runs no Spark job.
+    * This is the read the COMPACTION rewrites materialize: a partial
+    * resolution would resurrect the rows deleted by the forms it skips
+    * (the DV-lifecycle spec). Returns the live rows, the planning census
+    * and the equality, v2 position-delete and DV entry sets; row lineage
+    * is [[withLineage]]. */
   def readMorUnified(spark: SparkSession, location: String,
                      monthLo: Option[String] = None, monthHi: Option[String] = None)
       : (DataFrame, ScanPlan, Seq[DataFileEntry], Seq[DataFileEntry], Seq[DataFileEntry]) = {
-    val meta = readMetadata(location)
-    val manifests = readManifestList(currentSnapshot(meta).manifestList)
-    val all = readManifestsParallel(manifests.map(_.path)).flatten
-    val eqDeletes = all.filter(_.content == 2)
-    val (dvEntries, posDeletes) = all.filter(_.content == 1)
-      .partition(_.referencedDataFile.isDefined)
-    val blobBytes = dvBlobs()
-    import org.apache.spark.sql.Encoders
-    val tupleEnc = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
-    val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val plan = planFiles(location, None, monthLo, monthHi)
-    require(plan.files.nonEmpty, "scan planned zero files")
-    val parts = plan.files.groupBy(_.sequence).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      var df = spark.read.parquet(fs.map(_.path): _*)
-      // positional forms scope at data_seq <= delete_seq (spec; path-keyed
-      // matching makes a same-sequence entry harmless); equality deletes
-      // below stay STRICTLY newer, also per the spec.
-      val posApp = posDeletes.filter(_.sequence >= seq)
-      val dvApp = dvEntries.filter(_.sequence >= seq)
-      // Row coordinates come from _metadata, materialized ONCE before any
-      // join: input_file_name() is illegal past the first anti-join (the
-      // plan then has two file sources), and _metadata itself resolves
-      // only against the scan, not through a join.
-      if (posApp.nonEmpty || dvApp.nonEmpty) {
-        df = df
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index").cast("long"))
-      }
-      if (posApp.nonEmpty) {
-        val dv = spark.read.parquet(posApp.map(_.path): _*)
-          .select(col("file_path").as("dv_file"), col("pos").as("dv_pos"))
-        df = df.join(dv, col("__file") === col("dv_file") && col("__pos") === col("dv_pos"),
-          "left_anti")
-      }
-      if (dvApp.nonEmpty) {
-        val rows = dvApp.map(e => (e.referencedDataFile.get, blobBytes(e)))
-        val dv = spark.createDataset(rows)(tupleEnc)
-          .flatMap { case (f, b) => RoaringDv.deserializeDvBlob(b).map(p => (f, p)) }(pairEnc)
-          .toDF("dvb_file", "dvb_pos")
-        // referenced_data_file carries the manifest "///" form (from
-        // input_file_name); the scan's _metadata.file_path is
-        // "file:/..." (single slash) — rewrite the scheme to the
-        // manifest form so the coordinates compare equal.
-        df = df.join(dv,
-          regexp_replace(col("__file"), "^file:", "//") === col("dvb_file") &&
-            col("__pos") === col("dvb_pos"),
-          "left_anti")
-      }
-      if (posApp.nonEmpty || dvApp.nonEmpty) df = df.drop("__file", "__pos")
-      val eqApp = eqDeletes.filter(_.sequence > seq)
-      if (eqApp.nonEmpty) {
-        val keys = spark.read.parquet(eqApp.map(_.path): _*)
-        df = df.join(broadcast(keys), df("l_orderkey") === keys("key"), "left_anti")
-      }
-      df
-    }
-    // allowMissingColumns: see readMorDv — update tables mix files with and
-    // without the materialized _row_id column across sequence groups.
-    (parts.reduce(_.unionByName(_, allowMissingColumns = true)),
-      plan, eqDeletes, posDeletes, dvEntries)
+    val pin = GraftSnapshotPin.read(readMetadata(location),
+      dateLo = monthLo.map(_ + "-01"), dateHi = monthHi.map(_ + "-31"))
+    val live = GraftSqlBridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftSqlTable(s"graft $location", location, None, Some(pin)), None, None))
+    val deletes = pin.entries.flatten.filter(_.content != 0)
+    val (dvs, positional) = deletes.filter(_.content == 1).partition(_.referencedDataFile.isDefined)
+    (live, pin.plan(monthLo, monthHi, None, None), deletes.filter(_.content == 2), positional, dvs)
   }
 
-  /** MOR read: pruned data scan with the snapshot's delete files applied,
-    * scoped by sequence number per the spec — an equality delete (content=2)
-    * removes matching keys only from data files with strictly LOWER
-    * sequence, so a key re-appended AFTER a delete commit survives the
-    * read (the ADVICE-flagged case: the old unscoped anti-join would have
-    * dropped it forever via rewriteCompact). Data files are grouped by
-    * their manifest sequence (≤ #snapshots groups — metadata-grain), each
-    * group anti-joined against only the deletes newer than it. Position
-    * deletes (content=1) are applied by [[readMorPositional]]. Returns the
-    * live rows plus the planning census. */
-  def readMor(spark: SparkSession, location: String,
-              monthLo: Option[String] = None, monthHi: Option[String] = None)
-      : (DataFrame, ScanPlan, Seq[DataFileEntry]) = {
-    val meta = readMetadata(location)
-    val manifests = readManifestList(currentSnapshot(meta).manifestList)
-    val deletes = readManifestsParallel(manifests.map(_.path)).flatten.filter(_.content == 2)
-    val plan = planFiles(location, None, monthLo, monthHi)
-    require(plan.files.nonEmpty, "scan planned zero files")
-    val parts = plan.files.groupBy(_.sequence).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      var df = spark.read.parquet(fs.map(_.path): _*)
-      val applicable = deletes.filter(_.sequence > seq)
-      if (applicable.nonEmpty) {
-        val keys = spark.read.parquet(applicable.map(_.path): _*)
-        df = df.join(broadcast(keys), df("l_orderkey") === keys("key"), "left_anti")
-      }
-      df
-    }
-    (parts.reduce(_ unionByName _), plan, deletes)
-  }
+  /** A [[readMorUnified]] DataFrame with its v3 row lineage (spec §Row
+    * Lineage) as two more columns: `_row_id`, the id a rewrite
+    * materialized or else the file's first_row_id + position, and
+    * `_last_updated_sequence_number`, the materialized value or else the
+    * file's data sequence. */
+  def withLineage(live: DataFrame): DataFrame =
+    live.select(col("*"), live.metadataColumn("_row_id"),
+      live.metadataColumn("_last_updated_sequence_number"))
 
   /** Read the (pruned) snapshot as a DataFrame. Data files are listed
     * explicitly (no directory walk — the whole point of the format), so

@@ -49,10 +49,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * committing [[IcebergTable.append]] (V1Write bridge on [[GraftSqlTable]]);
   * row-level mutations stay library API calls
   * (updateMorDv/appendDvPuffin/…), like the real library's procedures.
+  * Library reads ([[IcebergTable.readMorUnified]]) run through the same
+  * scan, pinned to the snapshot they read ([[GraftSnapshotPin]]); v2
+  * positional-parquet delete files load on the driver like DV blobs.
   *
-  * Simplifications, stated: positional-parquet (v2) delete files are
-  * refused with a pointer at `rewrite_position_deletes` (the v3 migration
-  * this library executes); schema merges one data-file footer per
+  * Simplifications, stated: schema merges one data-file footer per
   * sequence era, read on the driver (internal lineage columns stripped),
   * with timestamps in whatever physical form the file carries — int96,
   * millis or micros — via Spark's own vectorized conversion. */
@@ -543,8 +544,43 @@ private[iceberg] class GraftBranchSqlTable(ident: String, location: String,
     }
 }
 
+/** A library read's snapshot, read once when the read is built
+  * ([[IcebergTable.readMorUnified]]): the table metadata, the snapshot,
+  * its manifest list and every manifest's entries in list order, plus the
+  * date bounds the read's month range maps to. A table carrying a pin
+  * serves every scan from it, so the DataFrame keeps returning that
+  * snapshot's rows whatever commits later, and no manifest is read twice. */
+private[iceberg] final case class GraftSnapshotPin(meta: IcebergTable.TableMetadata,
+                                                   snapshot: IcebergTable.SnapshotInfo,
+                                                   manifests: Seq[IcebergTable.ManifestInfo],
+                                                   entries: Seq[Seq[IcebergTable.DataFileEntry]],
+                                                   dateLo: Option[String], dateHi: Option[String]) {
+  /** [[IcebergTable.pruneFiles]] over the pinned manifests. */
+  def plan(monthLo: Option[String], monthHi: Option[String],
+           dateLo: Option[String], dateHi: Option[String]): IcebergTable.ScanPlan = {
+    val byPath = manifests.map(_.path).zip(entries).toMap
+    IcebergTable.pruneFiles(manifests, monthLo, monthHi, dateLo, dateHi)(_.map(m => byPath(m.path)))
+  }
+}
+
+private[iceberg] object GraftSnapshotPin {
+  /** Snapshot `snapshotId` of `meta` (default: its current one), with
+    * every manifest read once, in parallel. */
+  def read(meta: IcebergTable.TableMetadata, snapshotId: Option[Long] = None,
+           dateLo: Option[String] = None, dateHi: Option[String] = None): GraftSnapshotPin = {
+    val snap = IcebergTable.snapshotAt(meta, snapshotId)
+    val manifests = IcebergTable.readManifestList(snap.manifestList)
+    GraftSnapshotPin(meta, snap, manifests,
+      IcebergTable.readManifestsParallel(manifests.map(_.path)), dateLo, dateHi)
+  }
+}
+
+/** A graft table as Spark sees it. `snapshotId` is SQL time travel (the
+  * snapshot's schema era, read-only); `pinned` is a library read of the
+  * current schema over the snapshot the pin holds. */
 private[iceberg] class GraftSqlTable(ident: String, location: String,
-                                     snapshotId: Option[Long])
+                                     snapshotId: Option[Long],
+                                     pinned: Option[GraftSnapshotPin] = None)
     extends Table with SupportsRead
     with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns
@@ -563,30 +599,27 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
 
   /** `_file`/`_pos` — the row coordinates the reader synthesizes, usable
     * from plain SQL (`SELECT _file, _pos, * FROM t`) and the rowId the
-    * delta row-level operations key their deletes on. */
+    * delta row-level operations key their deletes on — and the v3 row
+    * lineage pair `_row_id`/`_last_updated_sequence_number`. */
   override def metadataColumns(): Array[MetadataColumn] = GraftMetaColumns.columns
 
   /** SQL `UPDATE` / `MERGE INTO` / row-level `DELETE` — see
     * [[GraftRowLevelOperation]]: a delta (MOR) operation committing one
-    * DV + replacement-files snapshot through [[IcebergTable.commitDelta]]. */
+    * DV + replacement-files snapshot through [[IcebergTable.commitDelta]].
+    * The operation scans through this table, whose schema and metadata
+    * the statement has already read. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(snapshotId.isEmpty, s"cannot mutate a time-travel snapshot of $ident")
-    new GraftRowLevelOperationBuilder(location, info)
+    new GraftRowLevelOperationBuilder(this, location, info)
   }
-
-  /** Columns internal to the v3 row-lineage machinery: replacement files
-    * written by MOR UPDATE materialize them, but they are not part of the
-    * SQL-visible table schema (the spec reserves them as metadata). */
-  private def internalCol(name: String): Boolean =
-    name == "_row_id" || name == "_last_updated_sequence_number"
 
   private lazy val schema0: StructType = applyColumnEvolution(rawSchema0)
 
   // metadata.json, parsed once per table instance (None: not yet committed)
   private lazy val meta: Option[IcebergTable.TableMetadata] =
-    IcebergTable.readMetadataOpt(location)
+    pinned.map(_.meta).orElse(IcebergTable.readMetadataOpt(location))
 
   /** Post-merge schema visibility (ALTER TABLE DROP/RENAME COLUMN):
     * dropped-column tombstones hide a column from reads PAST their drop
@@ -637,21 +670,19 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
       case None => pendingSchema.getOrElse(throw new IllegalStateException(
         s"$ident has neither committed metadata nor a pending schema"))
       case Some(m) =>
-        val manifests = IcebergTable.readManifestList(
-          IcebergTable.snapshotAt(m, snapshotId).manifestList)
-        val files = IcebergTable.pruneFiles(manifests, None, None, None, None)(
-          live => IcebergTable.readManifestsParallel(live.map(_.path))).files
+        val files = pinned.getOrElse(GraftSnapshotPin.read(m, snapshotId))
+          .plan(None, None, None, None).files
         if (files.isEmpty)
           pendingSchema.getOrElse(StructType(m.schemas.lastOption.getOrElse(Seq("l_shipdate"))
-            .filterNot(internalCol).map(StructField(_, StringType))))
+            .filterNot(GraftVectorized.isLineageCol).map(StructField(_, StringType))))
         else {
           val perEra = files.groupBy(_.sequence).toSeq.sortBy(-_._1)
             .map { case (_, fs) => fs.map(_.path).max }
           val merged = ParquetFooters.read(perEra).map(_.schema).reduceLeft(mergeEras)
           val declaredExtra = pendingSchema.map(_.fields.filterNot(f =>
-            merged.fieldNames.contains(f.name) || internalCol(f.name)))
+            merged.fieldNames.contains(f.name) || GraftVectorized.isLineageCol(f.name)))
             .getOrElse(Array.empty[StructField])
-          StructType(merged.fields.filterNot(f => internalCol(f.name)) ++ declaredExtra)
+          StructType(merged.fields.filterNot(f => GraftVectorized.isLineageCol(f.name)) ++ declaredExtra)
         }
     }
   }
@@ -696,7 +727,7 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(location, snapshotId, schema0)
+    new GraftScanBuilder(location, snapshotId, schema0, pinned)
 
   /** `INSERT INTO <cat>.<ns>.<t> …` / `df.writeTo(…).append()` — the WRITE
     * half of the north star, routed through the library's COMMITTING
@@ -746,12 +777,12 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
     // the zero-match guard runs over the MOR-RESOLVED read (existing DVs
     // and equality deletes applied), so a DELETE matching only
     // already-deleted rows really is a no-op — no empty commit. The guard
-    // is a second (limit-1 short-circuited) scan beside appendDvPuffin's
-    // victim scan; the spec-shaped alternative (a committer that reports
-    // zero victims) would save it, but re-asserting already-covered
-    // positions keeps union semantics either way.
-    if (IcebergTable.readMetadataOpt(location).isEmpty) return
-    if (IcebergTable.planFiles(location).files.isEmpty) return
+    // is one limit-1 read through the table's own scan, pinned to the
+    // current snapshot, beside appendDvPuffin's victim scan; the
+    // spec-shaped alternative (a committer that reports zero victims)
+    // would save it, but re-asserting already-covered positions keeps
+    // union semantics either way.
+    if (meta.isEmpty) return
     val live = IcebergTable.readMorUnified(spark, location)._1
     if (live.filter(pred).limit(1).count() > 0)
       IcebergTable.appendDvPuffin(spark, location, pred)
@@ -893,13 +924,15 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
 }
 
 private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Long],
-                                        tableSchema: StructType)
+                                        tableSchema: StructType,
+                                        pinned: Option[GraftSnapshotPin] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
-  private var dateLo: Option[String] = None
-  private var dateHi: Option[String] = None
+  // a pinned read starts from its own bounds; pushed filters narrow them
+  private var dateLo: Option[String] = pinned.flatMap(_.dateLo)
+  private var dateHi: Option[String] = pinned.flatMap(_.dateHi)
 
   // the catalyst-pushed value's calendar date, for the manifests' ISO
   // string bounds (file pruning is [lo,hi]-inclusive at DAY grain, so an
@@ -944,13 +977,16 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def build(): Scan =
-    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema.size)
+    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema.size, pinned)
 }
 
 /** One planned data file + the delete state its reader must apply: the
-  * file's data sequence and the compressed DV blobs referencing it. */
+  * file's data sequence, the compressed position blobs that delete from
+  * it (its DVs, and its v2 position deletes as one blob), and the id of
+  * its first row (row lineage; -1 when the file has none). */
 private[iceberg] case class GraftFileTask(path: String, sequence: Long,
-                                          dvBlobs: Array[Array[Byte]])
+                                          dvBlobs: Array[Array[Byte]],
+                                          firstRowId: Long = -1L)
 
 /** One scan task: planned data files read one after another, in plan
   * order. Files are never split, and each keeps its own delete state. */
@@ -1000,16 +1036,20 @@ private[iceberg] object GraftScanPacking {
   }
 }
 
-/** The DSv2 scan: the planned data files packed into size-balanced
+/** The one read path of graft tables, for SQL and library reads alike:
+  * the planned data files packed into size-balanced
   * [[GraftInputPartition]]s ([[GraftScanPacking]]), every file read
   * COLUMNAR by [[GraftColumnarReader]] — clean files, files under
-  * deletion vectors and equality deletes, and the `_file`/`_pos` scans
-  * under row-level `DELETE`/`UPDATE`/`MERGE` alike. The table metadata is
-  * parsed once per scan and serves both planning and the reader factory;
-  * every manifest is read once per scan. */
+  * deletion vectors, v2 position deletes and equality deletes, and the
+  * `_file`/`_pos` scans under row-level `DELETE`/`UPDATE`/`MERGE` alike.
+  * Deletes apply by position and key inside the reader, never as a join.
+  * The table metadata is parsed once per scan and serves both planning
+  * and the reader factory; every manifest is read once per scan, or not
+  * at all when the table carries a [[GraftSnapshotPin]]. */
 private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
                                  dateLo: Option[String], dateHi: Option[String],
-                                 required: StructType, tableCols: Int)
+                                 required: StructType, tableCols: Int,
+                                 pinned: Option[GraftSnapshotPin] = None)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -1019,7 +1059,8 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.SUPPORTED
   override def description(): String =
-    s"graft-iceberg $location${snapshotId.map(id => s" @$id").getOrElse("")}" +
+    s"graft-iceberg $location${snapshotId.orElse(pinned.map(_.snapshot.id))
+      .map(id => s" @$id").getOrElse("")}" +
       s" shipdate=[${dateLo.getOrElse("-inf")},${dateHi.getOrElse("+inf")}]"
 
   /** `spark.readStream.table(<cat>.<ns>.<t>)` — the snapshot TAILER as a
@@ -1038,13 +1079,10 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
 
   // None: a CREATE'd table before its first commit (scans empty)
   private lazy val meta: Option[IcebergTable.TableMetadata] =
-    IcebergTable.readMetadataOpt(location)
+    pinned.map(_.meta).orElse(IcebergTable.readMetadataOpt(location))
 
-  private var eqDeletes: Array[(Long, Array[Long])] = Array.empty
-  // identity of the equality-delete wave set this scan resolved (file
-  // paths + sequences) — the broadcast cache key component that changes
-  // exactly when the keys a reader must apply change
-  private var eqFingerprint: String = ""
+  // the equality-delete waves this scan resolved
+  private var eqs: Seq[IcebergTable.DataFileEntry] = Seq.empty
 
   override def planInputPartitions(): Array[InputPartition] = {
     // a CREATE'd table before its first commit scans empty: an empty
@@ -1057,29 +1095,22 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
         0L, 0L, 0L, 0L, required.size.toLong, tableCols.toLong))
       return Array.empty
     }
-    val snap = IcebergTable.snapshotAt(m, snapshotId)
-    val manifests = IcebergTable.readManifestList(snap.manifestList)
-    val perManifest = IcebergTable.readManifestsParallel(manifests.map(_.path))
-    val entries = perManifest.flatten
-    require(!entries.exists(e => e.content == 1 && e.referencedDataFile.isEmpty),
-      "SQL scan resolves v3 DVs and equality deletes; this table carries v2 " +
-        "positional-parquet delete files — run rewrite_position_deletes first")
-    // DVs keyed by the data file they reference: one lookup per planned
-    // file instead of a pass over every DV
+    val tree = pinned.getOrElse(GraftSnapshotPin.read(m, snapshotId))
+    val entries = tree.entries.flatten
+    // position deletes keyed by the data file they reference: one lookup
+    // per planned file instead of a pass over every delete. A DV names its
+    // file in the manifest; a v2 position-delete file holds (file_path,
+    // pos) rows, loaded here on the driver like the DV blobs
     val dvsByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isDefined)
       .groupBy(e => GraftVectorized.cleanPath(e.referencedDataFile.get))
-    val eqs = entries.filter(_.content == 2)
-    // equality keys load ONCE on the driver (KB–MB grain, like the real
-    // library's delete loader) and ship in the serialized factory
-    eqDeletes = eqs.map(e =>
-      (e.sequence, GraftParquetRows.readLongColumn(e.path, "key"))).toArray
-    eqFingerprint = eqs.map(e => s"${e.path}@${e.sequence}").sorted.mkString(";")
-    // planFiles' pruning over the manifests read above: the scan reads
-    // every manifest once (ScanPlan.filesTotal is computed from the full
-    // manifest list, so the pruned plan carries the census denominator)
-    val byPath = manifests.map(_.path).zip(perManifest).toMap
-    val plan = IcebergTable.pruneFiles(manifests, None, None, dateLo, dateHi)(
-      _.map(m => byPath(m.path)))
+    val posByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isEmpty)
+      .flatMap(e => GraftParquetRows.readPositions(e.path).map { case (f, ps) => (f, (e.sequence, ps)) })
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    eqs = entries.filter(_.content == 2)
+    // planFiles' pruning over the manifests read once (ScanPlan.filesTotal
+    // is computed from the full manifest list, so the pruned plan carries
+    // the census denominator)
+    val plan = tree.plan(None, None, dateLo, dateHi)
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
       plan.manifestsRead.toLong, required.size.toLong, tableCols.toLong))
@@ -1087,9 +1118,16 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     GraftScanPacking.packForSession(plan.files)
       .map { fs =>
         GraftInputPartition(fs.map { f =>
-          val mine = dvsByFile.getOrElse(GraftVectorized.cleanPath(f.path), Seq.empty)
-            .filter(e => e.sequence >= f.sequence)
-          GraftFileTask(f.path, f.sequence, mine.map(blobBytes).toArray)
+          val file = GraftVectorized.cleanPath(f.path)
+          // positional forms scope at data_seq <= delete_seq (spec; a DV
+          // may share its sequence with the replacement file it ships with)
+          val dvs = dvsByFile.getOrElse(file, Seq.empty)
+            .filter(e => e.sequence >= f.sequence).map(blobBytes)
+          val pos = posByFile.getOrElse(file, Seq.empty).collect {
+            case (seq, ps) if seq >= f.sequence => ps }
+          val posBlob = if (pos.isEmpty) None
+            else Some(RoaringDv.serializeDvBlob(pos.flatten.distinct.sorted.toArray))
+          GraftFileTask(f.path, f.sequence, (dvs ++ posBlob).toArray, f.firstRowId)
         }.toArray): InputPartition
       }.toArray
   }
@@ -1102,8 +1140,14 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     // once (torrent), which is the scale-correct vehicle. CACHED per
     // (session, table, equality-wave set): a fresh broadcast per scan
     // invocation accumulated driver+executor blocks for the life of the
-    // session on repeatedly-read delete-carrying tables.
-    val bc = GraftEqBroadcastCache.get(location, eqFingerprint, eqDeletes)
+    // session on repeatedly-read delete-carrying tables. The keys load
+    // ONCE on the driver (KB–MB grain, like the real library's delete
+    // loader), and only when the wave set is not cached yet; the
+    // fingerprint (file paths + sequences) changes exactly when the keys a
+    // reader must apply change.
+    val bc = GraftEqBroadcastCache.get(location,
+      eqs.map(e => s"${e.path}@${e.sequence}").sorted.mkString(";"),
+      eqs.map(e => (e.sequence, GraftParquetRows.readLongColumn(e.path, "key"))).toArray)
     // live rename chains and type promotions ride to the tasks so files
     // written under a prior column name/type keep serving data
     // (resolveFileSchema; KB-grain maps)
@@ -1176,7 +1220,8 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
           val a = f.dvBlobs.flatMap(RoaringDv.deserializeDvBlob)
           java.util.Arrays.sort(a); a
         }
-      new GraftColumnarReader(f.path, fields, deleted, eqKeys(f.sequence), renames, widened)
+      new GraftColumnarReader(f.path, fields, deleted, eqKeys(f.sequence), renames, widened,
+        f.firstRowId, f.sequence)
     })
   }
 }
@@ -1218,6 +1263,12 @@ object GraftVectorized {
 
   /** Metadata columns the reader synthesizes instead of reading. */
   def isMetaCol(name: String): Boolean = name == "_file" || name == "_pos"
+
+  /** The v3 row-lineage columns: metadata columns, not table columns
+    * (spec §Row Lineage). Read where a rewrite materialized them in a file,
+    * derived from the file's first row id and sequence where not. */
+  def isLineageCol(name: String): Boolean =
+    name == "_row_id" || name == "_last_updated_sequence_number"
 
   def cleanPath(path: String): String =
     path.stripPrefix("file:").replaceFirst("^/{2,}", "/")
@@ -1325,6 +1376,10 @@ object GraftVectorized {
   * (the row-level operations' rowId). A column a pre-evolution file lacks
   * comes back as an all-null vector, and one a pre-promotion file holds
   * at a narrower type through a [[GraftUpcastVector]] beneath the filter.
+  * `_row_id` is the file's materialized value where a rewrite wrote one,
+  * else `firstRowId` + the row's ordinal (null when the file has no first
+  * row id); `_last_updated_sequence_number` is the materialized value,
+  * else the file's `sequence` (spec §Row Lineage).
   * A batch whose every row is deleted is skipped, never taken for the end
   * of the file. */
 private[iceberg] class GraftColumnarReader(path: String,
@@ -1332,7 +1387,9 @@ private[iceberg] class GraftColumnarReader(path: String,
                                            deletedPos: Array[Long],
                                            eqKeys: Array[Long],
                                            renames: Map[String, Seq[String]] = Map.empty,
-                                           widened: Set[String] = Set.empty)
+                                           widened: Set[String] = Set.empty,
+                                           firstRowId: Long = -1L,
+                                           sequence: Long = 0L)
     extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
   import org.apache.spark.sql.vectorized.ColumnVector
@@ -1372,14 +1429,19 @@ private[iceberg] class GraftColumnarReader(path: String,
       v.setUtf8String(UTF8String.fromString(path))
       v
     }
-  private val posVector: OnHeapColumnVector =
-    if (fields.exists(_._1 == "_pos")) new OnHeapColumnVector(GraftVectorized.BatchRows, LongType)
+  private def longVector(name: String): OnHeapColumnVector =
+    if (fields.exists(_._1 == name)) new OnHeapColumnVector(GraftVectorized.BatchRows, LongType)
     else null
+  private val posVector = longVector("_pos")
+  private val rowIdVector = longVector("_row_id")
+  private val seqVector = longVector("_last_updated_sequence_number")
 
   private def batchOver(cols: Array[ColumnVector]): ColumnarBatch =
     new ColumnarBatch(fields.map[ColumnVector] {
       case ("_file", _) => fileVector
       case ("_pos", _) => posVector
+      case ("_row_id", _) => rowIdVector
+      case ("_last_updated_sequence_number", _) => seqVector
       case (name, _) => cols(physical.fieldIndex(name))
     })
   private val whole = batchOver(decoded)
@@ -1400,10 +1462,15 @@ private[iceberg] class GraftColumnarReader(path: String,
       if (kept > 0) {
         current = if (kept == n) whole else live
         current.setNumRows(kept)
-        if (posVector != null) {
+        if (posVector != null || rowIdVector != null || seqVector != null) {
           var k = 0
           while (k < kept) {
-            posVector.putLong(k, first + (if (kept == n) k else liveRows(k)))
+            val row = if (kept == n) k else liveRows(k)
+            if (posVector != null) posVector.putLong(k, first + row)
+            if (rowIdVector != null)
+              lineage(rowIdVector, rowIdDecoded, k, row,
+                if (firstRowId >= 0) firstRowId + first + row else -1L)
+            if (seqVector != null) lineage(seqVector, seqDecoded, k, row, sequence)
             k += 1
           }
         }
@@ -1412,6 +1479,21 @@ private[iceberg] class GraftColumnarReader(path: String,
     }
     false
   }
+
+  // the materialized lineage columns as decoded (all null in a file
+  // written without them)
+  private def decodedOf(out: OnHeapColumnVector, name: String): ColumnVector =
+    if (out == null) null else decoded(physical.fieldIndex(name))
+  private val rowIdDecoded = decodedOf(rowIdVector, "_row_id")
+  private val seqDecoded = decodedOf(seqVector, "_last_updated_sequence_number")
+
+  /** Row `k` of a lineage column: the value `m` materialized at decoded
+    * row `row`, else `derived` (null when negative). */
+  private def lineage(out: OnHeapColumnVector, m: ColumnVector, k: Int, row: Int,
+                      derived: Long): Unit =
+    if (!m.isNullAt(row)) { out.putNotNull(k); out.putLong(k, m.getLong(row)) }
+    else if (derived >= 0) { out.putNotNull(k); out.putLong(k, derived) }
+    else out.putNull(k)
 
   /** The number of rows of the decoded batch (file ordinals `first` until
     * `first + n`) that survive the deletes; fills `liveRows` with them
@@ -1438,8 +1520,7 @@ private[iceberg] class GraftColumnarReader(path: String,
 
   override def close(): Unit = {
     reader.close()
-    if (fileVector != null) fileVector.close()
-    if (posVector != null) posVector.close()
+    Seq(fileVector, posVector, rowIdVector, seqVector).filter(_ != null).foreach(_.close())
   }
 }
 
@@ -1576,21 +1657,46 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
   override def stop(): Unit = ()
 }
 
-/** Driver-side helper: read one INT64 column of a (small) parquet file
-  * through the scan's vectorized decoder — used to load equality-delete
-  * key files at planning time without spinning a Spark job inside the
-  * planner. */
+/** Driver-side helpers that read small delete files through the scan's
+  * vectorized decoder, so planning loads delete state without spinning a
+  * Spark job inside the planner. */
 private[iceberg] object GraftParquetRows {
+  /** The non-null values of one INT64 column: an equality-delete file's
+    * keys. */
   def readLongColumn(path: String, column: String): Array[Long] = {
     require(GraftVectorized.fileSchemaOf(path).containsField(column), s"$path has no column $column")
-    val r = GraftVectorized.open(path, StructType(Seq(StructField(column, LongType))))
     val out = Array.newBuilder[Long]
+    foreachBatch(path, StructType(Seq(StructField(column, LongType)))) { (b, i) =>
+      if (!b.column(0).isNullAt(i)) out += b.column(0).getLong(i)
+    }
+    out.result()
+  }
+
+  /** A v2 position-delete file's `(file_path, pos)` rows, grouped by the
+    * clean path of the data file they delete from. */
+  def readPositions(path: String): Map[String, Array[Long]] = {
+    val out = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuilder[Long]]
+    // rows come sorted by file_path: resolve a path once per run of rows
+    var lastPath: UTF8String = null
+    var positions: scala.collection.mutable.ArrayBuilder[Long] = null
+    foreachBatch(path, StructType(Seq(StructField("file_path", StringType),
+        StructField("pos", LongType)))) { (b, i) =>
+      val p = b.column(0).getUTF8String(i)
+      if (p != lastPath) {
+        lastPath = p.clone()
+        positions = out.getOrElseUpdate(GraftVectorized.cleanPath(p.toString), Array.newBuilder[Long])
+      }
+      positions += b.column(1).getLong(i)
+    }
+    out.view.mapValues(_.result()).toMap
+  }
+
+  private def foreachBatch(path: String, schema: StructType)(row: (ColumnarBatch, Int) => Unit): Unit = {
+    val r = GraftVectorized.open(path, schema)
     try while (r.nextBatch()) {
       val b = r.resultBatch()
-      val v = b.column(0)
-      (0 until b.numRows).foreach(i => if (!v.isNullAt(i)) out += v.getLong(i))
+      (0 until b.numRows).foreach(i => row(b, i))
     } finally r.close()
-    out.result()
   }
 }
 

@@ -80,7 +80,7 @@ class IcebergSpec extends SparkSpec {
       lineitem.filter(col("l_orderkey") % 10 === 3L).select(col("l_orderkey")).distinct(), l)
     val meta = IcebergTable.readMetadata(l)
     assert(meta.snapshots.map(_.operation) == Seq("append", "append", "delete"))
-    val (live, plan, deletes) = IcebergTable.readMor(spark, l)
+    val (live, plan, deletes, _, _) = IcebergTable.readMorUnified(spark, l)
     assert(deletes.size == 1 && deletes.head.content == 2)
     // the delete snapshot adds no DATA files: content=2 entries are
     // excluded from the data plan (planFiles filters on content)
@@ -99,7 +99,7 @@ class IcebergSpec extends SparkSpec {
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")), l)
     IcebergTable.appendEqualityDeletes(spark,
       lineitem.filter(col("l_orderkey") % 10 === 3L).select(col("l_orderkey")).distinct(), l)
-    val liveBefore = IcebergTable.readMor(spark, l)._1.count()
+    val liveBefore = IcebergTable.readMorUnified(spark, l)._1.count()
     val planBefore = IcebergTable.planFiles(l)
     IcebergTable.rewriteManifests(l, groupMonths = 12)
     val meta = IcebergTable.readMetadata(l)
@@ -124,7 +124,7 @@ class IcebergSpec extends SparkSpec {
       "rewrite must produce multiple branch manifests")
     assert(probe.filesSelected == 1)
     // delete scoping survives: MOR after the rewrite sees the same live set
-    assert(IcebergTable.readMor(spark, l)._1.count() == liveBefore)
+    assert(IcebergTable.readMorUnified(spark, l)._1.count() == liveBefore)
   }
 
   test("commit series: manifest list grows one per commit, fold collapses it, probe IO stays flat") {
@@ -171,7 +171,7 @@ class IcebergSpec extends SparkSpec {
     val expectedLive = lineitem.filter(col("l_orderkey") % 10 =!= 3L).count()
     assert(IcebergTable.planFiles(l).files.map(_.recordCount).sum == expectedLive)
     // ...and the rewritten files read back clean with zero merge cost
-    val (live, _, deletes) = IcebergTable.readMor(spark, l)
+    val (live, _, deletes, _, _) = IcebergTable.readMorUnified(spark, l)
     assert(deletes.isEmpty)
     assert(live.count() == expectedLive)
     // time travel still sees the pre-compaction world
@@ -587,12 +587,12 @@ class IcebergSpec extends SparkSpec {
         dataBounds(norm(r.getAs[String]("file_path"))))
     assert(offenders.isEmpty, "positions must address rows inside their file")
     // MOR read drops exactly the predicate rows
-    val (live, plan, applied) = IcebergTable.readMorPositional(spark, l)
+    val (live, plan, _, applied, _) = IcebergTable.readMorUnified(spark, l)
     assert(applied.size == 1 && plan.files.forall(_.content == 0))
     assert(live.count() == lineitem.count() - nVictims)
     assert(live.filter(col("l_orderkey") % 10 === 7L).count() == 0)
     // pruned positional read: deletes still apply inside the month range
-    val (feb, _, _) = IcebergTable.readMorPositional(spark, l, Some("1997-02"), Some("1997-02"))
+    val feb = IcebergTable.readMorUnified(spark, l, Some("1997-02"), Some("1997-02"))._1
     val expectedFeb = lineitem.filter(
       date_format(col("l_shipdate"), "yyyy-MM") === "1997-02" &&
         col("l_orderkey") % 10 =!= 7L).count()
@@ -609,13 +609,13 @@ class IcebergSpec extends SparkSpec {
     IcebergTable.append(spark, rows(Seq(1L, 2L, 3L)), l)          // seq 1
     IcebergTable.appendEqualityDeletes(spark, Seq(2L).toDF("k"), l) // seq 2
     IcebergTable.append(spark, rows(Seq(2L)), l)                   // seq 3: re-append key 2
-    val (live, _, _) = IcebergTable.readMor(spark, l)
+    val live = IcebergTable.readMorUnified(spark, l)._1
     val got = live.select("l_orderkey").as[Long].collect().sorted.toSeq
     assert(got == Seq(1L, 2L, 3L),
       "the seq-3 re-append of key 2 must survive the seq-2 delete")
     // and compaction preserves it (the ADVICE-flagged permanent-drop case)
     IcebergTable.rewriteCompact(spark, l)
-    val (afterCompact, _, _) = IcebergTable.readMor(spark, l)
+    val afterCompact = IcebergTable.readMorUnified(spark, l)._1
     assert(afterCompact.select("l_orderkey").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
@@ -1112,7 +1112,7 @@ class IcebergSpec extends SparkSpec {
     IcebergTable.appendDvPuffin(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 4L)
     IcebergTable.rewriteCompact(spark, loc, materializeLineage = true)
     def idsNow(): Set[(String, String, Long)] =
-      IcebergTable.readMorDv(spark, loc, withRowIds = true)._1
+      IcebergTable.withLineage(IcebergTable.readMorUnified(spark, loc)._1)
         .select(col("l_orderkey"), col("l_linenumber"), col("_row_id"))
         .collect().map(r => (r.get(0).toString, r.get(1).toString,
           r.getAs[Long]("_row_id"))).toSet
@@ -1657,7 +1657,7 @@ class IcebergSpec extends SparkSpec {
     T.append(spark, lineitem
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")), l)
     // id census BEFORE the update — the update must preserve this exact set
-    val idsBefore = T.readMorDv(spark, l, withRowIds = true)._1
+    val idsBefore = T.withLineage(T.readMorUnified(spark, l)._1)
       .agg(count(lit(1)), countDistinct(col("_row_id")),
         sum(col("_row_id"))).head()
     val sid = T.updateMorDv(spark, l,
@@ -1666,7 +1666,8 @@ class IcebergSpec extends SparkSpec {
     assert(sid == 3L)
     val meta = T.readMetadata(l)
     assert(meta.snapshots.find(_.id == 3L).get.operation == "overwrite")
-    val (live, _, dvs) = T.readMorDv(spark, l, withRowIds = true)
+    val (live0, _, _, _, dvs) = T.readMorUnified(spark, l)
+    val live = T.withLineage(live0)
     val g = live.agg(count(lit(1)), countDistinct(col("_row_id")), sum(col("_row_id")),
       sum(when(col("_last_updated_sequence_number") === 3L, 1L).otherwise(0L)),
       round(sum(col("l_quantity")), 4)).head()
@@ -1691,7 +1692,7 @@ class IcebergSpec extends SparkSpec {
       pmod(col("l_orderkey"), lit(5L)) === 0L, // ≡0,5 mod 10 ⊃ first wave
       Seq("l_quantity" -> (col("l_quantity") + lit(1.0))))
     assert(sid2 == 4L)
-    val live2 = T.readMorDv(spark, l, withRowIds = true)._1
+    val live2 = T.withLineage(T.readMorUnified(spark, l)._1)
     val g2 = live2.agg(count(lit(1)), countDistinct(col("_row_id"))).head()
     assert(g2.getLong(0) == total && g2.getLong(1) == total,
       "second update lost or duplicated rows")

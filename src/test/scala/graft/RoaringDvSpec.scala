@@ -104,7 +104,7 @@ class RoaringDvSpec extends SparkSpec {
   }
 
   test("DV merge-on-read: survivors are exactly the predicate complement") {
-    val (live, plan, dvs) = IcebergTable.readMorDv(spark, dvLoc)
+    val (live, plan, _, _, dvs) = IcebergTable.readMorUnified(spark, dvLoc)
     val expected = lineitem.filter(col("l_orderkey") % 10 =!= 6L).count()
     assert(live.count() == expected)
     assert(live.filter(col("l_orderkey") % 10 === 6L).count() == 0)
@@ -136,7 +136,7 @@ class RoaringDvSpec extends SparkSpec {
       assert(b.offset == e.contentOffset && b.length == e.contentSize)
       assert(RoaringDv.deserializeDvBlob(payloadOf(b)).length.toLong == e.recordCount)
     }
-    val (live, _, _) = IcebergTable.readMorDv(spark, l)
+    val live = IcebergTable.readMorUnified(spark, l)._1
     assert(live.count() == lineitem.filter(col("l_orderkey") % 10 =!= 6L).count())
   }
 

@@ -7,6 +7,10 @@ import graft.SparkSpec
 import graft.tables.Tables
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -14,7 +18,7 @@ import org.apache.spark.sql.types.LongType
   * Learning a table's schema or a written file's stats reads parquet
   * footers on the driver ([[ParquetFooters]]), so only the data work of a
   * statement runs as jobs: an INSERT's write, a SELECT's scan. */
-class JobCensusSpec extends SparkSpec {
+class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def lineitem = Tables.lineitem(spark, sf0001)
 
@@ -95,5 +99,22 @@ class JobCensusSpec extends SparkSpec {
     assert(resolve == 0, s"schema resolution ran $resolve jobs")
     assert(schema("l_linenumber").dataType == LongType)
     assert(schema.fieldNames.toSeq == lineitem.columns.toSeq)
+  }
+
+  test("building a library read runs no job; it plans one scan and no join") {
+    val (w, _) = warehouse("lib")
+    val loc = IcebergCatalog.createTable(w, "lake", "lib")
+    IcebergTable.append(spark, lineitem, loc)
+    IcebergTable.appendDvPuffin(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 6L)
+    IcebergTable.appendPositionDeletes(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 7L)
+    IcebergTable.appendEqualityDeletes(spark,
+      lineitem.filter(pmod(col("l_orderkey"), lit(10L)) === 3L).select("l_orderkey").distinct(), loc)
+    var live: DataFrame = null
+    val build = jobs { live = IcebergTable.readMorUnified(spark, loc)._1 }
+    assert(build == 0, s"building the read ran $build jobs")
+    val plan = live.agg(count(lit(1)), sum(col("l_quantity"))).queryExecution.executedPlan
+    val scans = collect(plan) { case s: BatchScanExec => s }
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(scans.size == 1 && joins.isEmpty, plan.toString)
   }
 }
