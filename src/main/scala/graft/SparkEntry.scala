@@ -1607,9 +1607,10 @@ object SparkEntry {
     },
 
     // SQL ALTER TABLE DROP/RENAME COLUMN: the dropped column is hidden
-    // NOW (tombstone) but fully served via VERSION AS OF 2 time travel;
-    // the renamed column stitches era-1 files (old physical name, via the
-    // rename chain) with era-2 files (new name) — sums must cover both.
+    // NOW but fully served via VERSION AS OF 2 time travel (the pre-drop
+    // snapshot's own schema); the renamed column stitches era-1 files (old
+    // physical name, via its field id's name history) with era-2 files
+    // (new name) — sums must cover both.
     "iceberg_sql_alter_drop" -> {
       val cut = iceberg.IcebergOps.SnapshotCut
       s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,

@@ -6,9 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional 3rd arg: comma-separated query names (local iteration only;
-    // the driver always passes two args and gets the full set).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    // Optional 3rd arg: comma-separated query names, each also a `prefix*`
+    // pattern, for local iteration; with two args every query runs.
+    val only: Option[Seq[String]] = args.lift(2).map(_.split(",").toSeq)
+    def selected(name: String): Boolean = only.forall(_.exists(p =>
+      if (p.endsWith("*")) name.startsWith(p.dropRight(1)) else name == p))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,7 +43,7 @@ object Verify {
     val progress = new java.io.PrintWriter(new java.io.FileWriter(
       s"$outDir/results.jsonl", /*append=*/ false), /*autoFlush=*/ true)
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {

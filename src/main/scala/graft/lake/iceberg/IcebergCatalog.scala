@@ -20,8 +20,7 @@ object IcebergCatalog {
 
   /** MULTI-LEVEL namespaces are nested directories: `a.b.c` lives at
     * `warehouse/a/b/c` (the HadoopCatalog layout). A directory is a TABLE
-    * iff it carries a `metadata/` dir (committed version-hint or a
-    * SQL-declared pending schema); anything else under a namespace is a
+    * iff it carries a `metadata/` dir; anything else under a namespace is a
     * child namespace. Single-string entry points treat the string as one
     * level (the historical callers) — multi-level callers pass the
     * segment Seq. */
@@ -60,7 +59,8 @@ object IcebergCatalog {
       .filter(d => d.isDirectory && !isTableDir(d)).map(_.getName).toSeq.sorted
 
   /** Register a table location (mkdir only — the table is not listable
-    * until its first commit writes metadata, the HadoopCatalog rule). */
+    * until its first commit writes metadata, the HadoopCatalog rule; SQL
+    * `CREATE TABLE` commits that first version at once). */
   def createTable(warehouse: String, ns: String, name: String): String = {
     require(!name.contains(File.separator), s"invalid table name $name")
     val d = tableDir(warehouse, ns, name)

@@ -264,10 +264,11 @@ object IcebergOps {
   /** Schema evolution executed for real (spec §Schema Evolution):
     * snapshot 1 commits a 3-column schema, snapshot 2 adds l_discount —
     * the metadata's schemas array grows and current-schema-id advances,
-    * while old data files simply lack the new field. A merge-schema read
-    * across both eras null-fills the pre-evolution rows, which is the
-    * spec's add-column rule; the census proves it (rows_null_discount =
-    * the pre-cut rows exactly). */
+    * while old data files simply lack the new field. The table's own scan
+    * ([[IcebergTable.readMorUnified]]) serves the current schema across
+    * both eras and null-fills the pre-evolution rows, which is the spec's
+    * add-column rule; the census proves it (rows_null_discount = the
+    * pre-cut rows exactly). */
   def schemaEvolution(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val loc = graft.plans.Memo.memoize(lineitem, "iceberg.table.schema") {
       val l = Files.createTempDirectory("graft_iceberg_schema_").toString
@@ -280,14 +281,13 @@ object IcebergOps {
       new String(l)
     }
     val meta = IcebergTable.readMetadata(loc)
-    val plan = IcebergTable.planFiles(loc)
-    spark.read.option("mergeSchema", "true").parquet(plan.files.map(_.path): _*)
+    IcebergTable.readMorUnified(spark, loc)._1
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("l_discount").isNotNull, 1L).otherwise(0L)).as("rows_with_discount"),
         sum(when(col("l_discount").isNull, 1L).otherwise(0L)).as("rows_null_discount"),
         round(sum(coalesce(col("l_discount"), lit(0.0))), 4).as("sum_discount"))
       .withColumn("n_schemas", lit(meta.schemas.size.toLong))
-      .withColumn("current_schema_id", lit(math.max(0, meta.schemas.size - 1).toLong))
+      .withColumn("current_schema_id", lit(meta.currentSchemaId.toLong))
   }
 
   /** Write-audit-publish over real metadata: the post-cut append is STAGED
@@ -2304,8 +2304,9 @@ object IcebergOps {
         .createOrReplaceTempView("graft_sql_ins_src")
       spark.sql(s"INSERT INTO $cat.lake.lineitem_ins SELECT * FROM graft_sql_ins_src")
       // `lake.lineitem_ctas`: born entirely in SQL — CREATE TABLE AS SELECT
-      // registers the location + pending schema, and the CTAS write commits
-      // snapshot 1 through the same appending path
+      // commits the table's first metadata version (the query's schema, no
+      // snapshot), and the CTAS write commits snapshot 1 through the same
+      // appending path
       spark.sql(s"CREATE TABLE $cat.lake.lineitem_ctas AS SELECT * FROM graft_sql_ins_src")
       // `lake.lineitem_del`: the retention DELETE — everything before
       // [[SqlRetentionCut]] removed by SQL, committed as a v3 DV snapshot
@@ -2416,8 +2417,9 @@ object IcebergOps {
   }
 
   /** Full SQL DDL+DML lifecycle: `lake.lineitem_ctas` was born entirely in
-    * SQL — `CREATE TABLE … AS SELECT` registered the location with a
-    * pending declared schema and the CTAS write committed snapshot 1
+    * SQL — `CREATE TABLE … AS SELECT` committed the table's first
+    * metadata version with the query's schema and the CTAS write committed
+    * snapshot 1
     * through [[IcebergTable.append]]; the census proves a one-snapshot
     * committed table whose rows are exactly the source query's, listed by
     * the catalog beside the library-built tables. */
@@ -2822,7 +2824,7 @@ object IcebergOps {
     import spark.implicits._
     Seq((r.getLong(0), r.getLong(1), r.getLong(2),
       meta.schemas.size.toLong, meta.snapshots.size.toLong,
-      meta.schemas.lastOption.exists(_.contains("note"))))
+      meta.currentSchema.field("note").isDefined))
       .toDF("n_rows", "rows_with_note", "rows_null_note",
         "n_schema_eras", "n_snapshots", "note_in_schema")
   }
@@ -2882,11 +2884,11 @@ object IcebergOps {
 
   /** Round-18 SQL fixture warehouse:
     *  - `lake.lineitem_drop`: two appends, then `ALTER TABLE … DROP COLUMN
-    *    l_extendedprice` (metadata-only tombstone — current reads hide it,
-    *    time travel at the pre-drop snapshot still serves it);
+    *    l_extendedprice` (a metadata-only schema version — current reads
+    *    hide it, time travel at the pre-drop snapshot still serves it);
     *  - `lake.lineitem_ren`: era-1 append, `RENAME COLUMN l_quantity TO
     *    qty`, then a SQL INSERT of era 2 under the NEW name — reads must
-    *    stitch both eras through the rename chain;
+    *    stitch both eras through the field id's name history;
     *  - `lake.lineitem_mrg2`: the clause-general MERGE — conditional
     *    WHEN MATCHED UPDATE and DELETE arms, WHEN NOT MATCHED INSERT, and
     *    WHEN NOT MATCHED BY SOURCE UPDATE, all through ONE delta write;
@@ -2997,10 +2999,10 @@ object IcebergOps {
   /** `ALTER TABLE DROP COLUMN` + `RENAME COLUMN` through the SQL front
     * door — both metadata-only era commits (spec §Schema Evolution):
     * the dropped column vanishes from current reads but stays readable
-    * via `VERSION AS OF` time travel (the tombstone window), and the
-    * renamed column serves BOTH eras' data — files written under the old
-    * name resolve through the rename chain, files written after the
-    * rename carry the new name natively. */
+    * via `VERSION AS OF` time travel (the pre-drop snapshot keeps its
+    * schema), and the renamed column serves BOTH eras' data — files
+    * written under the old name resolve through the field id's name
+    * history, files written after the rename carry the new name natively. */
   def sqlAlterDropRename(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val w = sqlR18WarehouseFor(spark, lineitem)
     val cat = sqlCatalogFor(spark, w)
@@ -3536,7 +3538,7 @@ object IcebergOps {
   val SqlPropsTarget = 200L
 
   /** Table-properties fixture: `lake.props` is CREATE'd with a
-    * TBLPROPERTIES clause (pending sidecar), gets
+    * TBLPROPERTIES clause (in its first metadata version), gets
     * `write.target-records-per-file` SET before the era-1 insert (whose
     * months split into ceil(rows/target) files bucketed by
     * l_orderkey % k — replayable), then the target UNSET and a marker

@@ -13,8 +13,9 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType,
-  LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DataType, DateType, DecimalType,
+  DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -31,7 +32,8 @@ import GraftVectorized.cleanPath
   * less, filesystem-pointer) layout of that spec directly:
   *
   *  - `metadata/v<N>.metadata.json` + `version-hint.text` — format-version
-  *    2 table metadata: table-uuid, schemas, partition-specs (identity
+  *    2 table metadata: table-uuid, typed schemas with stable field ids
+  *    (the one record of the table's schema), partition-specs (identity
   *    transform on a month key), snapshot log, current-snapshot-id
   *    (Iceberg spec §"Table Metadata"; HadoopTables version-hint protocol),
   *    written by one json4s serializer ([[metadataJson]]) inside one
@@ -115,7 +117,11 @@ object IcebergTable {
                                 // normal commits, the BRANCH head for
                                 // branch appends, -1 for a table's first
                                 // snapshot. What ancestors_of walks.
-                                parentId: Long = -1L)
+                                parentId: Long = -1L,
+                                // spec `schema-id`: the table's current
+                                // schema when the snapshot was committed —
+                                // what a time-travel read serves
+                                schemaId: Int)
 
   /** A named ref (spec §Refs): `main` is maintained automatically on every
     * commit; tags and extra branches pin snapshots against expiry. */
@@ -126,39 +132,35 @@ object IcebergTable {
   final case class StatsFileInfo(snapshotId: Long, path: String,
                                  fileSizeBytes: Long, footerSizeBytes: Long)
 
+  /** A column of a table schema (spec §Schemas): its field id, which no
+    * schema change reassigns, its name and its spec type name. Every field
+    * is optional. */
+  final case class SchemaField(id: Int, name: String, tpe: String) {
+    def dataType: DataType = sparkType(tpe)
+  }
+
+  /** One version of a table's schema (spec §Schemas). */
+  final case class TableSchema(id: Int, fields: Seq[SchemaField]) {
+    lazy val struct: StructType = StructType(fields.map(f => StructField(f.name, f.dataType)))
+    def field(name: String): Option[SchemaField] = fields.find(_.name == name)
+  }
+
   final case class TableMetadata(formatVersion: Int, tableUuid: String, location: String,
                                  currentSnapshotId: Long, snapshots: Seq[SnapshotInfo],
                                  refs: Map[String, RefInfo] = Map.empty,
-                                 schemas: Seq[Seq[String]] = Seq.empty,
+                                 // every schema version the table has had
+                                 // (spec §Schema Evolution); none before
+                                 // the first commit
+                                 schemas: Seq[TableSchema] = Seq.empty,
+                                 currentSchemaId: Int = 0,
+                                 // highest field id ever assigned: a new
+                                 // column takes the next one
+                                 lastColumnId: Int = 0,
                                  statistics: Seq[StatsFileInfo] = Seq.empty,
                                  // v3 row lineage: first row id the NEXT data commit
                                  // may assign — monotone across replaces and expiry,
                                  // so row ids are never reused (spec §Row Lineage)
                                  nextRowId: Long = 0L,
-                                 // ALTER TABLE DROP COLUMN tombstones:
-                                 // column → last snapshot id at drop time.
-                                 // Current reads hide the column; a
-                                 // time-travel read at snapshot ≤ droppedAt
-                                 // still sees it (spec: the snapshot's
-                                 // schema era). Name-based (the stated
-                                 // simplification vs field ids), so
-                                 // re-adding a dropped name is refused.
-                                 droppedColumns: Map[String, Long] = Map.empty,
-                                 // ALTER TABLE RENAME COLUMN chains:
-                                 // current name → older names newest-first.
-                                 // Readers resolve a missing column per
-                                 // FILE by walking the chain (files written
-                                 // under any prior name keep serving data).
-                                 renamedColumns: Map[String, Seq[String]] = Map.empty,
-                                 // ALTER TABLE ALTER COLUMN … TYPE (spec
-                                 // §Schema Evolution type promotion:
-                                 // int→long, float→double, decimal
-                                 // precision widening): current name →
-                                 // widened type as a Spark DDL string.
-                                 // Files written before the promotion keep
-                                 // their narrow physical type; readers
-                                 // upcast per file.
-                                 widenedColumns: Map[String, String] = Map.empty,
                                  // Table properties (spec §Table Metadata
                                  // `properties`): carried across commits,
                                  // mutated only by SET/UNSET TBLPROPERTIES.
@@ -168,7 +170,47 @@ object IcebergTable {
                                  // ids of every partition spec a committed
                                  // manifest list has used (spec 0 always):
                                  // `partition-specs` must define each one
-                                 partitionSpecIds: Set[Int] = Set(0))
+                                 partitionSpecIds: Set[Int] = Set(0)) {
+    def currentSchema: TableSchema =
+      schemas.find(_.id == currentSchemaId).getOrElse(TableSchema(currentSchemaId, Seq.empty))
+  }
+
+  /** The spec's name for a Spark column type (§Primitive Types); Spark's
+    * byte and short columns are spec ints, as in Iceberg's Spark runtime.
+    * Nested types are refused. */
+  private[iceberg] def icebergType(t: DataType): String = t match {
+    case BooleanType => "boolean"
+    case ByteType | ShortType | IntegerType => "int"
+    case LongType => "long"
+    case FloatType => "float"
+    case DoubleType => "double"
+    case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
+    case DateType => "date"
+    case TimestampNTZType => "timestamp"
+    case TimestampType => "timestamptz"
+    case _: StringType => "string"
+    case BinaryType => "binary"
+    case other => throw new IllegalArgumentException(
+      s"type ${other.sql} has no Iceberg primitive type; graft columns are primitive")
+  }
+
+  private val DecimalName = """decimal\((\d+),\s*(\d+)\)""".r
+
+  /** The Spark type of a spec type name ([[icebergType]]'s inverse). */
+  private[iceberg] def sparkType(t: String): DataType = t match {
+    case "boolean" => BooleanType
+    case "int" => IntegerType
+    case "long" => LongType
+    case "float" => FloatType
+    case "double" => DoubleType
+    case DecimalName(p, s) => DecimalType(p.toInt, s.toInt)
+    case "date" => DateType
+    case "timestamp" => TimestampNTZType
+    case "timestamptz" => TimestampType
+    case "string" => StringType
+    case "binary" => BinaryType
+    case other => throw new IllegalArgumentException(s"unsupported Iceberg type $other")
+  }
 
   /** Result of scan planning — the numbers a metadata benchmark reports. */
   final case class ScanPlan(files: Seq[DataFileEntry], manifestsTotal: Int,
@@ -294,9 +336,9 @@ object IcebergTable {
                 sorted: Boolean = false): (Long, Int) =
     writeDataFiles(spark, lineitem, location, weekly,
         targetRecordsPerFile, clusterFiles, sorted) match {
-      case None => (readMetadataOpt(location).map(_.currentSnapshotId).getOrElse(0L), 0)
+      case None => (readMetadataOpt(location).fold(0L)(m => math.max(0L, m.currentSnapshotId)), 0)
       case Some(files) =>
-        val c = commitSnapshot(location, "append", files, lineitem.columns.toSeq.sorted) { a =>
+        val c = commitSnapshot(location, "append", files, Some(lineitem.schema)) { a =>
           a.parentManifests :+ writeManifestAvro(location, a.id, a.added, if (weekly) 1 else 0)
         }
         (c.snapshotId, c.conflicts)
@@ -305,12 +347,15 @@ object IcebergTable {
   /** SQL `TRUNCATE TABLE`: ONE "replace" snapshot whose manifest list is
     * EMPTY — zero live files, full history preserved (time travel to any
     * pre-truncate snapshot keeps serving its rows; expiry collects the
-    * data later). The DSv2 `TruncatableTable` contract. */
-  def truncateTable(location: String): Long =
-    commitSnapshot(location, "replace") { a =>
-      require(a.base.snapshots.nonEmpty, "cannot truncate a never-committed table")
+    * data later). The DSv2 `TruncatableTable` contract. `configure`
+    * edits the metadata in the same commit: a `REPLACE TABLE` without
+    * `AS SELECT` passes its schema and properties ([[replaceSchema]]). */
+  def truncateTable(location: String,
+                    configure: TableMetadata => TableMetadata = identity): Long =
+    commit(location)(configure.andThen(addSnapshot(location, "replace") { a =>
+      requireTable(a.base)
       Seq.empty
-    }.snapshotId
+    })).snapshotId
 
   /** Branch append (`INSERT INTO <t>.branch_<name>` — Iceberg's
     * branch-write surface, the WAP pattern's write half): the new
@@ -331,7 +376,7 @@ object IcebergTable {
     }
     checkBranch(readMetadata(location))
     val files = writeDataSnapshot(spark, df, location)
-    commitSnapshot(location, "append", files, df.columns.toSeq.sorted,
+    commitSnapshot(location, "append", files, Some(df.schema),
         Map("branch" -> branch), onto = branch, ref = branch) { a =>
       checkBranch(a.base)
       a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
@@ -363,7 +408,7 @@ object IcebergTable {
     // so each manifest's [partLo, partHi] ranges are disjoint.
     def groupOf(m: String): Int =
       (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
-    commitSnapshot(location, "append", stats, lineitem.columns.toSeq.sorted) { a =>
+    commitSnapshot(location, "append", stats, Some(lineitem.schema)) { a =>
       a.parentManifests ++ a.added.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
         .zipWithIndex.map { case ((_, fs), i) =>
           writeManifestAvro(location, a.id, fs, 0, f"g$i%03d")
@@ -431,7 +476,7 @@ object IcebergTable {
         .write.partitionBy("p_month").mode("overwrite").parquet(dataDir)
     }
     val stats = dataFileStats(spark, dataDir)
-    commitSnapshot(location, "append", stats, lineitem.columns.toSeq.sorted) { a =>
+    commitSnapshot(location, "append", stats, Some(lineitem.schema)) { a =>
       a.parentManifests ++ a.added.groupBy(f => f.partition.drop(1).toInt / groupBuckets)
         .toSeq.sortBy(_._1).zipWithIndex.map { case ((_, fs), i) =>
           writeManifestAvro(location, a.id, fs, 2, f"b$i%03d")
@@ -524,7 +569,7 @@ object IcebergTable {
       (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
     val files = writeDataSnapshot(spark, lineitem, location)
     var shape = (0, false, 0) // (flat, merged, manifestsAfter) of the published attempt
-    val id = commitSnapshot(location, "append", files, lineitem.columns.toSeq.sorted) { a =>
+    val id = commitSnapshot(location, "append", files, Some(lineitem.schema)) { a =>
       val prevManifests = a.parentManifests
       val newInfo = writeManifestAvro(location, a.id, a.added, 0)
       val flat = prevManifests.size + 1
@@ -549,12 +594,17 @@ object IcebergTable {
     * table's live contents with `df` in ONE "replace" snapshot — the new
     * manifest list carries ONLY the new data manifest, so default reads
     * flip atomically while every prior snapshot stays time-travelable
-    * until expiry. An uncommitted (CREATE'd) table just gets snapshot 1. */
-  def overwriteTable(spark: SparkSession, df: DataFrame, location: String): Long = {
+    * until expiry. A table with no snapshot yet just gets snapshot 1.
+    * `configure` edits the metadata in the same commit, before the
+    * snapshot is added: a `CREATE OR REPLACE` passes its schema and
+    * properties ([[replaceSchema]]). */
+  def overwriteTable(spark: SparkSession, df: DataFrame, location: String,
+                     configure: TableMetadata => TableMetadata = identity): Long = {
     val files = writeDataSnapshot(spark, df, location)
-    commitSnapshot(location, "replace", files, df.columns.toSeq.sorted) { a =>
+    val add = addSnapshot(location, "replace", files, Some(df.schema)) { a =>
       Seq(writeManifestAvro(location, a.id, a.added, 0))
-    }.snapshotId
+    }
+    commit(location)(configure.andThen(add)).snapshotId
   }
 
   /** DYNAMIC partition overwrite commit (`INSERT OVERWRITE` under
@@ -617,7 +667,7 @@ object IcebergTable {
     // main/current do NOT move; staged rows consume row ids at STAGE time
     // (the data files exist) — an audit-failed stage simply wastes its id
     // range, never reused
-    commitSnapshot(location, "stage", files, ref = "staging") { a =>
+    commitSnapshot(location, "stage", files, Some(lineitem.schema), ref = "staging") { a =>
       a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
     }.snapshotId
   }
@@ -1129,16 +1179,15 @@ object IcebergTable {
     new File(s.manifestList).delete()
   }
 
-  /** What a table's first commit edits: no snapshots, and the properties
-    * CREATE TABLE left in the pending sidecar. */
+  /** What a table's first commit edits: no snapshot and no schema. */
   private def uncommitted(location: String): TableMetadata =
     TableMetadata(2,
       java.util.UUID.nameUUIDFromBytes(location.getBytes(StandardCharsets.UTF_8)).toString,
-      location, -1L, Seq.empty, properties = readPendingProperties(location))
+      location, -1L, Seq.empty)
 
-  /** `meta`, if it is a committed table's. */
+  /** `meta`, if it is a committed table's (created, or written to). */
   private def requireTable(meta: TableMetadata): TableMetadata = {
-    if (meta.snapshots.isEmpty)
+    if (meta.schemas.isEmpty)
       throw new IllegalStateException(s"no Iceberg table at ${meta.location}")
     meta
   }
@@ -1161,9 +1210,9 @@ object IcebergTable {
     * current snapshot moves with `main` only). Its id is max + 1 — never
     * current + 1, which would reuse the id of a staged or rolled-back
     * snapshot — and it is its own sequence number. `added` are the data
-    * files new to the table: they consume row ids. Every distinct
-    * committed column set becomes a schema entry (spec §Schema Evolution:
-    * old files lack newer fields, and a merge-schema read null-fills).
+    * files new to the table: they consume row ids. `written` is the schema
+    * of the written rows: columns it adds or promotes become a new schema
+    * version ([[evolve]]), which the snapshot records as its own.
     *
     * A retry whose re-read finds the same snapshot log, refs and row-id
     * counter (the winner changed only properties, schemas or statistics)
@@ -1174,13 +1223,14 @@ object IcebergTable {
     * INSERT's commit through all [[MaxCommitAttempts]] attempts.) */
   private def addSnapshot(location: String, operation: String,
                           added: Seq[DataFileEntry] = Seq.empty,
-                          schema: Seq[String] = Seq.empty,
+                          written: Option[StructType] = None,
                           summary: Map[String, String] = Map.empty,
                           onto: String = "main", ref: String = "main")(
                           manifests: SnapshotAttempt => Seq[ManifestInfo])
       : TableMetadata => TableMetadata = {
     var last: Option[(TableMetadata, Seq[ManifestInfo], String)] = None
-    base => {
+    read => {
+      val base = written.fold(read)(evolve(read, _))
       val id = (0L +: base.snapshots.map(_.id)).max + 1L
       val parent =
         if (onto == "main") base.currentSnapshotId
@@ -1196,10 +1246,8 @@ object IcebergTable {
       base.copy(
         currentSnapshotId = if (ref == "main") id else base.currentSnapshotId,
         snapshots = base.snapshots :+ SnapshotInfo(id, id, id * 1000L, list,
-          operation, summary, parent),
+          operation, summary, parent, base.currentSchemaId),
         refs = base.refs + (ref -> RefInfo(id, "branch")),
-        schemas = if (schema.isEmpty || base.schemas.contains(schema)) base.schemas
-                  else base.schemas :+ schema,
         nextRowId = base.nextRowId + added.map(_.recordCount).sum,
         partitionSpecIds = base.partitionSpecIds ++ ms.map(_.specId))
     }
@@ -1208,11 +1256,162 @@ object IcebergTable {
   /** [[commit]] of one [[addSnapshot]] edit. */
   private def commitSnapshot(location: String, operation: String,
                              added: Seq[DataFileEntry] = Seq.empty,
-                             schema: Seq[String] = Seq.empty,
+                             written: Option[StructType] = None,
                              summary: Map[String, String] = Map.empty,
                              onto: String = "main", ref: String = "main")(
                              manifests: SnapshotAttempt => Seq[ManifestInfo]): Committed =
-    commit(location)(addSnapshot(location, operation, added, schema, summary, onto, ref)(manifests))
+    commit(location)(addSnapshot(location, operation, added, written, summary, onto, ref)(manifests))
+
+  // ---- Schemas ----------------------------------------------------------
+  //
+  // metadata.json is the one record of a table's schema (spec §Schemas and
+  // §Schema Evolution): every version the table has had, each field under
+  // an id no change reassigns. Data files carry no field ids, so a reader
+  // finds a field in a file by the names its id has held ([[columnHistory]]),
+  // and a name another field id held can never be given to a new field.
+
+  /** `meta` with `fields` as its current schema: the existing version with
+    * exactly these fields, or else a new one. */
+  private def withFields(meta: TableMetadata, fields: Seq[SchemaField]): TableMetadata =
+    if (fields == meta.currentSchema.fields) meta
+    else meta.schemas.find(_.fields == fields) match {
+      case Some(s) => meta.copy(currentSchemaId = s.id)
+      case None =>
+        val id = (-1 +: meta.schemas.map(_.id)).max + 1
+        meta.copy(schemas = meta.schemas :+ TableSchema(id, fields), currentSchemaId = id,
+          lastColumnId = (meta.lastColumnId +: fields.map(_.id)).max)
+    }
+
+  /** Refuse `name` for field `id` when another field id held it in any
+    * schema: a data file written under that field would serve its column
+    * of the name as this field's values. */
+  private def requireUnheld(meta: TableMetadata, name: String, id: Int): Unit =
+    meta.schemas.flatMap(_.fields).find(f => f.name == name && f.id != id).foreach { f =>
+      throw new IllegalArgumentException(s"column $name was field ${f.id} of an earlier " +
+        "schema; data files carry no field ids, so another field cannot take the name")
+    }
+
+  /** `meta` with the columns a write of `written` rows adds (fresh field
+    * ids, after the current ones) or promotes (spec type promotions); a
+    * narrower column is kept and read upcast. Lineage columns are not
+    * table columns. Any other type change is refused here, at commit. */
+  private def evolve(meta: TableMetadata, written: StructType): TableMetadata = {
+    val cols = written.fields.filterNot(f => GraftVectorized.isLineageCol(f.name))
+    val kept = meta.currentSchema.fields.map { f =>
+      cols.find(_.name == f.name).fold(f) { w =>
+        if (icebergType(w.dataType) == f.tpe || promotes(w.dataType, f.dataType)) f
+        else if (promotes(f.dataType, w.dataType)) f.copy(tpe = icebergType(w.dataType))
+        else throw new IllegalArgumentException(s"column ${f.name} is ${f.dataType.sql}; " +
+          s"a write of ${w.dataType.sql} is not a legal type promotion")
+      }
+    }
+    val added = cols.filter(c => meta.currentSchema.field(c.name).isEmpty).zipWithIndex.map {
+      case (c, i) =>
+        val id = meta.lastColumnId + 1 + i
+        requireUnheld(meta, c.name, id)
+        SchemaField(id, c.name, icebergType(c.dataType))
+    }
+    withFields(meta, kept ++ added)
+  }
+
+  /** `CREATE TABLE`: the table's first version, with the declared schema
+    * and properties and no snapshot — Iceberg's create. */
+  def create(location: String, schema: StructType,
+             properties: Map[String, String] = Map.empty): Unit =
+    commit(location) { base =>
+      require(base.schemas.isEmpty, s"a table exists at $location")
+      evolve(base, schema).copy(properties = properties)
+    }
+
+  /** The edit `CREATE OR REPLACE` commits: `schema` becomes the current
+    * schema, a column keeping the id of the current column of its name and
+    * a new one taking a fresh id, and `properties` replace the table's. An
+    * edit that changes nothing returns its input. */
+  def replaceSchema(schema: StructType,
+                    properties: Map[String, String]): TableMetadata => TableMetadata = { meta =>
+    val cur = requireTable(meta).currentSchema
+    val fresh = Iterator.from(meta.lastColumnId + 1)
+    val next = withFields(meta, schema.fields.toSeq.map(c => SchemaField(
+      cur.field(c.name).fold(fresh.next())(_.id), c.name, icebergType(c.dataType))))
+    if ((next eq meta) && meta.properties == properties) meta
+    else next.copy(properties = properties)
+  }
+
+  /** The schema a read of snapshot `snapshotId` serves: the schema that
+    * snapshot was committed under, or the current schema. */
+  def schemaAt(meta: TableMetadata, snapshotId: Option[Long]): TableSchema =
+    snapshotId.fold(meta.currentSchema) { id =>
+      val s = snapshotAt(meta, Some(id))
+      meta.schemas.find(_.id == s.schemaId).getOrElse(
+        throw new IllegalStateException(s"snapshot $id names a missing schema ${s.schemaId}"))
+    }
+
+  /** For each column of `schema`: the other names its field id held in
+    * `meta`'s schemas, newest first, and whether it ever held another
+    * type. A reader resolves the column in a file written under an older
+    * schema through these. */
+  def columnHistory(meta: TableMetadata, schema: TableSchema): Map[String, (Seq[String], Boolean)] = {
+    val past = meta.schemas.sortBy(-_.id).flatMap(_.fields)
+    schema.fields.map { f =>
+      val same = past.filter(_.id == f.id)
+      f.name -> ((same.map(_.name).filter(_ != f.name).distinct, same.exists(_.tpe != f.tpe)))
+    }.toMap
+  }
+
+  /** One schema edit on the current column `column`, which must exist and
+    * must not be the month partition source: `f` returns the field's
+    * replacement, or None to drop it. */
+  private def editColumn(location: String, column: String)(
+      f: (TableMetadata, SchemaField) => Option[SchemaField]): Unit =
+    commit(location) { meta =>
+      val cur = requireTable(meta).currentSchema
+      val field = cur.field(column).getOrElse(
+        throw new IllegalArgumentException(s"no column $column"))
+      require(column != "l_shipdate",
+        "l_shipdate is the month partition source; it cannot be dropped, renamed or retyped")
+      withFields(meta, cur.fields.flatMap(c => if (c.id == field.id) f(meta, c) else Some(c)))
+    }
+
+  /** `ALTER TABLE ADD COLUMN` (spec §Schema Evolution): a new schema
+    * version with the column last, under the next field id. No data file
+    * is touched; files written before lack the field and read it as null. */
+  def addSchemaColumn(location: String, column: String, dataType: DataType): Unit =
+    commit(location) { meta =>
+      val cur = requireTable(meta).currentSchema
+      require(cur.field(column).isEmpty, s"column $column already exists")
+      val id = meta.lastColumnId + 1
+      requireUnheld(meta, column, id)
+      withFields(meta, cur.fields :+ SchemaField(id, column, icebergType(dataType)))
+    }
+
+  /** `ALTER TABLE DROP COLUMN`: a new schema version without the field. No
+    * data file is touched, and snapshots committed before keep serving it
+    * through their own schema. */
+  def dropSchemaColumn(location: String, column: String): Unit =
+    editColumn(location, column)((_, _) => None)
+
+  /** `ALTER TABLE RENAME COLUMN`: a new schema version in which the field
+    * keeps its id under the new name. Files written under the old name keep
+    * serving the field ([[columnHistory]]). */
+  def renameSchemaColumn(location: String, from: String, to: String): Unit =
+    editColumn(location, from) { (meta, f) =>
+      require(meta.currentSchema.field(to).isEmpty, s"column $to already exists")
+      requireUnheld(meta, to, f.id)
+      Some(f.copy(name = to))
+    }
+
+  /** `ALTER TABLE ALTER COLUMN … TYPE`: a legal type promotion (spec
+    * §Schema Evolution: int→long, float→double, decimal precision widening
+    * at fixed scale) as a new schema version. No data file is touched:
+    * files written before keep their narrow physical type and the reader
+    * upcasts them per file. */
+  def widenSchemaColumn(location: String, column: String, to: DataType): Unit =
+    editColumn(location, column) { (_, f) =>
+      require(f.dataType == to || promotes(f.dataType, to),
+        s"illegal type promotion for $column: ${f.dataType.sql} -> ${to.sql} (spec allows " +
+          "int->bigint, float->double, and decimal precision widening at fixed scale)")
+      Some(f.copy(tpe = icebergType(to)))
+    }
 
   /** Write one snapshot's manifest-list Avro; returns its path. The name
     * carries a random tag (the real library's does too): two writers racing
@@ -1335,8 +1534,8 @@ object IcebergTable {
   /** `remove_orphan_files` (Iceberg's GC procedure): delete on-disk files
     * NOT reachable from ANY snapshot's metadata tree — data parquet and
     * delete/DV puffins under data/, manifest and manifest-list Avro under
-    * metadata/ (statistics puffins and the version JSON / hint / pending
-    * sidecars are never candidates). Reachability is exactly the
+    * metadata/ (statistics puffins and the version JSON / hint are never
+    * candidates). Reachability is exactly the
     * expire-snapshots walk: manifest lists → manifests → every entry's
     * path, across ALL snapshots (a file referenced only by an old
     * snapshot is history, not an orphan). Returns
@@ -1388,14 +1587,6 @@ object IcebergTable {
     setStatistics(location, StatsFileInfo(snapId, f.getPath, size, footerSize))
     (f.getPath, size, blobs.size)
   }
-
-  /** `CREATE OR REPLACE TABLE`'s configuration reset: a replaced table
-    * starts a FRESH schema era — stale drop tombstones, rename chains and
-    * type promotions from the superseded schema must not relabel the new
-    * columns. Metadata-only version bump; snapshots/history untouched. */
-  def resetColumnEvolution(location: String): Unit =
-    commit(location)(meta => requireTable(meta).copy(
-      droppedColumns = Map.empty, renamedColumns = Map.empty, widenedColumns = Map.empty))
 
   /** Resolve a ref name to its snapshot id. */
   def snapshotForRef(location: String, name: String): Long =
@@ -1466,21 +1657,17 @@ object IcebergTable {
 
   /** `meta` as a metadata.json document (spec §Table Metadata) — a pure
     * function, the inverse of [[parseMetadata]] on every metadata it
-    * parses. Maps are written in key order. A table with no recorded
-    * column set declares the one-field schema of its partition source. */
+    * parses. Maps are written in key order. */
   def metadataJson(meta: TableMetadata): JValue = {
     def strings(m: Map[String, String]): JObject =
       JObject(m.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })
-    def struct(id: Int, fields: Seq[(String, String)]): JObject =
-      JObject("schema-id" -> JInt(id), "type" -> JString("struct"),
-        "fields" -> JArray(fields.toList.zipWithIndex.map { case ((name, tpe), i) =>
-          JObject("id" -> JInt(i + 1), "name" -> JString(name),
-            "required" -> JBool(false), "type" -> JString(tpe))
-        }))
-    val schemas =
-      if (meta.schemas.isEmpty) List(struct(0, Seq("l_shipdate" -> "timestamp")))
-      else meta.schemas.toList.zipWithIndex.map { case (cols, sid) =>
-        struct(sid, cols.map(_ -> "string")) }
+    val schemas = meta.schemas.toList.map(s => JObject(
+      "type" -> JString("struct"), "schema-id" -> JInt(s.id),
+      "fields" -> JArray(s.fields.toList.map(f => JObject("id" -> JInt(f.id),
+        "name" -> JString(f.name), "required" -> JBool(false), "type" -> JString(f.tpe))))))
+    // a spec's source is the field id of the column its transform reads
+    def sourceId(column: String): Int =
+      meta.schemas.iterator.flatMap(_.fields).find(_.name == column).fold(0)(_.id)
     // spec 2 is bucket[BucketN](l_orderkey); the others are identity on
     // the month key. Every spec declares the manifest Avro's one partition
     // slot (`p_month` — the stated single-field simplification), so a
@@ -1489,10 +1676,10 @@ object IcebergTable {
     // across evolved specs.
     val specs = meta.partitionSpecIds.toList.sorted.map { sid =>
       val (transform, source, fieldId) =
-        if (sid == 2) (s"bucket[$BucketN]", 1, 1001) else ("identity", 2, 1000)
+        if (sid == 2) (s"bucket[$BucketN]", "l_orderkey", 1001) else ("identity", "l_shipdate", 1000)
       JObject("spec-id" -> JInt(sid), "fields" -> JArray(List(JObject(
         "name" -> JString("p_month"), "transform" -> JString(transform),
-        "source-id" -> JInt(source), "field-id" -> JInt(fieldId)))))
+        "source-id" -> JInt(sourceId(source)), "field-id" -> JInt(fieldId)))))
     }
     JObject(
       "format-version" -> JInt(meta.formatVersion),
@@ -1501,18 +1688,14 @@ object IcebergTable {
       "last-sequence-number" -> JLong((0L +: meta.snapshots.map(_.sequenceNumber)).max),
       "last-updated-ms" -> JLong((0L +: meta.snapshots.map(_.timestampMs)).max),
       "schemas" -> JArray(schemas),
-      "current-schema-id" -> JInt(math.max(0, meta.schemas.size - 1)),
+      "current-schema-id" -> JInt(meta.currentSchemaId),
+      "last-column-id" -> JInt(meta.lastColumnId),
       "partition-specs" -> JArray(specs),
       "default-spec-id" -> JInt(meta.partitionSpecIds.max),
       "sort-orders" -> JArray(List(JObject("order-id" -> JInt(0), "fields" -> JArray(Nil)))),
       "default-sort-order-id" -> JInt(0),
       "current-snapshot-id" -> JLong(meta.currentSnapshotId),
       "next-row-id" -> JLong(meta.nextRowId),
-      "graft-dropped" -> JObject(meta.droppedColumns.toList.sortBy(_._1).map {
-        case (n, at) => n -> JLong(at) }),
-      "graft-renames" -> JObject(meta.renamedColumns.toList.sortBy(_._1).map {
-        case (n, chain) => n -> JArray(chain.toList.map(JString(_))) }),
-      "graft-widened" -> strings(meta.widenedColumns),
       "properties" -> strings(meta.properties),
       "refs" -> JObject(meta.refs.toList.sortBy(_._1).map { case (n, r) =>
         n -> JObject("snapshot-id" -> JLong(r.snapshotId), "type" -> JString(r.refType)) }),
@@ -1523,7 +1706,7 @@ object IcebergTable {
       "snapshots" -> JArray(meta.snapshots.toList.map(sn => JObject(
         "snapshot-id" -> JLong(sn.id), "sequence-number" -> JLong(sn.sequenceNumber),
         "timestamp-ms" -> JLong(sn.timestampMs), "parent-snapshot-id" -> JLong(sn.parentId),
-        "manifest-list" -> JString(sn.manifestList),
+        "schema-id" -> JInt(sn.schemaId), "manifest-list" -> JString(sn.manifestList),
         "summary" -> JObject(("operation" -> JString(sn.operation)) ::
           strings(sn.summary).obj)))))
   }
@@ -1629,7 +1812,8 @@ object IcebergTable {
         (s \ "summary" \ "operation").extract[String],
         strings(s \ "summary") - "operation",
         // pre-lineage metadata files lack the field: -1 (root)
-        (s \ "parent-snapshot-id").extractOpt[Long].getOrElse(-1L))
+        (s \ "parent-snapshot-id").extractOpt[Long].getOrElse(-1L),
+        (s \ "schema-id").extract[Int])
     }
     TableMetadata((j \ "format-version").extract[Int],
       (j \ "table-uuid").extract[String],
@@ -1637,7 +1821,11 @@ object IcebergTable {
       (j \ "current-snapshot-id").extract[Long], snaps,
       fields(j \ "refs").map { case (n, r) =>
         n -> RefInfo((r \ "snapshot-id").extract[Long], (r \ "type").extract[String]) }.toMap,
-      (j \ "schemas").children.map(_ \ "fields").map(_.children.map(f => (f \ "name").extract[String])),
+      (j \ "schemas").children.map(s => TableSchema((s \ "schema-id").extract[Int],
+        (s \ "fields").children.map(f => SchemaField((f \ "id").extract[Int],
+          (f \ "name").extract[String], (f \ "type").extract[String])))),
+      (j \ "current-schema-id").extract[Int],
+      (j \ "last-column-id").extract[Int],
       (j \ "statistics").children.map { st =>
         StatsFileInfo((st \ "snapshot-id").extract[Long],
           (st \ "statistics-path").extract[String],
@@ -1646,10 +1834,6 @@ object IcebergTable {
       },
       // pre-lineage metadata files lack the field: 0 (standard evolution)
       (j \ "next-row-id").extractOpt[Long].getOrElse(0L),
-      fields(j \ "graft-dropped").map { case (n, at) => n -> at.extract[Long] }.toMap,
-      fields(j \ "graft-renames").map { case (n, chain) =>
-        n -> chain.children.map(_.extract[String]) }.toMap,
-      strings(j \ "graft-widened"),
       strings(j \ "properties"),
       (j \ "partition-specs").children.map(sp => (sp \ "spec-id").extract[Int]).toSet + 0)
   }
@@ -2179,93 +2363,21 @@ object IcebergTable {
         (path, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last)
       }, dataDir, files, operation)
 
-  /** `ALTER TABLE ADD COLUMN` at the metadata layer: a METADATA-ONLY
-    * version bump appending a new schema era to the schemas array (spec
-    * §Schema Evolution) — no snapshot, no data IO. Pre-alter data files
-    * simply lack the field; every merge-schema read (and the SQL
-    * catalog's null-vector fill) returns NULL for them, the spec's
-    * add-column rule. */
-  def addSchemaColumn(location: String, column: String): Unit =
-    commit(location) { meta =>
-      val cur = requireTable(meta).schemas.lastOption.getOrElse(Seq.empty)
-      require(!cur.contains(column), s"column $column already exists")
-      // name-based schema (no field ids): re-adding a dropped name would
-      // resurrect the old files' values instead of null-filling like a
-      // fresh-field-id re-add — refuse, the honest failure
-      require(!meta.droppedColumns.contains(column),
-        s"column $column was dropped; name-based schemas cannot re-add it")
-      meta.copy(schemas = meta.schemas :+ (cur :+ column).sorted)
-    }
-
-  /** `ALTER TABLE DROP COLUMN` (spec §Schema Evolution): a METADATA-ONLY
-    * version bump recording a TOMBSTONE — column → the head snapshot id at
-    * drop time. Current reads hide the column; a time-travel read at any
-    * snapshot ≤ droppedAt still serves it (the snapshot's schema era), and
-    * NO data file is touched — exactly the spec's drop semantics. A new
-    * schema era without the column is appended when the era list tracks
-    * it. */
-  def dropSchemaColumn(location: String, column: String): Unit =
-    commit(location) { meta =>
-      require(!requireTable(meta).droppedColumns.contains(column),
-        s"column $column already dropped")
-      val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
-      meta.copy(
-        schemas = if (cur.contains(column)) meta.schemas :+ cur.filterNot(_ == column)
-                  else meta.schemas,
-        droppedColumns = meta.droppedColumns + (column -> meta.snapshots.map(_.id).max),
-        renamedColumns = meta.renamedColumns - column,
-        widenedColumns = meta.widenedColumns - column)
-    }
-
-  /** `ALTER TABLE ALTER COLUMN … TYPE` (spec §Schema Evolution, the legal
-    * type promotions: int→long, float→double, decimal precision widening
-    * at fixed scale): a METADATA-ONLY version bump recording
-    * column → widened Spark DDL type. NO data file is touched — files
-    * written before the promotion keep their narrow physical type and the
-    * reader upcasts per file ([[GraftVectorized]]-side resolution, the
-    * name-based twin of the spec's field-id type lookup); files written
-    * after carry the wide type natively. Promotion LEGALITY is validated
-    * by the caller against the current Spark schema (the catalog layer,
-    * which has the Catalyst types); this layer only refuses dropped
-    * columns and records the promotion. */
-  /** Pending-properties sidecar (`metadata/properties.pending.json`):
-    * `CREATE TABLE … TBLPROPERTIES` and pre-commit `ALTER TABLE SET`
-    * land here; the table's FIRST commit folds the sidecar into
-    * metadata.json's `properties` ([[uncommitted]]). One flat string map,
-    * json4s both ways. */
-  def readPendingProperties(location: String): Map[String, String] = {
-    val f = new File(location, "metadata/properties.pending.json")
-    if (!f.exists()) Map.empty
-    else JsonMethods.parse(Files.readString(f.toPath)) match {
-      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
-      case _ => Map.empty
-    }
-  }
-
-  def writePendingProperties(location: String, props: Map[String, String]): Unit = {
-    val json = JObject(props.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })
-    Files.write(new File(metadataDir(location), "properties.pending.json").toPath,
-      JsonMethods.compact(json).getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** `ALTER TABLE SET/UNSET TBLPROPERTIES` on a COMMITTED table: a
-    * METADATA-ONLY version bump mutating the `properties` map (spec
-    * §Table Metadata). Properties are plain configuration — but
-    * `write.target-records-per-file` is READ BY the SQL insert path and
-    * drives the writer's file-split policy, so a property era is visible
-    * in the files census. */
+  /** `ALTER TABLE SET/UNSET TBLPROPERTIES`: a METADATA-ONLY version bump
+    * mutating the `properties` map (spec §Table Metadata). Properties are
+    * plain configuration — but `write.target-records-per-file` is READ BY
+    * the SQL insert path and drives the writer's file-split policy, so a
+    * property era is visible in the files census. */
   def setTableProperties(location: String, set: Map[String, String],
                          unset: Set[String] = Set.empty): Unit =
     commit(location)(meta => requireTable(meta).copy(properties = meta.properties -- unset ++ set))
 
   /** The writer's records-per-file target from the table's LIVE
-    * properties (committed metadata first, CREATE sidecar before the
-    * first commit) — what makes `write.target-records-per-file` a real
+    * properties — what makes `write.target-records-per-file` a real
     * control, not an annotation. */
   def targetRecordsProp(location: String): Option[Long] =
-    readMetadataOpt(location).map(_.properties)
-      .getOrElse(readPendingProperties(location))
-      .get("write.target-records-per-file").map(_.trim.toLong)
+    readMetadataOpt(location).flatMap(_.properties.get("write.target-records-per-file"))
+      .map(_.trim.toLong)
 
   /** The spec's legal type promotions (§Schema Evolution): int→long,
     * float→double, and decimal precision widening at a fixed scale. */
@@ -2274,39 +2386,6 @@ object IcebergTable {
     case (f: DecimalType, t: DecimalType) => f.scale == t.scale && f.precision < t.precision
     case _ => false
   }
-
-  def widenSchemaColumn(location: String, column: String, toTypeDdl: String): Unit =
-    commit(location) { meta =>
-      require(!requireTable(meta).droppedColumns.contains(column), s"column $column was dropped")
-      meta.copy(widenedColumns = meta.widenedColumns + (column -> toTypeDdl))
-    }
-
-  /** `ALTER TABLE RENAME COLUMN` (spec §Schema Evolution): metadata-only.
-    * The rename CHAIN (new name → every prior name, newest first) is what
-    * keeps old data live: a reader missing the current name in a file's
-    * physical schema walks the chain and reads whichever ancestor the file
-    * carries — the name-based stand-in for the spec's field-id constancy.
-    * Simplification (documented): reads at ANY snapshot see the current
-    * name (real Iceberg time travel would show the era's name). */
-  def renameSchemaColumn(location: String, from: String, to: String): Unit =
-    commit(location) { meta =>
-      require(!requireTable(meta).droppedColumns.contains(to),
-        s"column $to was dropped; name-based schemas cannot reuse the name")
-      require(!meta.renamedColumns.contains(to), s"column $to already exists (renamed)")
-      require(!meta.droppedColumns.contains(from), s"column $from was dropped")
-      val cur = meta.schemas.lastOption.getOrElse(Seq.empty)
-      meta.copy(
-        schemas = if (cur.contains(from)) meta.schemas :+ (cur.filterNot(_ == from) :+ to).sorted
-                  else meta.schemas,
-        renamedColumns = meta.renamedColumns - from +
-          (to -> (from +: meta.renamedColumns.getOrElse(from, Seq.empty))),
-        // a widened column's promotion FOLLOWS the rename (the type rides
-        // with the field, spec field-id semantics)
-        widenedColumns = meta.widenedColumns.get(from) match {
-          case Some(t) => meta.widenedColumns - from + (to -> t)
-          case None => meta.widenedColumns
-        })
-    }
 
   /** Streaming-ingest epoch commit (the Iceberg streaming sink contract):
     * ONE append snapshot per epoch whose summary records
@@ -2327,7 +2406,7 @@ object IcebergTable {
     val replayed = current.flatMap(committedAt)
     if (files.isEmpty || replayed.isDefined) { // empty or replayed epoch: a no-op
       dropStaged()
-      return replayed.orElse(current.map(_.currentSnapshotId)).getOrElse(0L)
+      return replayed.getOrElse(current.fold(0L)(m => math.max(0L, m.currentSnapshotId)))
     }
     deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
     val keep = dataFileStats(spark, dataDir, Some(files))
@@ -2350,17 +2429,19 @@ object IcebergTable {
     * the real v3 commit shape: ONE snapshot pairing (a) a deletion vector
     * on the victims' OLD positions with (b) replacement data file(s)
     * carrying their updated values, committed as operation "overwrite".
-    * Victims are the LIVE rows matching `predicate` — the scan anti-joins
-    * prior DVs first, so a previously-deleted row is neither re-deleted
-    * nor resurrected into the rewrite. Row lineage follows the spec's
-    * update rule: each rewritten row PRESERVES its `_row_id` (materialized
-    * as a column in the new files — re-positioning destroys the implicit
-    * firstRowId+position form) and takes the update's sequence as its
-    * `_last_updated_sequence_number`, which readers derive from the new
-    * file's manifest sequence ([[withLineage]]). The paired DV
-    * shares the new data file's sequence — exactly why positional scoping
-    * is data_seq <= delete_seq (matching is path-keyed, so the DV can
-    * never touch the replacement file it ships with).
+    * Victims are the LIVE rows matching `predicate`, found through the
+    * table's own scan ([[readMorUnified]]) with its `_file`, `_pos` and
+    * `_row_id`: every delete form the snapshot carries is applied, so a
+    * deleted row is neither re-deleted nor resurrected into the rewrite.
+    * Row lineage follows the spec's update rule: each rewritten row
+    * PRESERVES its `_row_id` (materialized as a column in the new files —
+    * re-positioning destroys the implicit firstRowId+position form) and
+    * takes the update's sequence as its `_last_updated_sequence_number`,
+    * which readers derive from the new file's manifest sequence
+    * ([[withLineage]]). The paired DV shares the new data file's sequence —
+    * exactly why positional scoping is data_seq <= delete_seq (matching is
+    * path-keyed, so the DV can never touch the replacement file it ships
+    * with).
     *
     * Scale shape: one distributed scan finds victims; position lists and
     * Roaring serialization stay executor-side (the [[appendDvPuffin]]
@@ -2370,49 +2451,16 @@ object IcebergTable {
   def updateMorDv(spark: SparkSession, location: String,
                   predicate: org.apache.spark.sql.Column,
                   assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    val manifests = readManifestList(currentSnapshot(readMetadata(location)).manifestList)
-    val all = readManifestsParallel(manifests.map(_.path)).flatten
-    require(all.forall(e => e.content == 0 || (e.content == 1 && e.referencedDataFile.isDefined)),
-      "updateMorDv supports v3 DV tables only (data files + deletion vectors)")
-    val priorDvs = all.filter(_.content == 1)
-    val plan = planFiles(location)
+    val (live, plan, _, _, _) = readMorUnified(spark, location)
     require(plan.files.nonEmpty, "update on an empty table")
-    require(plan.files.forall(_.firstRowId >= 0),
-      "updateMorDv requires row-lineage data files (v3 first_row_id)")
-    val blobBytes = dvBlobs()
-    import org.apache.spark.sql.Encoders
-    val tupleEnc = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
-    val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    // live victims WITH coordinates and preserved _row_id — one scan.
-    // mergeSchema: a SECOND update must see the first's materialized
-    // _row_id column even though pre-update files lack it.
-    var victims = spark.read.option("mergeSchema", "true")
-      .parquet(plan.files.map(_.path): _*)
-      .filter(predicate)
-      .withColumn("__file", regexp_replace(input_file_name(), "^file:", ""))
-      .withColumn("__pos", col("_metadata.row_index").cast("long"))
-    if (priorDvs.nonEmpty) {
-      val rows = priorDvs.map(e => (e.referencedDataFile.get, blobBytes(e)))
-      val dv = spark.createDataset(rows)(tupleEnc)
-        .flatMap { case (f, b) => RoaringDv.deserializeDvBlob(b).map(p => (f, p)) }(pairEnc)
-        .toDF("dv_file", "dv_pos")
-      victims = victims.join(dv,
-        col("__file") === col("dv_file") && col("__pos") === col("dv_pos"), "left_anti")
-    }
-    val idMap = spark.createDataset(plan.files.map(f => (f.path, f.firstRowId)))(pairEnc)
-      .toDF("__file", "__first")
-    victims = victims.join(broadcast(idMap), Seq("__file"))
-    victims = (if (victims.columns.contains("_row_id"))
-        victims.withColumn("_row_id", coalesce(col("_row_id"), col("__first") + col("__pos")))
-      else victims.withColumn("_row_id", col("__first") + col("__pos")))
-      .drop("__first")
+    val victims = withMetadata(live, "_file", "_pos", "_row_id").filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       import spark.implicits._
       // (a) the DV on the victims' old positions — serialize executor-side
       val dvRows: Array[(String, Array[Byte], Long, Long, Long)] = victims
-        .groupBy(col("__file"))
-        .agg(sort_array(collect_list(col("__pos"))).as("positions"))
+        .groupBy(col("_file"))
+        .agg(sort_array(collect_list(col("_pos"))).as("positions"))
         .as[(String, Array[Long])]
         .map { case (path, ps) =>
           (path, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last) }
@@ -2421,10 +2469,10 @@ object IcebergTable {
       require(dvRows.nonEmpty, "update matched zero live rows")
 
       // (b) replacement data file(s): updated values + materialized _row_id
-      var upd: DataFrame = victims
-      assignments.foreach { case (c, e) => upd = upd.withColumn(c, e) }
-      val files = writeDataSnapshot(spark, upd.drop("__file", "__pos"), location)
-      commitSnapshot(location, "overwrite", files) { a =>
+      val upd = assignments.foldLeft(victims) { case (df, (c, e)) => df.withColumn(c, e) }
+        .drop("_file", "_pos")
+      val files = writeDataSnapshot(spark, upd, location)
+      commitSnapshot(location, "overwrite", files, Some(upd.schema)) { a =>
         a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0) :+
           writeDvManifest(location, a.id, dvRows.toIndexedSeq)
       }.snapshotId
@@ -2467,8 +2515,11 @@ object IcebergTable {
     * `_last_updated_sequence_number`, the materialized value or else the
     * file's data sequence. */
   def withLineage(live: DataFrame): DataFrame =
-    live.select(col("*"), live.metadataColumn("_row_id"),
-      live.metadataColumn("_last_updated_sequence_number"))
+    withMetadata(live, "_row_id", "_last_updated_sequence_number")
+
+  /** `live` with the scan's metadata columns `names` as more columns. */
+  private def withMetadata(live: DataFrame, names: String*): DataFrame =
+    live.select(col("*") +: names.map(live.metadataColumn): _*)
 
   /** Read the (pruned) snapshot as a DataFrame. Data files are listed
     * explicitly (no directory walk — the whole point of the format), so

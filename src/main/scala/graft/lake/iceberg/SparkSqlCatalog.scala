@@ -47,16 +47,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * broadcast-size equality key set; the DV blobs ship in the partition,
   * the keys once per executor. Writes: `INSERT INTO` routes through the
   * committing [[IcebergTable.append]] (V1Write bridge on [[GraftSqlTable]]);
-  * row-level mutations stay library API calls
-  * (updateMorDv/appendDvPuffin/…), like the real library's procedures.
+  * `UPDATE`, `MERGE INTO` and row-level `DELETE` commit one deletion
+  * vector plus replacement files ([[GraftRowLevelOperation]]).
   * Library reads ([[IcebergTable.readMorUnified]]) run through the same
   * scan, pinned to the snapshot they read ([[GraftSnapshotPin]]); v2
   * positional-parquet delete files load on the driver like DV blobs.
   *
-  * Simplifications, stated: schema merges one data-file footer per
-  * sequence era, read on the driver (internal lineage columns stripped),
-  * with timestamps in whatever physical form the file carries — int96,
-  * millis or micros — via Spark's own vectorized conversion. */
+  * A table's schema is metadata.json's: the current schema, or a
+  * time-travel snapshot's own. Loading a table reads that one file and no
+  * manifest or data file; a data file written under an older schema is
+  * resolved per file through its fields' id history
+  * ([[IcebergTable.columnHistory]]), with timestamps in whatever physical
+  * form the file carries — int96, millis or micros — via Spark's own
+  * vectorized conversion. */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with StagingTableCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog {
@@ -99,30 +102,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def ns1(namespace: Array[String]): String =
     IcebergCatalog.nsPath(namespace.toIndexedSeq)
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    // committed tables (version-hint present) plus CREATE'd-but-not-yet-
-    // committed ones (pending schema): SQL must see a table between its
-    // CREATE and its first INSERT even though the library-level catalog
-    // keeps the strict HadoopCatalog existence rule
-    val nsDir = new File(new File(warehouse), ns1(namespace))
-    Option(nsDir.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory &&
-        (new File(d, "metadata/version-hint.text").exists() ||
-         new File(d, "metadata/schema.pending.json").exists()))
-      .map(d => Identifier.of(namespace, d.getName)).sortBy(_.name())
-  }
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    IcebergCatalog.listTables(warehouse, ns1(namespace))
+      .map(Identifier.of(namespace, _)).toArray
 
   private def location(ident: Identifier): String =
     IcebergCatalog.tableLocation(warehouse, ns1(ident.namespace()), ident.name())
 
+  private def qualified(ident: Identifier): String =
+    s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}"
+
   private def load(ident: Identifier, snapshotId: Option[Long]): Table = {
-    val loc = location(ident)
-    if (!new File(loc, "metadata/version-hint.text").exists() &&
-        !new File(loc, "metadata/schema.pending.json").exists())
+    if (!IcebergCatalog.tableExists(warehouse, ns1(ident.namespace()), ident.name()))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ns1(ident.namespace()), ident.name()))
-    new GraftSqlTable(s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}",
-      loc, snapshotId)
+    new GraftSqlTable(qualified(ident), location(ident), snapshotId)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -210,53 +204,51 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `CREATE TABLE <cat>.<ns>.<t> …` (incl. CTAS): registers the location
-    * and persists the DECLARED schema as `metadata/schema.pending.json` —
-    * the table is SQL-visible immediately (empty scan) while the library-
-    * level existence rule stays "committed metadata only"; the first
-    * INSERT/CTAS write commits snapshot 1 through [[IcebergTable.append]]
-    * and the table becomes a normal committed table. Partition transforms
-    * are refused: graft tables partition by month(l_shipdate) implicitly
-    * (the stated single-spec simplification). */
+    * and commits the table's first metadata version — the declared schema
+    * and the clause's properties, no snapshot ([[IcebergTable.create]]) —
+    * so the table exists, empty, for SQL and the library alike; the first
+    * INSERT/CTAS write commits snapshot 1. Partition transforms are
+    * refused: graft tables partition by month(l_shipdate) implicitly (the
+    * stated single-spec simplification). */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): Table = {
+    checkDeclared(schema, partitions)
+    val loc = IcebergCatalog.createTable(warehouse, ns1(ident.namespace()), ident.name())
+    IcebergTable.create(loc, schema, userProperties(properties))
+    new GraftSqlTable(qualified(ident), loc, None)
+  }
+
+  private def checkDeclared(schema: StructType, partitions: Array[Transform]): Unit = {
     require(partitions.isEmpty,
       "graft tables partition by month(l_shipdate) implicitly; omit PARTITIONED BY")
     require(schema.fieldNames.contains("l_shipdate"),
       "graft tables require an l_shipdate column (the month partition key)")
-    val loc = IcebergCatalog.createTable(warehouse, ns1(ident.namespace()), ident.name())
-    val mdir = new File(loc, "metadata"); mdir.mkdirs()
-    java.nio.file.Files.write(new File(mdir, "schema.pending.json").toPath,
-      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // CREATE TABLE … TBLPROPERTIES: user properties land in the pending
-    // sidecar (folded into metadata.json by the first commit); Spark's
-    // reserved bookkeeping keys are not table properties
+  }
+
+  /** A CREATE/REPLACE clause's table properties: Spark's reserved
+    * bookkeeping keys are not table properties. */
+  private def userProperties(properties: java.util.Map[String, String]): Map[String, String] = {
     val reserved = Set("provider", "owner", "location", "comment", "external")
-    import scala.jdk.CollectionConverters._
-    val userProps = properties.asScala.toMap.filterNot { case (k, _) =>
+    properties.asScala.toMap.filterNot { case (k, _) =>
       reserved.contains(k) || k.startsWith("option.") }
-    if (userProps.nonEmpty) IcebergTable.writePendingProperties(loc, userProps)
-    new GraftSqlTable(s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}",
-      loc, None)
   }
 
   /** `CREATE OR REPLACE TABLE … AS SELECT` / atomic CTAS
     * (StagingTableCatalog — what keeps Spark's RTAS from falling back to
     * the non-atomic drop+create, which would DESTROY the snapshot
-    * history): stageCreate registers the table exactly like CREATE;
-    * stageReplace rewrites the DECLARED schema to the clause's and hands
-    * back a staged table whose write lands as ONE "replace" (truncate)
-    * snapshot — table identity and snapshot history SURVIVE the replace
-    * (Iceberg's REPLACE semantics: time travel to pre-replace snapshots
-    * keeps working), while commitStagedChanges resets the
-    * column-evolution bookkeeping and the property map to the clause's
-    * (a replaced table starts a fresh configuration era). */
+    * history): stageCreate creates the table exactly like CREATE;
+    * stageReplace hands back a staged table whose write lands as ONE
+    * "replace" (truncate) snapshot committed together with the clause's
+    * schema and properties ([[IcebergTable.replaceSchema]]) — table
+    * identity and snapshot history SURVIVE the replace (Iceberg's REPLACE
+    * semantics: time travel to pre-replace snapshots keeps serving their
+    * own schema). */
   override def stageCreate(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): StagedTable = {
     val t = createTable(ident, schema, partitions, properties)
-    new GraftStagedTable(t.name(), location(ident), schema, replaceProps = None,
-      dropOnAbort = true)
+    new GraftStagedTable(t.name(), location(ident), schema, replace = None)
   }
 
   override def stageReplace(ident: Identifier, schema: StructType,
@@ -275,126 +267,41 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def stagedReplace(ident: Identifier, schema: StructType,
                             partitions: Array[Transform],
                             properties: java.util.Map[String, String]): StagedTable = {
-    require(partitions.isEmpty,
-      "graft tables partition by month(l_shipdate) implicitly; omit PARTITIONED BY")
-    require(schema.fieldNames.contains("l_shipdate"),
-      "graft tables require an l_shipdate column (the month partition key)")
-    val loc = location(ident)
-    val mdir = new File(loc, "metadata"); mdir.mkdirs()
-    java.nio.file.Files.write(new File(mdir, "schema.pending.json").toPath,
-      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val reserved = Set("provider", "owner", "location", "comment", "external")
-    import scala.jdk.CollectionConverters._
-    val userProps = properties.asScala.toMap.filterNot { case (k, _) =>
-      reserved.contains(k) || k.startsWith("option.") }
-    new GraftStagedTable(
-      s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}",
-      loc, schema, replaceProps = Some(userProps), dropOnAbort = false)
+    checkDeclared(schema, partitions)
+    new GraftStagedTable(qualified(ident), location(ident), schema,
+      replace = Some(IcebergTable.replaceSchema(schema, userProperties(properties))))
   }
 
-  /** `ALTER TABLE <cat>.<ns>.<t> ADD COLUMN <c> <type>`: the SQL-visible
-    * TYPE rides in the declared-schema file (metadata/schema.pending.json
-    * — the same vehicle CREATE uses), and for a committed table the
-    * column-set change lands as a METADATA-ONLY schemas-array commit
-    * ([[IcebergTable.addSchemaColumn]], spec §Schema Evolution). Pre-alter
-    * files null-fill on read; the next INSERT writes the column for real.
+  /** `ALTER TABLE <cat>.<ns>.<t> …`: each change is one METADATA-ONLY
+    * commit of [[IcebergTable]] (spec §Schema Evolution) — ADD, DROP and
+    * RENAME COLUMN and ALTER COLUMN … TYPE commit a new schema version,
+    * SET/UNSET TBLPROPERTIES a new property map. No data file is touched.
     * Other change kinds are refused. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val loc = location(ident)
+    def column(names: Array[String]): String = {
+      require(names.length == 1, s"nested columns are not supported: ${names.mkString(".")}")
+      names.head
+    }
     changes.foreach {
       case add: TableChange.AddColumn =>
-        require(add.fieldNames().length == 1,
-          s"nested columns are not supported: ${add.fieldNames().mkString(".")}")
-        val name = add.fieldNames().head
-        val cur = load(ident, None).asInstanceOf[GraftSqlTable].schema()
-        require(!cur.fieldNames.contains(name), s"column $name already exists")
-        val next = StructType(cur.fields :+
-          StructField(name, add.dataType(), add.isNullable()))
-        val mdir = new File(loc, "metadata"); mdir.mkdirs()
-        java.nio.file.Files.write(new File(mdir, "schema.pending.json").toPath,
-          next.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.addSchemaColumn(loc, name)
+        IcebergTable.addSchemaColumn(loc, column(add.fieldNames()), add.dataType())
       case del: TableChange.DeleteColumn =>
-        // DROP COLUMN: a metadata-only tombstone commit — current reads
-        // hide the column, time travel at pre-drop snapshots still serves
-        // it, no data file is touched (IcebergTable.dropSchemaColumn)
-        require(del.fieldNames().length == 1,
-          s"nested columns are not supported: ${del.fieldNames().mkString(".")}")
-        val name = del.fieldNames().head
-        require(name != "l_shipdate", "cannot drop the month partition key l_shipdate")
-        val cur = load(ident, None).asInstanceOf[GraftSqlTable].schema()
-        require(cur.fieldNames.contains(name), s"no column $name")
-        rewritePending(loc, fields => fields.filterNot(_.name == name))
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.dropSchemaColumn(loc, name)
+        IcebergTable.dropSchemaColumn(loc, column(del.fieldNames()))
       case ren: TableChange.RenameColumn =>
-        // RENAME COLUMN: metadata-only; the rename CHAIN keeps every file
-        // written under a prior name serving data (the name-based stand-in
-        // for field-id constancy — IcebergTable.renameSchemaColumn)
-        require(ren.fieldNames().length == 1,
-          s"nested columns are not supported: ${ren.fieldNames().mkString(".")}")
-        val from = ren.fieldNames().head
-        val to = ren.newName()
-        require(from != "l_shipdate", "cannot rename the month partition key l_shipdate")
-        val cur = load(ident, None).asInstanceOf[GraftSqlTable].schema()
-        require(cur.fieldNames.contains(from), s"no column $from")
-        require(!cur.fieldNames.contains(to), s"column $to already exists")
-        rewritePending(loc, fields => fields.map(f =>
-          if (f.name == from) f.copy(name = to) else f))
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.renameSchemaColumn(loc, from, to)
+        IcebergTable.renameSchemaColumn(loc, column(ren.fieldNames()), ren.newName())
       case upd: TableChange.UpdateColumnType =>
-        // ALTER COLUMN … TYPE: metadata-only type PROMOTION (spec §Schema
-        // Evolution: int→long, float→double, decimal precision widening at
-        // fixed scale). Pre-promotion files keep their narrow physical
-        // type; the reader upcasts per file (IcebergTable.widenSchemaColumn)
-        require(upd.fieldNames().length == 1,
-          s"nested columns are not supported: ${upd.fieldNames().mkString(".")}")
-        val name = upd.fieldNames().head
-        require(name != "l_shipdate", "cannot retype the month partition key l_shipdate")
-        val cur = load(ident, None).asInstanceOf[GraftSqlTable].schema()
-        val from = cur.fields.find(_.name == name).getOrElse(
-          throw new IllegalArgumentException(s"no column $name")).dataType
-        val to = upd.newDataType()
-        require(IcebergTable.promotes(from, to), s"illegal type promotion for $name: " +
-          s"${from.sql} -> ${to.sql} (spec allows int->bigint, float->double, " +
-          "and decimal precision widening at fixed scale)")
-        rewritePending(loc, fields => fields.map(f =>
-          if (f.name == name) f.copy(dataType = to) else f))
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.widenSchemaColumn(loc, name, to.sql)
+        IcebergTable.widenSchemaColumn(loc, column(upd.fieldNames()), upd.newDataType())
       case set: TableChange.SetProperty =>
-        // SET TBLPROPERTIES: metadata-only on a committed table, sidecar
-        // before the first commit (folded in by it)
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.setTableProperties(loc, Map(set.property() -> set.value()))
-        else IcebergTable.writePendingProperties(loc,
-          IcebergTable.readPendingProperties(loc) + (set.property() -> set.value()))
+        IcebergTable.setTableProperties(loc, Map(set.property() -> set.value()))
       case rm: TableChange.RemoveProperty =>
-        if (IcebergTable.readMetadataOpt(loc).isDefined)
-          IcebergTable.setTableProperties(loc, Map.empty, Set(rm.property()))
-        else IcebergTable.writePendingProperties(loc,
-          IcebergTable.readPendingProperties(loc) - rm.property())
+        IcebergTable.setTableProperties(loc, Map.empty, Set(rm.property()))
       case other => throw new UnsupportedOperationException(
         "graft catalog supports ALTER TABLE ADD/DROP/RENAME COLUMN, " +
           "ALTER COLUMN … TYPE, and SET/UNSET TBLPROPERTIES only, " +
           s"got $other")
     }
     load(ident, None)
-  }
-
-  /** Apply a field transform to the declared-schema file when one exists
-    * (CREATE'd tables carry their SQL types there; committed-only tables
-    * have none and the change lives purely in the metadata commit). */
-  private def rewritePending(loc: String, f: Array[StructField] => Array[StructField]): Unit = {
-    val pending = new File(loc, "metadata/schema.pending.json")
-    if (pending.exists()) {
-      val cur = org.apache.spark.sql.types.DataType.fromJson(
-        java.nio.file.Files.readString(pending.toPath)).asInstanceOf[StructType]
-      java.nio.file.Files.write(pending.toPath,
-        StructType(f(cur.fields)).json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -468,19 +375,22 @@ object GraftSqlScanCensus {
 }
 
 /** The staged table RTAS/atomic-CTAS writes through: the write itself
-  * lands via the normal builders (truncate mode for a replace — ONE
-  * "replace" snapshot at the write's end, which is the atomic point), so
-  * commitStagedChanges only finalizes configuration: for a REPLACE it
-  * resets column-evolution bookkeeping (stale rename chains or promotions
-  * from the old schema must not relabel the new columns) and replaces the
-  * property map with the clause's. Abort of a staged CREATE drops the
-  * just-registered empty table; abort of a staged REPLACE leaves the
-  * table at its pre-write snapshot (nothing was swapped). */
+  * lands via the normal builders — for a REPLACE in truncate mode, as ONE
+  * "replace" snapshot committed together with `replace`, the clause's
+  * schema and properties, which is the atomic point. A REPLACE without AS
+  * SELECT builds no write: commitStagedChanges commits `replace` with an
+  * empty "replace" snapshot, leaving the table empty as Iceberg's REPLACE
+  * TABLE does (the old files, read under the new schema, could serve a
+  * new column the values of an old one of its name). Abort of a staged
+  * CREATE drops the just-created empty table; abort of a staged REPLACE
+  * leaves the table as it was (nothing was committed). */
 private[iceberg] class GraftStagedTable(ident: String, location: String,
                                         declared: StructType,
-                                        replaceProps: Option[Map[String, String]],
-                                        dropOnAbort: Boolean)
+                                        replace: Option[IcebergTable.TableMetadata =>
+                                          IcebergTable.TableMetadata])
     extends StagedTable with SupportsWrite {
+
+  private var written = false
 
   override def name(): String = ident
   override def schema(): StructType = declared
@@ -492,28 +402,18 @@ private[iceberg] class GraftStagedTable(ident: String, location: String,
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val b = new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning())
-    if (replaceProps.isDefined) b.truncate() // a replace supersedes ALL prior data
+    written = true
+    val b = new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning(),
+      replace.getOrElse(identity))
+    if (replace.isDefined) b.truncate() // a replace supersedes ALL prior data
     b
   }
 
-  override def commitStagedChanges(): Unit = replaceProps.foreach { np =>
-    if (IcebergTable.readMetadataOpt(location).isDefined) {
-      IcebergTable.resetColumnEvolution(location)
-      val old = IcebergTable.readMetadata(location).properties
-      IcebergTable.setTableProperties(location, np, old.keySet -- np.keySet)
-    } else IcebergTable.writePendingProperties(location, np)
-  }
+  override def commitStagedChanges(): Unit =
+    if (!written) replace.foreach(IcebergTable.truncateTable(location, _))
 
   override def abortStagedChanges(): Unit =
-    if (dropOnAbort) {
-      // a staged CREATE that never committed: remove the registration
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
-        f.delete()
-      }
-      rm(new File(location))
-    }
+    if (replace.isEmpty) org.apache.commons.io.FileUtils.deleteDirectory(new File(location))
 }
 
 /** A branch-addressed table (`<t>.branch_<name>`): reads pin to the
@@ -545,13 +445,14 @@ private[iceberg] class GraftBranchSqlTable(ident: String, location: String,
 }
 
 /** A library read's snapshot, read once when the read is built
-  * ([[IcebergTable.readMorUnified]]): the table metadata, the snapshot,
-  * its manifest list and every manifest's entries in list order, plus the
-  * date bounds the read's month range maps to. A table carrying a pin
-  * serves every scan from it, so the DataFrame keeps returning that
-  * snapshot's rows whatever commits later, and no manifest is read twice. */
+  * ([[IcebergTable.readMorUnified]]): the table metadata, the snapshot
+  * (none for a table created but never written), its manifest list and
+  * every manifest's entries in list order, plus the date bounds the read's
+  * month range maps to. A table carrying a pin serves every scan from it,
+  * so the DataFrame keeps returning that snapshot's rows whatever commits
+  * later, and no manifest is read twice. */
 private[iceberg] final case class GraftSnapshotPin(meta: IcebergTable.TableMetadata,
-                                                   snapshot: IcebergTable.SnapshotInfo,
+                                                   snapshot: Option[IcebergTable.SnapshotInfo],
                                                    manifests: Seq[IcebergTable.ManifestInfo],
                                                    entries: Seq[Seq[IcebergTable.DataFileEntry]],
                                                    dateLo: Option[String], dateHi: Option[String]) {
@@ -564,12 +465,14 @@ private[iceberg] final case class GraftSnapshotPin(meta: IcebergTable.TableMetad
 }
 
 private[iceberg] object GraftSnapshotPin {
-  /** Snapshot `snapshotId` of `meta` (default: its current one), with
-    * every manifest read once, in parallel. */
+  /** Snapshot `snapshotId` of `meta` (default: its current one, if any),
+    * with every manifest read once, in parallel. */
   def read(meta: IcebergTable.TableMetadata, snapshotId: Option[Long] = None,
            dateLo: Option[String] = None, dateHi: Option[String] = None): GraftSnapshotPin = {
-    val snap = IcebergTable.snapshotAt(meta, snapshotId)
-    val manifests = IcebergTable.readManifestList(snap.manifestList)
+    val snap =
+      if (snapshotId.isEmpty && meta.currentSnapshotId < 0) None
+      else Some(IcebergTable.snapshotAt(meta, snapshotId))
+    val manifests = snap.toSeq.flatMap(s => IcebergTable.readManifestList(s.manifestList))
     GraftSnapshotPin(meta, snap, manifests,
       IcebergTable.readManifestsParallel(manifests.map(_.path)), dateLo, dateHi)
   }
@@ -615,103 +518,20 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
     new GraftRowLevelOperationBuilder(this, location, info)
   }
 
-  private lazy val schema0: StructType = applyColumnEvolution(rawSchema0)
+  // metadata.json, parsed once per table instance
+  private lazy val meta: IcebergTable.TableMetadata =
+    pinned.map(_.meta).getOrElse(IcebergTable.readMetadata(location))
 
-  // metadata.json, parsed once per table instance (None: not yet committed)
-  private lazy val meta: Option[IcebergTable.TableMetadata] =
-    pinned.map(_.meta).orElse(IcebergTable.readMetadataOpt(location))
+  /** The schema the table serves: a time-travel read's is its snapshot's
+    * own, every other read's the current one — metadata.json alone. */
+  private lazy val tableSchema: IcebergTable.TableSchema =
+    IcebergTable.schemaAt(meta, snapshotId)
 
-  /** Post-merge schema visibility (ALTER TABLE DROP/RENAME COLUMN):
-    * dropped-column tombstones hide a column from reads PAST their drop
-    * point — a time-travel read at snapshot ≤ droppedAt still serves it,
-    * the spec's era semantics — and rename chains relabel the physical
-    * field to its current name (reads at any snapshot see the current
-    * name; the stated name-based simplification). Two eras carrying both
-    * a chain's old and new physical names dedupe to the current one. */
-  private def applyColumnEvolution(raw: StructType): StructType = meta match {
-    case None => raw
-    case Some(m) if m.droppedColumns.isEmpty && m.renamedColumns.isEmpty &&
-      m.widenedColumns.isEmpty => raw
-    case Some(m) =>
-      def hidden(n: String): Boolean =
-        m.droppedColumns.get(n).exists(at => snapshotId.forall(_ > at))
-      val renamed = raw.fields.flatMap { f =>
-        if (hidden(f.name)) None
-        else m.renamedColumns.collectFirst {
-          case (nw, chain) if chain.contains(f.name) => f.copy(name = nw)
-        }.orElse(Some(f))
-      }
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      // type promotions relabel the column's SQL-visible type (reads at
-      // any snapshot see the widened type — the same stated name-based
-      // simplification renames carry)
-      StructType(renamed.filter(f => seen.add(f.name)).map { f =>
-        m.widenedColumns.get(f.name) match {
-          case Some(ddl) => f.copy(dataType = DataType.fromDDL(ddl))
-          case None => f
-        }
-      })
-  }
-
-  /** The schema before column evolution: uncommitted, the CREATE-declared
-    * one; with no live data file, that or the committed column names (the
-    * stated string-typed simplification); else the footers of one file per
-    * sequence era (its max path), read on the driver ([[ParquetFooters]])
-    * and merged newest era first ([[mergeEras]]), lineage columns
-    * stripped, plus declared columns no file carries yet (ALTER TABLE ADD
-    * COLUMN before the next INSERT — every read null-fills them). */
-  private lazy val rawSchema0: StructType = {
-    val pending = new File(location, "metadata/schema.pending.json")
-    def pendingSchema: Option[StructType] =
-      if (pending.exists())
-        Some(DataType.fromJson(java.nio.file.Files.readString(pending.toPath)).asInstanceOf[StructType])
-      else None
-    meta match {
-      case None => pendingSchema.getOrElse(throw new IllegalStateException(
-        s"$ident has neither committed metadata nor a pending schema"))
-      case Some(m) =>
-        val files = pinned.getOrElse(GraftSnapshotPin.read(m, snapshotId))
-          .plan(None, None, None, None).files
-        if (files.isEmpty)
-          pendingSchema.getOrElse(StructType(m.schemas.lastOption.getOrElse(Seq("l_shipdate"))
-            .filterNot(GraftVectorized.isLineageCol).map(StructField(_, StringType))))
-        else {
-          val perEra = files.groupBy(_.sequence).toSeq.sortBy(-_._1)
-            .map { case (_, fs) => fs.map(_.path).max }
-          val merged = ParquetFooters.read(perEra).map(_.schema).reduceLeft(mergeEras)
-          val declaredExtra = pendingSchema.map(_.fields.filterNot(f =>
-            merged.fieldNames.contains(f.name) || GraftVectorized.isLineageCol(f.name)))
-            .getOrElse(Array.empty[StructField])
-          StructType(merged.fields.filterNot(f => GraftVectorized.isLineageCol(f.name)) ++ declaredExtra)
-        }
-    }
-  }
-
-  /** Merge an older era's schema into a newer one's, newer fields first:
-    * a column whose eras disagree must differ by a legal promotion (files
-    * before ALTER COLUMN … TYPE keep the narrow type), and the wider wins. */
-  private def mergeEras(newer: StructType, older: StructType): StructType = {
-    val olderByName = older.fields.map(f => f.name -> f).toMap
-    StructType(newer.fields.map { f =>
-      olderByName.get(f.name).fold(f) { o =>
-        if (f.dataType == o.dataType || IcebergTable.promotes(o.dataType, f.dataType)) f
-        else if (IcebergTable.promotes(f.dataType, o.dataType)) o
-        else throw new IllegalStateException(s"column ${f.name}: era types " +
-          s"${f.dataType.sql} vs ${o.dataType.sql} are not a legal promotion pair")
-      }
-    } ++ older.fields.filterNot(f => newer.fieldNames.contains(f.name)))
-  }
-
-  override def schema(): StructType = schema0
+  override def schema(): StructType = tableSchema.struct
 
   /** Table properties for `SHOW TBLPROPERTIES` / DESCRIBE EXTENDED: the
-    * committed metadata's map (spec §Table Metadata `properties`), or the
-    * CREATE sidecar before the first commit. */
-  override def properties(): java.util.Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    IcebergTable.readMetadataOpt(location).map(_.properties)
-      .getOrElse(IcebergTable.readPendingProperties(location)).asJava
-  }
+    * metadata's map (spec §Table Metadata `properties`). */
+  override def properties(): java.util.Map[String, String] = meta.properties.asJava
 
   /** The implicit month(l_shipdate) partitioning, DECLARED — what makes
     * Spark route `INSERT OVERWRITE` under `partitionOverwriteMode=dynamic`
@@ -727,25 +547,9 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(location, snapshotId, schema0, pinned)
+    new GraftScanBuilder(location, snapshotId, tableSchema, pinned)
 
-  /** `INSERT INTO <cat>.<ns>.<t> …` / `df.writeTo(…).append()` — the WRITE
-    * half of the north star, routed through the library's COMMITTING
-    * append (snapshot + manifests + row-id assignment + version-hint flip)
-    * via the DSv2 V1Write bridge: the bridge hands the insert's planned
-    * DataFrame to [[IcebergTable.append]], whose distributed
-    * month-partitioned writer and manifest protocol are exactly what a
-    * direct API caller gets — SQL inserts and library appends produce
-    * indistinguishable table history. */
-  /** `DELETE FROM <cat>.<ns>.<t> WHERE …` — a METADATA-SHAPED row-level
-    * delete: the pushed condition (attribute-vs-literal compares, IN,
-    * AND/OR/NOT — [[canDeleteWhere]] refuses anything it cannot translate
-    * exactly) becomes the victim predicate of ONE committing
-    * [[IcebergTable.appendDvPuffin]] call — a v3 deletion-vector snapshot,
-    * exactly what the library's delete path writes, so SQL deletes and
-    * library deletes produce the same table history. A DELETE matching
-    * zero live rows is a no-op (no empty commit). Re-asserting positions
-    * already covered by earlier DVs is union-semantics-safe. */
+  /** A pushed source filter as the Column it means, if it has one. */
   private def filterToColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, lit}
     f match {
@@ -769,6 +573,15 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     snapshotId.isEmpty && filters.forall(f => filterToColumn(f).isDefined)
 
+  /** `DELETE FROM <cat>.<ns>.<t> WHERE …` — a METADATA-SHAPED row-level
+    * delete: the pushed condition (attribute-vs-literal compares, IN,
+    * AND/OR/NOT — [[canDeleteWhere]] refuses anything it cannot translate
+    * exactly) becomes the victim predicate of ONE committing
+    * [[IcebergTable.appendDvPuffin]] call — a v3 deletion-vector snapshot,
+    * exactly what the library's delete path writes, so SQL deletes and
+    * library deletes produce the same table history. A DELETE matching
+    * zero live rows is a no-op (no empty commit). Re-asserting positions
+    * already covered by earlier DVs is union-semantics-safe. */
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(snapshotId.isEmpty, s"cannot delete from a time-travel snapshot of $ident")
     val spark = org.apache.spark.sql.SparkSession.active
@@ -782,12 +595,20 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
     // spec-shaped alternative (a committer that reports zero victims)
     // would save it, but re-asserting already-covered positions keeps
     // union semantics either way.
-    if (meta.isEmpty) return
+    if (meta.currentSnapshotId < 0) return
     val live = IcebergTable.readMorUnified(spark, location)._1
     if (live.filter(pred).limit(1).count() > 0)
       IcebergTable.appendDvPuffin(spark, location, pred)
   }
 
+  /** `INSERT INTO <cat>.<ns>.<t> …` / `df.writeTo(…).append()` — the WRITE
+    * half of the north star, routed through the library's COMMITTING
+    * append (snapshot + manifests + row-id assignment + version-hint flip)
+    * via the DSv2 V1Write bridge: the bridge hands the insert's planned
+    * DataFrame to [[IcebergTable.append]], whose distributed
+    * month-partitioned writer and manifest protocol are exactly what a
+    * direct API caller gets — SQL inserts and library appends produce
+    * indistinguishable table history. */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(snapshotId.isEmpty, s"cannot write to a time-travel snapshot of $ident")
@@ -800,7 +621,9 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   *    SQL inserts and library appends produce indistinguishable history;
   *  - truncate (static `INSERT OVERWRITE`, or a whole-table
   *    `df.writeTo(t).overwrite(lit(true))`): ONE "replace" snapshot whose
-  *    manifest list carries only the new data ([[IcebergTable.overwriteTable]]);
+  *    manifest list carries only the new data ([[IcebergTable.overwriteTable]]),
+  *    with `configure` (a replace's schema and properties) in the same
+  *    commit;
   *  - dynamic partition overwrite (`INSERT OVERWRITE` under
   *    `partitionOverwriteMode=dynamic`): a V2 batch write — executors
   *    stream month-partitioned files ([[GraftDeltaWriter]] doubling as a
@@ -809,7 +632,9 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
 private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructType,
                                          queryId: String = "",
                                          partitioning: Array[Transform] =
-                                           Array(GraftPartitioning.monthTransform))
+                                           Array(GraftPartitioning.monthTransform),
+                                         configure: IcebergTable.TableMetadata =>
+                                           IcebergTable.TableMetadata = identity)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsOverwrite
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
@@ -881,10 +706,8 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
         // unspecified distribution (writeDataSnapshot lays batch appends
         // out itself), so plain INSERTs pay no extra exchange.
         private val wantsHashDistribution =
-          (m != "truncate") && partCol.nonEmpty &&
-            IcebergTable.readMetadataOpt(location).map(_.properties)
-              .getOrElse(IcebergTable.readPendingProperties(location))
-              .get("write.distribution-mode").contains("hash")
+          (m != "truncate") && partCol.nonEmpty && IcebergTable.readMetadataOpt(location)
+            .exists(_.properties.get("write.distribution-mode").contains("hash"))
         override def requiredDistribution()
             : org.apache.spark.sql.connector.distributions.Distribution =
           if (wantsHashDistribution)
@@ -901,7 +724,7 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
             override def insert(data: org.apache.spark.sql.DataFrame,
                                 overwrite: Boolean): Unit =
               if (m == "truncate")
-                IcebergTable.overwriteTable(data.sparkSession, data, location)
+                IcebergTable.overwriteTable(data.sparkSession, data, location, configure)
               else
                 // write.target-records-per-file (read LIVE at insert
                 // time): a property-era change shows up in the very next
@@ -924,11 +747,11 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
 }
 
 private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Long],
-                                        tableSchema: StructType,
+                                        tableSchema: IcebergTable.TableSchema,
                                         pinned: Option[GraftSnapshotPin] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var required: StructType = tableSchema
+  private var required: StructType = tableSchema.struct
   private var pushed: Array[Filter] = Array.empty
   // a pinned read starts from its own bounds; pushed filters narrow them
   private var dateLo: Option[String] = pinned.flatMap(_.dateLo)
@@ -977,7 +800,7 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def build(): Scan =
-    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema.size, pinned)
+    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema, pinned)
 }
 
 /** One planned data file + the delete state its reader must apply: the
@@ -1048,7 +871,7 @@ private[iceberg] object GraftScanPacking {
   * at all when the table carries a [[GraftSnapshotPin]]. */
 private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
                                  dateLo: Option[String], dateHi: Option[String],
-                                 required: StructType, tableCols: Int,
+                                 required: StructType, tableSchema: IcebergTable.TableSchema,
                                  pinned: Option[GraftSnapshotPin] = None)
     extends Scan with Batch {
 
@@ -1059,7 +882,7 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.SUPPORTED
   override def description(): String =
-    s"graft-iceberg $location${snapshotId.orElse(pinned.map(_.snapshot.id))
+    s"graft-iceberg $location${snapshotId.orElse(pinned.flatMap(_.snapshot.map(_.id)))
       .map(id => s" @$id").getOrElse("")}" +
       s" shipdate=[${dateLo.getOrElse("-inf")},${dateHi.getOrElse("+inf")}]"
 
@@ -1077,25 +900,16 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(location, required)
 
-  // None: a CREATE'd table before its first commit (scans empty)
-  private lazy val meta: Option[IcebergTable.TableMetadata] =
-    pinned.map(_.meta).orElse(IcebergTable.readMetadataOpt(location))
+  private lazy val meta: IcebergTable.TableMetadata =
+    pinned.map(_.meta).getOrElse(IcebergTable.readMetadata(location))
 
   // the equality-delete waves this scan resolved
   private var eqs: Seq[IcebergTable.DataFileEntry] = Seq.empty
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // a CREATE'd table before its first commit scans empty: an empty
-    // result, not an error. A committed snapshot with zero live data
-    // files (fully compacted-away history) falls out of the ONE pruned
-    // planning pass below — no extra unpruned planFiles just to guard
-    // emptiness (that pass re-read every manifest on every scan).
-    val m = meta.getOrElse {
-      GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
-        0L, 0L, 0L, 0L, required.size.toLong, tableCols.toLong))
-      return Array.empty
-    }
-    val tree = pinned.getOrElse(GraftSnapshotPin.read(m, snapshotId))
+    // a table with no snapshot, or a snapshot with zero live data files,
+    // falls out of the ONE pruned planning pass below as an empty scan
+    val tree = pinned.getOrElse(GraftSnapshotPin.read(meta, snapshotId))
     val entries = tree.entries.flatten
     // position deletes keyed by the data file they reference: one lookup
     // per planned file instead of a pass over every delete. A DV names its
@@ -1113,7 +927,7 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     val plan = tree.plan(None, None, dateLo, dateHi)
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
-      plan.manifestsRead.toLong, required.size.toLong, tableCols.toLong))
+      plan.manifestsRead.toLong, required.size.toLong, tableSchema.fields.size.toLong))
     val blobBytes = IcebergTable.dvBlobs()
     GraftScanPacking.packForSession(plan.files)
       .map { fs =>
@@ -1148,13 +962,13 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     val bc = GraftEqBroadcastCache.get(location,
       eqs.map(e => s"${e.path}@${e.sequence}").sorted.mkString(";"),
       eqs.map(e => (e.sequence, GraftParquetRows.readLongColumn(e.path, "key"))).toArray)
-    // live rename chains and type promotions ride to the tasks so files
-    // written under a prior column name/type keep serving data
+    // the older names and types of the required fields ride to the tasks,
+    // so files written under an earlier schema keep serving data
     // (resolveFileSchema; KB-grain maps)
-    val renames = meta.map(_.renamedColumns).getOrElse(Map.empty)
-      .filter { case (nw, _) => required.fieldNames.contains(nw) }
-    val widened = meta.map(_.widenedColumns).getOrElse(Map.empty)
-      .keySet.filter(required.fieldNames.contains)
+    val history = IcebergTable.columnHistory(meta, tableSchema)
+      .filter { case (n, _) => required.fieldNames.contains(n) }
+    val renames = history.collect { case (n, (names, _)) if names.nonEmpty => n -> names }
+    val widened = history.collect { case (n, (_, retyped)) if retyped => n }.toSet
     new GraftReaderFactory(fields, bc, renames, widened)
   }
 }
@@ -1303,13 +1117,14 @@ object GraftVectorized {
     ParquetFooters.withFooter(path)(_.getFileMetaData.getSchema)
 
   /** Resolve the required schema against ONE file's physical schema:
-    * RENAMED columns re-request the newest ancestor name the file carries
-    * (the rename chain — the name-based stand-in for field-id constancy),
-    * and WIDENED columns (`ALTER COLUMN … TYPE`) re-request the file's
-    * NARROW physical type when the file predates the promotion — the
-    * decoded values upcast after the vectorized read (int→long,
-    * float→double, decimal precision). Costs AT MOST one footer read per
-    * file and only runs on tables with live renames/promotions; the
+    * a RENAMED column (`renames`: the other names its field id held,
+    * newest first) re-requests the newest of them the file carries — data
+    * files carry no field ids — and a RETYPED column (`ALTER COLUMN …
+    * TYPE`) re-requests the file's NARROW physical type when the file
+    * predates the promotion — the decoded values upcast after the
+    * vectorized read (int→long, float→double, decimal precision). Costs
+    * AT MOST one footer read per file and only runs for columns whose id
+    * held another name or type; the
     * batch's vectors stay positional, so callers keep labeling columns
     * with the CURRENT names and handle the (required, resolved) type pair
     * per column. */
@@ -1633,7 +1448,7 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
 
   override def latestOffset(): Offset =
     GraftStreamOffset(IcebergTable.readMetadataOpt(location)
-      .map(_.currentSnapshotId).getOrElse(0L))
+      .fold(0L)(m => math.max(0L, m.currentSnapshotId)))
 
   override def deserializeOffset(json: String): Offset =
     GraftStreamOffset(json.trim.toLong)

@@ -1364,8 +1364,9 @@ class IcebergSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql("INSERT INTO gtest.ns.li VERSION AS OF 1 SELECT * FROM gtest_ins_src")
     }
-    // CREATE TABLE + INSERT, entirely in SQL: pending schema makes the
-    // empty table scannable, the first insert commits snapshot 1
+    // CREATE TABLE + INSERT, entirely in SQL: the created table's first
+    // metadata version makes it scannable while empty, the first insert
+    // commits snapshot 1
     spark.sql("""CREATE TABLE gtest.ns.li_new
       |(l_orderkey BIGINT, l_shipdate TIMESTAMP, l_quantity DOUBLE)""".stripMargin)
     assert(spark.sql("SELECT count(*) FROM gtest.ns.li_new").head().getLong(0) == 0L)

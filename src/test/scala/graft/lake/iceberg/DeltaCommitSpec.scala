@@ -6,6 +6,8 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType,
+  TimestampType}
 
 /** Scale and protocol contracts of the round-18 committer work:
   *  - SQL delta commit messages carry Roaring BLOBS, never raw position
@@ -14,8 +16,8 @@ import org.apache.spark.sql.functions._
   *  - commitDelta / commitOverwriteMonths are OPTIMISTIC (racing writers
   *    serialize under the version CAS instead of last-writer-winning);
   *  - the streaming epoch commit is exactly-once on replay;
-  *  - DROP/RENAME COLUMN metadata semantics (tombstone windows, rename
-  *    chains) round-trip through the metadata JSON. */
+  *  - DROP/RENAME COLUMN and type promotions are schema versions whose
+  *    field ids never change, and they round-trip the metadata JSON. */
 class DeltaCommitSpec extends SparkSpec {
 
   private def lineitem = Tables.lineitem(spark, sf0001)
@@ -102,37 +104,46 @@ class DeltaCommitSpec extends SparkSpec {
     IcebergTable.renameSchemaColumn(loc, "l_quantity", "qty")
     IcebergTable.renameSchemaColumn(loc, "qty", "quantity2")
     val meta = IcebergTable.readMetadata(loc)
-    assert(meta.droppedColumns === Map("l_tax" -> 1L))
-    assert(meta.renamedColumns === Map("quantity2" -> Seq("qty", "l_quantity")))
-    // an unrelated commit CARRIES the bookkeeping
-    IcebergTable.append(spark, lineitem, loc)
+    val first = meta.schemas.head
+    // the drop and both renames are schema versions; no field id changes
+    assert(meta.schemas.map(_.id) === Seq(0, 1, 2, 3) && meta.currentSchemaId === 3)
+    assert(meta.currentSchema.field("l_tax").isEmpty)
+    assert(meta.currentSchema.field("quantity2").map(_.id) === first.field("l_quantity").map(_.id))
+    assert(meta.currentSchema.fields.forall(f => first.fields.exists(_.id == f.id)))
+    assert(IcebergTable.columnHistory(meta, meta.currentSchema)("quantity2")._1 ===
+      Seq("qty", "l_quantity"))
+    // an unrelated commit CARRIES the history
+    IcebergTable.append(spark, lineitem.drop("l_tax").withColumnRenamed("l_quantity", "quantity2"), loc)
     val meta2 = IcebergTable.readMetadata(loc)
-    assert(meta2.droppedColumns === meta.droppedColumns)
-    assert(meta2.renamedColumns === meta.renamedColumns)
-    // name-based schemas refuse resurrecting a dropped name
+    assert(meta2.schemas === meta.schemas && meta2.currentSchemaId === meta.currentSchemaId)
+    assert(meta2.snapshots.map(_.schemaId) === Seq(0, 3))
+    // a dropped name is never given to another field
     intercept[IllegalArgumentException] {
-      IcebergTable.addSchemaColumn(loc, "l_tax")
+      IcebergTable.addSchemaColumn(loc, "l_tax", DoubleType)
     }
   }
 
   test("type promotions round-trip the metadata JSON and follow renames") {
     val loc = Files.createTempDirectory("graft_widen_meta_").toString
     IcebergTable.append(spark, lineitem, loc)
-    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", LongType)
     val meta = IcebergTable.readMetadata(loc)
-    assert(meta.widenedColumns === Map("l_linenumber" -> "BIGINT"))
-    // an unrelated commit CARRIES the promotion
+    val id = meta.currentSchema.field("l_linenumber").get.id
+    assert(meta.schemas.head.field("l_linenumber").map(_.tpe) === Some("int"))
+    assert(meta.currentSchema.field("l_linenumber").map(_.tpe) === Some("long"))
+    // an unrelated commit (of narrow values, read upcast) CARRIES the promotion
     IcebergTable.append(spark, lineitem, loc)
-    assert(IcebergTable.readMetadata(loc).widenedColumns === meta.widenedColumns)
-    // the promotion follows a rename (the type rides with the field)
+    assert(IcebergTable.readMetadata(loc).currentSchema === meta.currentSchema)
+    // the promotion follows a rename (the type rides with the field id)
     IcebergTable.renameSchemaColumn(loc, "l_linenumber", "lnum")
-    assert(IcebergTable.readMetadata(loc).widenedColumns === Map("lnum" -> "BIGINT"))
-    // dropping the column clears the promotion
+    assert(IcebergTable.readMetadata(loc).currentSchema.field("lnum") ===
+      Some(IcebergTable.SchemaField(id, "lnum", "long")))
+    // dropping the column drops the promotion with its field
     IcebergTable.dropSchemaColumn(loc, "lnum")
-    assert(IcebergTable.readMetadata(loc).widenedColumns === Map.empty)
+    assert(IcebergTable.readMetadata(loc).currentSchema.fields.forall(_.id != id))
     // widening a dropped column is refused
     intercept[IllegalArgumentException] {
-      IcebergTable.widenSchemaColumn(loc, "lnum", "BIGINT")
+      IcebergTable.widenSchemaColumn(loc, "lnum", LongType)
     }
   }
 
@@ -181,10 +192,11 @@ class DeltaCommitSpec extends SparkSpec {
 
   test("table properties carry across commits and survive set/unset") {
     val loc = Files.createTempDirectory("graft_props_meta_").toString
-    // pre-commit: CREATE-clause properties live in the pending sidecar
-    IcebergTable.writePendingProperties(loc, Map("graft.note" -> "created"))
-    assert(IcebergTable.readPendingProperties(loc) === Map("graft.note" -> "created"))
-    // the FIRST commit folds the sidecar into metadata.json
+    // CREATE-clause properties are the table's first version's
+    IcebergTable.create(loc, lineitem.schema, Map("graft.note" -> "created"))
+    assert(IcebergTable.readMetadata(loc).properties === Map("graft.note" -> "created"))
+    assert(IcebergTable.readMetadata(loc).snapshots.isEmpty)
+    // the first snapshot keeps them
     IcebergTable.append(spark, lineitem, loc)
     assert(IcebergTable.readMetadata(loc).properties === Map("graft.note" -> "created"))
     IcebergTable.setTableProperties(loc,
@@ -242,25 +254,39 @@ class DeltaCommitSpec extends SparkSpec {
     cat.initialize("graft_staged_t", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Collections.singletonMap("warehouse", w)))
     val ident = org.apache.spark.sql.connector.catalog.Identifier.of(Array("lake"), "st")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("l_orderkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("l_shipdate",
-        org.apache.spark.sql.types.TimestampType)))
+    val schema = StructType(Seq(StructField("l_orderkey", LongType),
+      StructField("l_shipdate", TimestampType)))
     val staged = cat.stageCreate(ident, schema,
       Array.empty, java.util.Collections.emptyMap[String, String]())
     assert(cat.tableExists(ident))
     staged.abortStagedChanges()
     assert(!cat.tableExists(ident), "aborted staged CREATE must drop the registration")
-    // replace on a table with live evolution bookkeeping clears it
+    // a replace starts afresh: the clause's schema and properties, a
+    // column keeping the id of the current column of its name and the
+    // others fresh ids that carry no earlier name or type
     val loc = Files.createTempDirectory("graft_staged_repl_").toString
     IcebergTable.append(spark, lineitem, loc)
     IcebergTable.renameSchemaColumn(loc, "l_quantity", "qty")
-    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
-    IcebergTable.resetColumnEvolution(loc)
-    val meta = IcebergTable.readMetadata(loc)
-    assert(meta.renamedColumns.isEmpty && meta.widenedColumns.isEmpty &&
-      meta.droppedColumns.isEmpty)
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", LongType)
+    IcebergTable.setTableProperties(loc, Map("gen" -> "one"))
+    val before = IcebergTable.readMetadata(loc)
+    val clause = StructType(Seq(StructField("l_orderkey", LongType),
+      StructField("l_quantity", DoubleType), StructField("l_linenumber", IntegerType),
+      StructField("l_shipdate", before.currentSchema.field("l_shipdate").get.dataType)))
+    val replace = IcebergTable.replaceSchema(clause, Map("gen" -> "two"))
+    val meta = IcebergTable.commit(loc)(replace).meta
+    val cur = meta.currentSchema
+    assert(cur.struct === clause && meta.properties === Map("gen" -> "two"))
+    assert(cur.field("l_orderkey") === before.currentSchema.field("l_orderkey"))
+    assert(cur.field("l_linenumber").map(_.id) === before.currentSchema.field("l_linenumber").map(_.id))
+    assert(cur.field("l_quantity").get.id === before.lastColumnId + 1)
+    assert(IcebergTable.columnHistory(meta, cur)("l_quantity") === ((Seq.empty, false)))
+    // the history stays: time travel still serves the replaced schema
+    assert(meta.schemas.take(before.schemas.size) === before.schemas)
+    // a replace that changes nothing commits nothing
+    val (_, version) = IcebergTable.readMetadataWithVersion(loc)
+    IcebergTable.commit(loc)(replace)
+    assert(IcebergTable.readMetadataWithVersion(loc)._2 === version)
   }
 
   test("branch append moves only its ref; fast-forward publishes exactly-once") {
@@ -546,11 +572,11 @@ class DeltaCommitSpec extends SparkSpec {
       .replace("\n", "\\n").replace("\t", "\\t") + "'"
     val want = awkward.zipWithIndex.map { case (v, i) => s"graft.q$i" -> v }.toMap
     val clause = want.toSeq.map { case (k, v) => s"'$k' = ${sqlString(v)}" }.mkString(", ")
-    // CREATE TABLE … TBLPROPERTIES: the pending sidecar, then the first commit
+    // CREATE TABLE … TBLPROPERTIES: the table's first version, then the first snapshot
     spark.sql(s"CREATE TABLE $cat.lake.c (l_orderkey BIGINT, l_shipdate TIMESTAMP) " +
       s"TBLPROPERTIES ($clause)")
     val cloc = IcebergCatalog.tableLocation(w, "lake", "c")
-    assert(IcebergTable.readPendingProperties(cloc) === want)
+    assert(IcebergTable.readMetadata(cloc).properties === want)
     lineitem.createOrReplaceTempView("graft_quoting_src")
     spark.sql(s"INSERT INTO $cat.lake.c SELECT l_orderkey, l_shipdate FROM graft_quoting_src")
     assert(IcebergTable.readMetadata(cloc).properties === want)
@@ -585,9 +611,9 @@ class DeltaCommitSpec extends SparkSpec {
     IcebergTable.appendToBranch(spark, lineitem.limit(20), loc, "dev")
     IcebergTable.computeTableStats(spark, loc, Seq("l_orderkey"), 16)
     IcebergTable.appendEqualityDeletes(spark, lineitem.select("l_orderkey").limit(5), loc)
-    IcebergTable.dropSchemaColumn(loc, "l_comment")
+    IcebergTable.dropSchemaColumn(loc, "l_tax")
     IcebergTable.renameSchemaColumn(loc, "l_quantity", "qty")
-    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", LongType)
     IcebergTable.setTableProperties(loc,
       awkward.zipWithIndex.map { case (v, i) => s"k$i" -> v }.toMap)
     import org.json4s.jackson.JsonMethods
@@ -601,9 +627,11 @@ class DeltaCommitSpec extends SparkSpec {
     val last = IcebergTable.readMetadata(loc)
     assert(last.snapshots.size === 4 && last.refs.keySet === Set("main", "pin", "dev"))
     assert(last.statistics.size === 1 && last.partitionSpecIds === Set(0, 1))
-    assert(last.droppedColumns.keySet === Set("l_comment") &&
-      last.renamedColumns === Map("qty" -> Seq("l_quantity")) &&
-      last.widenedColumns === Map("l_linenumber" -> "BIGINT"))
+    val first = last.schemas.head
+    assert(last.schemas.size === 4 && last.lastColumnId === first.fields.size)
+    assert(last.currentSchema.field("l_tax").isEmpty &&
+      last.currentSchema.field("qty").map(_.id) === first.field("l_quantity").map(_.id) &&
+      last.currentSchema.field("l_linenumber").map(_.tpe) === Some("long"))
     assert(last.properties.values.toSet === awkward.toSet)
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** How many Spark jobs a statement through [[GraftCatalog]] launches.
-  * Learning a table's schema or a written file's stats reads parquet
-  * footers on the driver ([[ParquetFooters]]), so only the data work of a
-  * statement runs as jobs: an INSERT's write, a SELECT's scan. */
+  * A table's schema comes from metadata.json and a written file's stats
+  * from its parquet footer on the driver ([[ParquetFooters]]), so only the
+  * data work of a statement runs as jobs: an INSERT's write, a SELECT's
+  * scan. */
 class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def lineitem = Tables.lineitem(spark, sf0001)
@@ -89,7 +90,7 @@ class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val loc = IcebergCatalog.createTable(w, "lake", "eras")
     val thirds = (0L until 3L).map(r => pmod(col("l_orderkey"), lit(3L)) === r)
     IcebergTable.append(spark, lineitem.filter(thirds(0)), loc)
-    IcebergTable.widenSchemaColumn(loc, "l_linenumber", "BIGINT")
+    IcebergTable.widenSchemaColumn(loc, "l_linenumber", LongType)
     for (t <- thirds.tail)
       IcebergTable.append(spark,
         lineitem.filter(t).withColumn("l_linenumber", col("l_linenumber").cast("long")), loc)

@@ -23,7 +23,7 @@ class ScanPackingSpec extends SparkSpec {
   private def lineitem = Tables.lineitem(spark, sf0001)
 
   private def partitionsOf(loc: String): Seq[GraftInputPartition] =
-    new GraftScanBuilder(loc, None, lineitem.schema).build().toBatch
+    new GraftScanBuilder(loc, None, IcebergTable.readMetadata(loc).currentSchema).build().toBatch
       .planInputPartitions().toSeq.map(_.asInstanceOf[GraftInputPartition])
 
   private def catalog(w: String, tag: String): String = {

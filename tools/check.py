@@ -3,13 +3,15 @@
 
 Usage:
   python3 tools/check.py [--sf /root/testdata/sf0.01] [--out /tmp/verify_out]
-                         [--nosbt] [--only q1_pricing_summary,...]
+                         [--nosbt] [--only q1_pricing_summary,'iceberg_*',...]
 
-Runs `sbt "runMain graft.Verify <sf> <out>"` (unless --nosbt), then executes
+Runs `sbt "runMain graft.Verify <sf> <out> [<only>]"` (unless --nosbt), then executes
 each oracle SQL in DuckDB with views over the same parquet tables and compares
 row counts, schemas (pandas dtypes) and values (exact for non-floats, 1e-9
 relative tolerance for floats, as a conservative stand-in for the driver's
 hash compare — our queries pre-round so exact match is expected).
+`--only` selects the keys graft.Verify runs and the compare checks; an entry
+ending in `*` selects every key with that prefix.
 """
 import argparse, glob, json, math, os, subprocess, sys
 import duckdb
@@ -26,8 +28,14 @@ def main():
     ap.add_argument("--only", default=None)
     args = ap.parse_args()
 
+    only = args.only.split(",") if args.only else None
+    def selected(name):
+        return only is None or any(
+            name.startswith(p[:-1]) if p.endswith("*") else name == p for p in only)
+
     if not args.nosbt:
-        r = subprocess.run(["sbt", f'runMain graft.Verify {args.sf} {args.out}'],
+        keys = f" {args.only}" if args.only else ""
+        r = subprocess.run(["sbt", f'runMain graft.Verify {args.sf} {args.out}{keys}'],
                            cwd="/root/repo", capture_output=True, text=True)
         sys.stdout.write(r.stdout[-4000:])
         if r.returncode != 0:
@@ -38,11 +46,10 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
     oracle = json.load(open(f"{args.out}/oracle_sql.json"))
-    only = set(args.only.split(",")) if args.only else None
 
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
-        if only and name not in only: continue
+        if not selected(name): continue
         pdir = f"{args.out}/{name}"
         if not glob.glob(f"{pdir}/*.parquet"):
             print(f"FAIL {name}: spark output missing"); n_fail += 1; continue
@@ -62,7 +69,7 @@ def main():
     # disagree on \b\d{13,16}\b), run the Spark query on it, and hash-compare
     # against the same oracle SQL over the fixture. Skipped under --nosbt
     # (needs an sbt run against the fixture dir).
-    if not args.nosbt and (only is None or "text_pii_scan" in only):
+    if not args.nosbt and selected("text_pii_scan"):
         ok = pii_fixture_check(oracle["text_pii_scan"], args.out)
         if ok: n_pass += 1
         else: n_fail += 1
