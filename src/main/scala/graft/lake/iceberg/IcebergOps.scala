@@ -546,39 +546,28 @@ object IcebergOps {
   /** Point lookup UNDER MERGE-ON-READ on a bucket-partitioned table — the
     * two real-format features composed the way a real reader composes
     * them: the bucket transform plans the probe key down to ONE data file
-    * (manifest-summary prune), then that file's v3 deletion-vector blob
-    * (keys ≡ [[BucketMorResidue]]) is decoded executor-side and
-    * anti-joined on position before the key filter — so a deleted key
-    * correctly returns zero rows while the scan still reads exactly one
-    * file. Census: blob count and asserted cardinality for the selected
-    * file from manifest stats, live key rows + quantity from the one-file
-    * MOR read. Every number replays in DuckDB from the residue classes
-    * and the replayable bucket hash. */
+    * (manifest-summary prune), and the table's scan reads that file alone
+    * — the snapshot pinned with its data entries narrowed to the probe's
+    * file — so the file's v3 deletion-vector blob (keys ≡
+    * [[BucketMorResidue]]) applies inside the columnar reader before the
+    * key filter: a deleted key correctly returns zero rows while the scan
+    * still reads exactly one file. Census: blob count and asserted
+    * cardinality for the selected file from manifest stats, live key rows
+    * + quantity from the one-file MOR read. Every number replays in DuckDB
+    * from the residue classes and the replayable bucket hash. */
   def bucketMorLookup(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val loc = bucketMorTableFor(spark, lineitem)
-    val probes = probeKeys(lineitem)
-    val meta = IcebergTable.readMetadata(loc)
-    val dvEntries = IcebergTable.readManifestList(
-      IcebergTable.currentSnapshot(meta).manifestList)
-      .flatMap(m => IcebergTable.readManifest(m.path))
+    val pin = GraftSnapshotPin.read(IcebergTable.readMetadata(loc))
+    val dvEntries = pin.entries.flatten
       .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-    val blobBytes = IcebergTable.dvBlobs()
-    import org.apache.spark.sql.Encoders
-    val binEnc = Encoders.BINARY
-    val arms = probes.map { case (label, key) =>
+    val arms = probeKeys(lineitem).map { case (label, key) =>
       val plan = IcebergTable.planBucketLookup(loc, key)
       val file = plan.files.head
       val dvs = dvEntries.filter(_.referencedDataFile.get == file.path)
-      var df = spark.read.parquet(file.path)
-        .withColumn("__pos", col("_metadata.row_index").cast("long"))
-      if (dvs.nonEmpty) {
-        val blobs = dvs.map(blobBytes)
-        val dvPos = spark.createDataset(blobs)(binEnc)
-          .flatMap(b => RoaringDv.deserializeDvBlob(b))(Encoders.scalaLong)
-          .toDF("dv_pos")
-        df = df.join(broadcast(dvPos), col("__pos") === col("dv_pos"), "left_anti")
-      }
-      df.filter(col("l_orderkey") === key)
+      val probe = pin.copy(entries =
+        pin.entries.map(_.filter(e => e.content != 0 || e.path == file.path)))
+      IcebergTable.scanPinned(spark, loc, probe)
+        .filter(col("l_orderkey") === key)
         .agg(count(lit(1)).as("live_key_rows"),
           coalesce(round(sum(col("l_quantity")), 4), lit(0.0)).as("sum_qty"))
         .select(lit(label).as("probe"),

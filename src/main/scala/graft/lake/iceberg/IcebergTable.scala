@@ -403,18 +403,28 @@ object IcebergTable {
                     groupMonths: Int = 12): Long = {
     require(groupMonths >= 1, "groupMonths must be >= 1")
     val stats = writeDataSnapshot(spark, lineitem, location)
-    // epoch-month index / groupMonths — for groupMonths = 12 the group IS
-    // the calendar year; any value keeps groups contiguous in month order,
-    // so each manifest's [partLo, partHi] ranges are disjoint.
-    def groupOf(m: String): Int =
-      (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
     commitSnapshot(location, "append", stats, Some(lineitem.schema)) { a =>
-      a.parentManifests ++ a.added.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-        .zipWithIndex.map { case ((_, fs), i) =>
-          writeManifestAvro(location, a.id, fs, 0, f"g$i%03d")
-        }
+      a.parentManifests ++ writeGroupedManifests(location, a.id, a.added, groupMonths, "g")
     }.snapshotId
   }
+
+  /** Month-range group of a `yyyy-MM` partition value: the epoch-month
+    * index / `groupMonths`. For 12 the group IS the calendar year; any
+    * value keeps groups contiguous in month order, so the ranges of
+    * different groups are disjoint. */
+  private def monthGroup(m: String, groupMonths: Int): Int =
+    (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
+
+  /** One identity-spec manifest per [[monthGroup]] of `entries`, in group
+    * order, tagged `<tag>000`, `<tag>001`…; `existing` writes the entries
+    * as EXISTING, keeping their snapshot ids and sequences. */
+  private def writeGroupedManifests(location: String, snapshotId: Long,
+                                    entries: Seq[DataFileEntry], groupMonths: Int, tag: String,
+                                    existing: Boolean = false): Seq[ManifestInfo] =
+    entries.groupBy(f => monthGroup(f.partition, groupMonths)).toSeq.sortBy(_._1)
+      .zipWithIndex.map { case ((_, fs), i) =>
+        writeManifestAvro(location, snapshotId, fs, 0, f"$tag$i%03d", existing)
+      }
 
   /** Bucket count for the bucket partition transform (spec §Partition
     * Transforms: `bucket[N]` = hash(v) mod N). The spec's murmur3_x86_32
@@ -521,8 +531,6 @@ object IcebergTable {
     * manifests are refused — they would double-count). */
   def rewriteManifests(location: String, groupMonths: Int = 12): Long = {
     require(groupMonths >= 1, "groupMonths must be >= 1")
-    def groupOf(m: String): Int =
-      (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
     commitSnapshot(location, "replace") { a =>
       requireTable(a.base)
       val byManifest = a.parentManifests.map(m => m -> readManifest(m.path))
@@ -538,10 +546,8 @@ object IcebergTable {
           m
       }
       require(dataEntries.nonEmpty, "rewriteManifests on a table with no data files")
-      dataEntries.groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-        .zipWithIndex.map { case ((_, fs), i) =>
-          writeManifestAvro(location, a.id, fs, 0, f"rw$i%03d", existing = true)
-        } ++ deleteManifests
+      writeGroupedManifests(location, a.id, dataEntries, groupMonths, "rw", existing = true) ++
+        deleteManifests
     }.snapshotId
   }
 
@@ -565,8 +571,6 @@ object IcebergTable {
                               groupMonths: Int = 12): (Long, Int, Boolean, Int) = {
     require(minCountToMerge >= 1 && groupMonths >= 1,
       "minCountToMerge and groupMonths must be >= 1")
-    def groupOf(m: String): Int =
-      (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / groupMonths
     val files = writeDataSnapshot(spark, lineitem, location)
     var shape = (0, false, 0) // (flat, merged, manifestsAfter) of the published attempt
     val id = commitSnapshot(location, "append", files, Some(lineitem.schema)) { a =>
@@ -579,10 +583,8 @@ object IcebergTable {
         else {
           val (dataMs, deleteMs) = prevManifests.map(m => m -> readManifest(m.path))
             .partition(_._2.forall(_.content == 0))
-          dataMs.flatMap(_._2).groupBy(f => groupOf(f.partition)).toSeq.sortBy(_._1)
-            .zipWithIndex.map { case ((_, fs), i) =>
-              writeManifestAvro(location, a.id, fs, 0, f"mg$i%03d", existing = true)
-            } ++ deleteMs.map(_._1) :+ newInfo
+          writeGroupedManifests(location, a.id, dataMs.flatMap(_._2), groupMonths, "mg",
+            existing = true) ++ deleteMs.map(_._1) :+ newInfo
         }
       shape = (flat, merged, ms.size)
       ms
@@ -1461,12 +1463,11 @@ object IcebergTable {
     val meta = readMetadata(location)
     val snapshotId = meta.currentSnapshotId
     val leaves = readManifestList(currentSnapshot(meta).manifestList)
-    def groupOf(m: String): Int =
-      (m.take(4).toInt * 12 + (m.slice(5, 7).toInt - 1)) / branchMonths
-    leaves.foreach(l => require(groupOf(l.partLo) == groupOf(l.partHi),
+    leaves.foreach(l => require(
+      monthGroup(l.partLo, branchMonths) == monthGroup(l.partHi, branchMonths),
       s"leaf manifest ${l.path} straddles a branch boundary"))
     val mdir = metadataDir(location)
-    val subs = leaves.groupBy(l => groupOf(l.partLo)).toSeq.sortBy(_._1)
+    val subs = leaves.groupBy(l => monthGroup(l.partLo, branchMonths)).toSeq.sortBy(_._1)
       .zipWithIndex.map { case ((_, ms), i) =>
         val f = new File(mdir, f"snap-$snapshotId%05d-sub$i%03d.avro")
         writeManifestListAs(f, ms)
@@ -2351,18 +2352,6 @@ object IcebergTable {
     }.snapshotId
   }
 
-  /** Positions-input convenience over [[commitDelta]]: serializes each
-    * file's sorted positions to a Roaring blob first (library callers with
-    * in-memory position lists — the SQL path arrives blob-grain already). */
-  def commitDeltaPositions(spark: SparkSession, location: String,
-                           deletes: Seq[(String, Seq[Long])], dataDir: String,
-                           files: Seq[String], operation: String = "overwrite"): Long =
-    commitDelta(spark, location,
-      deletes.map { case (path, ps0) =>
-        val ps = ps0.toArray.sorted
-        (path, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last)
-      }, dataDir, files, operation)
-
   /** `ALTER TABLE SET/UNSET TBLPROPERTIES`: a METADATA-ONLY version bump
     * mutating the `properties` map (spec §Table Metadata). Properties are
     * plain configuration — but `write.target-records-per-file` is READ BY
@@ -2502,12 +2491,18 @@ object IcebergTable {
       : (DataFrame, ScanPlan, Seq[DataFileEntry], Seq[DataFileEntry], Seq[DataFileEntry]) = {
     val pin = GraftSnapshotPin.read(readMetadata(location),
       dateLo = monthLo.map(_ + "-01"), dateHi = monthHi.map(_ + "-31"))
-    val live = GraftSqlBridge.ofRows(spark, DataSourceV2Relation.create(
-      new GraftSqlTable(s"graft $location", location, None, Some(pin)), None, None))
+    val live = scanPinned(spark, location, pin)
     val deletes = pin.entries.flatten.filter(_.content != 0)
     val (dvs, positional) = deletes.filter(_.content == 1).partition(_.referencedDataFile.isDefined)
     (live, pin.plan(monthLo, monthHi, None, None), deletes.filter(_.content == 2), positional, dvs)
   }
+
+  /** The rows of `pin` through the table's own scan ([[GraftScan]]), with
+    * every delete its entries carry applied inside the columnar reader. */
+  private[iceberg] def scanPinned(spark: SparkSession, location: String,
+                                  pin: GraftSnapshotPin): DataFrame =
+    GraftSqlBridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftSqlTable(s"graft $location", location, None, Some(pin)), None, None))
 
   /** A [[readMorUnified]] DataFrame with its v3 row lineage (spec §Row
     * Lineage) as two more columns: `_row_id`, the id a rewrite

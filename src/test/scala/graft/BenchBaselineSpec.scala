@@ -59,13 +59,14 @@ class BenchBaselineSpec extends AnyFunSuite {
   }
 
   test("the parallelism block records master, parallelism, partitions and the CPU env as received") {
+    import org.json4s.jackson.JsonMethods.compact
     val got = Bench.parallelismJson("local[4]", 4, "4", Some(" 8 "))
-    assert(got === ""","parallelism":{"master":"local[4]","default_parallelism":4,""" +
+    assert(compact(got) === """{"master":"local[4]","default_parallelism":4,""" +
       """"shuffle_partitions":"4","spark_graft_cpus":" 8 "}""")
-    assert(Bench.parallelismJson("spark://h:7077", 32, "64", None)
+    assert(compact(Bench.parallelismJson("spark://h:7077", 32, "64", None))
       .endsWith(""""shuffle_partitions":"64","spark_graft_cpus":null}"""))
     // the block splices into the one-line JSON the bench prints
-    val line = "{\"metric\":\"total\"" + got + "}"
+    val line = "{\"metric\":\"total\",\"parallelism\":" + compact(got) + "}"
     assert(org.json4s.jackson.JsonMethods.parse(line) \ "parallelism" \ "default_parallelism" ===
       org.json4s.JInt(4))
   }
