@@ -546,22 +546,23 @@ object IcebergOps {
   /** Point lookup UNDER MERGE-ON-READ on a bucket-partitioned table — the
     * two real-format features composed the way a real reader composes
     * them: the bucket transform plans the probe key down to ONE data file
-    * (manifest-summary prune), and the table's scan reads that file alone
-    * — the snapshot pinned with its data entries narrowed to the probe's
-    * file — so the file's v3 deletion-vector blob (keys ≡
-    * [[BucketMorResidue]]) applies inside the columnar reader before the
-    * key filter: a deleted key correctly returns zero rows while the scan
-    * still reads exactly one file. Census: blob count and asserted
-    * cardinality for the selected file from manifest stats, live key rows
-    * + quantity from the one-file MOR read. Every number replays in DuckDB
-    * from the residue classes and the replayable bucket hash. */
+    * (manifest-summary prune over the manifests the pin already read), and
+    * the table's scan reads that file alone — the snapshot pinned with its
+    * data entries narrowed to the probe's file — so the file's v3
+    * deletion-vector blob (keys ≡ [[BucketMorResidue]]) applies inside the
+    * columnar reader before the key filter: a deleted key correctly returns
+    * zero rows while the scan still reads exactly one file. Census: blob
+    * count and asserted cardinality for the selected file from manifest
+    * stats, live key rows + quantity from the one-file MOR read. Every
+    * number replays in DuckDB from the residue classes and the replayable
+    * bucket hash. */
   def bucketMorLookup(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val loc = bucketMorTableFor(spark, lineitem)
     val pin = GraftSnapshotPin.read(IcebergTable.readMetadata(loc))
     val dvEntries = pin.entries.flatten
       .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
     val arms = probeKeys(lineitem).map { case (label, key) =>
-      val plan = IcebergTable.planBucketLookup(loc, key)
+      val plan = pin.planBucket(key)
       val file = plan.files.head
       val dvs = dvEntries.filter(_.referencedDataFile.get == file.path)
       val probe = pin.copy(entries =
@@ -3561,11 +3562,11 @@ object IcebergOps {
     }
 
   /** `SET/UNSET TBLPROPERTIES` through the SQL front door — properties as
-    * METADATA-ONLY commits that real writes OBEY:
-    * `write.target-records-per-file` is read live by the insert path, so
-    * the era-1 files census shows ceil(rows/target) bucketed files per
-    * month while the era-2 insert (after UNSET) is back to one file per
-    * month; SHOW TBLPROPERTIES serves the final map (the CREATE-clause
+    * METADATA-ONLY commits that real writes OBEY: each insert reads
+    * `write.target-records-per-file` from the metadata its statement
+    * loaded, so the era-1 files census shows ceil(rows/target) bucketed
+    * files per month while the era-2 insert (after UNSET) is back to one
+    * file per month; SHOW TBLPROPERTIES serves the final map (the CREATE-clause
     * property, the era marker's LAST value, no trace of the unset key). */
   def sqlProperties(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val w = sqlPropsWarehouseFor(spark, lineitem)

@@ -503,12 +503,17 @@ object IcebergTable {
     * week eras) cannot prune by key at all, so every one of their data
     * files stays a scan candidate — the honest pre-migration cost a table
     * evolved TO bucketing keeps paying for its history. */
-  def planBucketLookup(location: String, key: Long, murmur3: Boolean = false): ScanPlan = {
-    val meta = readMetadata(location)
-    val manifests = readManifestList(currentSnapshot(meta).manifestList)
+  def planBucketLookup(location: String, key: Long, murmur3: Boolean = false): ScanPlan =
+    pruneBucket(readManifestList(currentSnapshot(readMetadata(location)).manifestList),
+      key, murmur3)(_.map(m => readManifest(m.path)))
+
+  /** [[planBucketLookup]]'s pruning over a snapshot's manifest list: `read`
+    * returns the entries of the manifests that survive, in their order. */
+  def pruneBucket(manifests: Seq[ManifestInfo], key: Long, murmur3: Boolean = false)(
+      read: Seq[ManifestInfo] => Seq[Seq[DataFileEntry]]): ScanPlan = {
     val b = bucketLabel(key, murmur3)
     val live = manifests.filter(m => m.specId != 2 || (m.partLo <= b && b <= m.partHi))
-    val entries = live.flatMap(m => readManifest(m.path).map(e => (m.specId, e)))
+    val entries = read(live).zip(live).flatMap { case (es, m) => es.map(e => (m.specId, e)) }
     val selected = entries.collect {
       case (sid, e) if e.content == 0 && (sid != 2 || e.partition == b) => e
     }
@@ -2361,12 +2366,11 @@ object IcebergTable {
                          unset: Set[String] = Set.empty): Unit =
     commit(location)(meta => requireTable(meta).copy(properties = meta.properties -- unset ++ set))
 
-  /** The writer's records-per-file target from the table's LIVE
-    * properties — what makes `write.target-records-per-file` a real
-    * control, not an annotation. */
-  def targetRecordsProp(location: String): Option[Long] =
-    readMetadataOpt(location).flatMap(_.properties.get("write.target-records-per-file"))
-      .map(_.trim.toLong)
+  /** The writer's records-per-file target from a table's properties —
+    * what makes `write.target-records-per-file` a real control, not an
+    * annotation. */
+  def targetRecordsProp(properties: Map[String, String]): Option[Long] =
+    properties.get("write.target-records-per-file").map(_.trim.toLong)
 
   /** The spec's legal type promotions (§Schema Evolution): int→long,
     * float→double, and decimal precision widening at a fixed scale. */

@@ -28,7 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark's own DSv2 planner. No Iceberg jars: planning IS
   * [[IcebergTable.planFiles]]' pruning ([[IcebergTable.pruneFiles]]:
   * manifest-list pruning + file-level stats skip on the pushed l_shipdate
-  * bounds) over manifests read once per scan, and the readers resolve
+  * bounds) over manifests read once per scan; pushed comparisons with
+  * literals the readers evaluate themselves ([[GraftRowFilter]]), so Spark
+  * keeps only the other filters above the scan; and the readers resolve
   * the snapshot's delete files per the spec — v3 deletion vectors skipped
   * positionally WHILE reading (the real reader shape: the DV rides to the
   * task as KB-grain compressed Roaring bytes and positions never
@@ -248,7 +250,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): StagedTable = {
     val t = createTable(ident, schema, partitions, properties)
-    new GraftStagedTable(t.name(), location(ident), schema, replace = None)
+    new GraftStagedTable(t.name(), location(ident), schema, userProperties(properties),
+      replace = None)
   }
 
   override def stageReplace(ident: Identifier, schema: StructType,
@@ -268,8 +271,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                             partitions: Array[Transform],
                             properties: java.util.Map[String, String]): StagedTable = {
     checkDeclared(schema, partitions)
-    new GraftStagedTable(qualified(ident), location(ident), schema,
-      replace = Some(IcebergTable.replaceSchema(schema, userProperties(properties))))
+    val props = userProperties(properties)
+    new GraftStagedTable(qualified(ident), location(ident), schema, props,
+      replace = Some(IcebergTable.replaceSchema(schema, props)))
   }
 
   /** `ALTER TABLE <cat>.<ns>.<t> …`: each change is one METADATA-ONLY
@@ -383,9 +387,11 @@ object GraftSqlScanCensus {
   * TABLE does (the old files, read under the new schema, could serve a
   * new column the values of an old one of its name). Abort of a staged
   * CREATE drops the just-created empty table; abort of a staged REPLACE
-  * leaves the table as it was (nothing was committed). */
+  * leaves the table as it was (nothing was committed). `properties` are
+  * the clause's, which the write's distribution and file split follow. */
 private[iceberg] class GraftStagedTable(ident: String, location: String,
                                         declared: StructType,
+                                        properties: Map[String, String],
                                         replace: Option[IcebergTable.TableMetadata =>
                                           IcebergTable.TableMetadata])
     extends StagedTable with SupportsWrite {
@@ -404,7 +410,7 @@ private[iceberg] class GraftStagedTable(ident: String, location: String,
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     written = true
     val b = new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning(),
-      replace.getOrElse(identity))
+      replace.getOrElse(identity), properties)
     if (replace.isDefined) b.truncate() // a replace supersedes ALL prior data
     b
   }
@@ -450,17 +456,53 @@ private[iceberg] class GraftBranchSqlTable(ident: String, location: String,
   * every manifest's entries in list order, plus the date bounds the read's
   * month range maps to. A table carrying a pin serves every scan from it,
   * so the DataFrame keeps returning that snapshot's rows whatever commits
-  * later, and no manifest is read twice. */
+  * later, and no manifest is read twice. Its position deletes decode on
+  * the first plan that needs them and serve every later plan, so a pinned
+  * DataFrame reads each delete file once. */
 private[iceberg] final case class GraftSnapshotPin(meta: IcebergTable.TableMetadata,
                                                    snapshot: Option[IcebergTable.SnapshotInfo],
                                                    manifests: Seq[IcebergTable.ManifestInfo],
                                                    entries: Seq[Seq[IcebergTable.DataFileEntry]],
                                                    dateLo: Option[String], dateHi: Option[String]) {
+  private lazy val byPath = manifests.map(_.path).zip(entries).toMap
+
   /** [[IcebergTable.pruneFiles]] over the pinned manifests. */
   def plan(monthLo: Option[String], monthHi: Option[String],
-           dateLo: Option[String], dateHi: Option[String]): IcebergTable.ScanPlan = {
-    val byPath = manifests.map(_.path).zip(entries).toMap
+           dateLo: Option[String], dateHi: Option[String]): IcebergTable.ScanPlan =
     IcebergTable.pruneFiles(manifests, monthLo, monthHi, dateLo, dateHi)(_.map(m => byPath(m.path)))
+
+  /** [[IcebergTable.pruneBucket]] over the pinned manifests. */
+  def planBucket(key: Long): IcebergTable.ScanPlan =
+    IcebergTable.pruneBucket(manifests, key)(_.map(m => byPath(m.path)))
+
+  // Position deletes by the clean path of the data file they delete from,
+  // each with its sequence. A DV names its file in the manifest; a v2
+  // position-delete file holds (file_path, pos) rows, all of them loaded
+  // on the first plan, as one blob per (delete file, data file).
+  private lazy val dvsByFile = entries.flatten
+    .filter(e => e.content == 1 && e.referencedDataFile.isDefined)
+    .groupBy(e => GraftVectorized.cleanPath(e.referencedDataFile.get))
+  private lazy val posByFile: Map[String, Seq[(Long, Array[Byte])]] = entries.flatten
+    .filter(e => e.content == 1 && e.referencedDataFile.isEmpty)
+    .flatMap(e => GraftParquetRows.readPositions(e.path).map { case (f, ps) =>
+      (f, (e.sequence, RoaringDv.serializeDvBlob(ps.distinct.sorted))) })
+    .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  // a DV's blob bytes, read from its Puffin file when a planned file first
+  // needs them
+  private lazy val puffinBlob = IcebergTable.dvBlobs()
+  private val dvBlobs =
+    scala.collection.concurrent.TrieMap.empty[IcebergTable.DataFileEntry, Array[Byte]]
+
+  /** The position-delete blobs the reader of data file `f` applies: its
+    * DVs and v2 position deletes at a sequence no older than `f`'s (the
+    * spec scopes positional forms at data_seq <= delete_seq; a DV may share
+    * its sequence with the replacement file it ships with). */
+  def deleteBlobs(f: IcebergTable.DataFileEntry): Array[Array[Byte]] = {
+    val file = GraftVectorized.cleanPath(f.path)
+    val dvs = dvsByFile.getOrElse(file, Seq.empty).filter(_.sequence >= f.sequence)
+      .map(e => dvBlobs.getOrElseUpdate(e, puffinBlob.synchronized(puffinBlob(e))))
+    val pos = posByFile.getOrElse(file, Seq.empty).collect { case (seq, b) if seq >= f.sequence => b }
+    (dvs ++ pos).toArray
   }
 }
 
@@ -612,7 +654,8 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(snapshotId.isEmpty, s"cannot write to a time-travel snapshot of $ident")
-    new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning())
+    new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning(),
+      properties = meta.properties)
   }
 }
 
@@ -634,7 +677,8 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
                                          partitioning: Array[Transform] =
                                            Array(GraftPartitioning.monthTransform),
                                          configure: IcebergTable.TableMetadata =>
-                                           IcebergTable.TableMetadata = identity)
+                                           IcebergTable.TableMetadata = identity,
+                                         properties: Map[String, String] = Map.empty)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsOverwrite
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
@@ -705,9 +749,8 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
         // touched instead of tasks × months. Unset tables keep the
         // unspecified distribution (writeDataSnapshot lays batch appends
         // out itself), so plain INSERTs pay no extra exchange.
-        private val wantsHashDistribution =
-          (m != "truncate") && partCol.nonEmpty && IcebergTable.readMetadataOpt(location)
-            .exists(_.properties.get("write.distribution-mode").contains("hash"))
+        private val wantsHashDistribution = (m != "truncate") && partCol.nonEmpty &&
+          properties.get("write.distribution-mode").contains("hash")
         override def requiredDistribution()
             : org.apache.spark.sql.connector.distributions.Distribution =
           if (wantsHashDistribution)
@@ -726,11 +769,11 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
               if (m == "truncate")
                 IcebergTable.overwriteTable(data.sparkSession, data, location, configure)
               else
-                // write.target-records-per-file (read LIVE at insert
-                // time): a property-era change shows up in the very next
+                // write.target-records-per-file as the statement loaded
+                // it: a property-era change shows up in the very next
                 // insert's file split
                 IcebergTable.append(data.sparkSession, data, location,
-                  targetRecordsPerFile = IcebergTable.targetRecordsProp(location))
+                  targetRecordsPerFile = IcebergTable.targetRecordsProp(properties))
           }
         /** `df.writeStream.toTable(…)` — the streaming-ingest sink: one
           * append snapshot per epoch, exactly-once on restart replay
@@ -759,8 +802,9 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
 
   // the catalyst-pushed value's calendar date, for the manifests' ISO
   // string bounds (file pruning is [lo,hi]-inclusive at DAY grain, so an
-  // off-by-timezone day cannot lose rows — and every filter is ALSO
-  // returned residual below, so pruning only ever affects IO, not results).
+  // off-by-timezone day cannot lose rows — and every filter ALSO
+  // evaluates on the rows, in the reader or in Spark, so pruning only ever
+  // affects IO, not results).
   // java.sql.Timestamp converts via its instant in UTC — the calendar the
   // manifest bounds were written in — NOT toLocalDateTime (JVM zone): on a
   // non-UTC JVM an LTZ lower bound rounded up a day would prune a boundary
@@ -779,10 +823,13 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
     case _ => None
   }
 
+  /** `l_shipdate` bounds prune files; every filter the reader can
+    * evaluate ([[GraftRowFilter]]) it applies to the decoded rows, and
+    * only the others go back to Spark as post-scan filters. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     def lo(s: String): Unit = dateLo = Some(dateLo.fold(s)(o => if (s > o) s else o))
     def hi(s: String): Unit = dateHi = Some(dateHi.fold(s)(o => if (s < o) s else o))
-    pushed = filters.filter {
+    val pruning = filters.filter {
       case GreaterThanOrEqual("l_shipdate", v) => dayOf(v).exists { s => lo(s); true }
       case GreaterThan("l_shipdate", v) => dayOf(v).exists { s => lo(s); true }
       case LessThanOrEqual("l_shipdate", v) => dayOf(v).exists { s => hi(s); true }
@@ -790,9 +837,10 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
       case EqualTo("l_shipdate", v) => dayOf(v).exists { s => lo(s); hi(s); true }
       case _ => false
     }
-    // file-grain stats pruning is not row filtering: every filter still
-    // re-evaluates on the scan's rows
-    filters
+    val (evaluated, post) =
+      filters.partition(GraftRowFilter.translate(_, tableSchema.struct).isDefined)
+    pushed = (pruning ++ evaluated).distinct
+    post
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -800,7 +848,7 @@ private[iceberg] class GraftScanBuilder(location: String, snapshotId: Option[Lon
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def build(): Scan =
-    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema, pinned)
+    new GraftScan(location, snapshotId, dateLo, dateHi, required, tableSchema, pinned, pushed)
 }
 
 /** One planned data file + the delete state its reader must apply: the
@@ -865,15 +913,23 @@ private[iceberg] object GraftScanPacking {
   * COLUMNAR by [[GraftColumnarReader]] — clean files, files under
   * deletion vectors, v2 position deletes and equality deletes, and the
   * `_file`/`_pos` scans under row-level `DELETE`/`UPDATE`/`MERGE` alike.
-  * Deletes apply by position and key inside the reader, never as a join.
+  * Deletes apply by position and key inside the reader, never as a join,
+  * and then the `pushed` filters the reader evaluates ([[GraftRowFilter]]);
+  * Spark keeps only the others above the scan. `pushed` lists every
+  * pushed filter the scan uses, to prune files or to filter rows.
   * The table metadata is parsed once per scan and serves both planning
   * and the reader factory; every manifest is read once per scan, or not
-  * at all when the table carries a [[GraftSnapshotPin]]. */
+  * at all when the table carries a [[GraftSnapshotPin]], whose delete
+  * files are read once for all its scans. */
 private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
                                  dateLo: Option[String], dateHi: Option[String],
                                  required: StructType, tableSchema: IcebergTable.TableSchema,
-                                 pinned: Option[GraftSnapshotPin] = None)
+                                 pinned: Option[GraftSnapshotPin],
+                                 val pushed: Array[Filter])
     extends Scan with Batch {
+
+  private val rowFilter: Option[GraftRowFilter] =
+    pushed.flatMap(GraftRowFilter.translate(_, tableSchema.struct)).reduceOption(GraftRowFilter.And)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -884,7 +940,8 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
   override def description(): String =
     s"graft-iceberg $location${snapshotId.orElse(pinned.flatMap(_.snapshot.map(_.id)))
       .map(id => s" @$id").getOrElse("")}" +
-      s" shipdate=[${dateLo.getOrElse("-inf")},${dateHi.getOrElse("+inf")}]"
+      s" shipdate=[${dateLo.getOrElse("-inf")},${dateHi.getOrElse("+inf")}]" +
+      (if (pushed.isEmpty) "" else pushed.mkString(" pushed=[", ", ", "]"))
 
   /** `spark.readStream.table(<cat>.<ns>.<t>)` — the snapshot TAILER as a
     * Structured Streaming source (the consumption pattern behind Iceberg's
@@ -895,13 +952,19 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     * contribute nothing, deletes add no data files, staged snapshots stay
     * invisible until published), so successive batches PARTITION the
     * table's append history exactly-once — the same contract the
-    * checkpointed offset makes durable across restarts. */
+    * checkpointed offset makes durable across restarts. The batches'
+    * rows pass the same row filter as the batch scan's. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(location, required)
+    new GraftMicroBatchStream(location, required, rowFilter)
 
   private lazy val meta: IcebergTable.TableMetadata =
     pinned.map(_.meta).getOrElse(IcebergTable.readMetadata(location))
+
+  // the columns the readers read: the required ones and those the row
+  // filter tests, which Spark no longer needs above the scan
+  private val readColumns: Seq[String] =
+    (required.fieldNames.toSeq ++ rowFilter.toSeq.flatMap(_.columns.map(_._1))).distinct
 
   // the equality-delete waves this scan resolved
   private var eqs: Seq[IcebergTable.DataFileEntry] = Seq.empty
@@ -910,38 +973,18 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     // a table with no snapshot, or a snapshot with zero live data files,
     // falls out of the ONE pruned planning pass below as an empty scan
     val tree = pinned.getOrElse(GraftSnapshotPin.read(meta, snapshotId))
-    val entries = tree.entries.flatten
-    // position deletes keyed by the data file they reference: one lookup
-    // per planned file instead of a pass over every delete. A DV names its
-    // file in the manifest; a v2 position-delete file holds (file_path,
-    // pos) rows, loaded here on the driver like the DV blobs
-    val dvsByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isDefined)
-      .groupBy(e => GraftVectorized.cleanPath(e.referencedDataFile.get))
-    val posByFile = entries.filter(e => e.content == 1 && e.referencedDataFile.isEmpty)
-      .flatMap(e => GraftParquetRows.readPositions(e.path).map { case (f, ps) => (f, (e.sequence, ps)) })
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    eqs = entries.filter(_.content == 2)
+    eqs = tree.entries.flatten.filter(_.content == 2)
     // planFiles' pruning over the manifests read once (ScanPlan.filesTotal
     // is computed from the full manifest list, so the pruned plan carries
     // the census denominator)
     val plan = tree.plan(None, None, dateLo, dateHi)
     GraftSqlScanCensus.record(location, GraftSqlScanCensus.Census(
       plan.filesTotal, plan.filesSelected.toLong, plan.manifestsTotal.toLong,
-      plan.manifestsRead.toLong, required.size.toLong, tableSchema.fields.size.toLong))
-    val blobBytes = IcebergTable.dvBlobs()
+      plan.manifestsRead.toLong, readColumns.size.toLong, tableSchema.fields.size.toLong))
     GraftScanPacking.packForSession(plan.files)
       .map { fs =>
         GraftInputPartition(fs.map { f =>
-          val file = GraftVectorized.cleanPath(f.path)
-          // positional forms scope at data_seq <= delete_seq (spec; a DV
-          // may share its sequence with the replacement file it ships with)
-          val dvs = dvsByFile.getOrElse(file, Seq.empty)
-            .filter(e => e.sequence >= f.sequence).map(blobBytes)
-          val pos = posByFile.getOrElse(file, Seq.empty).collect {
-            case (seq, ps) if seq >= f.sequence => ps }
-          val posBlob = if (pos.isEmpty) None
-            else Some(RoaringDv.serializeDvBlob(pos.flatten.distinct.sorted.toArray))
-          GraftFileTask(f.path, f.sequence, (dvs ++ posBlob).toArray, f.firstRowId)
+          GraftFileTask(f.path, f.sequence, tree.deleteBlobs(f), f.firstRowId)
         }.toArray): InputPartition
       }.toArray
   }
@@ -962,14 +1005,14 @@ private[iceberg] class GraftScan(location: String, snapshotId: Option[Long],
     val bc = GraftEqBroadcastCache.get(location,
       eqs.map(e => s"${e.path}@${e.sequence}").sorted.mkString(";"),
       eqs.map(e => (e.sequence, GraftParquetRows.readLongColumn(e.path, "key"))).toArray)
-    // the older names and types of the required fields ride to the tasks,
-    // so files written under an earlier schema keep serving data
+    // the older names and types of the fields the reader reads ride to the
+    // tasks, so files written under an earlier schema keep serving data
     // (resolveFileSchema; KB-grain maps)
     val history = IcebergTable.columnHistory(meta, tableSchema)
-      .filter { case (n, _) => required.fieldNames.contains(n) }
+      .filter { case (n, _) => readColumns.contains(n) }
     val renames = history.collect { case (n, (names, _)) if names.nonEmpty => n -> names }
     val widened = history.collect { case (n, (_, retyped)) if retyped => n }.toSet
-    new GraftReaderFactory(fields, bc, renames, widened)
+    new GraftReaderFactory(fields, bc, renames, widened, rowFilter)
   }
 }
 
@@ -1005,12 +1048,16 @@ private[iceberg] object GraftEqBroadcastCache {
 
 /** Serves every partition with a [[GraftPackedReader]] that reads the
   * partition's files through one [[GraftColumnarReader]] each: a file's
-  * DV blobs decode to sorted positions, and the equality waves newer than
-  * the file merge into one sorted key array. There is no row reader. */
+  * DV blobs decode to sorted positions, the equality waves newer than
+  * the file merge into one sorted key array, and every file's rows pass
+  * `rowFilter`. The files of a task open one after another over one Hadoop
+  * configuration, as Spark's own file sources share one across a task's
+  * files. There is no row reader. */
 private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
                                           eqBc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long])]],
                                           renames: Map[String, Seq[String]] = Map.empty,
-                                          widened: Set[String] = Set.empty)
+                                          widened: Set[String] = Set.empty,
+                                          rowFilter: Option[GraftRowFilter] = None)
     extends PartitionReaderFactory {
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
@@ -1027,6 +1074,7 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
       if (keys.isEmpty) Array.empty[Long]
       else { val a = keys.flatten; java.util.Arrays.sort(a); a }
     })
+    val conf = GraftVectorized.hadoopConf()
     new GraftPackedReader(partition.asInstanceOf[GraftInputPartition].files, { f =>
       val deleted =
         if (f.dvBlobs.isEmpty) Array.empty[Long]
@@ -1035,7 +1083,7 @@ private[iceberg] class GraftReaderFactory(fields: Array[(String, DataType)],
           java.util.Arrays.sort(a); a
         }
       new GraftColumnarReader(f.path, fields, deleted, eqKeys(f.sequence), renames, widened,
-        f.firstRowId, f.sequence)
+        f.firstRowId, f.sequence, rowFilter, conf)
     })
   }
 }
@@ -1162,11 +1210,13 @@ object GraftVectorized {
     * FileSplit + TaskAttemptContext whose conf carries the requested
     * schema). The batch's columns come back in `required` order, and a
     * column the file lacks (older schema era, internal lineage column)
-    * rides as an all-null vector — Spark's own missing-column handling. */
-  def open(path: String, required: StructType)
+    * rides as an all-null vector — Spark's own missing-column handling.
+    * `conf` ([[hadoopConf]]) takes the requested schema: readers that open
+    * one after another may share one. */
+  def open(path: String, required: StructType,
+           conf: org.apache.hadoop.mapred.JobConf = hadoopConf())
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
     val clean = cleanPath(path)
-    val conf = hadoopConf()
     conf.set("org.apache.spark.sql.parquet.row.requested_schema", required.json)
     val reader = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false, BatchRows)
@@ -1195,7 +1245,9 @@ object GraftVectorized {
   * else `firstRowId` + the row's ordinal (null when the file has no first
   * row id); `_last_updated_sequence_number` is the materialized value,
   * else the file's `sequence` (spec §Row Lineage).
-  * A batch whose every row is deleted is skipped, never taken for the end
+  * A row that survives the deletes must also pass `rowFilter`, evaluated
+  * on the decoded values, so a filter narrows the same row-id map.
+  * A batch whose every row is dropped is skipped, never taken for the end
   * of the file. */
 private[iceberg] class GraftColumnarReader(path: String,
                                            fields: Array[(String, DataType)],
@@ -1204,7 +1256,10 @@ private[iceberg] class GraftColumnarReader(path: String,
                                            renames: Map[String, Seq[String]] = Map.empty,
                                            widened: Set[String] = Set.empty,
                                            firstRowId: Long = -1L,
-                                           sequence: Long = 0L)
+                                           sequence: Long = 0L,
+                                           rowFilter: Option[GraftRowFilter] = None,
+                                           conf: org.apache.hadoop.mapred.JobConf =
+                                             GraftVectorized.hadoopConf())
     extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
   import org.apache.spark.sql.vectorized.ColumnVector
@@ -1212,17 +1267,18 @@ private[iceberg] class GraftColumnarReader(path: String,
   private val eqCol = "l_orderkey"
   // the physical read schema: required fields minus the synthesized
   // metadata columns, plus the equality-key column when keys must filter
-  private val physical: StructType = StructType(
-    fields.filterNot(f => GraftVectorized.isMetaCol(f._1))
-      .map { case (n, t) => StructField(n, t) } ++
-      (if (eqKeys.nonEmpty && !fields.exists(_._1 == eqCol))
-         Array(StructField(eqCol, LongType))
-       else Array.empty[StructField]))
+  // and the columns the row filter reads
+  private val physical: StructType = {
+    val out = fields.filterNot(f => GraftVectorized.isMetaCol(f._1))
+    val extra = (if (eqKeys.nonEmpty) Seq[(String, DataType)](eqCol -> LongType) else Nil) ++
+      rowFilter.toSeq.flatMap(_.columns)
+    StructType((out ++ extra).distinctBy(_._1).map { case (n, t) => StructField(n, t) })
+  }
   // the per-FILE resolved schema: renamed columns under their in-file
   // ancestor name, widened columns at the file's narrow physical type
   private val resolved =
     GraftVectorized.resolveFileSchema(path, physical, renames, widened)
-  private val reader = GraftVectorized.open(path, resolved)
+  private val reader = GraftVectorized.open(path, resolved, conf)
 
   // the decoder reuses ONE batch object and its vectors across nextBatch
   // calls, so every wrapper below binds once
@@ -1263,6 +1319,8 @@ private[iceberg] class GraftColumnarReader(path: String,
   private val live = batchOver(filtered)
   private val eqVector: ColumnVector =
     if (eqKeys.isEmpty) null else decoded(physical.fieldIndex(eqCol))
+  private val filterEval: GraftRowFilter.Eval =
+    rowFilter.map(_.bind(name => decoded(physical.fieldIndex(name)))).orNull
 
   private var current: ColumnarBatch = _
   private var ordinal = 0L // file ordinal of the next decoded row
@@ -1311,11 +1369,12 @@ private[iceberg] class GraftColumnarReader(path: String,
     else out.putNull(k)
 
   /** The number of rows of the decoded batch (file ordinals `first` until
-    * `first + n`) that survive the deletes; fills `liveRows` with them
-    * unless no delete can reach the batch. */
+    * `first + n`) that survive the deletes and pass the row filter; fills
+    * `liveRows` with them unless neither can reach the batch. */
   private def keep(first: Long, n: Int): Int = {
     while (dvIdx < deletedPos.length && deletedPos(dvIdx) < first) dvIdx += 1
-    if (eqVector == null && (dvIdx == deletedPos.length || deletedPos(dvIdx) >= first + n))
+    if (eqVector == null && filterEval == null &&
+        (dvIdx == deletedPos.length || deletedPos(dvIdx) >= first + n))
       return n
     var kept = 0
     var i = 0
@@ -1325,7 +1384,9 @@ private[iceberg] class GraftColumnarReader(path: String,
       val dead = (dvIdx < deletedPos.length && deletedPos(dvIdx) == first + i) ||
         (eqVector != null && !eqVector.isNullAt(i) &&
           java.util.Arrays.binarySearch(eqKeys, eqVector.getLong(i)) >= 0)
-      if (!dead) { liveRows(kept) = i; kept += 1 }
+      if (!dead && (filterEval == null || filterEval(i) == GraftRowFilter.True)) {
+        liveRows(kept) = i; kept += 1
+      }
       i += 1
     }
     kept
@@ -1436,11 +1497,12 @@ private[iceberg] case class GraftStreamOffset(snapshotId: Long)
 
 /** MicroBatchStream over the real snapshot log — see
   * [[GraftScan.toMicroBatchStream]]. Planning is metadata-only per batch;
-  * files pack into partitions as the batch scan's do and reuse its reader
-  * (no delete state: an incremental
+  * files pack into partitions as the batch scan's do and reuse its reader,
+  * with the scan's `rowFilter` (no delete state: an incremental
   * APPEND scan's files carry no DVs by construction — deletes target
   * already-consumed history). */
-private[iceberg] class GraftMicroBatchStream(location: String, required: StructType)
+private[iceberg] class GraftMicroBatchStream(location: String, required: StructType,
+                                             rowFilter: Option[GraftRowFilter] = None)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -1466,7 +1528,7 @@ private[iceberg] class GraftMicroBatchStream(location: String, required: StructT
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.fields.map(f => (f.name, f.dataType)),
       org.apache.spark.sql.SparkSession.active.sparkContext
-        .broadcast(Array.empty[(Long, Array[Long])]))
+        .broadcast(Array.empty[(Long, Array[Long])]), rowFilter = rowFilter)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -201,7 +201,7 @@ class DeltaCommitSpec extends SparkSpec {
     assert(IcebergTable.readMetadata(loc).properties === Map("graft.note" -> "created"))
     IcebergTable.setTableProperties(loc,
       Map("write.target-records-per-file" -> "100", "graft.era" -> "one"))
-    assert(IcebergTable.targetRecordsProp(loc) === Some(100L))
+    assert(IcebergTable.targetRecordsProp(IcebergTable.readMetadata(loc).properties) === Some(100L))
     // an unrelated commit CARRIES the properties
     IcebergTable.append(spark, lineitem, loc)
     assert(IcebergTable.readMetadata(loc).properties ===
@@ -209,7 +209,7 @@ class DeltaCommitSpec extends SparkSpec {
         "graft.era" -> "one"))
     IcebergTable.setTableProperties(loc, Map("graft.era" -> "two"),
       unset = Set("write.target-records-per-file"))
-    assert(IcebergTable.targetRecordsProp(loc) === None)
+    assert(IcebergTable.targetRecordsProp(IcebergTable.readMetadata(loc).properties) === None)
     assert(IcebergTable.readMetadata(loc).properties ===
       Map("graft.note" -> "created", "graft.era" -> "two"))
   }

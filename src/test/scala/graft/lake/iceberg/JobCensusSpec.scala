@@ -6,8 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 import graft.tables.Tables
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -117,5 +119,24 @@ class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val scans = collect(plan) { case s: BatchScanExec => s }
     val joins = collect(plan) { case j: BaseJoinExec => j }
     assert(scans.size == 1 && joins.isEmpty, plan.toString)
+  }
+
+  test("a read that differs only in its pushed literal compiles no new class") {
+    val (w, cat) = warehouse("lit")
+    val loc = IcebergCatalog.createTable(w, "lake", "lit")
+    IcebergTable.append(spark, lineitem, loc)
+    IcebergTable.appendDvPuffin(spark, loc, pmod(col("l_orderkey"), lit(10L)) === 6L)
+    def read(discount: String): DataFrame = spark.sql(
+      s"SELECT l_returnflag, count(*), sum(l_quantity) FROM $cat.lake.lit " +
+        s"WHERE l_discount >= $discount GROUP BY l_returnflag")
+    read("0.02").collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = read("0.05")
+    second.collect()
+    // a filter above the scan would carry the literal into the generated code
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the second read compiled new classes")
+    val plan = second.queryExecution.executedPlan
+    assert(collect(plan) { case f: FilterExec => f }.isEmpty, plan.toString)
   }
 }

@@ -192,6 +192,26 @@ class LibraryReadSpec extends SparkSpec {
     assert(IcebergTable.readMorUnified(spark, loc)._1.filter(residue(7L, 3L)).isEmpty)
   }
 
+  test("re-planning a pinned read reads none of its delete files again") {
+    val loc = Files.createTempDirectory("graft_libread_once_").toString
+    IcebergTable.append(spark, lineitem, loc)
+    IcebergTable.appendDvPuffin(spark, loc, residue(10L, 6L))
+    IcebergTable.appendPositionDeletes(spark, loc, residue(10L, 7L))
+    val (live, _, _, positional, dvs) = IcebergTable.readMorUnified(spark, loc)
+    val before = rowsOf(live)
+    assert(positional.nonEmpty && dvs.nonEmpty)
+    // each new DataFrame over the pin plans its scan afresh; with the delete
+    // files moved away, a plan that read them again would fail
+    val files = (positional ++ dvs).map(e => new File(e.path)).distinct
+    files.foreach(f => assert(f.renameTo(new File(f.getPath + ".away"))))
+    try {
+      assert(rowsOf(live.select("*")) == before)
+      assert(live.filter(residue(10L, 6L) || residue(10L, 7L)).isEmpty)
+    } finally files.foreach(f => new File(f.getPath + ".away").renameTo(f))
+    // an unpinned read loads its own snapshot's deletes
+    assert(rowsOf(IcebergTable.readMorUnified(spark, loc)._1) == before)
+  }
+
   test("two reads of one manifest decode against the same writer schema instance") {
     val loc = Files.createTempDirectory("graft_libread_avro_").toString
     IcebergTable.append(spark, lineitem, loc)
