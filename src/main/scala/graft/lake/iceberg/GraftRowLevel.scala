@@ -3,6 +3,7 @@ package graft.lake.iceberg
 import java.io.File
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -38,8 +39,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Scale shape: executors write the replacement/insert rows DIRECTLY as
   * month-partitioned parquet (Spark's own `ParquetWriteSupport`, one open
-  * writer per month per task — months-per-task is bounded by the writer's
-  * input partitioning); delete coordinates are Roaring-SERIALIZED on the
+  * file per task: the input arrives clustered and sorted by month); delete
+  * coordinates are Roaring-SERIALIZED on the
   * executors (one blob per (task, file) — [[RoaringDv.serializeDvBlob]],
   * the same compression the library's `appendDvPuffin` path ships) so the
   * commit messages carry KB-grain compressed blobs, never raw position
@@ -79,7 +80,8 @@ private[iceberg] class GraftRowLevelOperation(table: GraftSqlTable, location: St
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new GraftDeltaWriteBuilder(location, info.schema(),
-      GraftPartitioning.sourceColumnOf(table.partitioning()))
+      GraftPartitioning.sourceColumnOf(table.partitioning()),
+      IcebergTable.targetRecordsProp(table.properties().asScala.toMap))
 
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column("_file"), Expressions.column("_pos"))
@@ -90,43 +92,47 @@ private[iceberg] class GraftRowLevelOperation(table: GraftSqlTable, location: St
 }
 
 private[iceberg] class GraftDeltaWriteBuilder(location: String, schema: StructType,
-                                              partCol: Option[String])
+                                              partCol: Option[String],
+                                              targetRecords: Option[Long])
     extends DeltaWriteBuilder {
-  override def build(): DeltaWrite = new GraftDeltaWrite(location, schema, partCol)
+  override def build(): DeltaWrite = new GraftDeltaWrite(location, schema, partCol, targetRecords)
 }
 
 private[iceberg] class GraftDeltaWrite(location: String, schema: StructType,
-                                       partCol: Option[String])
+                                       partCol: Option[String],
+                                       targetRecords: Option[Long] = None)
     extends DeltaWrite with RequiresDistributionAndOrdering {
 
-  /** Writer fan-out control (the Iceberg `write.distribution-mode=range`
-    * shape): without a required distribution the changed-row stream
-    * arrives partitioned by the MERGE/UPDATE join key, so every write
-    * task sees every month and opens its own tiny parquet writer per
-    * month — tasks × months files per commit (measured at sf0.1: the
-    * 4-arm MERGE fixture wrote 3,850 delta files in 23.5 s, ~117 ms of
-    * task time per file open/close, and the commit's stats pass then
-    * paid one scan task per file). Range-partitioning the (small) delta
-    * stream by (_file, l_shipdate) clusters deletes per source file —
-    * one Roaring blob per file, the driver's blob or-merge becomes a
-    * pass-through — and inserts per month run, so data files out ≈
-    * distinct months touched. AQE sizes the partition count from the
-    * actual delta volume, so one task handles a small delta and a
-    * 100 TB UPDATE's delta spreads over range-split tasks (sub-month
-    * ranges), never one-task-per-month hash hotspots. Deletes carry a
-    * NULL l_shipdate and inserts a NULL _file (ASC = NULLS FIRST), so
-    * the two row kinds cluster cleanly without interleaving. The data
-    * sort key is the table's PARTITION-SPEC source column
-    * ([[GraftPartitioning.sourceColumnOf]] via the operation builder),
-    * never a hardcoded name. */
-  private def sortCols: Array[String] = partCol.filter(schema.fieldNames.contains) match {
+  /** Writer fan-out control: without a required distribution the
+    * changed-row stream arrives partitioned by the MERGE/UPDATE join key,
+    * so every write task sees every month and writes its own tiny file per
+    * month — tasks × months files per commit (measured at sf0.1: the 4-arm
+    * MERGE fixture wrote 3,850 delta files in 23.5 s, and the commit then
+    * read one footer per file). Hash-clustering the (small) delta stream by
+    * (_file, months(<spec column>)) sends every delete of one source file to
+    * one task — one Roaring blob per file, so the driver's or-merge passes
+    * blobs through — and every inserted row of one month to one task, so
+    * data files out ≈ months touched. Clustering, unlike a range
+    * distribution, needs no sampling job: a range partitioner re-runs the
+    * whole filtered scan to pick its bounds before the shuffle scans it
+    * again; the price is that one task writes all of a month's inserted
+    * rows (Iceberg's `hash` distribution mode). Within a task the rows sort
+    * by (_file, <spec column>), so the writer holds one month's file open at
+    * a time ([[GraftDeltaWriter]]).
+    * Deletes carry a NULL spec column and inserts a NULL _file (ASC = NULLS
+    * FIRST), so the two row kinds never interleave. The spec column is the
+    * table's PARTITION-SPEC source column ([[GraftPartitioning.sourceColumnOf]]
+    * via the operation builder), never a hardcoded name. */
+  private val dataCol: Option[String] = partCol.filter(schema.fieldNames.contains)
+
+  private def sortCols: Array[String] = dataCol match {
     case Some(c) => Array("_file", c)
     case None => Array("_file", "_pos")
   }
 
   override def requiredDistribution(): Distribution =
-    Distributions.ordered(sortCols.map(c =>
-      Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
+    Distributions.clustered(Expressions.column("_file") +: dataCol.toArray.map(c =>
+      Expressions.months(c): org.apache.spark.sql.connector.expressions.Expression))
 
   override def requiredOrdering(): Array[SortOrder] =
     sortCols.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
@@ -135,7 +141,8 @@ private[iceberg] class GraftDeltaWrite(location: String, schema: StructType,
   // the dir name never has to match the committed snapshot id, which is
   // derived inside commitDelta's commit transaction
   override def toBatch: DeltaBatchWrite =
-    new GraftDeltaBatchWrite(location, schema, IcebergTable.newDataDir(location), partCol)
+    new GraftDeltaBatchWrite(location, schema, IcebergTable.newDataDir(location), partCol,
+      targetRecords)
 }
 
 /** One task's outcome: per-file Roaring-serialized DV blobs with their
@@ -146,28 +153,37 @@ private[iceberg] case class GraftDeltaCommitMessage(
     deletes: Array[(String, Array[Byte], Long, Long, Long)],
     files: Array[String]) extends WriterCommitMessage
 
+private[iceberg] object GraftDeltaCommitMessage {
+  /** The data files the committed tasks of a write named. */
+  def files(messages: Array[WriterCommitMessage]): Seq[String] =
+    messages.toSeq.collect { case m: GraftDeltaCommitMessage => m }.flatMap(_.files)
+
+  /** Delete what the tasks of an aborted write wrote. */
+  def discard(messages: Array[WriterCommitMessage]): Unit =
+    files(messages).foreach(f => new File(f).delete())
+}
+
 private[iceberg] class GraftDeltaBatchWrite(location: String, schema: StructType,
-                                            dataDir: String, partCol: Option[String])
+                                            dataDir: String, partCol: Option[String],
+                                            targetRecords: Option[Long] = None)
     extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new GraftDeltaWriterFactory(dataDir, schema, partCol)
+    new GraftDeltaWriterFactory(dataDir, schema, partCol, targetRecords)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
     val dvRows = GraftDeltaBatchWrite.mergeBlobs(msgs.flatMap(_.deletes).toSeq)
-    val files = msgs.flatMap(_.files).toSeq
+    val files = GraftDeltaCommitMessage.files(messages)
     // a statement that matched no live row changes nothing and commits
     // nothing (no task wrote a file or recorded a delete)
     if (dvRows.nonEmpty || files.nonEmpty)
       IcebergTable.commitDelta(spark, location, dvRows, dataDir, files)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case m: GraftDeltaCommitMessage => m }
-      .flatMap(_.files).foreach(f => new File(f).delete())
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftDeltaCommitMessage.discard(messages)
 }
 
 private[iceberg] object GraftDeltaBatchWrite {
@@ -188,38 +204,34 @@ private[iceberg] object GraftDeltaBatchWrite {
 }
 
 private[iceberg] class GraftDeltaWriterFactory(dataDir: String, schema: StructType,
-                                               partCol: Option[String])
+                                               partCol: Option[String],
+                                               targetRecords: Option[Long] = None)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(dataDir, schema, partitionId, taskId, partCol)
+    new GraftDeltaWriter(dataDir, schema, partitionId, taskId, partCol, targetRecords)
 }
 
-/** V2 batch write behind DYNAMIC `INSERT OVERWRITE`: the delta writer
-  * doubles as a plain DataWriter (its default `write` is `insert`), so
-  * executors stream month-partitioned files and the commit replaces
-  * exactly the months that received data
-  * ([[IcebergTable.commitOverwriteMonths]]). */
-private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: StructType,
-                                                dataDir: String,
-                                                partCol: Option[String])
+/** V2 batch write of plain rows: SQL appends (`INSERT INTO`, CTAS, branch
+  * inserts), whole-table replaces (static `INSERT OVERWRITE`, RTAS) and
+  * dynamic partition overwrites. The delta writer doubles as a plain
+  * DataWriter (its default `write` is `insert`), so executors stream
+  * month-partitioned files into the statement's staging dir `dataDir`, and
+  * `commitFiles` hands the files the committed tasks named to the
+  * statement's commit ([[GraftWriteBuilder]]). */
+private[iceberg] class GraftFilesBatchWrite(schema: StructType, dataDir: String,
+                                            partCol: Option[String],
+                                            targetRecords: Option[Long],
+                                            commitFiles: Seq[String] => Unit)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftDeltaWriterFactory(dataDir, schema, partCol)
+    new GraftDeltaWriterFactory(dataDir, schema, partCol, targetRecords)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect { case m: GraftDeltaCommitMessage => m }
-      .flatMap(_.files).toSeq
-    // snapshot id derived inside the committer's commit transaction —
-    // dataDir is only the statement's staging dir (see GraftDeltaWrite.toBatch)
-    IcebergTable.commitOverwriteMonths(org.apache.spark.sql.SparkSession.active,
-      location, dataDir, files)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitFiles(GraftDeltaCommitMessage.files(messages))
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case m: GraftDeltaCommitMessage => m }
-      .flatMap(_.files).foreach(f => new File(f).delete())
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftDeltaCommitMessage.discard(messages)
 }
 
 /** Streaming-ingest sink (`df.writeStream.toTable(<cat>.<ns>.<t>)`): one
@@ -234,54 +246,68 @@ private[iceberg] class GraftOverwriteBatchWrite(location: String, schema: Struct
   * dedup path. */
 private[iceberg] class GraftStreamingWrite(location: String, schema: StructType,
                                            queryId: String,
-                                           partCol: Option[String])
+                                           partCol: Option[String],
+                                           targetRecords: Option[Long])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   private def dataDir(epochId: Long) = s"$location/data/stream-$queryId-ep$epochId"
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftStreamingWriterFactory(location, queryId, schema, partCol)
+    new GraftStreamingWriterFactory(location, queryId, schema, partCol, targetRecords)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect { case m: GraftDeltaCommitMessage => m }
-      .flatMap(_.files).toSeq
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     IcebergTable.commitStreamAppend(org.apache.spark.sql.SparkSession.active,
-      location, dataDir(epochId), files, queryId, epochId)
-  }
+      location, dataDir(epochId), GraftDeltaCommitMessage.files(messages), queryId, epochId)
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: GraftDeltaCommitMessage => m }
-      .flatMap(_.files).foreach(f => new File(f).delete())
+    GraftDeltaCommitMessage.discard(messages)
 }
 
 private[iceberg] class GraftStreamingWriterFactory(location: String, queryId: String,
                                                    schema: StructType,
-                                                   partCol: Option[String])
+                                                   partCol: Option[String],
+                                                   targetRecords: Option[Long])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new GraftDeltaWriter(s"$location/data/stream-$queryId-ep$epochId",
-      schema, partitionId, taskId, partCol)
+      schema, partitionId, taskId, partCol, targetRecords)
 }
 
 /** Executor-side delta writer: deletes/updates record (file, pos) row
-  * coordinates; inserted rows stream into one open parquet writer per
-  * month of `partCol`, the partition spec's source column (hive-style
-  * `p_month=` dirs, so the committer's stats collection sees the same
-  * layout every other graft writer produces). A spec without a source
-  * column (`partCol` None) writes unpartitioned: one file per task,
-  * directly under the data dir. */
+  * coordinates; inserted rows stream into parquet files under a `p_month=`
+  * directory per UTC month of `partCol`, the partition spec's source column
+  * (the Iceberg month transform, [[GraftMonthsFunction]]), so the
+  * committer's stats read sees the layout every graft writer produces. A
+  * spec without a source column (`partCol` None) writes unpartitioned,
+  * directly under the data dir.
+  *
+  * One file is open at a time, as in Iceberg's clustered writer: every
+  * write asks for its rows sorted by the spec column within a task, so a
+  * month's file closes when the input moves past the month, and a task
+  * never buffers more than one row group. A month that comes back (input
+  * not sorted) gets a file of its own. With `targetRecords` set
+  * (`write.target-records-per-file`), a file closes after that many rows
+  * and the month continues in a new one — Spark's `maxRecordsPerFile`
+  * rule, so a month written by one task gets ceil(rows / target) files. */
 private[iceberg] class GraftDeltaWriter(dataDir: String, schema: StructType,
                                         partitionId: Int, taskId: Long,
-                                        partCol: Option[String])
+                                        partCol: Option[String],
+                                        targetRecords: Option[Long] = None)
     extends DeltaWriter[InternalRow] {
 
   private val deletes = mutable.Map.empty[String, mutable.ArrayBuffer[Long]]
-  private val writers = mutable.Map.empty[String, (String, ParquetWriter[InternalRow])]
+  private val closed = mutable.ArrayBuffer.empty[String]
+  // the open file: its month, path and writer, and the rows written to it
+  private var open: Option[(String, String, ParquetWriter[InternalRow])] = None
+  private var openRows = 0L
   // lazy: a delta DELETE's write schema carries no data columns and
   // never calls insert()
   private lazy val partIdx: Option[Int] = partCol.map(schema.fieldIndex)
+
+  /** Files this task holds open (0 or 1). */
+  private[iceberg] def openFiles: Int = open.size
 
   private def monthOf(row: InternalRow, idx: Int): String = schema(idx).dataType match {
     case DateType =>
@@ -302,23 +328,31 @@ private[iceberg] class GraftDeltaWriter(dataDir: String, schema: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    val month = partIdx.map(monthOf(row, _))
-    // the month rides in the directory (hive layout); the source column
-    // itself stays IN the file like every graft data file
-    writers.getOrElseUpdate(month.getOrElse(""), {
-      val (dir, name) = month match {
-        case Some(m) =>
-          (new File(s"$dataDir/p_month=$m"), f"delta-$partitionId%05d-$taskId-$m.parquet")
-        case None => (new File(dataDir), f"delta-$partitionId%05d-$taskId.parquet")
-      }
-      dir.mkdirs()
-      val path = new File(dir, name).getPath
-      (path, GraftRowParquet.writer(path, schema))
-    })._2.write(row)
+    val month = partIdx.map(monthOf(row, _)).getOrElse("")
+    if (!open.exists(_._1 == month) || targetRecords.exists(openRows >= _)) roll(month)
+    open.get._3.write(row)
+    openRows += 1
+  }
+
+  private def closeOpen(): Unit = {
+    open.foreach { case (_, path, w) => w.close(); closed += path }
+    open = None
+  }
+
+  /** Close the open file and open the next one, in `month`'s directory
+    * (the month rides in the directory, hive layout; the source column
+    * itself stays IN the file like every graft data file). */
+  private def roll(month: String): Unit = {
+    closeOpen()
+    val dir = if (partIdx.isEmpty) new File(dataDir) else new File(s"$dataDir/p_month=$month")
+    dir.mkdirs()
+    val path = new File(dir, f"delta-$partitionId%05d-$taskId-${closed.size}.parquet").getPath
+    open = Some((month, path, GraftRowParquet.writer(path, schema)))
+    openRows = 0L
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._2.close())
+    closeOpen()
     // Roaring-serialize HERE, on the executor: the commit message carries
     // one compressed blob per file this task deleted from, never the raw
     // position longs (driver-heap scale contract — see class scaladoc).
@@ -327,14 +361,13 @@ private[iceberg] class GraftDeltaWriter(dataDir: String, schema: StructType,
         val ps = ps0.toArray.sorted
         (f, RoaringDv.serializeDvBlob(ps), ps.length.toLong, ps.head, ps.last)
       }.toArray,
-      writers.values.map(_._1).toArray)
+      closed.toArray)
   }
 
   override def abort(): Unit = {
-    writers.values.foreach { case (p, w) =>
-      try w.close() catch { case _: Exception => () }
-      new File(p).delete()
-    }
+    open.foreach { case (_, _, w) => try w.close() catch { case _: Exception => () } }
+    (closed ++ open.map(_._2)).foreach(p => new File(p).delete())
+    open = None
   }
 
   override def close(): Unit = ()

@@ -2462,11 +2462,11 @@ object IcebergOps {
   }
 
   /** The WRITE half of the SQL front door: era 2 of `lake.lineitem_ins`
-    * arrived via `INSERT INTO <cat>.lake.lineitem_ins SELECT …` — routed
-    * through the committing [[IcebergTable.append]] by the V1Write bridge,
-    * so the SQL insert's snapshot is indistinguishable from the library
-    * append's (snapshot 2, one manifest, month files, row ids). The census
-    * reads the table back through SQL and proves the history: 2 snapshots,
+    * arrived via `INSERT INTO <cat>.lake.lineitem_ins SELECT …` — a DSv2
+    * batch write committed as [[IcebergTable.append]] commits, so the SQL
+    * insert's snapshot is indistinguishable from the library append's
+    * (snapshot 2, one manifest, month files, row ids). The census reads the
+    * table back through SQL and proves the history: 2 snapshots,
     * full row set, the inserted era planned incrementally at (1, 2]. */
   def sqlInsert(spark: SparkSession, lineitem: DataFrame): DataFrame = {
     val w = sqlWarehouseFor(spark, lineitem)
@@ -2967,12 +2967,11 @@ object IcebergOps {
       val streamDf = markers.toDF().toDF("__m")
         .join(li3, col("__m") === col("__b"))
         .drop("__m", "__b")
-      // Pre-create the sink table with Iceberg's write.distribution-mode=
-      // hash property: each streaming epoch is then hash-clustered by
-      // months(l_shipdate) before the writers (the sink cannot global-
-      // sort), so an epoch writes ≈ months-touched files instead of
-      // tasks × months — the batch writes' r18 range-distribution fix,
-      // extended to the streaming path.
+      // Pre-create the sink table (with Iceberg's write.distribution-mode=
+      // hash property, which graft's writes follow anyway): each streaming
+      // epoch is hash-clustered by months(l_shipdate) before the writers,
+      // so an epoch writes ≈ months-touched files instead of
+      // tasks × months, as every graft write does.
       spark.sql(s"""CREATE TABLE $cat.lake.lineitem_stream
         | (${lineitem.schema.toDDL})
         | TBLPROPERTIES ('write.distribution-mode'='hash')""".stripMargin)

@@ -338,10 +338,60 @@ object IcebergTable {
         targetRecordsPerFile, clusterFiles, sorted) match {
       case None => (readMetadataOpt(location).fold(0L)(m => math.max(0L, m.currentSnapshotId)), 0)
       case Some(files) =>
-        val c = commitSnapshot(location, "append", files, Some(lineitem.schema)) { a =>
-          a.parentManifests :+ writeManifestAvro(location, a.id, a.added, if (weekly) 1 else 0)
-        }
+        val c = commitAppend(location, files, lineitem.schema, specId = if (weekly) 1 else 0)
         (c.snapshotId, c.conflicts)
+    }
+
+  /** The append commit [[append]], [[appendToBranch]] and a SQL `INSERT`
+    * ([[commitAppendFiles]]) share: one snapshot whose manifests are those
+    * of the head of `branch` (main when None) plus one manifest of `files`
+    * under spec `specId`. A branch append moves only the branch's ref and
+    * records the branch in the snapshot summary. */
+  private def commitAppend(location: String, files: Seq[DataFileEntry], written: StructType,
+                           specId: Int = 0, branch: Option[String] = None): Committed = {
+    val ref = branch.getOrElse("main")
+    commitSnapshot(location, "append", files, Some(written), branch.map("branch" -> _).toMap,
+        onto = ref, ref = ref) { a =>
+      branch.foreach(checkBranch(a.base, _))
+      a.parentManifests :+ writeManifestAvro(location, a.id, a.added, specId)
+    }
+  }
+
+  /** A SQL `INSERT` / CTAS commit ([[GraftWriteBuilder]]): the
+    * [[commitAppend]] of the files the write's committed tasks named under
+    * its staging dir. A write of no rows commits nothing. */
+  def commitAppendFiles(spark: SparkSession, location: String, dataDir: String,
+                        files: Seq[String], written: StructType,
+                        branch: Option[String] = None): Unit = {
+    val stats = stagedFiles(spark, dataDir, files)
+    if (stats.nonEmpty) commitAppend(location, stats, written, branch = branch)
+  }
+
+  /** STATIC `INSERT OVERWRITE` / RTAS / `writeTo(…).overwrite(lit(true))`
+    * commit ([[GraftWriteBuilder]]): replace the whole table's live contents
+    * with the files the write's committed tasks named under its staging dir,
+    * in ONE "replace" snapshot — the new manifest list carries ONLY the new
+    * data manifest, so default reads flip atomically while every prior
+    * snapshot stays time-travelable until expiry. A table with no snapshot
+    * yet just gets snapshot 1; a write of no rows leaves the table empty, as
+    * [[truncateTable]] does. `configure` edits the metadata in the same
+    * commit, before the snapshot is added: a `CREATE OR REPLACE` passes its
+    * schema and properties ([[replaceSchema]]). */
+  def commitReplaceFiles(spark: SparkSession, location: String, dataDir: String,
+                         files: Seq[String], written: StructType,
+                         configure: TableMetadata => TableMetadata = identity): Long =
+    commit(location)(configure.andThen(
+      replaceEdit(location, stagedFiles(spark, dataDir, files), Some(written)))).snapshotId
+
+  /** The edit of a whole-table replace ([[truncateTable]],
+    * [[commitReplaceFiles]]): ONE "replace" snapshot
+    * whose manifest list carries only a manifest of `files` — none when
+    * there are none, an empty table. */
+  private def replaceEdit(location: String, files: Seq[DataFileEntry],
+                          written: Option[StructType]): TableMetadata => TableMetadata =
+    addSnapshot(location, "replace", files, written) { a =>
+      requireTable(a.base)
+      if (a.added.isEmpty) Seq.empty else Seq(writeManifestAvro(location, a.id, a.added, 0))
     }
 
   /** SQL `TRUNCATE TABLE`: ONE "replace" snapshot whose manifest list is
@@ -352,10 +402,7 @@ object IcebergTable {
     * `AS SELECT` passes its schema and properties ([[replaceSchema]]). */
   def truncateTable(location: String,
                     configure: TableMetadata => TableMetadata = identity): Long =
-    commit(location)(configure.andThen(addSnapshot(location, "replace") { a =>
-      requireTable(a.base)
-      Seq.empty
-    })).snapshotId
+    commit(location)(configure.andThen(replaceEdit(location, Seq.empty, None))).snapshotId
 
   /** Branch append (`INSERT INTO <t>.branch_<name>` — Iceberg's
     * branch-write surface, the WAP pattern's write half): the new
@@ -368,19 +415,16 @@ object IcebergTable {
     * in the `(oldMain, newMain]` window. */
   def appendToBranch(spark: SparkSession, df: DataFrame, location: String,
                      branch: String): Long = {
-    def checkBranch(meta: TableMetadata): Unit = {
-      val ref = meta.refs.getOrElse(branch,
-        throw new IllegalArgumentException(s"no branch '$branch' " +
-          s"(refs: ${meta.refs.keys.toSeq.sorted.mkString(", ")})"))
-      require(ref.refType == "branch", s"'$branch' is a tag; only branches accept writes")
-    }
-    checkBranch(readMetadata(location))
-    val files = writeDataSnapshot(spark, df, location)
-    commitSnapshot(location, "append", files, Some(df.schema),
-        Map("branch" -> branch), onto = branch, ref = branch) { a =>
-      checkBranch(a.base)
-      a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)
-    }.snapshotId
+    checkBranch(readMetadata(location), branch)
+    commitAppend(location, writeDataSnapshot(spark, df, location), df.schema,
+      branch = Some(branch)).snapshotId
+  }
+
+  private def checkBranch(meta: TableMetadata, branch: String): Unit = {
+    val ref = meta.refs.getOrElse(branch,
+      throw new IllegalArgumentException(s"no branch '$branch' " +
+        s"(refs: ${meta.refs.keys.toSeq.sorted.mkString(", ")})"))
+    require(ref.refType == "branch", s"'$branch' is a tag; only branches accept writes")
   }
 
   /** Append with a GROUPED manifest layer — the 2-level metadata tree of
@@ -597,23 +641,6 @@ object IcebergTable {
     (id, shape._1, shape._2, shape._3)
   }
 
-  /** STATIC `INSERT OVERWRITE` (truncate semantics): replace the whole
-    * table's live contents with `df` in ONE "replace" snapshot — the new
-    * manifest list carries ONLY the new data manifest, so default reads
-    * flip atomically while every prior snapshot stays time-travelable
-    * until expiry. A table with no snapshot yet just gets snapshot 1.
-    * `configure` edits the metadata in the same commit, before the
-    * snapshot is added: a `CREATE OR REPLACE` passes its schema and
-    * properties ([[replaceSchema]]). */
-  def overwriteTable(spark: SparkSession, df: DataFrame, location: String,
-                     configure: TableMetadata => TableMetadata = identity): Long = {
-    val files = writeDataSnapshot(spark, df, location)
-    val add = addSnapshot(location, "replace", files, Some(df.schema)) { a =>
-      Seq(writeManifestAvro(location, a.id, a.added, 0))
-    }
-    commit(location)(configure.andThen(add)).snapshotId
-  }
-
   /** DYNAMIC partition overwrite commit (`INSERT OVERWRITE` under
     * `partitionOverwriteMode=dynamic`): replace EXACTLY the month
     * partitions the executor-written files touched. Prior data manifests
@@ -628,13 +655,8 @@ object IcebergTable {
   def commitOverwriteMonths(spark: SparkSession, location: String,
                             dataDir: String, files: Seq[String]): Long = {
     require(files.nonEmpty, "dynamic overwrite wrote no files")
-    // stray cleanup by directory listing (never opened — a truncated
-    // kill -9 leftover must not fail the commit) and footer stats for the
-    // named committed files only; both id-independent, both ONCE, outside
-    // the commit transaction below.
-    deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
-    val keep = dataFileStats(spark, dataDir, Some(files))
-    require(keep.nonEmpty, "no committed task wrote a surviving data file")
+    // id-independent, so ONCE, outside the commit transaction below
+    val keep = stagedFiles(spark, dataDir, files)
     val months = keep.map(_.partition).toSet
     commitSnapshot(location, "replace", keep) { a =>
       val byManifest = a.parentManifests.map(m => m -> readManifest(m.path))
@@ -1012,6 +1034,21 @@ object IcebergTable {
             f.bounds.get(src).map { case (a, b) => k -> (enc(a).toString, enc(b).toString) }
           }.toMap)
       }.sortBy(f => (f.partition, f.path))
+  }
+
+  /** The stats of the data files a SQL write's committed tasks named
+    * (`files`, staged under `dataDir`): every other file there is deleted
+    * unopened ([[deleteStrayFiles]]), and the named ones are read by
+    * footer. Empty when no task wrote a file. */
+  private def stagedFiles(spark: SparkSession, dataDir: String,
+                          files: Seq[String]): Seq[DataFileEntry] = {
+    deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
+    if (files.isEmpty) Seq.empty
+    else {
+      val stats = dataFileStats(spark, dataDir, Some(files))
+      require(stats.nonEmpty, "no committed task wrote a surviving data file")
+      stats
+    }
   }
 
   /** Remove files under `dataDir` NOT in `allowed` by DIRECTORY LISTING
@@ -1924,17 +1961,57 @@ object IcebergTable {
       readManifest(p)
     }
 
-  /** `f` over `xs` on a bounded pool, results in input order — the
-    * metadata fetches ([[readManifestsParallel]], [[ParquetFooters]]). */
+  /** `f` over `xs` by up to `parallelism` threads, results in input order —
+    * the metadata fetches ([[readManifestsParallel]], [[ParquetFooters]]).
+    * The caller works through `xs` beside `parallelism - 1` helpers from
+    * [[FetchPool]]; a caller that is itself a helper (a nested fetch) works
+    * alone, so nesting cannot wait on its own pool. A failure of `f`
+    * propagates (from a helper wrapped in an `ExecutionException`). */
   private[iceberg] def inParallel[A, B](xs: Seq[A], parallelism: Int = FetchParallelism)(
-      f: A => B): Seq[B] =
-    if (xs.size <= 1 || parallelism <= 1) xs.map(f)
+      f: A => B): Seq[B] = {
+    val in = xs.toIndexedSeq
+    val helpers = math.min(parallelism, in.size) - 1
+    if (helpers <= 0 || FetchPool.isHelper) in.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(parallelism, xs.size))
-      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
-        .map(_.get())
-      finally pool.shutdown()
+      val out = new Array[Any](in.size)
+      val next = new java.util.concurrent.atomic.AtomicInteger
+      def work(): Unit = {
+        var i = next.getAndIncrement()
+        while (i < in.size) {
+          out(i) = f(in(i))
+          i = next.getAndIncrement()
+        }
+      }
+      val running = FetchPool.run(helpers)(() => work())
+      work()
+      running.foreach(_.get())
+      out.toSeq.asInstanceOf[Seq[B]]
     }
+  }
+
+  /** The JVM's one pool of metadata-fetch helpers ([[inParallel]]): daemon
+    * threads started on first use and kept, as many as the largest
+    * parallelism asked for so far, so a read's manifest planning or a
+    * commit's footer read starts no thread. */
+  private[iceberg] object FetchPool {
+    private final class Helper(r: Runnable, n: Int)
+        extends Thread(r, s"graft-fetch-$n") { setDaemon(true) }
+    private val started = new java.util.concurrent.atomic.AtomicInteger
+    private val pool = new java.util.concurrent.ThreadPoolExecutor(1, 1, 0L,
+      java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => new Helper(r, started.incrementAndGet()))
+
+    def isHelper: Boolean = Thread.currentThread.isInstanceOf[Helper]
+
+    /** Run `task` on `n` helpers, growing the pool to `n` first. */
+    def run(n: Int)(task: () => Unit): Seq[java.util.concurrent.Future[_]] = {
+      pool.synchronized {
+        if (pool.getMaximumPoolSize < n) { pool.setMaximumPoolSize(n); pool.setCorePoolSize(n) }
+      }
+      Seq.fill(n)(pool.submit(new Runnable { def run(): Unit = task() }))
+    }
+  }
 
   /** Plan a scan: manifest-list pruning by partition summary, file-level
     * pruning by partition value, and (optionally) file-level pruning by
@@ -2341,14 +2418,7 @@ object IcebergTable {
                   dvRows: Seq[(String, Array[Byte], Long, Long, Long)], dataDir: String,
                   files: Seq[String], operation: String = "overwrite"): Long = {
     require(dvRows.nonEmpty || files.nonEmpty, "delta commit with no changes")
-    val keep =
-      if (files.isEmpty) Seq.empty[DataFileEntry]
-      else {
-        deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
-        val stats = dataFileStats(spark, dataDir, Some(files))
-        require(stats.nonEmpty, "no committed task wrote a surviving data file")
-        stats
-      }
+    val keep = stagedFiles(spark, dataDir, files)
     commitSnapshot(location, operation, keep) { a =>
       requireTable(a.base)
       a.parentManifests ++
@@ -2401,9 +2471,7 @@ object IcebergTable {
       dropStaged()
       return replayed.getOrElse(current.fold(0L)(m => math.max(0L, m.currentSnapshotId)))
     }
-    deleteStrayFiles(dataDir, files.map(cleanPath).toSet)
-    val keep = dataFileStats(spark, dataDir, Some(files))
-    require(keep.nonEmpty, "no committed task wrote a surviving data file")
+    val keep = stagedFiles(spark, dataDir, files)
     val append = addSnapshot(location, "append", keep,
         summary = Map("streaming-query" -> queryId, "epoch-id" -> epochId.toString)) { a =>
       a.parentManifests :+ writeManifestAvro(location, a.id, a.added, 0)

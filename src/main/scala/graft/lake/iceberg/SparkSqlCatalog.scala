@@ -47,10 +47,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * of many small files does not pay one task per file; per-file reader
   * state is one file's DV positions (bounded by rows-per-file) plus the
   * broadcast-size equality key set; the DV blobs ship in the partition,
-  * the keys once per executor. Writes: `INSERT INTO` routes through the
-  * committing [[IcebergTable.append]] (V1Write bridge on [[GraftSqlTable]]);
-  * `UPDATE`, `MERGE INTO` and row-level `DELETE` commit one deletion
-  * vector plus replacement files ([[GraftRowLevelOperation]]).
+  * the keys once per executor. Writes are DSv2 batch writes: executors
+  * write month-partitioned files and the driver commits them as the
+  * library does — `INSERT INTO` as [[IcebergTable.append]]'s snapshot,
+  * `INSERT OVERWRITE` and RTAS as one "replace" snapshot
+  * ([[GraftWriteBuilder]]); `UPDATE`, `MERGE INTO` and row-level `DELETE`
+  * commit one deletion vector plus replacement files
+  * ([[GraftRowLevelOperation]]).
   * Library reads ([[IcebergTable.readMorUnified]]) run through the same
   * scan, pinned to the snapshot they read ([[GraftSnapshotPin]]); v2
   * positional-parquet delete files load on the driver like DV blobs.
@@ -378,8 +381,9 @@ object GraftSqlScanCensus {
     Option(byLocation.get(location)).getOrElse(Census(-1, -1, -1, -1, -1, -1))
 }
 
-/** The staged table RTAS/atomic-CTAS writes through: the write itself
-  * lands via the normal builders — for a REPLACE in truncate mode, as ONE
+/** The staged table RTAS/atomic-CTAS writes through: the write itself is
+  * the DSv2 batch write of [[GraftWriteBuilder]] — a CTAS appends the
+  * table's first snapshot; a REPLACE writes in truncate mode, as ONE
   * "replace" snapshot committed together with `replace`, the clause's
   * schema and properties, which is the atomic point. A REPLACE without AS
   * SELECT builds no write: commitStagedChanges commits `replace` with an
@@ -388,7 +392,7 @@ object GraftSqlScanCensus {
   * new column the values of an old one of its name). Abort of a staged
   * CREATE drops the just-created empty table; abort of a staged REPLACE
   * leaves the table as it was (nothing was committed). `properties` are
-  * the clause's, which the write's distribution and file split follow. */
+  * the clause's, which the write's file split follows. */
 private[iceberg] class GraftStagedTable(ident: String, location: String,
                                         declared: StructType,
                                         properties: Map[String, String],
@@ -403,8 +407,8 @@ private[iceberg] class GraftStagedTable(ident: String, location: String,
   override def partitioning(): Array[Transform] =
     Array(GraftPartitioning.monthTransform)
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.TRUNCATE)
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -423,31 +427,19 @@ private[iceberg] class GraftStagedTable(ident: String, location: String,
 }
 
 /** A branch-addressed table (`<t>.branch_<name>`): reads pin to the
-  * branch head snapshot; INSERT appends to the BRANCH
-  * ([[IcebergTable.appendToBranch]] — only the branch ref moves, main and
-  * the table head stay put until a `fast_forward` publishes). Row-level
-  * mutations are refused by the snapshot pin ([[GraftSqlTable]]'s
-  * time-travel guard). */
+  * branch head snapshot; INSERT appends to the BRANCH with the commit
+  * [[IcebergTable.appendToBranch]] makes — only the branch ref moves, main
+  * and the table head stay put until a `fast_forward` publishes. Overwrites
+  * are refused ([[GraftWriteBuilder]]), and row-level mutations by the
+  * snapshot pin ([[GraftSqlTable]]'s time-travel guard). */
 private[iceberg] class GraftBranchSqlTable(ident: String, location: String,
                                            branch: String, at: Long)
     extends GraftSqlTable(ident, location, Some(at)) {
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            new InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                                  overwrite: Boolean): Unit = {
-                require(!overwrite, "branch writes are append-only; " +
-                  "overwrite main and fast-forward instead")
-                IcebergTable.appendToBranch(data.sparkSession, data, location, branch)
-              }
-            }
-        }
-    }
+    new GraftWriteBuilder(location, info.schema(), info.queryId(), partitioning(),
+      properties = properties().asScala.toMap, branch = Some(branch))
 }
 
 /** A library read's snapshot, read once when the read is built
@@ -582,8 +574,11 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   override def partitioning(): Array[Transform] =
     Array(GraftPartitioning.monthTransform)
 
+  /** Writes are DSv2 batch and streaming writes ([[GraftWriteBuilder]]).
+    * No `V1_BATCH_WRITE`: Spark asks a table that declares it for a
+    * `V1Write`. */
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+    java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER, TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
@@ -644,13 +639,11 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   }
 
   /** `INSERT INTO <cat>.<ns>.<t> …` / `df.writeTo(…).append()` — the WRITE
-    * half of the north star, routed through the library's COMMITTING
-    * append (snapshot + manifests + row-id assignment + version-hint flip)
-    * via the DSv2 V1Write bridge: the bridge hands the insert's planned
-    * DataFrame to [[IcebergTable.append]], whose distributed
-    * month-partitioned writer and manifest protocol are exactly what a
-    * direct API caller gets — SQL inserts and library appends produce
-    * indistinguishable table history. */
+    * half of the north star: a DSv2 batch write whose tasks write the
+    * month files and whose commit is [[IcebergTable.append]]'s (snapshot +
+    * manifests + row-id assignment + version-hint flip), so SQL inserts and
+    * library appends produce indistinguishable table history
+    * ([[GraftWriteBuilder]]). */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(snapshotId.isEmpty, s"cannot write to a time-travel snapshot of $ident")
@@ -659,34 +652,48 @@ private[iceberg] class GraftSqlTable(ident: String, location: String,
   }
 }
 
-/** Write modes of the SQL front door, all committing through the library:
-  *  - append (`INSERT INTO`): [[IcebergTable.append]] via the V1 bridge —
-  *    SQL inserts and library appends produce indistinguishable history;
-  *  - truncate (static `INSERT OVERWRITE`, or a whole-table
+/** Write modes of the SQL front door. Each is a DSv2 batch write
+  * ([[GraftFilesBatchWrite]]): Spark clusters the rows by
+  * months(<spec column>) and sorts them by that column within a task, the
+  * tasks ([[GraftDeltaWriter]]) write one file at a time per month into
+  * the statement's staging dir (a new file every
+  * `write.target-records-per-file` rows when the table sets it), and the
+  * driver commits the files the tasks report as the library would:
+  *  - append (`INSERT INTO`, CTAS, a branch insert): the
+  *    [[IcebergTable.append]] commit ([[IcebergTable.commitAppendFiles]]);
+  *    no rows commit nothing;
+  *  - truncate (static `INSERT OVERWRITE`, RTAS, or a whole-table
   *    `df.writeTo(t).overwrite(lit(true))`): ONE "replace" snapshot whose
-  *    manifest list carries only the new data ([[IcebergTable.overwriteTable]]),
-  *    with `configure` (a replace's schema and properties) in the same
-  *    commit;
+  *    manifest list carries only the new data
+  *    ([[IcebergTable.commitReplaceFiles]]), with `configure` (a replace's
+  *    schema and properties) in the same commit;
   *  - dynamic partition overwrite (`INSERT OVERWRITE` under
-  *    `partitionOverwriteMode=dynamic`): a V2 batch write — executors
-  *    stream month-partitioned files ([[GraftDeltaWriter]] doubling as a
-  *    plain DataWriter), and the commit replaces EXACTLY the months that
-  *    received data ([[IcebergTable.commitOverwriteMonths]]). */
+  *    `partitionOverwriteMode=dynamic`): the commit replaces EXACTLY the
+  *    months that received data ([[IcebergTable.commitOverwriteMonths]]).
+  * A `branch` table takes appends only, onto that branch. Appends also
+  * serve streaming writes, one snapshot per epoch
+  * ([[GraftStreamingWrite]]). */
 private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructType,
                                          queryId: String = "",
                                          partitioning: Array[Transform] =
                                            Array(GraftPartitioning.monthTransform),
                                          configure: IcebergTable.TableMetadata =>
                                            IcebergTable.TableMetadata = identity,
-                                         properties: Map[String, String] = Map.empty)
+                                         properties: Map[String, String] = Map.empty,
+                                         branch: Option[String] = None)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsOverwrite
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+  import org.apache.spark.sql.connector.write.{BatchWrite, Write}
 
-  /** Distribution/sort source column, derived from the table's partition
-    * spec (never a hardcoded column name). */
+  /** The spec's source column, when the written rows carry it (never a
+    * hardcoded column name). */
   private val partCol: Option[String] =
-    GraftPartitioning.sourceColumnOf(partitioning)
+    GraftPartitioning.sourceColumnOf(partitioning).filter(writeSchema.fieldNames.contains)
+
+  private val targetRecords = IcebergTable.targetRecordsProp(properties)
 
   private var mode: String = "append"
 
@@ -707,85 +714,49 @@ private[iceberg] class GraftWriteBuilder(location: String, writeSchema: StructTy
     mode = "dynamic"; this
   }
 
-  override def build(): org.apache.spark.sql.connector.write.Write = mode match {
-    case "dynamic" =>
-      new org.apache.spark.sql.connector.write.Write
-          with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        // Writer fan-out control, same rationale as GraftDeltaWrite's
-        // required distribution: range-partition the insert stream by
-        // l_shipdate so each month's rows land in contiguous tasks and
-        // files out ≈ months touched (not tasks × months). AQE sizes the
-        // partition count from the insert volume.
-        private val sortKeys =
-          partCol.filter(writeSchema.fieldNames.contains).toArray
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution =
-          if (sortKeys.isEmpty)
-            org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-          else
-            org.apache.spark.sql.connector.distributions.Distributions.ordered(
-              sortKeys.map(c => org.apache.spark.sql.connector.expressions.Expressions
-                .sort(org.apache.spark.sql.connector.expressions.Expressions.column(c),
-                  org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)))
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          sortKeys.map(c => org.apache.spark.sql.connector.expressions.Expressions
-            .sort(org.apache.spark.sql.connector.expressions.Expressions.column(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        // a statement-unique staging dir — the committed snapshot id is
-        // derived inside commitOverwriteMonths' commit transaction
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-          new GraftOverwriteBatchWrite(location, writeSchema,
-            IcebergTable.newDataDir(location), partCol)
+  override def build(): Write = {
+    require(branch.isEmpty || mode == "append",
+      "branch writes are append-only; overwrite main and fast-forward instead")
+    new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+      // one task per month, its rows in month order: the writer holds one
+      // file open, and a month gets one file (or one per target rows).
+      // Hash clustering needs no sampling job, as a range distribution would.
+      override def requiredDistribution(): Distribution = partCol match {
+        case Some(c) => Distributions.clustered(Array(Expressions.months(c)))
+        case None => Distributions.unspecified()
       }
-    case m =>
-      new org.apache.spark.sql.connector.write.V1Write
-          with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        // Iceberg's `write.distribution-mode=hash` as a TABLE PROPERTY:
-        // when set, appends (batch AND streaming epochs — the streaming
-        // sink cannot global-sort, so hash-clustering is its
-        // distribution) are clustered by months(<part col>), resolved
-        // through the catalog's FunctionCatalog — files out ≈ months
-        // touched instead of tasks × months. Unset tables keep the
-        // unspecified distribution (writeDataSnapshot lays batch appends
-        // out itself), so plain INSERTs pay no extra exchange.
-        private val wantsHashDistribution = (m != "truncate") && partCol.nonEmpty &&
-          properties.get("write.distribution-mode").contains("hash")
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution =
-          if (wantsHashDistribution)
-            org.apache.spark.sql.connector.distributions.Distributions.clustered(
-              Array(org.apache.spark.sql.connector.expressions.Expressions
-                .months(partCol.get)))
-          else
-            org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          Array.empty
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: org.apache.spark.sql.DataFrame,
-                                overwrite: Boolean): Unit =
-              if (m == "truncate")
-                IcebergTable.overwriteTable(data.sparkSession, data, location, configure)
-              else
-                // write.target-records-per-file as the statement loaded
-                // it: a property-era change shows up in the very next
-                // insert's file split
-                IcebergTable.append(data.sparkSession, data, location,
-                  targetRecordsPerFile = IcebergTable.targetRecordsProp(properties))
+      override def requiredOrdering(): Array[SortOrder] =
+        partCol.toArray.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
+
+      override def description(): String = s"graft-$mode $location"
+
+      // a statement-unique staging dir — the committed snapshot id is
+      // derived inside the commit transaction
+      override def toBatch: BatchWrite = {
+        val dataDir = IcebergTable.newDataDir(location)
+        new GraftFilesBatchWrite(writeSchema, dataDir, partCol, targetRecords, files => {
+          val spark = org.apache.spark.sql.SparkSession.active
+          mode match {
+            case "append" => IcebergTable.commitAppendFiles(spark, location, dataDir, files,
+              writeSchema, branch)
+            case "truncate" => IcebergTable.commitReplaceFiles(spark, location, dataDir, files,
+              writeSchema, configure)
+            case _ => IcebergTable.commitOverwriteMonths(spark, location, dataDir, files)
           }
-        /** `df.writeStream.toTable(…)` — the streaming-ingest sink: one
-          * append snapshot per epoch, exactly-once on restart replay
-          * ([[IcebergTable.commitStreamAppend]]'s summary-recorded
-          * (query, epoch) dedup — the Iceberg streaming contract). */
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          require(m != "truncate",
-            "streaming complete-mode (truncate) writes are not supported; use append")
-          new GraftStreamingWrite(location, writeSchema, queryId, partCol)
-        }
+        })
       }
+
+      /** `df.writeStream.toTable(…)` — the streaming-ingest sink: one
+        * append snapshot per epoch, exactly-once on restart replay
+        * ([[IcebergTable.commitStreamAppend]]'s summary-recorded
+        * (query, epoch) dedup — the Iceberg streaming contract). */
+      override def toStreaming
+          : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+        require(mode == "append" && branch.isEmpty,
+          "streaming writes append to the main branch; complete-mode (truncate) is not supported")
+        new GraftStreamingWrite(location, writeSchema, queryId, partCol, targetRecords)
+      }
+    }
   }
 }
 

@@ -7,11 +7,16 @@ import graft.SparkSpec
 import graft.tables.Tables
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CommandResultExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{AppendDataExec, BatchScanExec, WriteDeltaExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -20,7 +25,8 @@ import org.apache.spark.sql.types.LongType
   * A table's schema comes from metadata.json and a written file's stats
   * from its parquet footer on the driver ([[ParquetFooters]]), so only the
   * data work of a statement runs as jobs: an INSERT's write, a SELECT's
-  * scan. */
+  * scan. Writes are DSv2 batch writes clustered by month, so no write runs
+  * a nested file-source write or a range partitioner's sampling job. */
 class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def lineitem = Tables.lineitem(spark, sf0001)
@@ -58,19 +64,62 @@ class JobCensusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     (w, cat)
   }
 
+  /** The physical plan a command statement executed. */
+  private def commandPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case c: CommandResultExec => c.commandPhysicalPlan
+    case p => p
+  }
+
+  /** The physical plans of the SQL executions `body` starts, as Spark
+    * describes them. */
+  private def executions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try body
+    finally { GraftListenerBus.drain(sc); sc.removeSparkListener(listener) }
+    plans.asScala.toSeq
+  }
+
   test("INSERT runs only its write's jobs; SET TBLPROPERTIES runs none") {
     val (w, cat) = warehouse("ins")
     IcebergTable.append(spark, lineitem, IcebergCatalog.createTable(w, "lake", "li"))
     lineitem.createOrReplaceTempView("graft_census_src")
-    val insert = jobs(spark.sql(
-      s"INSERT INTO $cat.lake.li SELECT * FROM graft_census_src WHERE l_orderkey % 5 = 0"))
+    var inserted: DataFrame = null
+    var insert = 0
+    val started = executions {
+      insert = jobs { inserted = spark.sql(
+        s"INSERT INTO $cat.lake.li SELECT * FROM graft_census_src WHERE l_orderkey % 5 = 0") }
+    }
     assert(insert <= 2, s"INSERT ran $insert jobs")
+    // a DSv2 append, not the V1 bridge's nested file-source write
+    val plan = commandPlan(inserted)
+    assert(plan.isInstanceOf[AppendDataExec], plan.toString)
+    assert(plan.find(_.getClass.getSimpleName == "AppendDataExecV1").isEmpty, plan.toString)
+    assert(!started.exists(_.contains("InsertIntoHadoopFsRelationCommand")), started.mkString("\n"))
     val props = jobs(spark.sql(s"ALTER TABLE $cat.lake.li SET TBLPROPERTIES ('census' = 'on')"))
     assert(props == 0, s"SET TBLPROPERTIES ran $props jobs")
-    val delete = jobs(spark.sql(s"DELETE FROM $cat.lake.li WHERE l_orderkey % 7 = 3"))
+    var deleted: DataFrame = null
+    val delete = jobs { deleted = spark.sql(s"DELETE FROM $cat.lake.li WHERE l_orderkey % 7 = 3") }
     val update = jobs(spark.sql(
       s"UPDATE $cat.lake.li SET l_quantity = l_quantity + 1 WHERE l_orderkey % 11 = 2"))
     info(s"jobs: INSERT $insert, SET TBLPROPERTIES $props, DELETE $delete, UPDATE $update")
+    // the delta stream is hash-clustered: no range partitioner samples the
+    // scan in a job of its own before the shuffle scans it again
+    assert(delete <= 2, s"DELETE ran $delete jobs")
+    assert(update <= 2, s"UPDATE ran $update jobs")
+    val deletePlan = commandPlan(deleted)
+    assert(deletePlan.isInstanceOf[WriteDeltaExec], deletePlan.toString)
+    val ranges = collect(deletePlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, deletePlan.toString)
   }
 
   test("a SELECT over DVs and equality deletes runs no schema job") {

@@ -221,4 +221,22 @@ class LibraryReadSpec extends SparkSpec {
     val b = IcebergTable.readAvro(manifest).head.getSchema
     assert(a eq b, "each read parsed its own writer schema, which Avro's reader cache keeps")
   }
+
+  test("repeated planFiles calls start no thread") {
+    val loc = Files.createTempDirectory("graft_fetch_pool_").toString
+    // one manifest per month: planning fetches them in parallel
+    IcebergTable.appendGrouped(spark, lineitem, loc, groupMonths = 1)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    IcebergTable.planFiles(loc)
+    val before = threads.getTotalStartedThreadCount
+    for (_ <- 1 to 5) IcebergTable.planFiles(loc)
+    // a pool per call would start FetchParallelism threads each time; the
+    // slack is for a thread Spark itself may start meanwhile
+    val started = threads.getTotalStartedThreadCount - before
+    assert(started < IcebergTable.FetchParallelism, s"$started threads started")
+    // the fetches run on the caller and the pool's kept threads
+    val names = (1 to 3).flatMap(_ =>
+      IcebergTable.inParallel(1 to 64)(_ => Thread.currentThread.getName)).toSet
+    assert(names.size <= IcebergTable.FetchParallelism, names)
+  }
 }

@@ -14,9 +14,11 @@ import org.apache.spark.sql.types._
   *    through to the delta write's required ordering);
   *  - the `months` V2 function served by the catalog's FunctionCatalog
   *    computes the Iceberg month-transform value;
-  *  - a table with `write.distribution-mode=hash` hash-clusters streaming
-  *    epochs by months(<part col>), so an epoch writes ≈ months-touched
-  *    files instead of tasks × months. */
+  *  - every write hash-clusters its rows by months(<part col>) (the
+  *    delta write by (_file, months(<part col>))) and sorts them by the
+  *    column within a task, so a streaming epoch or a statement writes
+  *    ≈ months-touched files instead of tasks × months, with no range
+  *    partitioner's sampling job, and a task holds one file open. */
 class WriteDistributionSpec extends SparkSpec {
 
   test("distribution source column derives from an arbitrary-named partition transform") {
@@ -41,6 +43,70 @@ class WriteDistributionSpec extends SparkSpec {
     // spec column absent from the write schema (pure DELETE): row-id order
     assert(orderingCols(Some("not_there")) == Seq("_file", "_pos"))
     assert(orderingCols(None) == Seq("_file", "_pos"))
+  }
+
+  /** The clustering expressions of a write's required distribution, as
+    * Spark describes them. */
+  private def clustering(d: org.apache.spark.sql.connector.distributions.Distribution)
+      : Seq[String] = d match {
+    case c: org.apache.spark.sql.connector.distributions.ClusteredDistribution =>
+      c.clustering().toSeq.map(_.describe())
+    case other => fail(s"expected a clustered distribution, got $other")
+  }
+
+  test("delta, dynamic-overwrite, append and truncate writes are hash-clustered by month") {
+    import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
+    val schema = StructType(Seq(
+      StructField("l_shipdate", TimestampType), StructField("v", LongType)))
+    val delta = new GraftDeltaWrite("/tmp/unused", schema, Some("l_shipdate"))
+    assert(clustering(delta.requiredDistribution()) == Seq("_file", "months(l_shipdate)"))
+    // a pure DELETE's rows carry no data columns: clustered by file alone
+    val deleteOnly = StructType(Seq(StructField("v", LongType)))
+    assert(clustering(new GraftDeltaWrite("/tmp/unused", deleteOnly, Some("l_shipdate"))
+      .requiredDistribution()) == Seq("_file"))
+    def write(mode: GraftWriteBuilder => Unit): RequiresDistributionAndOrdering = {
+      val b = new GraftWriteBuilder("/tmp/unused", schema)
+      mode(b)
+      b.build().asInstanceOf[RequiresDistributionAndOrdering]
+    }
+    for ((name, w) <- Seq("dynamic" -> write(_.overwriteDynamicPartitions()),
+                          "append" -> write(_ => ()), "truncate" -> write(_.truncate()))) {
+      assert(clustering(w.requiredDistribution()) == Seq("months(l_shipdate)"), name)
+      assert(w.requiredOrdering().toSeq.map(_.expression().describe()) == Seq("l_shipdate"), name)
+    }
+  }
+
+  private def monthRows(days: Seq[Int]): Seq[org.apache.spark.sql.catalyst.InternalRow] =
+    days.zipWithIndex.map { case (d, i) =>
+      org.apache.spark.sql.catalyst.InternalRow(d * 86400L * 1000000L, i.toLong) }
+
+  private val monthSchema = StructType(Seq(
+    StructField("l_shipdate", TimestampType), StructField("v", LongType)))
+
+  test("a task fed three months in order holds one open file and writes one file per month") {
+    val dir = Files.createTempDirectory("graft_one_open_").toString
+    val w = new GraftDeltaWriter(dir, monthSchema, 0, 1L, Some("l_shipdate"))
+    // 1970-01 ×2, 1970-02 ×2, 1970-03 ×1
+    monthRows(Seq(0, 10, 40, 50, 70)).foreach { r =>
+      w.insert(r)
+      assert(w.openFiles <= 1)
+    }
+    val files = w.commit().asInstanceOf[GraftDeltaCommitMessage].files.toSeq
+    assert(w.openFiles == 0)
+    assert(files.map(f => new java.io.File(f).getParentFile.getName) ==
+      Seq("p_month=1970-01", "p_month=1970-02", "p_month=1970-03"))
+    assert(spark.read.parquet(files: _*).count() == 5)
+  }
+
+  test("write.target-records-per-file starts a new file in the month every target rows") {
+    val dir = Files.createTempDirectory("graft_target_rows_").toString
+    val w = new GraftDeltaWriter(dir, monthSchema, 0, 1L, Some("l_shipdate"), Some(2L))
+    // 5 rows of 1970-01, then 1 of 1970-02: ceil(5/2) + 1 files
+    monthRows(Seq(0, 1, 2, 3, 4, 40)).foreach(w.insert)
+    val files = w.commit().asInstanceOf[GraftDeltaCommitMessage].files.toSeq
+    assert(files.map(f => new java.io.File(f).getParentFile.getName) ==
+      Seq.fill(3)("p_month=1970-01") :+ "p_month=1970-02")
+    assert(files.map(f => spark.read.parquet(f).count()) == Seq(2L, 2L, 1L, 1L))
   }
 
   private val unpartitionedSchema = StructType(Seq(
